@@ -40,26 +40,23 @@ from tf_idf_mapreduce_spark.operators import textstats as ts
 from tf_idf_mapreduce_spark.operators.similarity import EMBED_DIM, N_PLANES, hyperplanes
 from tf_idf_mapreduce_spark.operators.textstats import LANG_LEXICONS, STOPWORDS_EN, BPE_ISH_PATTERN
 from tf_idf_mapreduce_spark.operators.tfidf import (
-    doc_freq,
-    doc_totals,
+    corpus_core,
     incremental_chain_index,
     incremental_chain_persisted,
     incremental_e2e_index,
     incremental_e2e_promoted,
     incremental_index,
     incremental_index_persisted,
+    query_terms,
     tfidf_pipeline,
     tfidf_sorted,
-    word_count,
 )
 from tf_idf_mapreduce_spark.functions.hashing import (
     MINHASH_K,
     MINHASH_P,
     MINHASH_PERMS,
 )
-from tf_idf_mapreduce_spark.functions.tokenize import tokenize
 from tf_idf_mapreduce_spark.plans.pipeline import flagship_tfidf
-from tf_idf_mapreduce_spark.sources.io import documents_as_corpus, load_table
 from tf_idf_mapreduce_spark.streaming import queries as st
 
 
@@ -73,34 +70,23 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# helpers
-# --------------------------------------------------------------------------
-
-def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return documents_as_corpus(load_table(spark, sf_dir, "documents"))
-
-
-def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tokenize(_corpus(spark, sf_dir))
-
-
-# --------------------------------------------------------------------------
-# TF-IDF family (SURVEY.md §2.2-2.6 — the reference's own pipeline)
+# TF-IDF family (SURVEY.md §2.2-2.6 — the reference's own pipeline). Every
+# head derives from the corpus's one memoized core (``corpus_core``).
 # --------------------------------------------------------------------------
 
 def q_tfidf_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Job 1 (A1): (word, doc, count)."""
-    return word_count(_tokens(spark, sf_dir))
+    return corpus_core(spark, sf_dir).word_count
 
 
 def q_tfidf_doc_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Job 2 (A2): + per-doc total words."""
-    return doc_totals(q_tfidf_word_count(spark, sf_dir))
+    return corpus_core(spark, sf_dir).doc_totals
 
 
 def q_tfidf_doc_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Job 3a (A3): + document frequency."""
-    return doc_freq(q_tfidf_doc_totals(spark, sf_dir))
+    return corpus_core(spark, sf_dir).doc_freq
 
 
 def q_tfidf_doc_freq_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -111,9 +97,8 @@ def q_tfidf_doc_freq_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_freq_salted(q_tfidf_doc_totals(spark, sf_dir))
 
 
-def q_tfidf_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jobs 1-4 (M1-M3 + O3): full scored relation, tfidf rounded @6dp."""
-    scored = tfidf_pipeline(_corpus(spark, sf_dir))
+def _full_columns(scored: DataFrame) -> DataFrame:
+    """The ``tfidf_full`` projection of a scored relation, tfidf @6dp."""
     return scored.select(
         "word",
         "doc",
@@ -122,6 +107,11 @@ def q_tfidf_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         "df",
         F.round("tfidf", 6).alias("tfidf"),
     )
+
+
+def q_tfidf_full(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Jobs 1-4 (M1-M3 + O3): full scored relation, tfidf rounded @6dp."""
+    return _full_columns(corpus_core(spark, sf_dir).scored)
 
 
 #: One gzip-JSONL landing copy of the corpus per (process, sf_dir).
@@ -156,14 +146,7 @@ def q_tfidf_full_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     land = _cached_tmpdir(_JSONL_LAND_CACHE, sf_dir, "jsonl_land_", build)
     corpus = read_jsonl_corpus(spark, f"{land}/docs")
-    return tfidf_pipeline(corpus).select(
-        "word",
-        "doc",
-        "count",
-        "doc_total",
-        "df",
-        F.round("tfidf", 6).alias("tfidf"),
-    )
+    return _full_columns(tfidf_pipeline(corpus))
 
 
 def q_tfidf_top30(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -176,20 +159,13 @@ def q_tfidf_top30(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _search_top20(scored: DataFrame) -> DataFrame:
-    """The shared search head: corpus's 5 most frequent words as the
-    query (data-derived, deterministic tiebreaks — self-contained),
-    each doc scored by the sum of their tfidf, top 20. The terms side
-    is tiny and broadcast. Used over the one-shot build, the promoted
-    store, and the sharded federation — identical relation, three
-    execution strategies."""
-    terms = (
-        scored.groupBy("word")
-        .agg(F.sum("count").alias("n"))
-        .orderBy(F.desc("n"), F.asc("word"))
-        .limit(5)
-        .select("word")
-    )
+def _search_top20(scored: DataFrame, terms: DataFrame) -> DataFrame:
+    """The shared search head: each doc scored by the sum of the tfidf
+    of the query ``terms`` (``query_terms``: the corpus's 5 most
+    frequent words — data-derived, self-contained), top 20. The terms
+    side is tiny and broadcast. Used over the one-shot build, the
+    promoted store, and the sharded federation — identical relation,
+    three execution strategies."""
     return (
         scored.join(F.broadcast(terms), "word")
         .groupBy("doc")
@@ -206,7 +182,10 @@ def q_tfidf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Relevance search on the scored relation: take the corpus's 5 most
     frequent words as the query, score each doc by the sum of their tfidf,
     return the top 20 docs (``_search_top20``)."""
-    return _search_top20(q_tfidf_full(spark, sf_dir))
+    core = corpus_core(spark, sf_dir)
+    return _search_top20(
+        _full_columns(core.scored), query_terms(core.word_count)
+    )
 
 
 def q_tfidf_search_promoted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -228,7 +207,8 @@ def q_tfidf_search_promoted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     segments, dfx, n, _origin = promoted_index(spark, sf_dir, CHAIN_DAYS)
-    return _search_top20(score_index(segments, dfx, n))
+    scored = score_index(segments, dfx, n)
+    return _search_top20(scored, query_terms(scored))
 
 
 def q_stream_tfidf_search_sharded(
@@ -247,9 +227,8 @@ def q_stream_tfidf_search_sharded(
         read_sharded_index,
     )
 
-    return _search_top20(
-        read_sharded_index(spark, _sharded_index_roots(spark, sf_dir))
-    )
+    scored = read_sharded_index(spark, _sharded_index_roots(spark, sf_dir))
+    return _search_top20(scored, query_terms(scored))
 
 
 #: pseudo-relevance feedback: docs fed back and expansion terms added.
@@ -271,14 +250,9 @@ def q_tfidf_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole two-stage search costs two broadcast-join aggregations over
     one scored relation. Deterministic tiebreaks at every boundary
     (rounded score then word/doc id — the ``tfidf_search`` rules)."""
-    scored = q_tfidf_full(spark, sf_dir)
-    seed = (
-        scored.groupBy("word")
-        .agg(F.sum("count").alias("n"))
-        .orderBy(F.desc("n"), F.asc("word"))
-        .limit(5)
-        .select("word")
-    )
+    core = corpus_core(spark, sf_dir)
+    scored = _full_columns(core.scored)
+    seed = query_terms(core.word_count)
     fb_docs = (
         scored.join(F.broadcast(seed), "word")
         .groupBy("doc")

@@ -254,3 +254,59 @@ def test_write_jsonl_gzip_roundtrip(spark, tmp_path):
         tuple(r) for r in read_jsonl_corpus(spark, out).collect()
     )
     assert got == sorted(rows)
+
+
+def _write_documents(spark, sf_dir, rows):
+    spark.createDataFrame(rows, "doc_id long, text string").write.mode(
+        "overwrite"
+    ).parquet(f"{sf_dir}/documents.parquet")
+
+
+def test_plan_memo_keys_out_a_rewritten_fixture(spark, tmp_path):
+    """A documents table rewritten in place gets a new core plan, and the
+    new plan reads the new rows — the memo holds plans, never rows."""
+    from tf_idf_mapreduce_spark.operators.tfidf import corpus_core
+    from tf_idf_mapreduce_spark.sources import io
+
+    d = str(tmp_path)
+    _write_documents(spark, d, [(1, "alpha beta"), (2, "beta")])
+    first = corpus_core(spark, d).word_count
+    assert sorted((r.word, r.doc, r["count"]) for r in first.collect()) == [
+        ("alpha", "1", 1), ("beta", "1", 1), ("beta", "2", 1)
+    ]
+    [old_key] = [k for k in io._RELATION_CACHE if k[1:3] == (d, "tfidf_core")]
+
+    _write_documents(spark, d, [(1, "gamma gamma")])
+    again = corpus_core(spark, d).word_count
+    assert [(r.word, r.doc, r["count"]) for r in again.collect()] == [("gamma", "1", 2)]
+    [new_key] = [k for k in io._RELATION_CACHE if k[1:3] == (d, "tfidf_core")]
+    assert new_key != old_key
+
+
+def test_corpus_core_returns_fresh_dataframes(spark, tmp_path):
+    """Each call hands out its own DataFrames over the memoized core, so
+    no two callers share a QueryExecution (or its shuffle files)."""
+    from tf_idf_mapreduce_spark.operators.tfidf import corpus_core
+
+    d = str(tmp_path)
+    _write_documents(spark, d, [(1, "alpha beta")])
+    ca, cb = corpus_core(spark, d), corpus_core(spark, d)
+    for x, y in zip(ca, cb):
+        assert x is not y
+        assert not x._jdf.queryExecution().equals(y._jdf.queryExecution())
+    assert sorted(map(tuple, ca.scored.collect())) == sorted(
+        map(tuple, cb.scored.collect())
+    )
+
+
+def test_plan_memo_sweeps_other_applications(spark, tmp_path):
+    """An insert drops every entry of another application id, so a
+    stopped context's plans are never pinned."""
+    from tf_idf_mapreduce_spark.sources import io
+
+    io._RELATION_CACHE[("app-stopped", "/gone", "documents", ())] = object()
+    d = str(tmp_path)
+    _write_documents(spark, d, [(1, "alpha")])
+    io.load_table(spark, d, "documents")
+    app = spark.sparkContext.applicationId
+    assert all(k[0] == app for k in io._RELATION_CACHE)

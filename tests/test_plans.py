@@ -30,6 +30,30 @@ def test_no_nested_loop_joins(spark, name):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+#: The nine TF-IDF pipeline and search heads (the benchmark's
+#: ``tfidf-corpus`` workload), all derived from one TF-IDF core.
+TFIDF_CORE_HEADS = (
+    "tfidf_word_count", "tfidf_doc_totals", "tfidf_doc_freq", "tfidf_full",
+    "tfidf_top30", "tfidf_search", "tfidf_keywords", "tfidf_bm25",
+    "tfidf_postings",
+)
+
+
+@pytest.mark.parametrize("name", TFIDF_CORE_HEADS)
+def test_tfidf_head_scans_and_tokenizes_text_once(spark, name):
+    # the executed (final AQE) plan, where a reused exchange is a leaf:
+    # every branch (df, query terms, avgdl) must reuse the core's
+    # exchanges, so the corpus text is read and tokenized exactly once
+    df = entrymod.queries()[name](spark, SF)
+    df.collect()
+    adaptive = df._jdf.queryExecution().executedPlan()
+    assert adaptive.nodeName() == "AdaptiveSparkPlan"
+    plan = adaptive.executedPlan().toString()
+    scans = re.findall(r"FileScan parquet [^\n]*", plan)
+    text_scans = [s for s in scans if re.search(r"ReadSchema: struct<[^>]*\btext:", s)]
+    assert len(text_scans) == 1, plan
+
+
 def test_tfidf_scalar_broadcast_is_the_only_nested_loop(spark):
     # the 1-row total_docs broadcast cross join (A4) is the ONE legitimate
     # BroadcastNestedLoopJoin — build side is a single aggregate row

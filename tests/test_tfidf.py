@@ -137,6 +137,36 @@ def test_doc_freq_salted_equals_unsalted(spark):
     assert plain == salted3
 
 
+def test_doc_freq_counts_rows_with_null_doc_total(spark):
+    """df counts postings, not doc totals: the per-stage CLI parses
+    doc_total from text with a cast to long, so a malformed value reaches
+    ``doc_freq`` as NULL and its row must still count."""
+    wtc = spark.createDataFrame(
+        [("w", "d1", 1, None), ("w", "d2", 2, 5), ("v", "d2", 3, 5)],
+        "word string, doc string, count long, doc_total long",
+    )
+    got = {(r.word, r.doc): r.df for r in doc_freq(wtc).collect()}
+    assert got == {("w", "d1"): 2, ("w", "d2"): 2, ("v", "d2"): 1}
+
+
+def test_core_relations_equal_the_stage_chain(spark):
+    """The core's relations are the four stage functions composed (its
+    df counts doc_total, which is never NULL there)."""
+    from tf_idf_mapreduce_spark.operators.tfidf import tfidf_core
+
+    corpus = spark.createDataFrame(GOLDEN_CORPUS, "doc string, text string")
+    core = tfidf_core(corpus)
+    wc = word_count(tokenize(corpus))
+    wtc = doc_totals(wc)
+    for got, want in (
+        (core.word_count, wc),
+        (core.doc_totals, wtc),
+        (core.doc_freq, doc_freq(wtc)),
+    ):
+        assert got.columns == want.columns
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
 def test_incremental_index_equals_one_shot_rebuild(spark, sf_dir):
     """The batch-merge (old postings + batch postings, df added, N added,
     idf re-multiplied) must reproduce the full rebuild row-for-row —

@@ -47,7 +47,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.tokenize import tokenize
-from .operators.tfidf import doc_freq, doc_totals, tfidf, tfidf_sorted, word_count
+from .operators.tfidf import (
+    doc_freq,
+    doc_totals,
+    tfidf,
+    tfidf_pipeline,
+    tfidf_sorted,
+    word_count,
+)
 from .session import get_spark
 from .sources.io import read_kv_text, read_text_corpus, write_kv_text
 
@@ -557,9 +564,7 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(app_name="tfidf-cli", master=args.master)
     lines = read_text_corpus(spark, args.input)
-    scored = tfidf(
-        doc_freq(doc_totals(word_count(tokenize(lines)))), F.lit(total_docs)
-    )
+    scored = tfidf_pipeline(lines, total_docs=total_docs)
     write_kv_text(
         tfidf_sorted(scored),
         os.path.join(args.output, "SortedTFIDF"),

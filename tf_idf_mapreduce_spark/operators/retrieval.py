@@ -7,7 +7,8 @@ search engine actually serves from: a BM25 ranker (the modern default the
 reference's TF-IDF approximates) and the materialized inverted index.
 
 Scale design:
-- Both operators reuse the tokenizer's single scan; corpus-level scalars
+- Both operators derive from the corpus's TF-IDF core
+  (``tfidf.corpus_core``), so each plan tokenizes once; corpus-level scalars
   (N, avgdl) enter the plan as broadcast 1-row aggregates, never a
   ``.collect()``.
 - The postings build is one shuffle on ``word`` with map-side partial
@@ -23,11 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.tokenize import tokenize
 from ..sources.io import documents_as_corpus, load_table
 from .caches import insert_evicting
 from .guard import EXACT_QUADRATIC_MAX_ROWS, guard_exact_quadratic
-from .tfidf import doc_freq, doc_totals, tfidf_pipeline, word_count
+from .tfidf import corpus_core, query_terms
 
 #: Standard BM25 free parameters (Robertson et al., TREC-3).
 BM25_K1 = 1.2
@@ -41,17 +41,14 @@ DOCSIM_TOP_TERMS = 10
 DOCSIM_TOP_PAIRS = 20
 
 
-def _scored_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(word, doc, count, doc_total, df) — the reference pipeline's jobs
-    1-3 over the documents corpus."""
-    docs = documents_as_corpus(load_table(spark, sf_dir, "documents"))
-    return doc_freq(doc_totals(word_count(tokenize(docs))))
-
-
-def _bm25_rank(wtd: DataFrame, n_docs: DataFrame) -> DataFrame:
+def _bm25_rank(wtd: DataFrame, n_docs: DataFrame, wtc: DataFrame) -> DataFrame:
     """BM25 top-20 over a ``(word, doc, count, doc_total, df)`` relation
     — the scorer shared by the in-plan and promoted-index serving paths
     (the relation's PROVENANCE is the only difference between them).
+    The query terms (``query_terms``) and avgdl derive from ``wtc``, a
+    ``(word, doc, count, doc_total)`` relation with the same rows: the
+    core's ``doc_totals`` in-plan (so neither branch re-tokenizes), the
+    scored relation itself when served from the index.
 
     score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)),
     idf(t) = ln((N − df + 0.5)/(df + 0.5) + 1)  (the Lucene/ATIRE form —
@@ -63,17 +60,11 @@ def _bm25_rank(wtd: DataFrame, n_docs: DataFrame) -> DataFrame:
     contributions are rounded @6dp before the sum (cross-engine
     determinism, see __spark_entry__ header)."""
     avgdl = (
-        wtd.select("doc", "doc_total")
+        wtc.select("doc", "doc_total")
         .distinct()
         .agg(F.avg("doc_total").alias("avgdl"))
     )
-    terms = (
-        wtd.groupBy("word")
-        .agg(F.sum("count").alias("n"))
-        .orderBy(F.desc("n"), F.asc("word"))
-        .limit(5)
-        .select("word")
-    )
+    terms = query_terms(wtc)
     idf = F.log(
         (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
@@ -100,11 +91,12 @@ def _bm25_rank(wtd: DataFrame, n_docs: DataFrame) -> DataFrame:
 def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-20 docs for the corpus's 5 most frequent terms (the same
     self-contained query shape as ``tfidf_search``) — ``_bm25_rank``
-    over the in-plan jobs-1-3 relation."""
+    over the corpus's TF-IDF core."""
     n_docs = load_table(spark, sf_dir, "documents").agg(
         F.count("*").alias("n_docs")
     )
-    return _bm25_rank(_scored_terms(spark, sf_dir), n_docs)
+    core = corpus_core(spark, sf_dir)
+    return _bm25_rank(core.doc_freq, n_docs, core.doc_totals)
 
 
 def bm25_search_promoted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,7 +119,7 @@ def bm25_search_promoted(spark: SparkSession, sf_dir: str) -> DataFrame:
     wtd = reduce(
         lambda a, b: a.unionByName(b), [seg.join(df, "word") for seg in segments]
     )
-    return _bm25_rank(wtd, n.select(F.col("nx").alias("n_docs")))
+    return _bm25_rank(wtd, n.select(F.col("nx").alias("n_docs")), wtd)
 
 
 #: Hash-block count for ``doc_similarity``'s tiled pair computation:
@@ -361,8 +353,7 @@ def doc_similarity(
 def _pruned_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc, word, wt) — each doc's DOCSIM_TOP_TERMS highest tf-idf terms
     @6dp, the shared sparse-vector base of both docsim variants."""
-    docs = documents_as_corpus(load_table(spark, sf_dir, "documents"))
-    scored = tfidf_pipeline(docs)
+    scored = corpus_core(spark, sf_dir).scored
     wts = scored.select("word", "doc", F.round("tfidf", 6).alias("wt"))
     top = Window.partitionBy("doc").orderBy(F.desc("wt"), F.asc("word"))
     return (
@@ -491,9 +482,7 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     array<struct>) is deliberate: it makes the relation hashable by any
     engine and is the on-disk shape a posting store would serve.
     """
-    wc = word_count(
-        tokenize(documents_as_corpus(load_table(spark, sf_dir, "documents")))
-    )
+    wc = corpus_core(spark, sf_dir).word_count
     postings = F.array_join(
         F.transform(
             F.array_sort(F.collect_list(F.struct("doc", "count"))),
@@ -663,9 +652,7 @@ def hybrid_search(
     ASC); rrf = sum of 1/(60+int) doubles — bit-identical cross-engine.
     """
     qd = str(query_doc)
-    scored = tfidf_pipeline(
-        documents_as_corpus(load_table(spark, sf_dir, "documents"))
-    )
+    scored = corpus_core(spark, sf_dir).scored
     # three consumers (norms, query vector, dots) — materialize the pruned
     # weight relation once instead of re-running the tokenize→tf-idf DAG
     # per branch (docsim's measured localCheckpoint pattern)

@@ -2,11 +2,23 @@
 
 Reference pipeline (TfidfMapReduce.java:63-97): WordCount → CountTF →
 CalcTFIDF → SortByValue, each materialized to HDFS between jobs. Here each
-stage is a lazy transform; composed they form ONE Catalyst plan with three
-hash exchanges — on (word,doc), doc, word — plus a final range-partitioned
-sort. No disk round-trips, and every stage gets map-side partial
-aggregation the reference never configured (no combiner in
-WordCount.java:149-159).
+stage is a lazy transform, and ``tfidf_core`` composes them over ONE
+tokenization of the corpus. The executed (final AQE) plan of the scored
+relation, pinned by ``tests/test_plans.py``, is:
+
+- one scan of the corpus text, tokenized once;
+- a hash exchange on (word, doc) for the word count, with map-side
+  partial aggregation the reference never configured (no combiner in
+  WordCount.java:149-159);
+- a hash exchange on doc for the doc-totals window, which the df branch
+  reuses (a ``ReusedExchange``) rather than re-tokenizing;
+- a hash exchange on word for the df aggregate, broadcast back;
+- the 1-row N subplan: a scan of the doc column only, counted distinct
+  and broadcast.
+
+A global sort adds a range-partitioned exchange. No disk round-trips.
+Every TF-IDF head derives from the same core (``corpus_core`` memoizes
+its plans per corpus), so each head's plan tokenizes once too.
 
 Scale notes (100 TB posture):
 - A2/A3 use unbounded partition windows, not agg+join: one exchange each,
@@ -21,6 +33,8 @@ Scale notes (100 TB posture):
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -129,13 +143,31 @@ def tfidf_sorted(scored: DataFrame) -> DataFrame:
     return scored.orderBy(F.desc("tfidf"), F.asc("word"), F.asc("doc"))
 
 
-def tfidf_pipeline(
+class TfidfCore(NamedTuple):
+    """The four relations of one corpus that every TF-IDF head derives
+    from — the reference's jobs 1-3 (TfidfMapReduce.java:63-84), each a
+    lazy plan over the SAME tokenization."""
+
+    word_count: DataFrame  # (word, doc, count)
+    doc_totals: DataFrame  # + doc_total
+    doc_freq: DataFrame  # + df
+    scored: DataFrame  # + tf, idf, tfidf
+
+
+def tfidf_core(
     corpus: DataFrame,
     text_col: str = "text",
     doc_col: str = "doc",
     total_docs: int | None = None,
-) -> DataFrame:
-    """The full 4-job chain as one lazy plan: corpus → scored (word, doc, ...).
+) -> TfidfCore:
+    """Build the TF-IDF core of a corpus: tokenize once, then word count
+    → doc totals → df → scored, each stage derived from the one before.
+
+    A head must derive every branch from these relations so that its
+    executed plan scans and tokenizes the corpus ONCE: AQE reuses an
+    exchange only when the subtree below it is identical, so each branch
+    has to keep the columns that hold that subtree together (see the df
+    aggregate below, and ``query_terms``).
 
     ``total_docs`` defaults to ``countDistinct(doc_col)`` so the IDF
     denominator is the number of DOCUMENTS regardless of corpus shape —
@@ -147,13 +179,83 @@ def tfidf_pipeline(
     ``total_docs`` (the per-stage CLI parity, CalcTFIDF.java:174-183 —
     our CLI passes the directory-entry count).
     """
-    words = tokenize(corpus, text_col=text_col, doc_col=doc_col)
-    with_df = doc_freq(doc_totals(word_count(words)))
+    wc = word_count(tokenize(corpus, text_col=text_col, doc_col=doc_col))
+    wtc = doc_totals(wc)
+    # ``doc_freq`` with count(doc_total) for count(*): the same number
+    # HERE, where doc_total is a window sum over a doc's non-null counts
+    # and so never NULL. Counting the window column keeps the window in
+    # the df branch, so both join sides share the doc-keyed exchange and
+    # AQE reuses it; count(*) lets Catalyst prune that branch down to a
+    # distinct (word, doc) that tokenizes the corpus a second time.
+    with_df = wtc.join(
+        wtc.groupBy("word").agg(F.count("doc_total").alias("df")), "word"
+    )
     if total_docs is None:
         n = corpus.agg(F.countDistinct(F.col(doc_col)).alias("total_docs"))
-        scored = with_df.crossJoin(F.broadcast(n))
-        return tfidf(scored, F.col("total_docs")).drop("total_docs")
-    return tfidf(with_df, F.lit(total_docs))
+        scored = tfidf(
+            with_df.crossJoin(F.broadcast(n)), F.col("total_docs")
+        ).drop("total_docs")
+    else:
+        scored = tfidf(with_df, F.lit(total_docs))
+    return TfidfCore(wc, wtc, with_df, scored)
+
+
+def tfidf_pipeline(
+    corpus: DataFrame,
+    text_col: str = "text",
+    doc_col: str = "doc",
+    total_docs: int | None = None,
+) -> DataFrame:
+    """The full 4-job chain as one lazy plan: corpus → scored (word, doc,
+    ...) — the ``scored`` relation of ``tfidf_core``."""
+    return tfidf_core(corpus, text_col, doc_col, total_docs).scored
+
+
+def corpus_core(spark, sf_dir: str) -> TfidfCore:
+    """The TF-IDF core of the fixture ``documents`` table, built once per
+    (application, ``sf_dir``, documents fingerprint) in the plan memo
+    (``sources.io.memo_plan``). Every call returns fresh DataFrames over
+    the memoized plans, so no two callers share a QueryExecution or its
+    shuffle files — no rows are kept, each execution reads parquet and
+    runs all of its stages."""
+    from ..sources.io import (
+        documents_as_corpus,
+        load_table,
+        memo_plan,
+        table_fingerprint,
+    )
+
+    core = memo_plan(
+        spark,
+        sf_dir,
+        "tfidf_core",
+        table_fingerprint(sf_dir, "documents"),
+        lambda: tfidf_core(
+            documents_as_corpus(load_table(spark, sf_dir, "documents"))
+        ),
+    )
+    return TfidfCore._make(part.select("*") for part in core)
+
+
+#: Size of the self-contained search query: the corpus's most frequent words.
+QUERY_TERMS = 5
+
+
+def query_terms(wc: DataFrame) -> DataFrame:
+    """The search query of ``tfidf_search``, ``tfidf_bm25`` and
+    ``tfidf_query_expansion``: the corpus's ``QUERY_TERMS`` most frequent
+    words (total count desc, word asc — deterministic). ``wc`` is any
+    relation with one (word, count) row per posting. Over a core, pass
+    its ``word_count``: this branch then reuses the word-count exchange,
+    where a scored relation drags its df join into the branch and
+    re-tokenizes the corpus."""
+    return (
+        wc.groupBy("word")
+        .agg(F.sum("count").alias("n"))
+        .orderBy(F.desc("n"), F.asc("word"))
+        .limit(QUERY_TERMS)
+        .select("word")
+    )
 
 
 def incremental_index(spark, sf_dir: str) -> DataFrame:

@@ -8,8 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.tfidf import tfidf_pipeline, tfidf_sorted
-from ..sources.io import documents_as_corpus, load_table
+from ..operators.tfidf import corpus_core, tfidf_sorted
 
 
 def flagship_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -18,6 +17,5 @@ def flagship_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output schema matches the reference's final ``SortedTFIDF`` relation
     (word, doc, tfidf) (SortByValue.java:93) with deterministic tiebreaks.
     """
-    corpus = documents_as_corpus(load_table(spark, sf_dir, "documents"))
-    scored = tfidf_pipeline(corpus)
+    scored = corpus_core(spark, sf_dir).scored
     return tfidf_sorted(scored).select("word", "doc", "tfidf")

@@ -83,22 +83,56 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     _PYFILES_SENT.add(app_id)
 
 
-#: Process-lifetime RELATION memo: (applicationId, sf_dir, name, lenient,
-#: data fingerprint) -> the resolved DataFrame. ``spark.read.parquet``
-#: re-lists the directory and re-reads a footer for the schema on every
-#: call (~0.1 s driver-side per call, measured warm at sf0.1) — x183 call
-#: sites over a 282-query session that cost dominated many sub-2s
-#: queries' walls. Reusing the DataFrame reuses only the resolved file
-#: index + schema (the catalog-table shape a real warehouse read gets
-#: for free); NOTHING row-level is cached — every action still computes
-#: from the parquet files. The fingerprint keys out in-place fixture
-#: rebuilds; the applicationId keys entries to the live context.
-#: Guarded by ``_RELATION_LOCK``: query builders run from driver
-#: threads (concurrent stream drains, the overlapped quantizer fits),
-#: and an unguarded evict-while-insert would race.
-_RELATION_CACHE: dict[tuple, DataFrame] = {}
+#: Process-lifetime PLAN memo: (applicationId, sf_dir, name, data
+#: fingerprint) -> unexecuted DataFrame(s). Two kinds of entry share it:
+#:
+#: - a table's resolved relation (``load_table``): ``spark.read.parquet``
+#:   re-lists the directory and re-reads a footer for the schema on every
+#:   call (~0.1 s of planning per call, measured warm at sf0.1) — x183
+#:   call sites over a 282-query session that cost dominated many sub-2s
+#:   queries' walls. Reusing the DataFrame reuses only the resolved file
+#:   index + schema (the catalog-table shape a real warehouse read gets
+#:   for free); a bare scan holds no exchange, so sharing it is free;
+#: - a DERIVED plan over a table (``tfidf.corpus_core``): the TF-IDF core
+#:   of the documents corpus costs hundreds of py4j calls to build, and
+#:   every TF-IDF head of a session derives from the same one. Its owner
+#:   hands each caller FRESH DataFrames over it (``select("*")``), so no
+#:   two callers share a QueryExecution, hence no AQE stage or shuffle
+#:   file.
+#:
+#: NOTHING row-level is cached — no persist, no checkpoint: an entry is a
+#: logical plan, and every action still computes from the parquet files.
+#: The fingerprint keys out in-place fixture rebuilds; the applicationId
+#: keys entries to the live context, and an insert sweeps entries of any
+#: other application (a stopped context's plans are dead weight).
+#: Guarded by ``_RELATION_LOCK`` (re-entrant: a derived build loads its
+#: tables through the same memo): query builders run from several threads
+#: of the application (concurrent stream drains, the overlapped quantizer
+#: fits), and an unguarded evict-while-insert would race.
+_RELATION_CACHE: dict[tuple, object] = {}
 
-_RELATION_LOCK = threading.Lock()
+_RELATION_LOCK = threading.RLock()
+
+
+def memo_plan(spark: SparkSession, sf_dir: str, name, fingerprint, build):
+    """The plan memo's one entry point: ``build()`` runs once per
+    (application, ``sf_dir``, ``name``, ``fingerprint``) and its
+    unexecuted result is returned to every later call. A new fingerprint
+    replaces the stale entry of the same (``sf_dir``, ``name``) rather
+    than pinning it."""
+    app = spark.sparkContext.applicationId
+    key = (app, sf_dir, name, fingerprint)
+    with _RELATION_LOCK:
+        plans = _RELATION_CACHE.get(key)
+        if plans is None:
+            plans = build()
+            for k in [
+                k for k in _RELATION_CACHE
+                if k[0] != app or k[1:3] == key[1:3]
+            ]:
+                del _RELATION_CACHE[k]
+            _RELATION_CACHE[key] = plans
+    return plans
 
 
 def load_table(
@@ -121,26 +155,20 @@ def load_table(
     fatal.
     """
     ensure_worker_imports(spark)
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        name,
-        ignore_corrupt_files,
-        table_fingerprint(sf_dir, name),
-    )
-    with _RELATION_LOCK:
-        df = _RELATION_CACHE.get(key)
-        if df is None:
-            from ..operators.caches import insert_evicting
 
-            reader = spark.read
-            if ignore_corrupt_files:
-                reader = reader.option("ignoreCorruptFiles", "true")
-            df = reader.parquet(f"{sf_dir}/{name}.parquet")
-            # one live entry per (app, dir, table, flag): a changed
-            # fingerprint evicts the stale relation rather than pinning it
-            insert_evicting(_RELATION_CACHE, key, df, prefix=4)
-    return df
+    def read() -> DataFrame:
+        reader = spark.read
+        if ignore_corrupt_files:
+            reader = reader.option("ignoreCorruptFiles", "true")
+        return reader.parquet(f"{sf_dir}/{name}.parquet")
+
+    return memo_plan(
+        spark,
+        sf_dir,
+        (name, ignore_corrupt_files),
+        table_fingerprint(sf_dir, name),
+        read,
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
