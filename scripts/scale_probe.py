@@ -1326,18 +1326,23 @@ def probe_bucketed_fold_skew(spark: SparkSession, quick: bool) -> None:
     words stay spread across the bucketed scan), SMJ with AQE, SMJ
     without, each timed on the fold's serving join over a persisted
     bucketed postings table."""
-    from tf_idf_mapreduce_spark.operators.tfidf import INDEX_BUCKETS, tfidf
+    from tf_idf_mapreduce_spark.operators.tfidf import tfidf
     from tf_idf_mapreduce_spark.sources.model_store import (
         MODEL_STORE_ENV,
         load_or_compute_bucketed_table,
     )
+
+    # the persisted index's rule: bucket count = the session's shuffle
+    # width, read once
+    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     emit("## P13 — persisted fold's word-keyed joins under Zipf s=2 arrivals")
     emit()
     emit("Synthetic postings (P1's generator), word-bucketed store table as")
     emit("the old side, 10% arrival slice with the SAME s=2 hot head. `hot")
     emit("word` / `hot bucket` = share of postings carried by the hottest")
-    emit("word / bucket (32 buckets, Spark's Murmur3 word hash).")
+    emit(f"word / bucket ({n_buckets} buckets = the shuffle width, Spark's")
+    emit("Murmur3 word hash).")
     emit()
     emit("| events | docs | vocab | postings | hot word | hot bucket "
          "| derived df bcast | derived SMJ AQE | derived SMJ noAQE "
@@ -1365,7 +1370,7 @@ def probe_bucketed_fold_skew(spark: SparkSession, quick: bool) -> None:
         new_wtc = wtc.where(is_batch).localCheckpoint()
         key = ("p13", n_events, n_docs, vocab)
         postings, _ = load_or_compute_bucketed_table(
-            "p13_postings", key, spark, lambda: old_wtc, "word", INDEX_BUCKETS
+            "p13_postings", key, spark, lambda: old_wtc, "word", n_buckets
         )
         n_rows = postings.count() + new_wtc.count()
         hot_word = (
@@ -1374,7 +1379,7 @@ def probe_bucketed_fold_skew(spark: SparkSession, quick: bool) -> None:
         )
         hot_bucket = (
             postings.groupBy(
-                F.pmod(F.abs(F.hash("word")), F.lit(INDEX_BUCKETS))
+                F.pmod(F.abs(F.hash("word")), F.lit(n_buckets))
             ).count().agg(F.max("count")).head()[0]
             / n_rows
         )
@@ -1580,7 +1585,7 @@ def probe_promoted_chain(spark: SparkSession, quick: bool) -> None:
         "the single-table read an N-day-old index should cost, with the "
         "ancestor files reclaimed. This is the measured case for "
         "promotion as the production loop: the round-9 in-lineage chain "
-        "was an associativity PROOF, not a deployable cadence. One measured nuance: the post-compaction serve reads ONE bucketed table, which caps scan parallelism at the bucket count (32 partitions vs 4 segments x 32) — slightly slower wall here than the 4-segment read on an idle 32-core box; at deployment scale INDEX_BUCKETS is sized to the cluster once, and the compaction win is file count + metadata + plan size, not raw scan speed."
+        "was an associativity PROOF, not a deployable cadence. One measured nuance: the post-compaction serve reads ONE bucketed table, which caps scan parallelism at the bucket count (32 partitions vs 4 segments x 32 at shuffle width 32) — slightly slower wall here than the 4-segment read on an idle 32-core box; the bucket count follows the session's shuffle width (sized ~2-3x total cores), and the compaction win is file count + metadata + plan size, not raw scan speed."
     )
     emit()
 

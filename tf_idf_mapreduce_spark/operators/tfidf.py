@@ -396,15 +396,15 @@ def merge_index_parts(
     )
 
 
-#: Bucket count for the persisted index tables. On the local[32] test
-#: box this matches the shuffle width; a real deployment sizes it to
-#: ~2-3x total cores once (bucket count is baked into the files). Folded
-#: into the store key, so a different width refits rather than
-#: mis-reading an old layout.
-INDEX_BUCKETS = 32
-
-
 def _index_store_key(spark, sf_dir: str) -> tuple:
+    """The persisted index's store key. It reads the session's shuffle
+    width, and that one read also sets the layout: every index table is
+    bucketed into exactly that many word buckets (``_index_table`` takes
+    the count back out of the key, so a table can never be registered
+    under one width and keyed under another). An entry point builds the
+    key once and hands it down — ``streaming.runner`` flips the same
+    conf around drains, and a second read could see another value. A
+    session at another width keys (and fits) its own index."""
     from ..sources.io import table_fingerprint
     from .curation import SAMPLE_BUCKET_MAX
 
@@ -413,15 +413,25 @@ def _index_store_key(spark, sf_dir: str) -> tuple:
         sf_dir,
         table_fingerprint(sf_dir, "documents"),
         SAMPLE_BUCKET_MAX,  # the batch-slice rule is part of what "old corpus" means
-        INDEX_BUCKETS,
-        spark.conf.get("spark.sql.shuffle.partitions"),
+        int(spark.conf.get("spark.sql.shuffle.partitions")),  # key[4]
         # uniform durable-key discipline (round-9 ADVICE): every store
         # key carries the AQE conf even where content is AQE-invariant
         spark.conf.get("spark.sql.adaptive.enabled"),
     )
 
 
-def persisted_index(spark, sf_dir: str):
+def _index_table(name: str, key: tuple, spark, compute):
+    """``load_or_compute_bucketed_table`` for an index table: bucketed on
+    ``word`` into as many buckets as the shuffle width ``key`` (or the
+    base key it extends) was built with."""
+    from ..sources.model_store import load_or_compute_bucketed_table
+
+    return load_or_compute_bucketed_table(
+        name, key, spark, compute, "word", key[4]
+    )
+
+
+def persisted_index(spark, sf_dir: str, key: tuple | None = None):
     """The TF-IDF index ITSELF as three durable store tables — postings
     (word, doc, count, doc_total) and df (word, dfx), both word-bucketed
     parquet, plus the 1-row document count — fit once over the old
@@ -432,7 +442,7 @@ def persisted_index(spark, sf_dir: str):
     sized df table, exactly the shape the docstring promised at 100 TB.
 
     Layout matters as much as persistence: both relations are written
-    ``bucketBy(INDEX_BUCKETS, word)`` and re-registered as external
+    ``bucketBy(<shuffle width>, word)`` and re-registered as external
     bucketed catalog tables on load, so the fold's two word-keyed joins
     read the corpus-sized postings WITHOUT shuffling it — only the
     arrival slice and the df-merge output move. df derives from the
@@ -456,6 +466,10 @@ def persisted_index(spark, sf_dir: str):
     (Catalyst reuses the exchange only in the no-AQE SMJ shape) —
     measured slowest of all four regimes at probe scale.
 
+    The bucket count is the session's shuffle width, read once into the
+    store key (``_index_store_key``); an entry point that already built
+    the key passes it as ``key``, so key and bucket spec agree.
+
     Returns ``(postings, df, n, origin)``. Origin "store" means all
     three relations are served from durable store files — which, per
     the table loaders' contract, includes the very first build (the
@@ -463,13 +477,10 @@ def persisted_index(spark, sf_dir: str):
     session sees literally the same files); "fit" appears only when
     durability degraded (store disabled/read-only/unreadable)."""
     from ..sources.io import documents_as_corpus, load_table
-    from ..sources.model_store import (
-        load_or_compute_bucketed_table,
-        load_or_compute_table,
-    )
+    from ..sources.model_store import load_or_compute_table
     from .curation import SAMPLE_BUCKET_MAX, _sample_bucket
 
-    key = _index_store_key(spark, sf_dir)
+    key = key or _index_store_key(spark, sf_dir)
 
     def old_corpus():
         docs = load_table(spark, sf_dir, "documents")
@@ -477,23 +488,19 @@ def persisted_index(spark, sf_dir: str):
             docs.where(~(_sample_bucket() <= SAMPLE_BUCKET_MAX))
         )
 
-    postings, o1 = load_or_compute_bucketed_table(
+    postings, o1 = _index_table(
         "tfidf_index_postings",
         key,
         spark,
         lambda: doc_totals(word_count(tokenize(old_corpus()))),
-        "word",
-        INDEX_BUCKETS,
     )
-    dfx, o2 = load_or_compute_bucketed_table(
+    dfx, o2 = _index_table(
         "tfidf_index_df",
         key,
         spark,
         # derived from the (already persisted) postings: one bucketed
         # scan, and the word group-by needs no shuffle
         lambda: postings.groupBy("word").agg(F.count("*").alias("dfx")),
-        "word",
-        INDEX_BUCKETS,
     )
     n, o3 = load_or_compute_table(
         "tfidf_index_n",
@@ -605,7 +612,10 @@ def _chain_day_pred(day: int, n_days: int = CHAIN_DAYS) -> Column:
     return (c >= lo) & (c < hi)
 
 
-def promoted_index(spark, sf_dir: str, upto_day: int, n_days: int = CHAIN_DAYS):
+def promoted_index(
+    spark, sf_dir: str, upto_day: int, n_days: int = CHAIN_DAYS,
+    key: tuple | None = None,
+):
     """The index lifecycle loop the round-9 verdict asked for: each daily
     fold's merged state is PROMOTED back into the store as a NEW index
     version, so day k reads day k-1's parquet instead of re-executing
@@ -643,15 +653,12 @@ def promoted_index(spark, sf_dir: str, upto_day: int, n_days: int = CHAIN_DAYS):
     (base first), the version-``upto_day`` df and N relations, and
     origin "store" iff every artifact is served from durable store
     files (true from the first build on; "fit" only under degraded
-    durability — see ``persisted_index``)."""
+    durability — see ``persisted_index``; ``key`` as there)."""
     from ..sources.io import documents_as_corpus, load_table
-    from ..sources.model_store import (
-        load_or_compute_bucketed_table,
-        load_or_compute_table,
-    )
+    from ..sources.model_store import load_or_compute_table
     from .curation import SAMPLE_BUCKET_MAX, _sample_bucket
 
-    key = _index_store_key(spark, sf_dir)
+    key = key or _index_store_key(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     is_batch = _sample_bucket() <= SAMPLE_BUCKET_MAX
 
@@ -660,27 +667,25 @@ def promoted_index(spark, sf_dir: str, upto_day: int, n_days: int = CHAIN_DAYS):
     # replaces base + day segments, whose dirs may be pruned
     start, segments, origins = 0, [], []
     for c in range(upto_day, 0, -1):
-        seg, dfx, n, o = _load_compacted(spark, sf_dir, key, c, n_days, docs, is_batch)
+        seg, dfx, n, o = _load_compacted(spark, key, c, n_days, docs, is_batch)
         if seg is not None:
             start, segments, origins = c, [seg], [o]
             break
     if not segments:
-        base_postings, dfx, n, origin = persisted_index(spark, sf_dir)
+        base_postings, dfx, n, origin = persisted_index(spark, sf_dir, key)
         segments, origins = [base_postings], [origin]
     for k in range(start + 1, upto_day + 1):
         day_corpus = documents_as_corpus(
             docs.where(is_batch & _chain_day_pred(k, n_days))
         )
-        seg, o1 = load_or_compute_bucketed_table(
+        seg, o1 = _index_table(
             "tfidf_index_postings",
             key + ("chain", n_days, "day", k),
             spark,
             lambda dc=day_corpus: doc_totals(word_count(tokenize(dc))),
-            "word",
-            INDEX_BUCKETS,
         )
         prev_df = dfx
-        df_merged, o2 = load_or_compute_bucketed_table(
+        df_merged, o2 = _index_table(
             "tfidf_index_df",
             key + ("chain", n_days, "df", k),
             spark,
@@ -702,8 +707,6 @@ def promoted_index(spark, sf_dir: str, upto_day: int, n_days: int = CHAIN_DAYS):
                     ).alias("dfx"),
                 )
             ),
-            "word",
-            INDEX_BUCKETS,
         )
         prev_n = n
         n_next, o3 = load_or_compute_table(
@@ -731,8 +734,7 @@ def _compact_keys(key: tuple, c: int, n_days: int):
     )
 
 
-def _load_compacted(spark, sf_dir: str, key: tuple, c: int, n_days: int,
-                    docs, is_batch):
+def _load_compacted(spark, key: tuple, c: int, n_days: int, docs, is_batch):
     """Load version ``c``'s compacted (postings, df, N) if the compacted
     postings artifact exists; ``(None, None, None, None)`` otherwise.
     df/N are DERIVED from the compacted state if their artifacts were
@@ -741,28 +743,22 @@ def _load_compacted(spark, sf_dir: str, key: tuple, c: int, n_days: int,
     corpus slice admitted through day c (zero-word docs carry no
     postings but still count — directory-entry semantics)."""
     from ..sources.io import documents_as_corpus
-    from ..sources.model_store import (
-        live_table_dir,
-        load_or_compute_bucketed_table,
-        load_or_compute_table,
-    )
+    from ..sources.model_store import live_table_dir, load_or_compute_table
 
     pk, dk, nk = _compact_keys(key, c, n_days)
     live = live_table_dir("tfidf_index_postings", pk, spark)
     if live is None:
         return None, None, None, None
-    seg, o1 = load_or_compute_bucketed_table(
+    seg, o1 = _index_table(
         "tfidf_index_postings", pk, spark,
         # a live version exists, so this runs only if catalog
         # registration failed: a plain parquet read of the same files is
         # the same relation, merely without the bucketing guarantee
         lambda: spark.read.parquet(live),
-        "word", INDEX_BUCKETS,
     )
-    dfx, o2 = load_or_compute_bucketed_table(
+    dfx, o2 = _index_table(
         "tfidf_index_df", dk, spark,
         lambda: seg.groupBy("word").agg(F.count("*").alias("dfx")),
-        "word", INDEX_BUCKETS,
     )
     upto_pred = is_batch
     if c < n_days:
@@ -804,15 +800,13 @@ def compact_index(
     import os as _os
 
     from ..sources.io import load_table
-    from ..sources.model_store import (
-        load_or_compute_bucketed_table,
-        load_or_compute_table,
-        model_dir,
-    )
+    from ..sources.model_store import model_dir
     from .curation import SAMPLE_BUCKET_MAX, _sample_bucket
 
     key = _index_store_key(spark, sf_dir)
-    segments, dfx, n, _origin = promoted_index(spark, sf_dir, upto_day, n_days)
+    segments, dfx, n, _origin = promoted_index(
+        spark, sf_dir, upto_day, n_days, key
+    )
     n_files_before = _index_file_count(spark, key)
     pk, dk, nk = _compact_keys(key, upto_day, n_days)
 
@@ -821,17 +815,14 @@ def compact_index(
 
         return reduce(lambda a, b: a.unionByName(b), segments)
 
-    seg, _ = load_or_compute_bucketed_table(
-        "tfidf_index_postings", pk, spark, union_all, "word", INDEX_BUCKETS
-    )
-    load_or_compute_bucketed_table(
+    seg, _ = _index_table("tfidf_index_postings", pk, spark, union_all)
+    _index_table(
         "tfidf_index_df", dk, spark,
         lambda: seg.groupBy("word").agg(F.count("*").alias("dfx")),
-        "word", INDEX_BUCKETS,
     )
     docs = load_table(spark, sf_dir, "documents")
     is_batch = _sample_bucket() <= SAMPLE_BUCKET_MAX
-    _load_compacted(spark, sf_dir, key, upto_day, n_days, docs, is_batch)
+    _load_compacted(spark, key, upto_day, n_days, docs, is_batch)
 
     pruned = 0
     if prune:
@@ -942,10 +933,7 @@ def incremental_e2e_promoted(
     oracle — promotion is invisible in the relation."""
     from ..functions.hashing import MINHASH_B, MINHASH_R
     from ..sources.io import documents_as_corpus, load_table, table_fingerprint
-    from ..sources.model_store import (
-        load_or_compute_bucketed_table,
-        load_or_compute_table,
-    )
+    from ..sources.model_store import load_or_compute_table
     from .curation import (
         CONTAM_BENCH_MOD,
         CONTAM_NGRAM,
@@ -959,8 +947,9 @@ def incremental_e2e_promoted(
     from .textstats import QUALITY_KEEP_MAX_PUNCT, QUALITY_KEEP_MIN_WORDS
 
     persist_screens = resolve_persist_screens(spark, sf_dir, persist_screens)
-    postings, dfx, n, _origin = persisted_index(spark, sf_dir)
-    key = _index_store_key(spark, sf_dir) + (
+    base_key = _index_store_key(spark, sf_dir)
+    postings, dfx, n, _origin = persisted_index(spark, sf_dir, base_key)
+    key = base_key + (
         "e2e",
         table_fingerprint(sf_dir, "embeddings"),
         MINHASH_K,
@@ -992,15 +981,13 @@ def incremental_e2e_promoted(
             )
         )
 
-    seg, _ = load_or_compute_bucketed_table(
+    seg, _ = _index_table(
         "tfidf_index_postings",
         key + ("day",),
         spark,
         lambda: doc_totals(word_count(tokenize(day_corpus()))),
-        "word",
-        INDEX_BUCKETS,
     )
-    df1, _ = load_or_compute_bucketed_table(
+    df1, _ = _index_table(
         "tfidf_index_df",
         key + ("df",),
         spark,
@@ -1019,8 +1006,6 @@ def incremental_e2e_promoted(
                 ).alias("dfx"),
             )
         ),
-        "word",
-        INDEX_BUCKETS,
     )
     n1, _ = load_or_compute_table(
         "tfidf_index_n",

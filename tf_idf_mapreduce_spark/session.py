@@ -11,7 +11,8 @@ produces would survive a 1000-executor / 100 TB deployment:
 - Arrow enabled so the (rare) pandas-UDF escape hatches batch via Arrow.
 - Shuffle partitions sized from the env (local[32] test box defaults to 32;
   a real cluster sets spark.sql.shuffle.partitions≈2-3× total cores or relies
-  on AQE's initialPartitionNum).
+  on AQE's initialPartitionNum). The persisted TF-IDF index's bucket count
+  follows spark.sql.shuffle.partitions (``operators.tfidf._index_store_key``).
 - Session timezone pinned to UTC so timestamp semantics are deterministic
   and match the DuckDB oracle.
 """

@@ -67,7 +67,9 @@ _REGISTER_LOCK = threading.Lock()
 #: (applicationId, table name) -> location whose external-table entry is
 #: live in that session's catalog. Version dirs are immutable once
 #: promoted, so an entry registered at the same location needs no
-#: re-registration (guarded by _REGISTER_LOCK; see register()).
+#: re-registration (guarded by _REGISTER_LOCK; see register()). An
+#: insert drops every other application's entries: a stopped session's
+#: catalog is gone, so they can never hit again (ADVICE 1).
 _REGISTERED_AT: dict[tuple, str] = {}
 
 #: Spark conf key for the store root. Set to "" to disable durability
@@ -407,6 +409,8 @@ def load_or_compute_bucketed_table(
                 f"INTO {n_buckets} BUCKETS LOCATION '{loc}'"
             )
             out = spark.table(tbl)
+            for k in [k for k in _REGISTERED_AT if k[0] != ck[0]]:
+                del _REGISTERED_AT[k]
             _REGISTERED_AT[ck] = loc
             return out
 
