@@ -203,11 +203,10 @@ def q_tfidf_search_promoted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tf_idf_mapreduce_spark.operators.tfidf import (
         CHAIN_DAYS,
         promoted_index,
-        score_index,
+        score,
     )
 
-    segments, dfx, n, _origin = promoted_index(spark, sf_dir, CHAIN_DAYS)
-    scored = score_index(segments, dfx, n)
+    scored = score(promoted_index(spark, sf_dir, CHAIN_DAYS)[:3])
     return _search_top20(scored, query_terms(scored))
 
 

@@ -1326,11 +1326,14 @@ def probe_bucketed_fold_skew(spark: SparkSession, quick: bool) -> None:
     words stay spread across the bucketed scan), SMJ with AQE, SMJ
     without, each timed on the fold's serving join over a persisted
     bucketed postings table."""
-    from tf_idf_mapreduce_spark.operators.tfidf import tfidf
+    import importlib
+
     from tf_idf_mapreduce_spark.sources.model_store import (
         MODEL_STORE_ENV,
         load_or_compute_bucketed_table,
     )
+
+    T = importlib.import_module("tf_idf_mapreduce_spark.operators.tfidf")
 
     # the persisted index's rule: bucket count = the session's shuffle
     # width, read once
@@ -1362,7 +1365,9 @@ def probe_bucketed_fold_skew(spark: SparkSession, quick: bool) -> None:
         store = tempfile.mkdtemp(prefix="p13_store_")
         atexit.register(shutil.rmtree, store, ignore_errors=True)
         os.environ[MODEL_STORE_ENV] = store
-        wtc = synth_postings(spark, n_events, n_docs, vocab, s=2)
+        wtc = synth_postings(spark, n_events, n_docs, vocab, s=2).withColumn(
+            "doc_total", F.lit(80).cast("long")
+        )
         is_batch = (
             F.pmod(F.abs(F.xxhash64(F.col("doc"), F.lit("b"))), F.lit(10)) == 0
         )
@@ -1383,35 +1388,22 @@ def probe_bucketed_fold_skew(spark: SparkSession, quick: bool) -> None:
             ).count().agg(F.max("count")).head()[0]
             / n_rows
         )
-        # the fold's df merge + scoring join, exactly merge_index_parts'
-        # shape with the old side a bucketed store table
-        day_df = new_wtc.groupBy("word").agg(F.count("*").alias("df_new"))
-        df_merged = (
-            postings.groupBy("word").agg(F.count("*").alias("df_old"))
-            .join(day_df, "word", "full_outer")
-            .select(
-                "word",
-                (
-                    F.coalesce("df_old", F.lit(0))
-                    + F.coalesce("df_new", F.lit(0))
-                ).alias("df"),
-            )
-        )
+        # the engine's fold + score with the old side a bucketed store
+        # table and its df derived in-plan
+        n_total = spark.range(1).select(F.lit(n_docs).cast("long").alias("nx"))
+
+        def put(part, build):
+            # the arrival slice is already postings, and synthetic
+            # postings have no corpus to count: N is the literal n_docs
+            if part == T.DF:
+                return build()
+            return new_wtc if part == T.POSTINGS else n_total
+
+        old_df = postings.groupBy("word").agg(F.count("*").alias("dfx"))
+        segments, df_merged, n = T.fold(([postings], old_df, n_total), None, put)
 
         def serve(dfm):
-            scored = (
-                postings.join(dfm, "word")
-                .unionByName(new_wtc.join(dfm, "word"))
-                .withColumn("doc_total", F.lit(80).cast("long"))
-                .crossJoin(
-                    F.broadcast(
-                        spark.range(1).select(
-                            F.lit(n_docs).cast("long").alias("total_docs")
-                        )
-                    )
-                )
-            )
-            return tfidf(scored, F.col("total_docs"))
+            return T.score((segments, dfm, n))
 
         times = {}
         times["bcast"] = _timed(serve(df_merged))
@@ -1472,8 +1464,8 @@ def probe_bucketed_fold_skew(spark: SparkSession, quick: bool) -> None:
 def probe_promoted_chain(spark: SparkSession, quick: bool) -> None:
     """P14: the round-10 headline priced past fixture scale — an N-day
     chain where each fold PROMOTES its state back into the store
-    (``promoted_index``) vs the in-lineage chain (``_merge_state``
-    nesting, what round 9 shipped). The claim under test: per-day
+    (``promoted_index``) vs the in-lineage chain (consecutive in-plan
+    ``fold``s, what round 9 shipped). The claim under test: per-day
     promote cost is FLAT in the day number (day k reads day k-1's
     parquet), while the in-lineage chain's day-k cost grows because it
     re-executes every prior merge; and compaction keeps the serving
@@ -1534,27 +1526,22 @@ def probe_promoted_chain(spark: SparkSession, quick: bool) -> None:
         is_batch = _sample_bucket() <= SAMPLE_BUCKET_MAX
 
         def lineage_day(k: int) -> float:
-            postings, dfx, n, _ = T.persisted_index(spark, sf_tmp)
-            state = (postings, dfx, n)
+            state = T.persisted_index(spark, sf_tmp)[:3]
             for d in range(1, k + 1):
-                day = documents_as_corpus(
-                    docs.where(is_batch & T._chain_day_pred(d, n_days))
+                state = T.fold(
+                    state,
+                    lambda d=d: documents_as_corpus(
+                        docs.where(is_batch & T._chain_day_pred(d, n_days))
+                    ),
+                    T.arrival,
                 )
-                state = T._merge_state(*state, day)
-            wtc, df_f, n_f = state
-            scored = T.tfidf(
-                wtc.join(df_f.withColumnRenamed("dfx", "df"), "word").crossJoin(
-                    F.broadcast(n_f.withColumnRenamed("nx", "total_docs"))
-                ),
-                F.col("total_docs"),
-            )
-            return _noop(scored)
+            return _noop(T.score(state))
 
         for k in range(1, n_days + 1):
             t0 = time.time()
             state = T.promoted_index(spark, sf_tmp, k, n_days)
             t_promote = time.time() - t0  # day k's writes (k-1 warm)
-            t_serve = _timed(T.score_index(*state[:3]))
+            t_serve = _timed(T.score(state[:3]))
             t_lineage = lineage_day(k)
             emit(
                 f"| {n_docs:,} | {k} | {t_promote:.2f} | {t_serve:.2f} "
@@ -1566,7 +1553,7 @@ def probe_promoted_chain(spark: SparkSession, quick: bool) -> None:
         )
         t_compact = time.time() - t0
         state = T.promoted_index(spark, sf_tmp, n_days, n_days)
-        t_serve_c = _timed(T.score_index(*state[:3]))
+        t_serve_c = _timed(T.score(state[:3]))
         emit(
             f"| {n_docs:,} | compact | {t_compact:.2f} | {t_serve_c:.2f} "
             f"| files {summary['files_before']} -> {summary['files_after']}, "

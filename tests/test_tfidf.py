@@ -167,6 +167,53 @@ def test_core_relations_equal_the_stage_chain(spark):
         assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
+FOLD_SLICES = [
+    [("d1", "common apple banana"), ("d2", "common apple")],
+    [("d3", "common cherry"), ("d4", "common banana banana")],
+    [("d5", "common date"), ("d6", "")],  # a zero-word doc
+]
+
+
+def test_fold_chain_equals_one_shot_pipeline(spark):
+    """``score`` over consecutive ``fold``s equals the one-shot pipeline
+    over the union of the slices at every prefix — so the idf=0 rows of
+    the two-slice prefix ("common" is in every doc) are kept, and the
+    last slice's empty doc, which has no postings, still raises N — and
+    folding (a ∪ b) then c gives the same rows (associativity)."""
+    from functools import reduce
+
+    from tf_idf_mapreduce_spark.operators.tfidf import fold, score
+
+    slices = [
+        spark.createDataFrame(s, "doc string, text string") for s in FOLD_SLICES
+    ]
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    def one_shot(corpus):
+        return rows(
+            tfidf_pipeline(corpus).select(
+                "word", "doc", "count", "doc_total", "df",
+                F.round("tfidf", 6).alias("tfidf"),
+            )
+        )
+
+    state = None
+    for k, corpus in enumerate(slices, 1):
+        state = fold(state, lambda corpus=corpus: corpus)
+        want = one_shot(reduce(lambda x, y: x.unionByName(y), slices[:k]))
+        assert rows(score(state)) == want
+        if k == 2:
+            assert [r for r in want if r[0] == "common"]
+            assert all(r[5] == 0.0 for r in want if r[0] == "common")
+    final = rows(score(state))
+    assert all(r[5] > 0.0 for r in final if r[0] == "common")
+    a, b, c = slices
+    ab = fold(None, lambda: a.unionByName(b))
+    assert rows(score(fold(ab, lambda: c))) == final
+
+
 def test_incremental_index_equals_one_shot_rebuild(spark, sf_dir):
     """The batch-merge (old postings + batch postings, df added, N added,
     idf re-multiplied) must reproduce the full rebuild row-for-row —

@@ -2,8 +2,13 @@
 
 Everything here is built on ``md5`` — the one hash both Spark (JVM) and any
 SQL oracle compute bit-identically on UTF-8 strings — composed with pure
-Column expressions. No Python UDFs: every operator stays inside
-whole-stage codegen and is Arrow/driver-transfer-free.
+Column expressions that stay inside whole-stage codegen. The one Python
+UDF is ``minhash_signature_udf``, an Arrow-batched twin of
+``minhash_signature`` with bit-identical integer math: the streaming
+arrival screen (``streaming.queries.q_stream_incremental_dedup``) signs
+each micro-batch with it, because a per-doc signature there must be
+stateless and the twin replaces k interpreted array folds per row with
+one numpy pass per Arrow batch.
 
 Scale notes: signatures are fixed-size arrays per document (k strings /
 one int64), so memory is O(docs), not O(tokens); band keys are re-hashed

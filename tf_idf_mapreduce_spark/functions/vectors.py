@@ -1,5 +1,7 @@
 """Vector math over ``array<float>`` embedding columns — pure JVM
-expressions (``zip_with`` + ``aggregate``), no UDFs, no driver collects.
+expressions (``zip_with`` + ``aggregate``), no driver collects. The one
+UDF is ``fold_dot_matrix_udf``, the Arrow-batched twin of the SimHash
+plane folds.
 
 ``F.aggregate`` folds left-to-right — a deterministic summation order, so
 two runs (and two engines, given identical inputs) agree bit-for-bit on the
@@ -77,10 +79,13 @@ def fold_dot_matrix_udf(planes: list[list[float]]):
                 return pd.Series(_fold(x))
         except (ValueError, TypeError):
             pass
-        # corrupt-row contract, matching the SQL twin exactly: a NULL or
-        # dimension-mismatched embedding nulls every plane dot under
-        # ``zip_with``+``aggregate``, so each ``when(dot >= 0, 1<<p)``
-        # takes its otherwise(0) branch — signature 0, never a crash
+        # corrupt-row contract, matching the SQL twin for NULL and
+        # dimension-mismatched rows: such an embedding nulls every plane
+        # dot under ``zip_with``+``aggregate``, so each
+        # ``when(dot >= 0, 1<<p)`` takes its otherwise(0) branch —
+        # signature 0, never a crash. NaN embeddings are outside the
+        # twin contract: numpy's ``acc >= 0`` is False for NaN (bit 0),
+        # while Spark orders NaN above every number and sets the bit.
         out = np.zeros(len(arrs), dtype="int64")
         valid = [
             i

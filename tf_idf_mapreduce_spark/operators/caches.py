@@ -59,8 +59,9 @@ def _clear_bpe() -> None:
 
 def _clear_tfidf_index() -> None:
     from ..sources.model_store import drop_models
+    from .tfidf import INDEX_FAMILIES
 
-    for family in ("tfidf_index_postings", "tfidf_index_df", "tfidf_index_n"):
+    for family in INDEX_FAMILIES:
         drop_models(family)
 
 

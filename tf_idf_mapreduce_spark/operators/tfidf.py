@@ -274,7 +274,7 @@ def incremental_index(spark, sf_dir: str) -> DataFrame:
     plus one word-keyed outer join against a df table of vocabulary
     size, instead of re-scanning the corpus. This variant builds both
     sides in-plan — the topology pin, deliberately store-free so the
-    merge itself stays pinned even with durability disabled;
+    fold itself stays pinned even with durability disabled;
     ``incremental_index_persisted`` (round 9) is the production shape
     whose old side IS the loaded index.
 
@@ -287,113 +287,155 @@ def incremental_index(spark, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     is_batch = _sample_bucket() <= SAMPLE_BUCKET_MAX
-    return merge_index(
-        documents_as_corpus(docs.where(~is_batch)),
-        documents_as_corpus(docs.where(is_batch)),
+    old = fold(None, lambda: documents_as_corpus(docs.where(~is_batch)))
+    return score(
+        fold(old, lambda: documents_as_corpus(docs.where(is_batch)), arrival)
     )
 
 
-def _index_side(corpus: DataFrame, checkpoint: bool = False):
-    """One side of the index merge: postings (word, doc, count,
-    doc_total), per-word document frequency, and the 1-row document
-    count. N comes from the CORPUS, not the postings — a zero-word
-    document contributes no postings rows but still raises the IDF
-    denominator (the reference's directory-entry semantics).
-
-    ``checkpoint`` barriers the postings BEFORE df derives from them —
-    pass True only for the ARRIVAL side (arrival-sized, safe to
-    materialize at any scale; the old side may be the whole corpus).
-    Without it the serving join's branches re-execute the arrival
-    tokenize once each — P13's derived-subplan lesson applied to the
-    fold; measured 0.89 -> 0.47 s warm at sf0.1."""
-    wtc = doc_totals(word_count(tokenize(corpus)))
-    if checkpoint:
-        wtc = wtc.localCheckpoint()
-    dfx = wtc.groupBy("word").agg(F.count("*").alias("dfx"))
-    n = corpus.agg(F.countDistinct("doc").alias("nx"))
-    return wtc, dfx, n
+#: The index's three store families, in fold order: postings (word,
+#: doc, count, doc_total), per-word document frequency (word, dfx) and
+#: the 1-row document count (nx).
+INDEX_FAMILIES = ("tfidf_index_postings", "tfidf_index_df", "tfidf_index_n")
+POSTINGS, DF, N = INDEX_FAMILIES
 
 
-def merge_index(old_corpus: DataFrame, new_corpus: DataFrame) -> DataFrame:
-    """The index-merge core shared by ``incremental_index`` (whole batch)
-    and ``incremental_e2e_index`` (admitted batch docs only): postings
-    union, additive df full-outer merge, scalar-N add, idf re-multiply."""
-    return merge_index_parts(*_index_side(old_corpus), new_corpus)
+class IndexState(NamedTuple):
+    """A TF-IDF index as additive state, the reference's job-3 inputs
+    (CalcTFIDF.java:105,150): postings segments, each document in
+    exactly one; df per word; and N. Scoring is a pure function of it
+    (``score``), so any number of ``fold``s may run before one score."""
+
+    segments: list  # of (word, doc, count, doc_total)
+    df: DataFrame  # (word, dfx)
+    n: DataFrame  # 1 row: (nx)
 
 
-def _merge_state(
-    old_wtc: DataFrame, old_df: DataFrame, old_n: DataFrame,
-    new_corpus: DataFrame,
-):
-    """Fold one arrival batch into index STATE (postings, df, N) without
-    scoring — the chainable form: state_k = _merge_state(state_{k-1},
-    day_k). Scoring (idf re-multiply) is a pure function of state, so
-    only the final state is scored; each intermediate merge is the same
-    additive df full-outer + postings union + scalar-N add the one-shot
-    fold uses, which is what makes consecutive daily folds associate."""
-    new_wtc, new_df, new_n = _index_side(new_corpus, checkpoint=True)
-    wtc = old_wtc.unionByName(new_wtc)
-    df = (
-        old_df.withColumnRenamed("dfx", "df_old")
-        .join(new_df.withColumnRenamed("dfx", "df_new"), "word", "full_outer")
-        .select(
-            "word",
-            (
-                F.coalesce("df_old", F.lit(0)) + F.coalesce("df_new", F.lit(0))
-            ).alias("dfx"),
+def in_plan(part: str, build) -> DataFrame:
+    """``fold``'s ``put`` for an index kept in the plan: nothing is
+    written."""
+    return build()
+
+
+def arrival(part: str, build) -> DataFrame:
+    """``fold``'s ``put`` for an ARRIVAL slice kept in the plan: its
+    postings are checkpointed BEFORE df derives from them
+    (arrival-sized, safe to materialize at any scale; an old side may be
+    the whole corpus, so it folds with ``in_plan``). Without the barrier
+    the serving join's branches re-execute the arrival tokenize once
+    each — P13's derived-subplan lesson applied to the fold; measured
+    0.89 -> 0.47 s warm at sf0.1."""
+    rel = build()
+    return rel.localCheckpoint() if part == POSTINGS else rel
+
+
+def _store_put(spark, origins: list, *keys: tuple):
+    """``fold``'s ``put`` for the model store: each part is its family's
+    table under its key of ``keys`` (postings, df, N order) — postings
+    and df word-bucketed (``_index_table``), N a plain 1-row table — and
+    each load's origin is appended to ``origins``."""
+    from ..sources.model_store import load_or_compute_table
+
+    key_of = dict(zip(INDEX_FAMILIES, keys))
+
+    def put(part: str, build) -> DataFrame:
+        load = load_or_compute_table if part == N else _index_table
+        rel, origin = load(part, key_of[part], spark, build)
+        origins.append(origin)
+        return rel
+
+    return put
+
+
+def fold(state, corpus, put=in_plan) -> IndexState:
+    """Fold one corpus slice into index ``state`` — the one update rule
+    behind every index path (in-plan, model store, streamed root).
+
+    The slice is tokenized once into postings; its df derives from the
+    postings ``put`` hands back (one scan of what was just written, the
+    tokenize never re-evaluated per consumer); its N is counted from the
+    CORPUS, because a zero-word document has no postings but still
+    raises the IDF denominator (the reference's directory-entry
+    semantics, TfidfMapReduce.java:51). Then df adds per word (a
+    full-outer merge of two vocabulary-sized tables — one row per word
+    per side, so it cannot skew) and N adds as a scalar. Both adds are
+    associative, so consecutive folds equal one fold of the union.
+    ``state`` is an ``IndexState`` or any (segments, df, N) triple;
+    None is the empty index, whose fold is the slice's own state.
+
+    ``corpus`` is a zero-argument function returning the slice's corpus
+    (doc, text): only the builds ``put`` runs call it, so a slice whose
+    tables a store already holds is never even planned.
+
+    ``put(part, build) -> DataFrame`` decides how each part (``POSTINGS``,
+    ``DF``, ``N``, in that order) is materialized from its lazy
+    ``build``: ``in_plan``, ``arrival``, ``_store_put`` (the model
+    store) or the streamed root's writer
+    (``streaming.queries.make_index_merge``)."""
+    segments, old_df, old_n = state or ([], None, None)
+    postings = put(POSTINGS, lambda: doc_totals(word_count(tokenize(corpus()))))
+
+    def add_df():
+        new = postings.groupBy("word").agg(F.count("*").alias("dfx"))
+        if old_df is None:
+            return new
+        return (
+            old_df.withColumnRenamed("dfx", "df_old")
+            .join(new.withColumnRenamed("dfx", "df_new"), "word", "full_outer")
+            .select(
+                "word",
+                (
+                    F.coalesce("df_old", F.lit(0)) + F.coalesce("df_new", F.lit(0))
+                ).alias("dfx"),
+            )
         )
-    )
-    n = F.broadcast(old_n).crossJoin(
-        F.broadcast(new_n.withColumnRenamed("nx", "nx_new"))
-    ).select((F.col("nx") + F.col("nx_new")).alias("nx"))
-    return wtc, df, n
 
-
-def merge_index_parts(
-    old_wtc: DataFrame, old_df: DataFrame, old_n: DataFrame,
-    new_corpus: DataFrame,
-) -> DataFrame:
-    """The merge with the OLD side passed as its three index parts —
-    either built in-plan (``merge_index``) or LOADED from the persisted
-    index (``incremental_index_persisted``), which is the whole point:
-    the fold's topology is identical whether the old side is a subplan
-    or a table.
-
-    The scored relation is built join-then-union, not union-then-join:
-    an inner join distributes over union (identical rows), and keeping
-    the old postings OUT of the union lets a word-bucketed persisted
-    postings table join ``df_merged`` with ZERO exchange on the
-    corpus-sized side — only the vocabulary-sized df table and the
-    arrival slice shuffle into the bucket layout. The arrival side is
-    checkpointed (arrival-sized — P13's rule: don't re-execute a
-    derived subplan across the serving join's branches)."""
-    new_wtc, new_df, new_n = _index_side(new_corpus, checkpoint=True)
-
-    df_merged = (
-        old_df.withColumnRenamed("dfx", "df_old")
-        .join(new_df.withColumnRenamed("dfx", "df_new"), "word", "full_outer")
-        .select(
-            "word",
-            (
-                F.coalesce("df_old", F.lit(0)) + F.coalesce("df_new", F.lit(0))
-            ).alias("df"),
+    def add_n():
+        new = corpus().agg(F.countDistinct("doc").alias("nx"))
+        if old_n is None:
+            return new
+        # both sides are 1-row aggregates — broadcast-pin the attach
+        # like every other scalar cross join instead of leaving the
+        # strategy to AQE
+        return (
+            F.broadcast(old_n)
+            .crossJoin(F.broadcast(new.withColumnRenamed("nx", "nx_new")))
+            .select((F.col("nx") + F.col("nx_new")).alias("nx"))
         )
-    )
-    # both sides are 1-row aggregates — broadcast-pin the attach like
-    # every other scalar cross join in the codebase instead of leaving
-    # the strategy to AQE
-    n_total = F.broadcast(old_n).crossJoin(
-        F.broadcast(new_n.withColumnRenamed("nx", "nx_new"))
-    ).select((F.col("nx") + F.col("nx_new")).alias("total_docs"))
+
+    return IndexState([*segments, postings], put(DF, add_df), put(N, add_n))
+
+
+def score(state) -> DataFrame:
+    """Score an index state (``IndexState`` or any (segments, df, N)
+    triple): join each postings segment with df separately, THEN union —
+    the join distributes over the union (identical rows), and
+    per-segment joins let every word-bucketed segment meet the bucketed
+    df with zero exchange, where a union-then-join would discard the
+    children's bucketing (Spark's union reports unknown output
+    partitioning) and reshuffle the whole corpus. Same ln-idf double
+    math as the one-shot pipeline, idf=0 rows kept, tfidf on the 6 dp
+    grid."""
+    from functools import reduce
+
+    segments, dfx, n = state
+    df = dfx.withColumnRenamed("dfx", "df")
+    parts = [seg.join(df, "word") for seg in segments]
     scored = tfidf(
-        old_wtc.join(df_merged, "word")
-        .unionByName(new_wtc.join(df_merged, "word"))
-        .crossJoin(F.broadcast(n_total)),
+        reduce(lambda a, b: a.unionByName(b), parts).crossJoin(
+            F.broadcast(n.withColumnRenamed("nx", "total_docs"))
+        ),
         F.col("total_docs"),
     )
     return scored.select(
-        "word", "doc", "count", "doc_total", "df", F.round("tfidf", 6).alias("tfidf")
+        "word", "doc", "count", "doc_total", "df",
+        F.round("tfidf", 6).alias("tfidf"),
     )
+
+
+def score_index(segments, dfx, n) -> DataFrame:
+    """``score`` with the state passed as its three parts."""
+    return score((segments, dfx, n))
 
 
 def _index_store_key(spark, sf_dir: str) -> tuple:
@@ -470,14 +512,15 @@ def persisted_index(spark, sf_dir: str, key: tuple | None = None):
     store key (``_index_store_key``); an entry point that already built
     the key passes it as ``key``, so key and bucket spec agree.
 
-    Returns ``(postings, df, n, origin)``. Origin "store" means all
+    The index is the fold of the old corpus into the empty state, with
+    every part a store table under ``key``. Returns ``(segments, df, n,
+    origin)`` — one segment, the postings. Origin "store" means all
     three relations are served from durable store files — which, per
     the table loaders' contract, includes the very first build (the
     write path reads its own parquet back, so every consumer in every
     session sees literally the same files); "fit" appears only when
     durability degraded (store disabled/read-only/unreadable)."""
     from ..sources.io import documents_as_corpus, load_table
-    from ..sources.model_store import load_or_compute_table
     from .curation import SAMPLE_BUCKET_MAX, _sample_bucket
 
     key = key or _index_store_key(spark, sf_dir)
@@ -488,28 +531,9 @@ def persisted_index(spark, sf_dir: str, key: tuple | None = None):
             docs.where(~(_sample_bucket() <= SAMPLE_BUCKET_MAX))
         )
 
-    postings, o1 = _index_table(
-        "tfidf_index_postings",
-        key,
-        spark,
-        lambda: doc_totals(word_count(tokenize(old_corpus()))),
-    )
-    dfx, o2 = _index_table(
-        "tfidf_index_df",
-        key,
-        spark,
-        # derived from the (already persisted) postings: one bucketed
-        # scan, and the word group-by needs no shuffle
-        lambda: postings.groupBy("word").agg(F.count("*").alias("dfx")),
-    )
-    n, o3 = load_or_compute_table(
-        "tfidf_index_n",
-        key,
-        spark,
-        lambda: old_corpus().agg(F.countDistinct("doc").alias("nx")),
-    )
-    origin = "store" if (o1, o2, o3) == ("store",) * 3 else "fit"
-    return postings, dfx, n, origin
+    origins: list = []
+    state = fold(None, old_corpus, _store_put(spark, origins, key, key, key))
+    return (*state, "store" if set(origins) == {"store"} else "fit")
 
 
 def incremental_index_persisted(spark, sf_dir: str) -> DataFrame:
@@ -523,12 +547,12 @@ def incremental_index_persisted(spark, sf_dir: str) -> DataFrame:
     from ..sources.io import documents_as_corpus, load_table
     from .curation import SAMPLE_BUCKET_MAX, _sample_bucket
 
-    postings, dfx, n, _origin = persisted_index(spark, sf_dir)
+    old = persisted_index(spark, sf_dir)[:3]
     docs = load_table(spark, sf_dir, "documents")
     batch = documents_as_corpus(
         docs.where(_sample_bucket() <= SAMPLE_BUCKET_MAX)
     )
-    return merge_index_parts(postings, dfx, n, batch)
+    return score(fold(old, lambda: batch, arrival))
 
 
 def incremental_chain_index(spark, sf_dir: str) -> DataFrame:
@@ -537,12 +561,11 @@ def incremental_chain_index(spark, sf_dir: str) -> DataFrame:
     ((index ⊕ day1) ⊕ day2) must equal the one-shot build over
     everything, bit for bit. The batch slice splits into two "days" by
     the hash character AFTER the sampling bucket's (same deterministic
-    md5 preimage, so the split replays in SQL); each fold is the same
-    additive state merge (``_merge_state``), and only the final state
-    is scored. Hash-matches the one-shot ``tfidf_full`` oracle — if the
-    df merge or the scalar-N add were not associative (e.g. a
-    max-merge, a recomputed N), day ordering would leak into idf and
-    the hash would break.
+    md5 preimage, so the split replays in SQL); each day is one
+    ``fold``, and only the final state is scored. Hash-matches the
+    one-shot ``tfidf_full`` oracle — if the df merge or the scalar-N
+    add were not associative (e.g. a max-merge, a recomputed N), day
+    ordering would leak into idf and the hash would break.
 
     At 100 TB each fold's cost is its day's tokenize + a
     vocabulary-sized df merge (P6/P12-priced); the chain shows the
@@ -551,7 +574,7 @@ def incremental_chain_index(spark, sf_dir: str) -> DataFrame:
     from ..sources.io import documents_as_corpus, load_table
     from .curation import SAMPLE_BUCKET_MAX, _sample_bucket
 
-    postings, dfx, n, _origin = persisted_index(spark, sf_dir)
+    state = persisted_index(spark, sf_dir)[:3]
     docs = load_table(spark, sf_dir, "documents")
     is_batch = _sample_bucket() <= SAMPLE_BUCKET_MAX
     day_char = F.substring(
@@ -565,21 +588,13 @@ def incremental_chain_index(spark, sf_dir: str) -> DataFrame:
         3,
         1,
     )
-    day1 = documents_as_corpus(docs.where(is_batch & (day_char < "8")))
-    day2 = documents_as_corpus(docs.where(is_batch & (day_char >= "8")))
-    state1 = _merge_state(postings, dfx, n, day1)
-    state2 = _merge_state(*state1, day2)
-    wtc, df_final, n_final = state2
-    scored = tfidf(
-        wtc.join(df_final.withColumnRenamed("dfx", "df"), "word").crossJoin(
-            F.broadcast(n_final.withColumnRenamed("nx", "total_docs"))
-        ),
-        F.col("total_docs"),
-    )
-    return scored.select(
-        "word", "doc", "count", "doc_total", "df",
-        F.round("tfidf", 6).alias("tfidf"),
-    )
+    for day in (day_char < "8", day_char >= "8"):
+        state = fold(
+            state,
+            lambda day=day: documents_as_corpus(docs.where(is_batch & day)),
+            arrival,
+        )
+    return score(state)
 
 
 #: Days in the promoted chain — the batch slice splits into this many
@@ -622,6 +637,12 @@ def promoted_index(
     every prior merge in lineage (``incremental_chain_index`` keeps day-1
     state as a nested subplan — an N-day chain there grows linearly).
 
+    Each day is one ``fold`` whose ``put`` is the store writer
+    (``_store_put``). The streamed index runs the same fold per
+    micro-batch with plain parquet under its root as ``put``
+    (``streaming.queries.make_index_merge``), and both serve through
+    ``score``: two layouts and two commit protocols over one fold.
+
     Version layout (all under the same three store families, so version
     keys age out via ``models prune`` like any stale artifact):
 
@@ -655,7 +676,6 @@ def promoted_index(
     files (true from the first build on; "fit" only under degraded
     durability — see ``persisted_index``; ``key`` as there)."""
     from ..sources.io import documents_as_corpus, load_table
-    from ..sources.model_store import load_or_compute_table
     from .curation import SAMPLE_BUCKET_MAX, _sample_bucket
 
     key = key or _index_store_key(spark, sf_dir)
@@ -665,65 +685,33 @@ def promoted_index(
     # resolve the newest COMPACTED version at or below upto_day: after
     # `models compact`, the merged segment (plus its derived df/N)
     # replaces base + day segments, whose dirs may be pruned
-    start, segments, origins = 0, [], []
+    start, state, origins = 0, None, []
     for c in range(upto_day, 0, -1):
-        seg, dfx, n, o = _load_compacted(spark, key, c, n_days, docs, is_batch)
-        if seg is not None:
-            start, segments, origins = c, [seg], [o]
+        state = _load_compacted(spark, key, c, n_days, docs, is_batch, origins)
+        if state is not None:
+            start = c
             break
-    if not segments:
-        base_postings, dfx, n, origin = persisted_index(spark, sf_dir, key)
-        segments, origins = [base_postings], [origin]
+    if state is None:
+        *state, origin = persisted_index(spark, sf_dir, key)
+        origins.append(origin)
     for k in range(start + 1, upto_day + 1):
-        day_corpus = documents_as_corpus(
-            docs.where(is_batch & _chain_day_pred(k, n_days))
-        )
-        seg, o1 = _index_table(
-            "tfidf_index_postings",
-            key + ("chain", n_days, "day", k),
-            spark,
-            lambda dc=day_corpus: doc_totals(word_count(tokenize(dc))),
-        )
-        prev_df = dfx
-        df_merged, o2 = _index_table(
-            "tfidf_index_df",
-            key + ("chain", n_days, "df", k),
-            spark,
-            # both inputs are word-bucketed store tables: the day count
-            # is a shuffle-free group-by of the day segment, the merge a
-            # shuffle-free full-outer SMJ against v_{k-1}'s df
-            lambda s=seg, p=prev_df: (
-                p.withColumnRenamed("dfx", "df_old")
-                .join(
-                    s.groupBy("word").agg(F.count("*").alias("df_new")),
-                    "word",
-                    "full_outer",
-                )
-                .select(
-                    "word",
-                    (
-                        F.coalesce("df_old", F.lit(0))
-                        + F.coalesce("df_new", F.lit(0))
-                    ).alias("dfx"),
-                )
+        state = fold(
+            state,
+            lambda k=k: documents_as_corpus(
+                docs.where(is_batch & _chain_day_pred(k, n_days))
             ),
+            _store_put(spark, origins, *_day_keys(key, n_days, k)),
         )
-        prev_n = n
-        n_next, o3 = load_or_compute_table(
-            "tfidf_index_n",
-            key + ("chain", n_days, "n", k),
-            spark,
-            lambda dc=day_corpus, pn=prev_n: F.broadcast(pn)
-            .crossJoin(
-                F.broadcast(dc.agg(F.countDistinct("doc").alias("nx_new")))
-            )
-            .select((F.col("nx") + F.col("nx_new")).alias("nx")),
-        )
-        segments.append(seg)
-        dfx, n = df_merged, n_next
-        origins += [o1, o2, o3]
-    origin = "store" if all(o == "store" for o in origins) else "fit"
-    return segments, dfx, n, origin
+    return (*state, "store" if set(origins) == {"store"} else "fit")
+
+
+def _day_keys(key: tuple, n_days: int, k: int):
+    """Store keys of day ``k``'s promoted (postings, df, N)."""
+    return (
+        key + ("chain", n_days, "day", k),
+        key + ("chain", n_days, "df", k),
+        key + ("chain", n_days, "n", k),
+    )
 
 
 def _compact_keys(key: tuple, c: int, n_days: int):
@@ -734,32 +722,24 @@ def _compact_keys(key: tuple, c: int, n_days: int):
     )
 
 
-def _load_compacted(spark, key: tuple, c: int, n_days: int, docs, is_batch):
-    """Load version ``c``'s compacted (postings, df, N) if the compacted
-    postings artifact exists; ``(None, None, None, None)`` otherwise.
-    df/N are DERIVED from the compacted state if their artifacts were
-    lost: df is a shuffle-free group-by of the bucketed postings (the
-    compacted segment IS all postings through day c), N a count over the
-    corpus slice admitted through day c (zero-word docs carry no
-    postings but still count — directory-entry semantics)."""
+def _load_compacted(
+    spark, key: tuple, c: int, n_days: int, docs, is_batch, origins: list
+):
+    """Version ``c``'s compacted index state if the compacted postings
+    artifact exists, else None. The compacted segment IS all postings
+    through day c, so the state is the fold of the corpus admitted
+    through day c into the empty state, under the compaction keys: the
+    postings load from that segment, and df/N are DERIVED like any
+    fold's if their artifacts were lost — df a shuffle-free group-by of
+    the bucketed postings, N a count over the admitted corpus (zero-word
+    docs carry no postings but still count — directory-entry
+    semantics). Load origins go to ``origins``."""
     from ..sources.io import documents_as_corpus
-    from ..sources.model_store import live_table_dir, load_or_compute_table
+    from ..sources.model_store import live_table_dir
 
-    pk, dk, nk = _compact_keys(key, c, n_days)
-    live = live_table_dir("tfidf_index_postings", pk, spark)
-    if live is None:
-        return None, None, None, None
-    seg, o1 = _index_table(
-        "tfidf_index_postings", pk, spark,
-        # a live version exists, so this runs only if catalog
-        # registration failed: a plain parquet read of the same files is
-        # the same relation, merely without the bucketing guarantee
-        lambda: spark.read.parquet(live),
-    )
-    dfx, o2 = _index_table(
-        "tfidf_index_df", dk, spark,
-        lambda: seg.groupBy("word").agg(F.count("*").alias("dfx")),
-    )
+    keys = _compact_keys(key, c, n_days)
+    if live_table_dir(POSTINGS, keys[0], spark) is None:
+        return None
     upto_pred = is_batch
     if c < n_days:
         day_ors = _chain_day_pred(1, n_days)
@@ -767,14 +747,11 @@ def _load_compacted(spark, key: tuple, c: int, n_days: int, docs, is_batch):
             day_ors = day_ors | _chain_day_pred(k, n_days)
         upto_pred = is_batch & day_ors
     admitted = docs.where((~is_batch) | upto_pred)
-    n, o3 = load_or_compute_table(
-        "tfidf_index_n", nk, spark,
-        lambda: documents_as_corpus(admitted).agg(
-            F.countDistinct("doc").alias("nx")
-        ),
+    return fold(
+        None,
+        lambda: documents_as_corpus(admitted),
+        _store_put(spark, origins, *keys),
     )
-    origin = "store" if (o1, o2, o3) == ("store",) * 3 else "fit"
-    return seg, dfx, n, origin
 
 
 def compact_index(
@@ -808,21 +785,16 @@ def compact_index(
         spark, sf_dir, upto_day, n_days, key
     )
     n_files_before = _index_file_count(spark, key)
-    pk, dk, nk = _compact_keys(key, upto_day, n_days)
 
     def union_all():
         from functools import reduce
 
         return reduce(lambda a, b: a.unionByName(b), segments)
 
-    seg, _ = _index_table("tfidf_index_postings", pk, spark, union_all)
-    _index_table(
-        "tfidf_index_df", dk, spark,
-        lambda: seg.groupBy("word").agg(F.count("*").alias("dfx")),
-    )
+    _index_table(POSTINGS, _compact_keys(key, upto_day, n_days)[0], spark, union_all)
     docs = load_table(spark, sf_dir, "documents")
     is_batch = _sample_bucket() <= SAMPLE_BUCKET_MAX
-    _load_compacted(spark, key, upto_day, n_days, docs, is_batch)
+    _load_compacted(spark, key, upto_day, n_days, docs, is_batch, [])
 
     pruned = 0
     if prune:
@@ -837,11 +809,7 @@ def compact_index(
         # consumers really are gone.
         victims = []
         for k in range(1, upto_day + 1):
-            victims += [
-                ("tfidf_index_postings", key + ("chain", n_days, "day", k)),
-                ("tfidf_index_df", key + ("chain", n_days, "df", k)),
-                ("tfidf_index_n", key + ("chain", n_days, "n", k)),
-            ]
+            victims += zip(INDEX_FAMILIES, _day_keys(key, n_days, k))
         import shutil as _shutil
 
         for fam, vkey in victims:
@@ -869,37 +837,13 @@ def _index_file_count(spark, key: tuple) -> int:
     if root is None:
         return 0
     total = 0
-    for fam in ("tfidf_index_postings", "tfidf_index_df", "tfidf_index_n"):
+    for fam in INDEX_FAMILIES:
         famdir = _os.path.join(root, fam)
         if not _os.path.isdir(famdir):
             continue
         for dp, _dn, fns in _os.walk(famdir):
             total += sum(1 for f in fns if f.endswith(".parquet"))
     return total
-
-
-def score_index(segments, dfx, n) -> DataFrame:
-    """Score a (segments, df, N) index state: join each postings segment
-    with df separately, THEN union — the join distributes over the union
-    (identical rows), and per-segment joins let every word-bucketed
-    segment meet the bucketed df with zero exchange, where a
-    union-then-join would discard the children's bucketing (Spark's
-    union reports unknown output partitioning) and reshuffle the whole
-    corpus."""
-    from functools import reduce
-
-    df = dfx.withColumnRenamed("dfx", "df")
-    parts = [seg.join(df, "word") for seg in segments]
-    scored = tfidf(
-        reduce(lambda a, b: a.unionByName(b), parts).crossJoin(
-            F.broadcast(n.withColumnRenamed("nx", "total_docs"))
-        ),
-        F.col("total_docs"),
-    )
-    return scored.select(
-        "word", "doc", "count", "doc_total", "df",
-        F.round("tfidf", 6).alias("tfidf"),
-    )
 
 
 def incremental_chain_persisted(spark, sf_dir: str) -> DataFrame:
@@ -911,8 +855,7 @@ def incremental_chain_persisted(spark, sf_dir: str) -> DataFrame:
     reads ONLY index tables (zero documents scans, pinned). Must still
     hash-match the one-shot ``tfidf_full`` oracle: promotion is an
     execution strategy, invisible in the relation."""
-    segments, dfx, n, _origin = promoted_index(spark, sf_dir, CHAIN_DAYS)
-    return score_index(segments, dfx, n)
+    return score(promoted_index(spark, sf_dir, CHAIN_DAYS)[:3])
 
 
 def incremental_e2e_promoted(
@@ -933,7 +876,6 @@ def incremental_e2e_promoted(
     oracle — promotion is invisible in the relation."""
     from ..functions.hashing import MINHASH_B, MINHASH_R
     from ..sources.io import documents_as_corpus, load_table, table_fingerprint
-    from ..sources.model_store import load_or_compute_table
     from .curation import (
         CONTAM_BENCH_MOD,
         CONTAM_NGRAM,
@@ -948,7 +890,7 @@ def incremental_e2e_promoted(
 
     persist_screens = resolve_persist_screens(spark, sf_dir, persist_screens)
     base_key = _index_store_key(spark, sf_dir)
-    postings, dfx, n, _origin = persisted_index(spark, sf_dir, base_key)
+    base = persisted_index(spark, sf_dir, base_key)[:3]
     key = base_key + (
         "e2e",
         table_fingerprint(sf_dir, "embeddings"),
@@ -981,45 +923,8 @@ def incremental_e2e_promoted(
             )
         )
 
-    seg, _ = _index_table(
-        "tfidf_index_postings",
-        key + ("day",),
-        spark,
-        lambda: doc_totals(word_count(tokenize(day_corpus()))),
-    )
-    df1, _ = _index_table(
-        "tfidf_index_df",
-        key + ("df",),
-        spark,
-        lambda: (
-            dfx.withColumnRenamed("dfx", "df_old")
-            .join(
-                seg.groupBy("word").agg(F.count("*").alias("df_new")),
-                "word",
-                "full_outer",
-            )
-            .select(
-                "word",
-                (
-                    F.coalesce("df_old", F.lit(0))
-                    + F.coalesce("df_new", F.lit(0))
-                ).alias("dfx"),
-            )
-        ),
-    )
-    n1, _ = load_or_compute_table(
-        "tfidf_index_n",
-        key + ("n",),
-        spark,
-        lambda: F.broadcast(n)
-        .crossJoin(
-            F.broadcast(
-                day_corpus().agg(F.countDistinct("doc").alias("nx_new"))
-            )
-        )
-        .select((F.col("nx") + F.col("nx_new")).alias("nx")),
-    )
-    return score_index([postings, seg], df1, n1)
+    put = _store_put(spark, [], key + ("day",), key + ("df",), key + ("n",))
+    return score(fold(base, day_corpus, put))
 
 
 def incremental_e2e_index(
@@ -1028,7 +933,7 @@ def incremental_e2e_index(
     """The day's index update END TO END: the arriving batch passes the
     ADMISSION manifest first (``curation.incremental_manifest`` — both
     dup screens, contamination, PII, quality), and only ``admitted``
-    docs fold into the index via the same additive merge as
+    docs fold into the index via the same ``fold`` as
     ``incremental_index``. This is the composed incremental story: a
     crawl day costs one screen pass + one admitted-slice tokenize + the
     word-keyed df merge — the rejected docs never touch the index.
@@ -1083,5 +988,5 @@ def incremental_e2e_index(
     # the word-keyed merge, with the old corpus never re-read (store
     # disabled → persisted_index degrades to the same in-plan build as
     # before)
-    postings, dfx, n, _origin = persisted_index(spark, sf_dir)
-    return merge_index_parts(postings, dfx, n, documents_as_corpus(batch_admitted))
+    old = persisted_index(spark, sf_dir)[:3]
+    return score(fold(old, lambda: documents_as_corpus(batch_admitted), arrival))

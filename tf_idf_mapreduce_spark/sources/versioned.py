@@ -10,6 +10,11 @@ through ``sources.fs``'s primitives:
   one chained-version index (``<root>/{manifest/v*, seg_v*, df_v*,
   n_v*}``).
 
+For the TF-IDF index both layouts hold the same state, written by the
+same ``operators.tfidf.fold`` and served by the same ``score``; only
+the fold's ``put`` (how each of postings, df and N is materialized)
+differs between them.
+
 Their commit protocols differ by design (single live version vs a
 parent-chained history with retention), but the OPS loop over them is
 the same verb pair — audit read-only, then reap what the audit proved
