@@ -17,10 +17,12 @@ Usage: python scripts/gen_queries_md.py [--check]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _first_sentence(doc: str | None) -> str:
@@ -71,24 +73,24 @@ def _verification_sets(registry: set[str]) -> dict[str, set[str]]:
     """Which queries carry which verification evidence, derived from the
     SAME sources the evidence lives in (oracle_check's bounded specs and
     the test modules) so the matrix cannot drift from them."""
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
     import oracle_check
 
     return {
         "bounded": set(oracle_check._bounded_oracles()) & registry,
         "partition": _list_assign(
-            "/root/repo/tests/test_partition_invariance.py", {"QUERIES"}
+            os.path.join(REPO, "tests/test_partition_invariance.py"), {"QUERIES"}
         )
         & registry,
         "chaos": _list_assign(
-            "/root/repo/tests/test_chaos_corpus.py",
+            os.path.join(REPO, "tests/test_chaos_corpus.py"),
             {"NASTY_QUERIES", "NASTY_EVENT_QUERIES"},
         )
         & registry,
         # plan pins reference queries inline across many tests — any
         # registry name appearing as a string literal in test_plans.py
         # is plan-exercised
-        "plan": _all_strings("/root/repo/tests/test_plans.py") & registry,
+        "plan": _all_strings(os.path.join(REPO, "tests/test_plans.py")) & registry,
     }
 
 
@@ -188,8 +190,8 @@ def render() -> str:
 if __name__ == "__main__":
     out = render()
     if "--check" in sys.argv:
-        current = open("/root/repo/QUERIES.md").read()
+        current = open(os.path.join(REPO, "QUERIES.md")).read()
         sys.exit(0 if current == out else 1)
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(REPO, "QUERIES.md"), "w") as f:
         f.write(out)
     print(f"wrote QUERIES.md ({out.count(chr(10))} lines)")

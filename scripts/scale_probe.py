@@ -1326,14 +1326,11 @@ def probe_bucketed_fold_skew(spark: SparkSession, quick: bool) -> None:
     words stay spread across the bucketed scan), SMJ with AQE, SMJ
     without, each timed on the fold's serving join over a persisted
     bucketed postings table."""
-    import importlib
-
+    from tf_idf_mapreduce_spark.operators import tfidf as T
     from tf_idf_mapreduce_spark.sources.model_store import (
         MODEL_STORE_ENV,
         load_or_compute_bucketed_table,
     )
-
-    T = importlib.import_module("tf_idf_mapreduce_spark.operators.tfidf")
 
     # the persisted index's rule: bucket count = the session's shuffle
     # width, read once
@@ -1390,17 +1387,15 @@ def probe_bucketed_fold_skew(spark: SparkSession, quick: bool) -> None:
         )
         # the engine's fold + score with the old side a bucketed store
         # table and its df derived in-plan
-        n_total = spark.range(1).select(F.lit(n_docs).cast("long").alias("nx"))
-
         def put(part, build):
             # the arrival slice is already postings, and synthetic
-            # postings have no corpus to count: N is the literal n_docs
+            # postings have no corpus to count: N is n_docs
             if part == T.DF:
                 return build()
-            return new_wtc if part == T.POSTINGS else n_total
+            return new_wtc if part == T.POSTINGS else n_docs
 
         old_df = postings.groupBy("word").agg(F.count("*").alias("dfx"))
-        segments, df_merged, n = T.fold(([postings], old_df, n_total), None, put)
+        segments, df_merged, n = T.fold(([postings], old_df, n_docs), None, put)
 
         def serve(dfm):
             return T.score((segments, dfm, n))
@@ -1471,9 +1466,7 @@ def probe_promoted_chain(spark: SparkSession, quick: bool) -> None:
     re-executes every prior merge; and compaction keeps the serving
     read flat in N (one segment scan).
     """
-    import importlib
-
-    T = importlib.import_module("tf_idf_mapreduce_spark.operators.tfidf")
+    from tf_idf_mapreduce_spark.operators import tfidf as T
     from tf_idf_mapreduce_spark.sources.io import documents_as_corpus
     from tf_idf_mapreduce_spark.sources.model_store import MODEL_STORE_ENV
     from tf_idf_mapreduce_spark.operators.curation import (

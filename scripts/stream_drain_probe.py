@@ -27,11 +27,12 @@ backlog-drain deployment should start the whole family and awaitAll.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry
 from tf_idf_mapreduce_spark.session import get_spark

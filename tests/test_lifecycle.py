@@ -229,7 +229,6 @@ def test_concurrent_promoters_one_version_serves(
     day_keys = [
         ("tfidf_index_postings", key + ("chain", CHAIN_DAYS, "day", CHAIN_DAYS)),
         ("tfidf_index_df", key + ("chain", CHAIN_DAYS, "df", CHAIN_DAYS)),
-        ("tfidf_index_n", key + ("chain", CHAIN_DAYS, "n", CHAIN_DAYS)),
     ]
     for fam, vkey in day_keys:
         d = model_dir(fam, vkey, spark)

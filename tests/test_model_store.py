@@ -287,7 +287,7 @@ def test_persisted_tfidf_index_fold_matches_inplan(spark, sf_dir, model_dir_env)
         map(tuple, incremental_index_persisted(spark, sf_dir).collect())
     )
     assert persisted == inplan and persisted
-    for fam in ("tfidf_index_postings", "tfidf_index_df", "tfidf_index_n"):
+    for fam in ("tfidf_index_postings", "tfidf_index_df"):
         assert os.path.isdir(os.path.join(model_dir_env, fam))
     _p, _d, _n, origin = persisted_index(spark, sf_dir)
     assert origin == "store"
@@ -295,9 +295,11 @@ def test_persisted_tfidf_index_fold_matches_inplan(spark, sf_dir, model_dir_env)
 
 def test_persisted_index_plan_reads_tables_not_corpus(spark, sf_dir, model_dir_env):
     """With the index warm, the fold's executed plan reads the store
-    tables for the ENTIRE old side: documents scans belong to the batch
-    branches only (<=4: wtc, df, N, union re-evaluation), and all three
-    index tables appear as file scans."""
+    tables for the ENTIRE old side and the batch's checkpointed postings
+    for the new one, so it scans documents nowhere; both index tables
+    appear as file scans, and N — a number stored with its df version,
+    the batch's share counted before the plan is built — adds no table
+    scan and no nested-loop join."""
     import re
 
     from tf_idf_mapreduce_spark.operators.tfidf import (
@@ -311,12 +313,54 @@ def test_persisted_index_plan_reads_tables_not_corpus(spark, sf_dir, model_dir_e
         ._jdf.queryExecution().executedPlan().toString()
     )
     doc_scans = len(re.findall(r"FileScan parquet.*documents", plan))
-    assert doc_scans <= 4
-    # postings/df surface as catalog tables; the 1-row N table's path can
-    # truncate in toString, so match its scan by the nx column it carries
+    assert doc_scans == 0
     for fam in ("tfidf_index_postings", "tfidf_index_df"):
         assert fam in plan
-    assert re.search(r"FileScan parquet.*\[nx#", plan)
+    assert not re.search(r"FileScan parquet.*\[nx#", plan)
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize("damage", ["deleted", "truncated"])
+def test_index_n_file_is_recounted_when_lost(
+    spark, sf_dir, model_dir_env, damage
+):
+    """N is the ``_N`` file inside the live df version's dir. Deleted,
+    or truncated to empty (a torn write), it is recounted and written
+    again by the next fold, and the served rows do not change."""
+    from tf_idf_mapreduce_spark.operators.curation import (
+        SAMPLE_BUCKET_MAX,
+        _sample_bucket,
+    )
+    from tf_idf_mapreduce_spark.operators.tfidf import (
+        DF,
+        N,
+        _index_store_key,
+        incremental_index_persisted,
+    )
+    from tf_idf_mapreduce_spark.sources.model_store import live_table_dir
+
+    def rows():
+        return sorted(
+            map(tuple, incremental_index_persisted(spark, sf_dir).collect())
+        )
+
+    before = rows()
+    path = os.path.join(
+        live_table_dir(DF, _index_store_key(spark, sf_dir), spark), N
+    )
+    with open(path) as f:
+        n = int(f.read())
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    old = docs.where(~(_sample_bucket() <= SAMPLE_BUCKET_MAX))
+    assert n == old.select("doc_id").distinct().count()
+    if damage == "deleted":
+        os.remove(path)
+    else:
+        open(path, "w").close()
+    assert rows() == before
+    with open(path) as f:
+        assert int(f.read()) == n
 
 
 def test_bucketed_table_joins_without_exchange(spark, model_dir_env):
@@ -584,7 +628,6 @@ def test_promoted_chain_versions_and_equality(spark, sf_dir, model_dir_env):
     for fam, n in (
         ("tfidf_index_postings", 1 + CHAIN_DAYS),
         ("tfidf_index_df", 1 + CHAIN_DAYS),
-        ("tfidf_index_n", 1 + CHAIN_DAYS),
     ):
         assert len(os.listdir(os.path.join(model_dir_env, fam))) == n
     _s, _d, _n, origin = promoted_index(spark, sf_dir, CHAIN_DAYS)
@@ -647,7 +690,7 @@ def test_compacted_chain_flat_plan_and_files(spark, sf_dir, model_dir_env):
 
     summary = compact_index(spark, sf_dir, upto_day=5, n_days=5, prune=True)
     assert summary["segments_before"] == 6
-    assert summary["ancestors_pruned"] == 3 * 5  # 5 day triples, base KEPT
+    assert summary["ancestors_pruned"] == 2 * 5  # 5 day pairs, base KEPT
     assert summary["files_after"] < summary["files_before"]
 
     state_c, segs_c = plan_scans(5, 5)

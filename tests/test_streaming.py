@@ -825,7 +825,7 @@ def test_stream_index_merge_sweep_heals_orphans(spark, sf_dir, tmp_path):
     """ADVICE r10: a crash that leaks version dirs (e.g. after a commit,
     before any reap — or a torn write whose manifest entry never
     landed) must be healed by a later compaction's sweep, not leak
-    forever. Orphan seg/df/n dirs are PLANTED in the root mid-protocol;
+    forever. Orphan seg/df dirs are PLANTED in the root mid-protocol;
     after the drain's final compaction they are gone, committed state
     is intact, and the served index is unchanged."""
     import os as _os
@@ -850,7 +850,7 @@ def test_stream_index_merge_sweep_heals_orphans(spark, sf_dir, tmp_path):
             # what a crashed batch (data written, manifest entry never
             # committed) or a pre-grace-window leak leaves behind —
             # plus a non-version name the sweep must never touch
-            for name in ("seg_v0", "df_v0", "n_v0", "seg_v3x"):
+            for name in ("seg_v0", "df_v0", "seg_v3x"):
                 _os.makedirs(_os.path.join(root, name), exist_ok=True)
         inner(batch_df, batch_id)
 
@@ -874,7 +874,6 @@ def test_stream_index_merge_sweep_heals_orphans(spark, sf_dir, tmp_path):
     # below the batch id) along with the expired grace generation
     names = set(_os.listdir(root))
     assert "seg_v0" not in names and "df_v0" not in names
-    assert "n_v0" not in names
     # non-version names are never touched by the sweep
     assert "seg_v3x" in names
     cols = ["word", "doc", "count", "doc_total", "df", "tfidf"]
@@ -1119,6 +1118,38 @@ def test_live_readers_during_drain_full_retention(spark, sf_dir, tmp_path):
     assert all(b >= a for a, b in zip(reads, reads[1:])), reads
 
 
+def test_stream_index_n_rides_the_manifest(spark, sf_dir, monkeypatch):
+    """A streamed root keeps N in its manifest entries, not in dirs of
+    its own: after ``stream_tfidf_index_merge`` no ``n_v*`` dir exists,
+    and each committed version's ``"n"`` is the number of distinct docs
+    folded through that version."""
+    import os as _os
+
+    import __spark_entry__ as entrymod
+
+    real_merge = st.make_index_merge
+    roots, batch_docs = [], {}
+
+    def spy(root, compact_every=None):
+        roots.append(root)
+        merge = real_merge(root, compact_every)
+
+        def counted(batch_df, batch_id):
+            batch_docs[batch_id] = batch_df.select("doc_id").distinct().count()
+            merge(batch_df, batch_id)
+
+        return counted
+
+    monkeypatch.setattr(st, "make_index_merge", spy)
+    assert entrymod.queries()["stream_tfidf_index_merge"](spark, sf_dir).count()
+    (root,) = roots
+    assert not [n for n in _os.listdir(root) if n.startswith("n_v")]
+    committed = st._index_manifest_versions(root)
+    assert committed
+    for v, meta in committed.items():
+        assert meta["n"] == sum(c for b, c in batch_docs.items() if b <= v)
+
+
 def test_gc_index_root_policies(tmp_path, capsys):
     """Offline index GC (`models reap --index-root`): on a COMPACTING
     root it applies the in-stream sweep (expired grace, orphans, stale
@@ -1135,7 +1166,7 @@ def test_gc_index_root_policies(tmp_path, capsys):
         with open(os.path.join(root, "manifest", f"v{v}"), "w") as f:
             json.dump({"parent": parent, "segment": True, "base": base}, f)
 
-    def plant(root, v, kinds=("seg", "df", "n")):
+    def plant(root, v, kinds=("seg", "df")):
         for k in kinds:
             os.makedirs(os.path.join(root, f"{k}_v{v}"), exist_ok=True)
 
@@ -1147,7 +1178,7 @@ def test_gc_index_root_policies(tmp_path, capsys):
     plant(fr, 9)  # orphan
     rep = gc_index_root(fr)
     assert rep["mode"] == "full-retention"
-    assert rep["reaped"] == ["df_v9", "n_v9", "seg_v9"]
+    assert rep["reaped"] == ["df_v9", "seg_v9"]
     assert {f"seg_v{v}" for v in range(3)} <= set(rep["after"])
 
     # compacting: base at 2; grace (0, 1) expired offline, orphan gone,
@@ -1165,7 +1196,7 @@ def test_gc_index_root_policies(tmp_path, capsys):
     rep = gc_index_root(co)
     assert rep["mode"] == "compacting"
     assert set(rep["after"]) == {
-        "seg_v2", "seg_v3", "df_v2", "df_v3", "n_v2", "n_v3",
+        "seg_v2", "seg_v3", "df_v2", "df_v3",
     }
     assert sorted(os.listdir(os.path.join(co, "manifest"))) == ["v2", "v3"]
 

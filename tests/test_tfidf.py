@@ -292,3 +292,9 @@ def test_query_expansion_laws(spark, sf_dir):
             assert r.score >= base[r.doc].score - 1e-9
     scores = [r.score for r in expanded]
     assert scores == sorted(scores, reverse=True)
+
+
+def test_operators_package_yields_the_tfidf_module():
+    from tf_idf_mapreduce_spark.operators import tfidf
+
+    assert callable(tfidf.fold)

@@ -26,14 +26,14 @@ def _mk_index_root(tmp_path) -> str:
             os.makedirs(os.path.join(root, f"{k}_v{v}"), exist_ok=True)
 
     commit(0, None)
-    plant(0, ("seg", "df", "n"))
+    plant(0, ("seg", "df"))
     commit(1, 0)
     plant(1, ("seg",))
     commit(2, 1, base=True)
     plant(2, ("seg",))
     commit(3, 2)
-    plant(3, ("seg", "df", "n"))
-    plant(7, ("seg", "df", "n"))
+    plant(3, ("seg", "df"))
+    plant(7, ("seg", "df"))
     # a crashed torn-commit heal: atomic-write tmp inside manifest/
     with open(os.path.join(root, "manifest", "v1.tmp-dead"), "w") as f:
         f.write("{}")
@@ -88,8 +88,8 @@ def test_audit_then_reap_index_is_what_you_saw(tmp_path):
     assert rep["kind"] == "index"
     cands = set(rep["reap_candidates"])
     # history below the base, the expired grace segs, the crash orphan
-    assert {"seg_v0", "seg_v1", "df_v0", "n_v0", "seg_v7", "df_v7",
-            "n_v7", "manifest/v0", "manifest/v1",
+    assert {"seg_v0", "seg_v1", "df_v0", "seg_v7", "df_v7",
+            "manifest/v0", "manifest/v1",
             "manifest/v1.tmp-dead"} == cands
     reaped = versioned.reap(root)
     assert reaped["kind"] == "index"
@@ -98,7 +98,7 @@ def test_audit_then_reap_index_is_what_you_saw(tmp_path):
     for rel in cands:
         assert not os.path.exists(os.path.join(root, rel)), rel
     # the live chain + its df/N survive
-    for rel in ("seg_v2", "seg_v3", "df_v3", "n_v3", "manifest/v2",
+    for rel in ("seg_v2", "seg_v3", "df_v3", "manifest/v2",
                 "manifest/v3"):
         assert os.path.exists(os.path.join(root, rel)), rel
     # a second audit is clean

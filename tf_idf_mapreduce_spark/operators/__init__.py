@@ -1,17 +1,1 @@
-from .tfidf import (
-    doc_freq,
-    doc_totals,
-    tfidf,
-    tfidf_pipeline,
-    tfidf_sorted,
-    word_count,
-)
-
-__all__ = [
-    "doc_freq",
-    "doc_totals",
-    "tfidf",
-    "tfidf_pipeline",
-    "tfidf_sorted",
-    "word_count",
-]
+"""Composable DataFrame transforms; import each submodule by name."""

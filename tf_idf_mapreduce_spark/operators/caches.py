@@ -137,7 +137,7 @@ def _clear_pq_codes() -> None:
 
 def _clear_e2e_index() -> None:
     """The composed daily update reads BOTH durable layers: the five
-    screen tables and the three index tables. Cold = day zero (every
+    screen tables and the two index tables. Cold = day zero (every
     screen + the index build + the fold); warm = the production daily
     read-path."""
     _clear_incremental_screens()
@@ -176,7 +176,7 @@ MODEL_CACHED_QUERIES: dict[str, Callable[[], None]] = {
     # round 9: the composed update now reads the persisted index too
     "tfidf_incremental_e2e": _clear_e2e_index,
     # round 10: the promoted day owns the same two durable layers plus
-    # its own e2e-keyed segment/df/N (same three index families)
+    # its own e2e-keyed segment/df/N (same two index families)
     "tfidf_e2e_promoted": _clear_e2e_index,
     # round 11: search against the promoted index — cold prices the
     # chain build + the search; warm is the production query path

@@ -10,7 +10,8 @@ Scale design:
 - Both operators derive from the corpus's TF-IDF core
   (``tfidf.corpus_core``), so each plan tokenizes once; corpus-level scalars
   (N, avgdl) enter the plan as broadcast 1-row aggregates, never a
-  ``.collect()``.
+  ``.collect()``. Served from the promoted index, N is the index's own
+  number and enters as a literal.
 - The postings build is one shuffle on ``word`` with map-side partial
   ``collect_list``; the posting payload is a compact string, so the wide
   row never exceeds the df of the hottest term. At 100 TB you'd bucket the
@@ -41,7 +42,9 @@ DOCSIM_TOP_TERMS = 10
 DOCSIM_TOP_PAIRS = 20
 
 
-def _bm25_rank(wtd: DataFrame, n_docs: DataFrame, wtc: DataFrame) -> DataFrame:
+def _bm25_rank(
+    wtd: DataFrame, n_docs: DataFrame | int, wtc: DataFrame
+) -> DataFrame:
     """BM25 top-20 over a ``(word, doc, count, doc_total, df)`` relation
     — the scorer shared by the in-plan and promoted-index serving paths
     (the relation's PROVENANCE is the only difference between them).
@@ -54,7 +57,9 @@ def _bm25_rank(wtd: DataFrame, n_docs: DataFrame, wtc: DataFrame) -> DataFrame:
     idf(t) = ln((N − df + 0.5)/(df + 0.5) + 1)  (the Lucene/ATIRE form —
     always positive, so stopword-frequency terms can't flip sign).
 
-    N and avgdl are broadcast 1-row aggregates; avgdl averages each
+    avgdl is a broadcast 1-row aggregate, and so is N in-plan
+    (``n_docs`` a 1-row (n_docs) DataFrame); the index's N is an int,
+    bound as a literal. avgdl averages each
     doc's length ONCE (distinct (doc, doc_total) pairs — zero-word docs
     appear in neither serving path's relation, identically). Per-term
     contributions are rounded @6dp before the sum (cross-engine
@@ -73,10 +78,13 @@ def _bm25_rank(wtd: DataFrame, n_docs: DataFrame, wtc: DataFrame) -> DataFrame:
         + BM25_K1 * (1 - BM25_B + BM25_B * F.col("doc_total") / F.col("avgdl"))
     )
     contrib = F.round(idf * tf_norm, 6)
+    hits = wtd.join(F.broadcast(terms), "word")
+    if isinstance(n_docs, int):
+        hits = hits.withColumn("n_docs", F.lit(n_docs).cast("long"))
+    else:
+        hits = hits.crossJoin(F.broadcast(n_docs))
     return (
-        wtd.join(F.broadcast(terms), "word")
-        .crossJoin(F.broadcast(n_docs))
-        .crossJoin(F.broadcast(avgdl))
+        hits.crossJoin(F.broadcast(avgdl))
         .select("doc", contrib.alias("contrib"))
         .groupBy("doc")
         .agg(
@@ -107,7 +115,7 @@ def bm25_search_promoted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the warm plan reads versioned store tables with zero documents
     scans. Everything BM25 needs beyond the postings is derivable from
     the index state itself — doc lengths ride the postings rows, avgdl
-    is a 1-row aggregate over them, N is the index's 1-row table — so
+    is a 1-row aggregate over them, N is the index's number — so
     the ranking function people actually serve runs entirely off what
     promotion wrote."""
     from functools import reduce
@@ -119,7 +127,7 @@ def bm25_search_promoted(spark: SparkSession, sf_dir: str) -> DataFrame:
     wtd = reduce(
         lambda a, b: a.unionByName(b), [seg.join(df, "word") for seg in segments]
     )
-    return _bm25_rank(wtd, n.select(F.col("nx").alias("n_docs")), wtd)
+    return _bm25_rank(wtd, n, wtd)
 
 
 #: Hash-block count for ``doc_similarity``'s tiled pair computation:

@@ -293,11 +293,14 @@ def incremental_index(spark, sf_dir: str) -> DataFrame:
     )
 
 
-#: The index's three store families, in fold order: postings (word,
-#: doc, count, doc_total), per-word document frequency (word, dfx) and
-#: the 1-row document count (nx).
-INDEX_FAMILIES = ("tfidf_index_postings", "tfidf_index_df", "tfidf_index_n")
-POSTINGS, DF, N = INDEX_FAMILIES
+#: The index's two store families, in fold order: postings (word,
+#: doc, count, doc_total) and per-word document frequency (word, dfx).
+INDEX_FAMILIES = ("tfidf_index_postings", "tfidf_index_df")
+POSTINGS, DF = INDEX_FAMILIES
+#: The third part, the document count, is a number: in the store the
+#: ``_N`` file inside its df version's dir (Spark skips ``_`` files),
+#: in a streamed root the ``"n"`` of its manifest entry.
+N = "_N"
 
 
 class IndexState(NamedTuple):
@@ -308,16 +311,16 @@ class IndexState(NamedTuple):
 
     segments: list  # of (word, doc, count, doc_total)
     df: DataFrame  # (word, dfx)
-    n: DataFrame  # 1 row: (nx)
+    n: int
 
 
-def in_plan(part: str, build) -> DataFrame:
+def in_plan(part: str, build):
     """``fold``'s ``put`` for an index kept in the plan: nothing is
     written."""
     return build()
 
 
-def arrival(part: str, build) -> DataFrame:
+def arrival(part: str, build):
     """``fold``'s ``put`` for an ARRIVAL slice kept in the plan: its
     postings are checkpointed BEFORE df derives from them
     (arrival-sized, safe to materialize at any scale; an old side may be
@@ -330,21 +333,48 @@ def arrival(part: str, build) -> DataFrame:
 
 
 def _store_put(spark, origins: list, *keys: tuple):
-    """``fold``'s ``put`` for the model store: each part is its family's
-    table under its key of ``keys`` (postings, df, N order) — postings
-    and df word-bucketed (``_index_table``), N a plain 1-row table — and
-    each load's origin is appended to ``origins``."""
-    from ..sources.model_store import load_or_compute_table
-
+    """``fold``'s ``put`` for the model store: postings and df are
+    word-bucketed tables (``_index_table``) under their key of ``keys``
+    (postings, df order), N is the ``_N`` file of the live df version
+    (``_version_n``), and each origin is appended to ``origins``."""
     key_of = dict(zip(INDEX_FAMILIES, keys))
 
-    def put(part: str, build) -> DataFrame:
-        load = load_or_compute_table if part == N else _index_table
-        rel, origin = load(part, key_of[part], spark, build)
+    def put(part: str, build):
+        if part == N:
+            rel, origin = _version_n(spark, key_of[DF], build)
+        else:
+            rel, origin = _index_table(part, key_of[part], spark, build)
         origins.append(origin)
         return rel
 
     return put
+
+
+def _version_n(spark, df_key: tuple, build) -> tuple:
+    """``(N, origin)`` from the ``_N`` file inside the live version dir
+    of the df table under ``df_key``. N lives in that version and goes
+    with it, so it can never be paired with another version's df. A
+    missing or torn (unparseable) file is computed and written, first
+    writer wins, a torn one healed by overwrite as ``_promote`` heals a
+    torn marker; a disabled or read-only store serves the computed
+    int."""
+    from ..sources import fs
+    from ..sources.model_store import live_table_dir
+
+    ver = live_table_dir(DF, df_key, spark)
+    if ver is None:
+        return build(), "fit"
+    path = fs.join(ver, N)
+    text = fs.read_text(path)
+    if text and text.strip().isdigit():
+        return int(text), "store"
+    n = build()
+    try:
+        if not fs.put_text_exclusive(path, str(n)):
+            fs.put_text_atomic(path, str(n))
+    except OSError:
+        return n, "fit"
+    return n, "store"
 
 
 def fold(state, corpus, put=in_plan) -> IndexState:
@@ -356,23 +386,24 @@ def fold(state, corpus, put=in_plan) -> IndexState:
     tokenize never re-evaluated per consumer); its N is counted from the
     CORPUS, because a zero-word document has no postings but still
     raises the IDF denominator (the reference's directory-entry
-    semantics, TfidfMapReduce.java:51). Then df adds per word (a
-    full-outer merge of two vocabulary-sized tables — one row per word
-    per side, so it cannot skew) and N adds as a scalar. Both adds are
-    associative, so consecutive folds equal one fold of the union.
-    ``state`` is an ``IndexState`` or any (segments, df, N) triple;
-    None is the empty index, whose fold is the slice's own state.
+    semantics, TfidfMapReduce.java:51) with one aggregate ``first()``
+    and added on the driver. df adds per word (a full-outer merge of
+    two vocabulary-sized tables — one row per word per side, so it
+    cannot skew). Both adds are associative, so consecutive folds equal
+    one fold of the union. ``state`` is an ``IndexState`` or any
+    (segments, df, N) triple with N an int; None is the empty index,
+    whose fold is the slice's own state.
 
     ``corpus`` is a zero-argument function returning the slice's corpus
     (doc, text): only the builds ``put`` runs call it, so a slice whose
     tables a store already holds is never even planned.
 
-    ``put(part, build) -> DataFrame`` decides how each part (``POSTINGS``,
-    ``DF``, ``N``, in that order) is materialized from its lazy
-    ``build``: ``in_plan``, ``arrival``, ``_store_put`` (the model
-    store) or the streamed root's writer
-    (``streaming.queries.make_index_merge``)."""
-    segments, old_df, old_n = state or ([], None, None)
+    ``put(part, build)`` decides how each part (``POSTINGS``, ``DF``,
+    ``N``, in that order) is materialized from its ``build`` — lazy
+    DataFrames for the first two, an int for N: ``in_plan``,
+    ``arrival``, ``_store_put`` (the model store) or the streamed
+    root's writer (``streaming.queries.make_index_merge``)."""
+    segments, old_df, old_n = state or ([], None, 0)
     postings = put(POSTINGS, lambda: doc_totals(word_count(tokenize(corpus()))))
 
     def add_df():
@@ -391,24 +422,15 @@ def fold(state, corpus, put=in_plan) -> IndexState:
         )
 
     def add_n():
-        new = corpus().agg(F.countDistinct("doc").alias("nx"))
-        if old_n is None:
-            return new
-        # both sides are 1-row aggregates — broadcast-pin the attach
-        # like every other scalar cross join instead of leaving the
-        # strategy to AQE
-        return (
-            F.broadcast(old_n)
-            .crossJoin(F.broadcast(new.withColumnRenamed("nx", "nx_new")))
-            .select((F.col("nx") + F.col("nx_new")).alias("nx"))
-        )
+        return old_n + corpus().agg(F.countDistinct("doc")).first()[0]
 
     return IndexState([*segments, postings], put(DF, add_df), put(N, add_n))
 
 
 def score(state) -> DataFrame:
     """Score an index state (``IndexState`` or any (segments, df, N)
-    triple): join each postings segment with df separately, THEN union —
+    triple, N an int bound as a long literal): join each postings
+    segment with df separately, THEN union —
     the join distributes over the union (identical rows), and
     per-segment joins let every word-bucketed segment meet the bucketed
     df with zero exchange, where a union-then-join would discard the
@@ -422,10 +444,7 @@ def score(state) -> DataFrame:
     df = dfx.withColumnRenamed("dfx", "df")
     parts = [seg.join(df, "word") for seg in segments]
     scored = tfidf(
-        reduce(lambda a, b: a.unionByName(b), parts).crossJoin(
-            F.broadcast(n.withColumnRenamed("nx", "total_docs"))
-        ),
-        F.col("total_docs"),
+        reduce(lambda a, b: a.unionByName(b), parts), F.lit(n).cast("long")
     )
     return scored.select(
         "word", "doc", "count", "doc_total", "df",
@@ -474,10 +493,11 @@ def _index_table(name: str, key: tuple, spark, compute):
 
 
 def persisted_index(spark, sf_dir: str, key: tuple | None = None):
-    """The TF-IDF index ITSELF as three durable store tables — postings
+    """The TF-IDF index ITSELF as two durable store tables — postings
     (word, doc, count, doc_total) and df (word, dfx), both word-bucketed
-    parquet, plus the 1-row document count — fit once over the old
-    corpus (the ~90% non-batch slice) and LOADED by every later fold.
+    parquet, with the document count N in the df version's ``_N`` file
+    — fit once over the old corpus (the ~90% non-batch slice) and
+    LOADED by every later fold.
     This closes the round-8 gap: ``incremental_index`` re-tokenized the
     whole old corpus in-plan every run; here the daily cost is tokenizing
     the arrival slice plus one word-keyed merge against a vocabulary-
@@ -513,9 +533,9 @@ def persisted_index(spark, sf_dir: str, key: tuple | None = None):
     the key passes it as ``key``, so key and bucket spec agree.
 
     The index is the fold of the old corpus into the empty state, with
-    every part a store table under ``key``. Returns ``(segments, df, n,
-    origin)`` — one segment, the postings. Origin "store" means all
-    three relations are served from durable store files — which, per
+    every part stored under ``key``. Returns ``(segments, df, n,
+    origin)`` — one segment, the postings; n an int. Origin "store"
+    means all three parts are served from durable store files — which, per
     the table loaders' contract, includes the very first build (the
     write path reads its own parquet back, so every consumer in every
     session sees literally the same files); "fit" appears only when
@@ -532,7 +552,7 @@ def persisted_index(spark, sf_dir: str, key: tuple | None = None):
         )
 
     origins: list = []
-    state = fold(None, old_corpus, _store_put(spark, origins, key, key, key))
+    state = fold(None, old_corpus, _store_put(spark, origins, key, key))
     return (*state, "store" if set(origins) == {"store"} else "fit")
 
 
@@ -643,7 +663,7 @@ def promoted_index(
     (``streaming.queries.make_index_merge``), and both serve through
     ``score``: two layouts and two commit protocols over one fold.
 
-    Version layout (all under the same three store families, so version
+    Version layout (all under the same two store families, so version
     keys age out via ``models prune`` like any stale artifact):
 
     - **postings** are APPEND-ONLY SEGMENTS: the base table (v0, the old
@@ -658,20 +678,22 @@ def promoted_index(
       full-outer merge of v_{k-1}'s df table with the day segment's
       word counts; both sides word-bucketed store tables, so the merge
       plans zero exchanges).
-    - **N** is a 1-row table per version (scalar add; day count comes
-      from the CORPUS slice so zero-word docs still raise it —
-      directory-entry semantics, TfidfMapReduce.java:51).
+    - **N** is a number per version, the ``_N`` file inside its df
+      version's dir (scalar add; day count comes from the CORPUS slice
+      so zero-word docs still raise it — directory-entry semantics,
+      TfidfMapReduce.java:51).
 
     Promotion is atomic per table (the store's stage + O_EXCL
     ``_CURRENT``-manifest protocol — no directory renames, object-store
-    safe); a crash between the three writes leaves a partial version
-    whose missing tables the next run recomputes deterministically from
-    v_{k-1} — never a torn read, never a wrong answer. Mirrors the
+    safe); a crash between the writes leaves a partial version whose
+    missing parts the next run recomputes deterministically from
+    v_{k-1} — never a torn read, never a wrong answer; N lives inside
+    its df version, so a df refit always recounts its N. Mirrors the
     reference's own job-chain materialization (TfidfMapReduce.java:63-84)
     promoted from HDFS temp dirs to versioned bucketed tables.
 
     Returns ``(segments, df, n, origin)`` — postings segment list
-    (base first), the version-``upto_day`` df and N relations, and
+    (base first), the version-``upto_day`` df relation and N, and
     origin "store" iff every artifact is served from durable store
     files (true from the first build on; "fit" only under degraded
     durability — see ``persisted_index``; ``key`` as there)."""
@@ -706,19 +728,14 @@ def promoted_index(
 
 
 def _day_keys(key: tuple, n_days: int, k: int):
-    """Store keys of day ``k``'s promoted (postings, df, N)."""
-    return (
-        key + ("chain", n_days, "day", k),
-        key + ("chain", n_days, "df", k),
-        key + ("chain", n_days, "n", k),
-    )
+    """Store keys of day ``k``'s promoted (postings, df)."""
+    return key + ("chain", n_days, "day", k), key + ("chain", n_days, "df", k)
 
 
 def _compact_keys(key: tuple, c: int, n_days: int):
     return (
         key + ("chain", n_days, "compact", c),
         key + ("chain", n_days, "compact_df", c),
-        key + ("chain", n_days, "compact_n", c),
     )
 
 
@@ -730,7 +747,7 @@ def _load_compacted(
     through day c, so the state is the fold of the corpus admitted
     through day c into the empty state, under the compaction keys: the
     postings load from that segment, and df/N are DERIVED like any
-    fold's if their artifacts were lost — df a shuffle-free group-by of
+    fold's if they were lost — df a shuffle-free group-by of
     the bucketed postings, N a count over the admitted corpus (zero-word
     docs carry no postings but still count — directory-entry
     semantics). Load origins go to ``origins``."""
@@ -827,7 +844,7 @@ def compact_index(
 
 
 def _index_file_count(spark, key: tuple) -> int:
-    """Data-file count across the three index families (bucket files
+    """Data-file count across the index families (bucket files
     only, not markers) — the flat-after-compaction pin's metric."""
     import os as _os
 
@@ -923,7 +940,7 @@ def incremental_e2e_promoted(
             )
         )
 
-    put = _store_put(spark, [], key + ("day",), key + ("df",), key + ("n",))
+    put = _store_put(spark, [], key + ("day",), key + ("df",))
     return score(fold(base, day_corpus, put))
 
 

@@ -7,13 +7,18 @@ through ``sources.fs``'s primitives:
   artifacts, each with a ``_CURRENT`` manifest naming its live version
   (``<root>/<family>/<key_hash>/{_CURRENT, v-*, data-*}``);
 - a **streamed index** root (``streaming.queries.make_index_merge``):
-  one chained-version index (``<root>/{manifest/v*, seg_v*, df_v*,
-  n_v*}``).
+  one chained-version index (``<root>/{manifest/v*, seg_v*, df_v*}``).
 
 For the TF-IDF index both layouts hold the same state, written by the
 same ``operators.tfidf.fold`` and served by the same ``score``; only
 the fold's ``put`` (how each of postings, df and N is materialized)
-differs between them.
+differs between them. N is a number in both: the ``_N`` file inside
+its df version's dir in the store, the ``"n"`` field of its manifest
+entry in a streamed root — so it commits and ages with its version and
+is never read from another one. No reader is kept for the older layout
+that kept N in a parquet table of its own: a store's old N family dirs
+age out through ``models prune``, and a streamed root written in that
+layout (manifest entries without ``"n"``) must be drained again.
 
 Their commit protocols differ by design (single live version vs a
 parent-chained history with retention), but the OPS loop over them is
@@ -34,12 +39,12 @@ from __future__ import annotations
 
 import re
 
-_INDEX_DIR_RE = re.compile(r"^(seg|df|n)_v\d+$")
+_INDEX_DIR_RE = re.compile(r"^(seg|df)_v\d+$")
 
 
 def detect_kind(root: str, spark=None) -> str:
     """``"index"`` when the root holds streamed-index state (a
-    ``manifest/`` dir or any ``seg_v*/df_v*/n_v*`` child);
+    ``manifest/`` dir or any ``seg_v*/df_v*`` child);
     ``"index-shards"`` when the root is a PARENT of index roots (the
     sharded-federation deployment: one ``make_index_merge`` root per
     corpus shard under a common dir) — detected by any child dir that

@@ -23,6 +23,7 @@ Semantics notes (scale-relevant):
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 from typing import Any
 
@@ -884,13 +885,19 @@ def q_stream_bot_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id")
 
 
+#: A streamed index root's version dirs, ``seg_v{b}`` and ``df_v{b}``.
+_VERSION_DIR = re.compile(r"^(seg|df)_v(\d+)$")
+
+
 def _index_manifest_versions(root: str, spark=None) -> dict:
     """Committed versions of a streamed index merge: one JSON file per
     version under ``<root>/manifest``, CREATE-EXCLUSIVE-committed
     (``fs.put_text_exclusive`` — O_EXCL locally, conditional PUT on an
     object store) only after that version's data writes completed — so
     a version is either fully present or absent, never torn. Returns
-    {batch_id: {"parent": int|None, "segment": bool, "base": bool}}.
+    {batch_id: {"parent": int|None, "segment": bool, "base": bool,
+    "n": int}} — ``n`` is the version's document count N, committed by
+    the same exclusive create as the version itself.
 
     A TORN entry — empty or truncated JSON from a crash inside the
     commit write itself (O_EXCL create + write is not crash-atomic on a
@@ -933,7 +940,7 @@ def _sweep_index_root(sess, root: str, committed: dict, batch_id: int) -> None:
       until the next compacting batch, so a reader that resolved a
       version on the live stream can lazily scan its segments without
       hitting FileNotFound until a full compaction cycle later.
-    - **df/N generations** other than the newest version's and its
+    - **df generations** other than the newest version's and its
       parent's (the per-batch post-commit reap keeps the same pair; this
       heals crash leaks).
     - **manifest entries** strictly below the newest base: no chain walk
@@ -968,8 +975,6 @@ def _sweep_index_plan(
     id, or ``max+1`` for an offline pass), return ``(dir_names_to_
     delete, manifest_versions_to_prune)``. See :func:`_sweep_index_root`
     for the retention rules each list encodes."""
-    import re as _re
-
     if not committed:
         return [], []
     cur = max(committed)
@@ -979,7 +984,7 @@ def _sweep_index_plan(
         live_dfn.add(committed[cur]["parent"])
     dirs = []
     for name in names:
-        m = _re.match(r"^(seg|df|n)_v(\d+)$", name)
+        m = _VERSION_DIR.match(name)
         if not m:
             continue
         kind, v = m.group(1), int(m.group(2))
@@ -990,11 +995,11 @@ def _sweep_index_plan(
     manifest_prunes = []
     bases = [v for v, meta in committed.items() if meta.get("base")]
     if bases:
-        # manifest retention must stay consistent with df/N retention:
-        # live_dfn keeps the newest version's PARENT df/N as the grace
+        # manifest retention must stay consistent with df retention:
+        # live_dfn keeps the newest version's PARENT df as the grace
         # generation, so its manifest entry must survive too — at
         # compact_every=1 every version is a base and a max(bases)
-        # cutoff would prune the parent's entry while its df/N dirs
+        # cutoff would prune the parent's entry while its df dirs
         # linger as verify-reported orphans (round-11 ADVICE)
         cutoff = min(max(bases), min(live_dfn))
         manifest_prunes = [v for v in committed if v < cutoff]
@@ -1007,16 +1012,18 @@ def make_index_merge(root: str, compact_every: int | None = None):
     (round-9 verdict #2): every micro-batch is one
     ``operators.tfidf.fold`` of its slice into the parent version's
     state, exactly like a promoted daily batch, and reads serve through
-    the same ``score``. Only the fold's ``put`` differs: here each part
-    is plain parquet under the root (``seg_v{b}``, ``df_v{b}``,
-    ``n_v{b}``), there a word-bucketed store table — and so do the
-    layout and the commit protocol around it.
+    the same ``score``. Only the fold's ``put`` differs: here postings
+    and df are plain parquet under the root (``seg_v{b}``, ``df_v{b}``)
+    and N rides the manifest entry, there word-bucketed store tables
+    with N in the df version's ``_N`` file — and so do the layout and
+    the commit protocol around it.
 
     Per batch: the fold tokenizes ONLY the batch slice, writes its
     postings as an append-only segment, adds its word counts into the
-    parent version's df and its doc count into N (corpus-side count, so
-    zero-word docs still raise the IDF denominator); then the batch
-    commits a manifest entry carrying the parent pointer. Restart safety
+    parent version's df and its doc count into the parent's N
+    (corpus-side count, so zero-word docs still raise the IDF
+    denominator); then the batch commits a manifest entry carrying the
+    parent pointer and the cumulative N. Restart safety
     comes from the manifest, not driver memory: batch ids are stable
     under Structured Streaming's checkpoint, and a batch whose manifest
     entry already exists is a committed replay — a NO-OP (its data and
@@ -1037,7 +1044,7 @@ def make_index_merge(root: str, compact_every: int | None = None):
     base (``_sweep_index_root``). Sweep-then-commit (never
     commit-then-reap) means a crash can only defer a sweep, never leak
     state forever. Live state is therefore bounded at <=
-    2*compact_every segments + 2 df/N generations + O(compact_every)
+    2*compact_every segments + 2 df generations + O(compact_every)
     manifest files, however long the stream runs. The compaction
     decision depends only on the stable batch id, so replays take the
     same path.
@@ -1054,7 +1061,7 @@ def make_index_merge(root: str, compact_every: int | None = None):
     from ..sources import fs
     from ..sources.io import documents_as_corpus
 
-    prefix = {POSTINGS: "seg", DF: "df", N: "n"}
+    prefix = {POSTINGS: "seg", DF: "df"}
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -1067,7 +1074,7 @@ def make_index_merge(root: str, compact_every: int | None = None):
             # an EMPTY batch mints no version at all: the parent chain is
             # untouched, readers keep serving the previous version, and a
             # replay re-skips — simpler and safer than committing a
-            # version whose empty df/N parquet a later batch couldn't read
+            # version whose empty df parquet a later batch couldn't read
             return
         parents = [v for v in committed if v < batch_id]
         parent = max(parents) if parents else None
@@ -1085,8 +1092,10 @@ def make_index_merge(root: str, compact_every: int | None = None):
             # chain, which the sweep preserves by construction.
             _sweep_index_root(sess, root, committed, batch_id)
 
-        def put(part: str, build) -> DataFrame:
+        def put(part: str, build):
             rel = build()
+            if part == N:
+                return rel  # committed with the manifest entry below
             if part == POSTINGS and compacting:
                 # fold the parent chain's segments into THIS segment —
                 # docs are disjoint across segments, so the union IS
@@ -1117,13 +1126,13 @@ def make_index_merge(root: str, compact_every: int | None = None):
             state = (
                 [],
                 sess.read.parquet(fs.join(root, f"df_v{parent}")),
-                sess.read.parquet(fs.join(root, f"n_v{parent}")),
+                committed[parent]["n"],
             )
-        fold(state, lambda: corpus, put)
+        n = fold(state, lambda: corpus, put).n
 
         fs.makedirs(fs.join(root, "manifest"), sess)
         entry = json.dumps(
-            {"parent": parent, "segment": True, "base": compacting}
+            {"parent": parent, "segment": True, "base": compacting, "n": n}
         )
         entry_path = fs.join(root, "manifest", f"v{batch_id}")
         if not fs.put_text_exclusive(entry_path, entry, sess):
@@ -1134,10 +1143,10 @@ def make_index_merge(root: str, compact_every: int | None = None):
             # deterministic, so heal by atomic overwrite — the same
             # torn-marker rule as the store's _promote.
             fs.put_text_atomic(entry_path, entry, sess)
-        # reap stale df/N AFTER the commit: a crash before this point
+        # reap stale df AFTER the commit: a crash before this point
         # replays as a no-op (entry committed) and the leftovers are
         # unreferenced files, never a wrong read — and any leak here is
-        # healed by the next compaction's sweep. df/N older than the
+        # healed by the next compaction's sweep. df older than the
         # parent are unreachable to a NEWEST-version reader (a replayed
         # batch's parent is the newest committed below it). The reap
         # only runs in compacting mode: a non-compacting stream is the
@@ -1151,7 +1160,6 @@ def make_index_merge(root: str, compact_every: int | None = None):
             for v in committed:
                 if v < (parent if parent is not None else -1):
                     fs.delete_recursive(fs.join(root, f"df_v{v}"), sess)
-                    fs.delete_recursive(fs.join(root, f"n_v{v}"), sess)
 
     return merge
 
@@ -1335,7 +1343,8 @@ def read_merged_index(
     """Score the streamed index at a committed version: walk the
     manifest's parent chain for the postings segments (orphan dirs
     from an uncommitted crash are skipped by construction), read that
-    version's df/N, and reuse the batch scorer — the serving relation
+    version's df table and its manifest entry's N, and reuse the batch
+    scorer — the serving relation
     is a pure function of the maintained tables, exactly like the
     batch promoted chain.
 
@@ -1345,17 +1354,17 @@ def read_merged_index(
     append-only segments make every retained version a complete,
     immutable index state. Retention bounds what "retained" means: a
     non-compacting stream keeps every version forever (unbounded time
-    travel); with ``compact_every`` set, the per-batch reap keeps df/N
+    travel); with ``compact_every`` set, the per-batch reap keeps df
     for only the newest version and its parent, so as-of reads there
     reach exactly those two versions (older committed versions keep
-    their segments up to a compaction cycle longer, but not the df/N an
+    their segments up to a compaction cycle longer, but not the df an
     as-of read needs — ``verify_index_root`` reports which versions are
     still fully readable as ``retained``).
 
     Read contract on a LIVE stream: the returned DataFrame scans its
     version's files lazily. For the NEWEST version's SEGMENTS the merge
     reaps one full compaction generation late (the grace window in
-    ``_sweep_index_root``), but the version's df/N tables are reaped as
+    ``_sweep_index_root``), but the version's df table is reaped as
     soon as two newer batches commit — so a resolved reader is only
     guaranteed valid until the SECOND subsequent micro-batch, not until
     the next compaction. Read after ``awaitTermination`` (as every
@@ -1384,7 +1393,7 @@ def read_merged_index(
         for v in _segment_chain(committed, cur)
     ]
     dfx = spark.read.parquet(fs.join(root, f"df_v{cur}"))
-    n = spark.read.parquet(fs.join(root, f"n_v{cur}"))
+    n = committed[cur]["n"]
     if honor_tombstones:
         segs, dfx, n = _apply_tombstone_overlay(
             spark, root, segs, dfx, n, cur
@@ -1462,7 +1471,7 @@ def _apply_tombstone_overlay(spark, root: str, segs, dfx, n, version):
         )
         .where(F.col("dfx") > 0)
     )
-    n = n.select((F.col("nx") - F.lit(n_removed)).alias("nx"))
+    n -= n_removed
     if len(ts) <= 1000:
         # literal anti-filter: zero join nodes, stays in codegen
         kept = [seg.where(~F.col("doc").isin(ts)) for seg in segs]
@@ -1673,7 +1682,7 @@ def read_sharded_index(
 
     Cost shape at scale: the only cross-shard work is the per-word df
     sum — S vocabulary-sized tables through one hash aggregation —
-    and S broadcast-sized N scalars; the corpus-sized postings are
+    and a driver-side sum of S N counts; the corpus-sized postings are
     never reshuffled by federation itself (each segment meets the
     global df in the same per-segment join ``score`` always
     does). Each root resolves its own newest committed version
@@ -1722,7 +1731,7 @@ def read_sharded_index(
             for v in _segment_chain(committed, cur)
         ]
         dfx = spark.read.parquet(fs.join(root, f"df_v{cur}"))
-        n = spark.read.parquet(fs.join(root, f"n_v{cur}"))
+        n = committed[cur]["n"]
         # each shard's takedown ledger adjusts ITS OWN state before the
         # cross-shard sums — shards are disjoint, so per-shard overlays
         # compose exactly (a doc's postings/df/N live in one shard)
@@ -1744,10 +1753,7 @@ def read_sharded_index(
     # federated serve to ~4x the single-root serve; hinted, the agg
     # runs once and ships to all joins)
     dfx = F.broadcast(dfx)
-    n = reduce(lambda a, b: a.unionByName(b), shard_ns).agg(
-        F.sum("nx").alias("nx")
-    )
-    return score((all_segs, dfx, n))
+    return score((all_segs, dfx, sum(shard_ns)))
 
 
 #: One fully-drained PAIR of shard roots per (process, sf_dir) — the
@@ -1915,12 +1921,12 @@ def verify_index_root(root: str, spark=None) -> dict:
     version dirs). Classification:
 
     - ``live``: versions on the newest committed version's chain plus
-      its df/N pair — what ``read_merged_index()`` serves.
+      its df — what ``read_merged_index()`` serves.
     - ``retained``: committed versions off the live chain that are
       still fully present — as-of readable (the grace generation on a
       compacting stream; all history on a non-compacting one).
     - ``partial``: committed versions missing some of their data dirs
-      (df/N reaped by a later batch, or segments swept) — as-of reads
+      (df reaped by a later batch, or segments swept) — as-of reads
       of these versions would fail; expected state on a compacting
       stream, a damage signal on a non-compacting one.
     - ``orphaned``: version dirs on disk whose id has NO manifest entry
@@ -1934,15 +1940,13 @@ def verify_index_root(root: str, spark=None) -> dict:
     :func:`gc_index_root` pass would delete, decided by the SAME
     ``_sweep_index_plan`` the in-stream sweep runs (one verify/reap
     code path, round-11 verdict #3)."""
-    import re as _re
-
     from ..sources import fs
 
     committed = _index_manifest_versions(root, spark)
     names = fs.list_names(root, spark)
     on_disk: dict[int, set] = {}
     for name in names:
-        m = _re.match(r"^(seg|df|n)_v(\d+)$", name)
+        m = _VERSION_DIR.match(name)
         if m:
             on_disk.setdefault(int(m.group(2)), set()).add(m.group(1))
     out: dict = {
@@ -1964,14 +1968,14 @@ def verify_index_root(root: str, spark=None) -> dict:
     for v in sorted(committed):
         have = on_disk.get(v, set())
         if v == cur:
-            # the newest version serves its chain's segs + ITS df/N
-            state = "live" if {"seg", "df", "n"} <= have else "partial"
+            # the newest version serves its chain's segs + ITS df
+            state = "live" if {"seg", "df"} <= have else "partial"
         elif v in live:
             # an older chain member: serving needs only its segment
             state = "live" if "seg" in have else "partial"
         else:
             # off the live chain: as-of readable iff fully present
-            state = "retained" if {"seg", "df", "n"} <= have else "partial"
+            state = "retained" if {"seg", "df"} <= have else "partial"
         out["versions"][v] = {
             "state": state,
             "present": sorted(have),
@@ -1990,7 +1994,7 @@ def _index_reap_candidates(
 
     - COMPACTING (any ``base`` entry): exactly the in-stream sweep plan
       with the horizon pushed past every id on disk — expired-grace
-      segments, unreachable df/N generations, crash orphans, and
+      segments, unreachable df generations, crash orphans, and
       manifest entries below the retention cutoff (as
       ``manifest/v{N}`` names).
     - FULL-RETENTION (no base): only crash orphans (data dirs whose id
@@ -2005,21 +2009,13 @@ def _index_reap_candidates(
     (empty/unparseable — a crash inside ``add_tombstones``'s commit
     write; the writer retried under a fresh uuid) are collected the
     same way via ``tombstone_leftovers``, folded in by the callers."""
-    import re as _re
-
     tmps = [
         f"manifest/{n}" for n in (manifest_names or []) if ".tmp-" in n
     ]
     if not committed:
         return tmps
     compacting = any(m.get("base") for m in committed.values())
-    ids = [
-        int(m.group(2))
-        for m in (
-            _re.match(r"^(seg|df|n)_v(\d+)$", n) for n in names
-        )
-        if m
-    ]
+    ids = [int(m.group(2)) for m in map(_VERSION_DIR.match, names) if m]
     if compacting:
         horizon = max([*ids, *committed]) + 1
         dirs, prunes = _sweep_index_plan(dict(committed), names, horizon)
@@ -2027,8 +2023,7 @@ def _index_reap_candidates(
     return sorted(
         n
         for n in names
-        if (m := _re.match(r"^(seg|df|n)_v(\d+)$", n))
-        and int(m.group(2)) not in committed
+        if (m := _VERSION_DIR.match(n)) and int(m.group(2)) not in committed
     ) + tmps
 
 
@@ -2043,7 +2038,7 @@ def gc_index_root(root: str, spark=None) -> dict:
 
     - a COMPACTING root (any ``base`` entry exists): apply exactly the
       in-stream sweep as of a hypothetical next batch — expired-grace
-      segments, unreachable df/N generations, crash orphans, manifest
+      segments, unreachable df generations, crash orphans, manifest
       entries below the newest base. Run it only on a STOPPED stream
       (it collapses the live-reader grace window by one generation).
     - a FULL-RETENTION root (no base): every committed version is an
@@ -2059,18 +2054,12 @@ def gc_index_root(root: str, spark=None) -> dict:
     max(committed), which the in-stream sweep would protect as its own
     in-flight write (a later resume's replay rewrites its data with
     mode=overwrite anyway)."""
-    import re as _re
-
     from ..sources import fs
 
     committed = _index_manifest_versions(root, spark)
 
     def _dirs():
-        return sorted(
-            n
-            for n in fs.list_names(root, spark)
-            if _re.match(r"^(seg|df|n)_v(\d+)$", n)
-        )
+        return sorted(filter(_VERSION_DIR.match, fs.list_names(root, spark)))
 
     before = _dirs()
     if not committed:
