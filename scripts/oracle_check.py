@@ -170,7 +170,12 @@ def main() -> int:
             json_path, merge = a.split("=", 1)[1], True
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
-    spark = get_spark(app_name="oracle-check")
+    # no console progress bar: its \r-drawn stage bars would share
+    # stdout lines with the verdict lines
+    spark = get_spark(
+        app_name="oracle-check",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

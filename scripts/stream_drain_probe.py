@@ -12,12 +12,6 @@ sequentially, once via a 13-thread pool on the SAME session — and
 compare wall clocks AND result hashes (order-insensitive md5 of the
 stringified sorted frame).
 
-Conf note: ``run_to_memory`` saves/sets/restores
-``spark.sql.shuffle.partitions`` around each drain; under concurrency
-the restores race, so this probe pins the conf to the streaming value
-up front and restores it once at the end. A production concurrent
-drain runner would hoist the conf the same way.
-
 Result (see SURVEY.md §6 scale notes): the floors overlap — identical
 hashes, family wall collapses by ~3-4x. The per-query bench keeps
 sequential attribution (one number per query is the contract); a
@@ -36,7 +30,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry
 from tf_idf_mapreduce_spark.session import get_spark
-from tf_idf_mapreduce_spark.streaming.runner import STREAM_STATE_PARTITIONS
 
 
 def dfhash(df) -> str:
@@ -57,21 +50,14 @@ def main() -> None:
     seq = {k: dfhash(fn(spark, sf)) for k, fn in qs.items()}
     seq_wall = time.time() - t0
 
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-    )
-    try:
-        t0 = time.time()
-        with ThreadPoolExecutor(max_workers=len(qs)) as ex:
-            futs = {
-                k: ex.submit(lambda f=fn: dfhash(f(spark, sf)))
-                for k, fn in qs.items()
-            }
-            conc = {k: f.result() for k, f in futs.items()}
-        conc_wall = time.time() - t0
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    t0 = time.time()
+    with ThreadPoolExecutor(max_workers=len(qs)) as ex:
+        futs = {
+            k: ex.submit(lambda f=fn: dfhash(f(spark, sf)))
+            for k, fn in qs.items()
+        }
+        conc = {k: f.result() for k, f in futs.items()}
+    conc_wall = time.time() - t0
 
     mismatch = [k for k in seq if seq[k] != conc[k]]
     print(

@@ -392,17 +392,16 @@ def test_stream_bot_score_equals_batch(spark, sf_dir):
     assert streamed == batch
 
 
-def test_run_all_streams_concurrent_matches_sequential(spark, sf_dir):
+def test_stream_family_concurrent_matches_sequential(spark, sf_dir):
     """The production backlog-drain shape: the whole stream_* family
-    drained concurrently on one session must land on the SAME relations
-    as the sequential per-query drains (the bench's attribution shape),
-    and the hoisted shuffle-partitions conf must be restored afterward."""
+    drained concurrently on one session (a plain thread pool) must land
+    on the SAME relations as the sequential per-query drains (the
+    bench's attribution shape), and no drain may leave the session's
+    shuffle width changed."""
     import hashlib
+    from concurrent.futures import ThreadPoolExecutor
 
-    from tf_idf_mapreduce_spark.streaming.runner import (
-        run_all_streams,
-        stream_registry,
-    )
+    import __spark_entry__ as entrymod
 
     def dfhash(df):
         pdf = df.toPandas()
@@ -414,14 +413,77 @@ def test_run_all_streams_concurrent_matches_sequential(spark, sf_dir):
         )
         return hashlib.md5(pdf.to_csv(index=False).encode()).hexdigest()
 
-    names = sorted(stream_registry())
-    assert len(names) >= 15  # the whole family, not a cherry-picked pair
+    qs = {k: v for k, v in entrymod.queries().items() if k.startswith("stream_")}
+    assert len(qs) >= 15  # the whole family, not a cherry-picked pair
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    seq = run_all_streams(spark, sf_dir, names, concurrent=False)
-    conc = run_all_streams(spark, sf_dir, names, concurrent=True)
+    seq = {k: dfhash(fn(spark, sf_dir)) for k, fn in qs.items()}
+    with ThreadPoolExecutor(max_workers=len(qs)) as ex:
+        futs = {k: ex.submit(fn, spark, sf_dir) for k, fn in qs.items()}
+        conc = {k: dfhash(f.result()) for k, f in futs.items()}
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    mismatched = [n for n in names if dfhash(seq[n]) != dfhash(conc[n])]
-    assert mismatched == []
+    assert [k for k in qs if seq[k] != conc[k]] == []
+
+
+def test_drain_sets_state_width_only_inside_the_query(spark, sf_dir):
+    """A drain runs at STREAM_STATE_PARTITIONS without changing the
+    caller's session for its duration: a listener on the session reads
+    the session's own width at every progress event of a 4-batch drain,
+    while each foreachBatch batch's session reads the state width."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from tf_idf_mapreduce_spark.streaming.runner import (
+        STREAM_STATE_PARTITIONS,
+        run_foreach_batch,
+    )
+    from tf_idf_mapreduce_spark.streaming.sources import stream_parquet
+
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert width != str(STREAM_STATE_PARTITIONS)
+    seen = []
+
+    class WidthListener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if (p.name or "").startswith("stream_inc_wordcount") and (
+                p.numInputRows > 0
+            ):
+                seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = WidthListener()
+    spark.streams.addListener(listener)
+    try:
+        st.q_stream_incremental_wordcount(spark, sf_dir)
+        # listener events arrive asynchronously
+        deadline = time.time() + 60
+        while len(seen) < 4 and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    assert len(seen) >= 4, seen
+    assert set(seen) == {width}, seen
+
+    batch_widths = []
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    run_foreach_batch(
+        stream_parquet(spark, sf_dir, docs.schema, "documents.parquet"),
+        lambda batch, _id: batch_widths.append(
+            batch.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        ),
+        "width_probe",
+    )
+    assert batch_widths and set(batch_widths) == {str(STREAM_STATE_PARTITIONS)}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
 
 
 def _poll_kill(q, min_batches: int, timeout_sec: float = 120.0):

@@ -37,6 +37,9 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     # deterministic double formatting/parsing across engines
     "spark.sql.parquet.int96RebaseModeInRead": "CORRECTED",
+    # parquet TIMESTAMP(NANOS) columns (the events fixture's ``ts``) read
+    # as raw nanosecond longs instead of failing the scan
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 

@@ -226,12 +226,14 @@ def normalize_events(raw: DataFrame) -> DataFrame:
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Load the events table, normalizing its NANOS timestamp.
 
-    The fixture's ``ts`` is parquet TIMESTAMP(NANOS) which Spark's vectorized
-    reader rejects outright (PARQUET_TYPE_ILLEGAL). We read it as raw
-    nanosecond longs (``legacy.parquet.nanosAsLong`` — runtime-settable), then
-    ``normalize_events`` derives ts_ns / ts_sec / ts.
+    A fixture ``ts`` of parquet TIMESTAMP(NANOS) is one Spark's reader
+    rejects outright (PARQUET_TYPE_ILLEGAL) unless
+    ``spark.sql.legacy.parquet.nanosAsLong`` reads it as raw nanosecond
+    longs. ``session.ENGINE_CONF`` sets that for every engine session; a
+    session built elsewhere must set it itself before reading such a
+    fixture (micros fixtures need nothing). ``normalize_events`` derives
+    ts_ns / ts_sec / ts from either shape.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return normalize_events(load_table(spark, sf_dir, "events"))
 
 

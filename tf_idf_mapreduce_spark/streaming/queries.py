@@ -36,8 +36,8 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions.hashing import norm_words
 from ..operators.events import SESSION_GAP_SEC
-from .runner import run_to_memory
-from .sources import stream_documents, stream_events
+from .runner import run_foreach_batch, run_to_memory
+from .sources import stream_documents, stream_events, stream_parquet
 
 
 def q_stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,12 +60,7 @@ def q_stream_incremental_wordcount(spark: SparkSession, sf_dir: str) -> DataFram
     """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     split_dir = _corpus_split_dir(sf_dir, docs)
-    src = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(split_dir)
-    )
+    src = stream_parquet(spark, split_dir, docs.schema, "*.parquet", 1)
     words = src.select(F.explode(norm_words(F.col("text"))).alias("word"))
     counts = words.groupBy("word").agg(F.count("*").alias("n"))
     return run_to_memory(counts, "stream_inc_wordcount", output_mode="complete")
@@ -165,12 +160,7 @@ def q_stream_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     split_dir = _corpus_split_dir(sf_dir, docs)
 
     def src() -> DataFrame:
-        return (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(split_dir)
-        )
+        return stream_parquet(spark, split_dir, docs.schema, "*.parquet", 1)
 
     words = tokenize(documents_as_corpus(src())).select(
         F.lit("w").alias("kind"), "word", "doc"
@@ -483,31 +473,19 @@ _EVENTS_SPLIT_CACHE: dict[str, str] = {}
 
 
 def _events_split_dir(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    cached = _EVENTS_SPLIT_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
-    # nanos-typed fixtures need the legacy long read (same as load_events)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    split_dir = tempfile.mkdtemp(prefix="stream_split_ev_")
-    # range-partition on whichever time column THIS raw variant carries —
-    # normalize_events accepts either a ts (long nanos or timestamp) or a
-    # ts_ns fixture shape, and the split must too
-    tcol = "ts" if "ts" in raw.columns else "ts_ns"
-    raw.repartitionByRange(4, tcol).write.mode("overwrite").parquet(split_dir)
-    if not _EVENTS_SPLIT_CACHE:
-        atexit.register(
-            lambda: [
-                shutil.rmtree(p, ignore_errors=True)
-                for p in _EVENTS_SPLIT_CACHE.values()
-            ]
+    def build(split_dir: str) -> None:
+        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+        # range-partition on whichever time column THIS raw variant
+        # carries — normalize_events accepts either a ts (long nanos or
+        # timestamp) or a ts_ns fixture shape, and the split must too
+        tcol = "ts" if "ts" in raw.columns else "ts_ns"
+        raw.repartitionByRange(4, tcol).write.mode("overwrite").parquet(
+            split_dir
         )
-    _EVENTS_SPLIT_CACHE[sf_dir] = split_dir
-    return split_dir
+
+    return _cached_tmpdir(
+        _EVENTS_SPLIT_CACHE, sf_dir, "stream_split_ev_", build
+    )
 
 
 def q_stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -543,10 +521,7 @@ def q_stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     split_dir = _events_split_dir(spark, sf_dir)
     raw_schema = spark.read.parquet(split_dir).schema
     src = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(split_dir)
+        stream_parquet(spark, split_dir, raw_schema, "*.parquet", 1)
     ).select("user_id", "event_id", "ts_ns", "ts_sec", "event_type", "value")
 
     root = tempfile.mkdtemp(prefix="stream_upsert_snap_")
@@ -570,19 +545,7 @@ def q_stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         snap.write.mode("overwrite").parquet(path)
         state["cur"] = path  # becomes current only after a complete write
 
-    ckpt = tempfile.mkdtemp(prefix="spark_ckpt_upsert_")
-    try:
-        query = (
-            src.writeStream.foreachBatch(merge)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        if not query.awaitTermination(300):
-            query.stop()
-            raise TimeoutError("stream_upsert_snapshot still running after 300s")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    run_foreach_batch(src, merge, "stream_upsert_snapshot")
     assert state["cur"] is not None, "no micro-batch arrived"
     return spark.read.parquet(state["cur"]).select(
         "user_id",
@@ -1367,7 +1330,7 @@ def read_merged_index(
     ``_sweep_index_root``), but the version's df table is reaped as
     soon as two newer batches commit — so a resolved reader is only
     guaranteed valid until the SECOND subsequent micro-batch, not until
-    the next compaction. Read after ``awaitTermination`` (as every
+    the next compaction. Read after the drain has finished (as every
     in-repo caller does), or re-resolve per micro-batch on a live
     stream."""
     from ..operators.tfidf import score
@@ -1500,28 +1463,34 @@ def q_stream_tfidf_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     split_dir = _corpus_split_dir(sf_dir, docs)
-    src = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(split_dir)
-    )
+    src = stream_parquet(spark, split_dir, docs.schema, "*.parquet", 1)
     root = tempfile.mkdtemp(prefix="stream_tfidf_index_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="spark_ckpt_idx_merge_")
-    try:
-        query = (
-            src.writeStream.foreachBatch(make_index_merge(root, compact_every=3))
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        if not query.awaitTermination(300):
-            query.stop()
-            raise TimeoutError("stream_tfidf_index_merge still running after 300s")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    run_foreach_batch(
+        src, make_index_merge(root, compact_every=3), "stream_tfidf_index_merge"
+    )
     return read_merged_index(spark, root)
+
+
+def _write_ordered_split(split_dir: str, slices: list[DataFrame]) -> None:
+    """Write slice k as the single file ``b{k}.parquet`` in ``split_dir``,
+    with strictly ascending mtimes so the file-stream source's
+    oldest-first pickup makes micro-batch k == slice k on every run."""
+    import glob
+    import os
+    import shutil
+    import tempfile
+    import time
+
+    t0 = time.time() - 400
+    for k, part_df in enumerate(slices):
+        staging = tempfile.mkdtemp(prefix="split_stage_")
+        part_df.coalesce(1).write.mode("overwrite").parquet(staging)
+        (part,) = glob.glob(os.path.join(staging, "part-*.parquet"))
+        dst = os.path.join(split_dir, f"b{k}.parquet")
+        shutil.copyfile(part, dst)
+        os.utime(dst, (t0 + k * 60, t0 + k * 60))
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 _MOD4_SPLIT_CACHE: dict[str, str] = {}
@@ -1530,33 +1499,16 @@ _MOD4_SPLIT_CACHE: dict[str, str] = {}
 def _corpus_split_mod4_dir(sf_dir: str, docs: DataFrame) -> str:
     """A DETERMINISTIC 4-file corpus split for as-of oracles: file k
     holds exactly the docs with ``doc_id % 4 == k`` (range splits
-    sample, so their membership isn't SQL-expressible), written with
-    strictly ascending mtimes so the file-stream source's
-    oldest-first pickup makes batch k == slice k on every run."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    def build(split_dir: str) -> None:
-        t0 = time.time() - 400
-        for b in range(4):
-            staging = tempfile.mkdtemp(prefix="mod4_stage_")
-            (
-                docs.where(F.pmod(F.col("doc_id"), F.lit(4)) == b)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(staging)
-            )
-            (part,) = glob.glob(os.path.join(staging, "part-*.parquet"))
-            dst = os.path.join(split_dir, f"b{b}.parquet")
-            shutil.copyfile(part, dst)
-            os.utime(dst, (t0 + b * 60, t0 + b * 60))
-            shutil.rmtree(staging, ignore_errors=True)
-
+    sample, so their membership isn't SQL-expressible), drained in
+    file order (``_write_ordered_split``)."""
     return _cached_tmpdir(
-        _MOD4_SPLIT_CACHE, sf_dir, "stream_split_mod4_", build
+        _MOD4_SPLIT_CACHE,
+        sf_dir,
+        "stream_split_mod4_",
+        lambda d: _write_ordered_split(
+            d,
+            [docs.where(F.pmod(F.col("doc_id"), F.lit(4)) == b) for b in range(4)],
+        ),
     )
 
 
@@ -1571,31 +1523,12 @@ def _asof_index_root(spark: SparkSession, sf_dir: str) -> str:
     """Drain the deterministic mod-4 corpus split into a non-compacting
     index merge once per process — every committed version is then a
     complete immutable state for as-of reads and version diffs."""
-    import shutil
-    import tempfile
 
     def build(root: str) -> None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         split_dir = _corpus_split_mod4_dir(sf_dir, docs)
-        ckpt = tempfile.mkdtemp(prefix="spark_ckpt_idx_asof_")
-        src = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(split_dir)
-        )
-        try:
-            query = (
-                src.writeStream.foreachBatch(make_index_merge(root))
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            if not query.awaitTermination(300):
-                query.stop()
-                raise TimeoutError("asof index drain still running after 300s")
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
+        src = stream_parquet(spark, split_dir, docs.schema, "*.parquet", 1)
+        run_foreach_batch(src, make_index_merge(root), "stream_tfidf_asof")
 
     return _cached_tmpdir(
         _ASOF_ROOT_CACHE, sf_dir, "stream_tfidf_asof_", build
@@ -1769,65 +1702,27 @@ def _sharded_index_roots(spark: SparkSession, sf_dir: str) -> list:
     index roots — one compacting every 2nd batch, one full-retention —
     and return the roots. Deliberately heterogeneous cadences: the
     federation must not care how each shard manages its own history."""
-    import glob
     import os
-    import shutil
-    import tempfile
-    import time
 
     def build(base: str) -> None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        half = F.pmod((F.col("doc_id") / 2).cast("long"), F.lit(2))
         for shard in range(2):
             split_dir = os.path.join(base, f"split{shard}")
             os.makedirs(split_dir)
-            t0 = time.time() - 400
-            for b in range(2):
-                staging = tempfile.mkdtemp(prefix="shard_stage_")
-                (
-                    docs.where(
-                        (F.pmod(F.col("doc_id"), F.lit(2)) == shard)
-                        & (
-                            F.pmod(
-                                (F.col("doc_id") / 2).cast("long"), F.lit(2)
-                            )
-                            == b
-                        )
-                    )
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(staging)
-                )
-                (part,) = glob.glob(os.path.join(staging, "part-*.parquet"))
-                dst = os.path.join(split_dir, f"b{b}.parquet")
-                shutil.copyfile(part, dst)
-                os.utime(dst, (t0 + b * 60, t0 + b * 60))
-                shutil.rmtree(staging, ignore_errors=True)
-            root = os.path.join(base, f"shard{shard}")
-            ckpt = tempfile.mkdtemp(prefix=f"spark_ckpt_shard{shard}_")
-            src = (
-                spark.readStream.schema(docs.schema)
-                .option("maxFilesPerTrigger", "1")
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(split_dir)
+            mine = docs.where(F.pmod(F.col("doc_id"), F.lit(2)) == shard)
+            _write_ordered_split(
+                split_dir, [mine.where(half == b) for b in range(2)]
             )
-            try:
-                query = (
-                    src.writeStream.foreachBatch(
-                        make_index_merge(
-                            root, compact_every=2 if shard == 0 else None
-                        )
-                    )
-                    .trigger(availableNow=True)
-                    .option("checkpointLocation", ckpt)
-                    .start()
-                )
-                if not query.awaitTermination(300):
-                    query.stop()
-                    raise TimeoutError(
-                        f"shard {shard} drain still running after 300s"
-                    )
-            finally:
-                shutil.rmtree(ckpt, ignore_errors=True)
+            src = stream_parquet(spark, split_dir, docs.schema, "*.parquet", 1)
+            run_foreach_batch(
+                src,
+                make_index_merge(
+                    os.path.join(base, f"shard{shard}"),
+                    compact_every=2 if shard == 0 else None,
+                ),
+                f"stream_tfidf_shard{shard}",
+            )
 
     base = _cached_tmpdir(
         _SHARD_ROOTS_CACHE, sf_dir, "stream_tfidf_shards_", build

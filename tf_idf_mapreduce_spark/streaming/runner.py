@@ -1,9 +1,23 @@
-"""Run a finite streaming query to completion and hand back a batch result.
+"""Run a finite streaming query to completion: the one start path.
 
 ``trigger(availableNow=True)`` processes everything currently in the source
 as micro-batches and then stops — the standard pattern for batch-over-
-streaming-graph execution (and for draining a backlog at scale). The memory
-sink keeps results queryable as a temp view.
+streaming-graph execution (and for draining a backlog at scale). Every
+drain in the engine goes through ``_run``: ``run_to_memory`` hands the
+result back through a memory sink, ``run_foreach_batch`` hands each
+micro-batch to a function.
+
+State width: every drain starts at ``STREAM_STATE_PARTITIONS`` shuffle
+partitions, whatever the caller's session uses. The width is set on the
+caller's session only while ``start()`` runs, under one lock, and is
+restored as soon as ``start()`` returns. That is enough because
+``start()`` constructs the query's ``StreamExecution``, which copies the
+session (``cloneSession()``) into the session it runs every micro-batch
+in; the stateful checkpoint and each foreachBatch batch's
+``sparkSession`` read the width from that copy. The drain itself never
+changes the caller's conf, so concurrent drains on one session need no
+coordination beyond the lock, and the query stays on the caller's
+``spark.streams``, where its listeners see it.
 """
 
 from __future__ import annotations
@@ -11,20 +25,59 @@ from __future__ import annotations
 import itertools
 import shutil
 import tempfile
+import threading
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 _SEQ = itertools.count()
+_START_LOCK = threading.Lock()
 
-#: State partition count stamped into each run's checkpoint at its first
-#: micro-batch. Stateful operators create one state-store directory per
-#: shuffle partition per trigger — at fixture scale that file overhead
-#: dominates (measured 3.2s → 1.7s per run going 32 → 4, and another
-#: ~40% off a 4-trigger drain going 4 → 2; 1 loses Arrow-kernel
-#: parallelism in applyInPandasWithState and regresses). At real feed
-#: rates size this to state volume instead (state partitions are fixed
-#: for a checkpoint's lifetime, so pick for the target scale up front).
+#: State partition count every drain starts with, and so the count stamped
+#: into each run's checkpoint at its first micro-batch. Stateful operators
+#: create one state-store directory per shuffle partition per trigger — at
+#: fixture scale that file overhead dominates (measured 3.2s → 1.7s per
+#: run going 32 → 4, and another ~40% off a 4-trigger drain going 4 → 2;
+#: 1 loses Arrow-kernel parallelism in applyInPandasWithState and
+#: regresses). It applies to memory and foreachBatch drains alike, and
+#: only inside the query: ``_run`` sets it for the duration of
+#: ``start()``. At real feed rates size this to state volume instead
+#: (state partitions are fixed for a checkpoint's lifetime, so pick for
+#: the target scale up front).
 STREAM_STATE_PARTITIONS = 2
+
+
+def _run(
+    spark: SparkSession, writer: DataStreamWriter, name: str, timeout_sec: int
+) -> None:
+    """Start ``writer`` as an ``availableNow`` drain at the state width,
+    wait for it, and stop it on every exit path. The checkpoint is only
+    needed while the query runs — it is removed afterwards so repeated
+    bench/oracle runs don't accumulate orphaned temp dirs."""
+    ckpt = tempfile.mkdtemp(prefix=f"spark_ckpt_{name}_")
+    try:
+        writer = writer.trigger(availableNow=True).option(
+            "checkpointLocation", ckpt
+        )
+        with _START_LOCK:
+            saved = spark.conf.get("spark.sql.shuffle.partitions")
+            spark.conf.set(
+                "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
+            )
+            try:
+                query = writer.start()
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", saved)
+        try:
+            if not query.awaitTermination(timeout_sec):
+                raise TimeoutError(
+                    f"streaming query {name} still running after {timeout_sec}s"
+                )
+        finally:
+            query.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def run_to_memory(
@@ -38,47 +91,22 @@ def run_to_memory(
     repeated runs in one session never collide."""
     table = f"{name}_{next(_SEQ)}"
     spark = sdf.sparkSession
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    # hoisted-conf contract (``run_all_streams``): when the session conf
-    # already carries the streaming value, a concurrent-drain runner set
-    # it for the whole family — do NOT save/restore here, the per-thread
-    # restores would race and clobber each other mid-drain
-    hoisted = saved == str(STREAM_STATE_PARTITIONS)
-    if not hoisted:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-        )
-    # the memory sink holds the results after the drain; the checkpoint is
-    # only needed while the query runs — remove it so repeated bench/oracle
-    # runs don't accumulate orphaned temp dirs
-    ckpt = tempfile.mkdtemp(prefix=f"spark_ckpt_{table}_")
     try:
-        query = (
+        _run(
+            spark,
             sdf.writeStream.format("memory")
             .queryName(table)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+            .outputMode(output_mode),
+            table,
+            timeout_sec,
         )
-        try:
-            if not query.awaitTermination(timeout_sec):
-                raise TimeoutError(
-                    f"streaming query {table} still running after {timeout_sec}s"
-                )
-        finally:
-            query.stop()
         # copy the sink's rows into block storage: a long session (the
         # full-surface bench) otherwise accumulates one live MemorySink
         # per streaming run, and that creep shows up as per-query
         # slowdown late in the bench. The returned DF is backed by its
         # own checkpointed RDD, independent of the dropped view.
-        out = spark.table(table).localCheckpoint(eager=True)
-        return out
+        return spark.table(table).localCheckpoint(eager=True)
     finally:
-        if not hoisted:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
-        shutil.rmtree(ckpt, ignore_errors=True)
         # drop the sink's temp view on EVERY exit path — a timed-out or
         # failed drain must not leave its MemorySink (and buffered rows)
         # registered for the session's lifetime
@@ -88,67 +116,13 @@ def run_to_memory(
             pass
 
 
-def stream_registry() -> dict:
-    """Every ``q_stream_*`` query in ``streaming.queries`` under its
-    registry name (``stream_*``) — the family ``run_all_streams`` drains."""
-    from . import queries as _q
-
-    return {
-        name[2:]: fn
-        for name, fn in sorted(vars(_q).items())
-        if name.startswith("q_stream_") and callable(fn)
-    }
-
-
-def run_all_streams(
-    spark,
-    sf_dir: str,
-    names: list[str] | None = None,
-    *,
-    concurrent: bool = True,
-    max_workers: int | None = None,
-) -> dict[str, DataFrame]:
-    """Drain the whole streaming family — the production backlog-drain
-    shape. With ``concurrent=True`` every query's ``availableNow`` drain
-    runs on its own thread of ONE session, overlapping the per-drain
-    micro-batch scheduling floors (measured 4.1x at sf0.1 with
-    hash-identical results — ``scripts/stream_drain_probe.py``);
-    ``concurrent=False`` is the per-query-attribution shape the bench
-    keeps.
-
-    Conf contract: ``run_to_memory``'s per-drain save/set/restore of
-    ``spark.sql.shuffle.partitions`` would RACE across threads (a restore
-    on one thread can clobber the streaming value another thread just
-    set, leaving a drain with batch-sized state partitioning). The conf
-    is therefore HOISTED here — set once before any drain starts,
-    restored once after the last completes — and ``run_to_memory``
-    detects the already-hoisted value and skips its own save/restore.
-
-    Returns {registry_name: drained batch DataFrame} — each result is an
-    independent localCheckpoint, so consumers can use them after the
-    conf restore."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    qs = stream_registry()
-    if names is not None:
-        unknown = sorted(set(names) - set(qs))
-        if unknown:
-            raise KeyError(f"unknown streaming queries: {unknown}")
-        qs = {k: qs[k] for k in names}
-
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-    )
-    try:
-        if not concurrent:
-            return {k: fn(spark, sf_dir) for k, fn in qs.items()}
-        with ThreadPoolExecutor(
-            max_workers=max_workers or len(qs)
-        ) as ex:
-            futs = {
-                k: ex.submit(fn, spark, sf_dir) for k, fn in qs.items()
-            }
-            return {k: f.result() for k, f in futs.items()}
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+def run_foreach_batch(
+    sdf: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    name: str,
+    timeout_sec: int = 300,
+) -> None:
+    """Drain a streaming DataFrame through ``foreachBatch(fn)``: ``fn``
+    gets each micro-batch and its stable batch id, and owns whatever
+    sink it writes."""
+    _run(sdf.sparkSession, sdf.writeStream.foreachBatch(fn), name, timeout_sec)
