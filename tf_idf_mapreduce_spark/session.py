@@ -37,8 +37,9 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     # deterministic double formatting/parsing across engines
     "spark.sql.parquet.int96RebaseModeInRead": "CORRECTED",
-    # parquet TIMESTAMP(NANOS) columns (the events fixture's ``ts``) read
-    # as raw nanosecond longs instead of failing the scan
+    # a parquet TIMESTAMP(NANOS) column (older events fixtures wrote ``ts``
+    # that way; the current ones are micros) reads as raw nanosecond longs
+    # instead of failing the scan
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 

@@ -224,15 +224,17 @@ def normalize_events(raw: DataFrame) -> DataFrame:
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Load the events table, normalizing its NANOS timestamp.
+    """Load the events table, normalizing its timestamp.
 
-    A fixture ``ts`` of parquet TIMESTAMP(NANOS) is one Spark's reader
-    rejects outright (PARQUET_TYPE_ILLEGAL) unless
+    Micros fixtures (the current ones) read on any session. A fixture
+    ``ts`` of parquet TIMESTAMP(NANOS) is one Spark's reader rejects
+    outright (PARQUET_TYPE_ILLEGAL) unless
     ``spark.sql.legacy.parquet.nanosAsLong`` reads it as raw nanosecond
-    longs. ``session.ENGINE_CONF`` sets that for every engine session; a
-    session built elsewhere must set it itself before reading such a
-    fixture (micros fixtures need nothing). ``normalize_events`` derives
-    ts_ns / ts_sec / ts from either shape.
+    longs. ``session.ENGINE_CONF`` sets that on every session
+    ``get_spark`` builds, and this function no longer sets it: a NANOS
+    fixture is not supported on a session built anywhere else (a host
+    harness's own session, say) unless its builder sets the flag.
+    ``normalize_events`` derives ts_ns / ts_sec / ts from either shape.
     """
     return normalize_events(load_table(spark, sf_dir, "events"))
 

@@ -47,9 +47,15 @@ _START_LOCK = threading.Lock()
 #: the target scale up front).
 STREAM_STATE_PARTITIONS = 2
 
+#: Seconds a drain may run before ``_run`` stops it and raises.
+_DRAIN_TIMEOUT_SEC = 300
+
 
 def _run(
-    spark: SparkSession, writer: DataStreamWriter, name: str, timeout_sec: int
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    name: str,
+    timeout_sec: int = _DRAIN_TIMEOUT_SEC,
 ) -> None:
     """Start ``writer`` as an ``availableNow`` drain at the state width,
     wait for it, and stop it on every exit path. The checkpoint is only
@@ -84,7 +90,7 @@ def run_to_memory(
     sdf: DataFrame,
     name: str,
     output_mode: str = "complete",
-    timeout_sec: int = 300,
+    timeout_sec: int = _DRAIN_TIMEOUT_SEC,
 ) -> DataFrame:
     """Execute a streaming DataFrame to a memory sink; return the result as
     a batch DataFrame. ``name`` is suffixed with a sequence number so
@@ -117,12 +123,9 @@ def run_to_memory(
 
 
 def run_foreach_batch(
-    sdf: DataFrame,
-    fn: Callable[[DataFrame, int], None],
-    name: str,
-    timeout_sec: int = 300,
+    sdf: DataFrame, fn: Callable[[DataFrame, int], None], name: str
 ) -> None:
     """Drain a streaming DataFrame through ``foreachBatch(fn)``: ``fn``
     gets each micro-batch and its stable batch id, and owns whatever
     sink it writes."""
-    _run(sdf.sparkSession, sdf.writeStream.foreachBatch(fn), name, timeout_sec)
+    _run(sdf.sparkSession, sdf.writeStream.foreachBatch(fn), name)
