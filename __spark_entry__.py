@@ -114,10 +114,6 @@ def q_tfidf_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _full_columns(corpus_core(spark, sf_dir).scored)
 
 
-#: One gzip-JSONL landing copy of the corpus per (process, sf_dir).
-_JSONL_LAND_CACHE: dict[str, str] = {}
-
-
 def q_tfidf_full_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FORMAT INDEPENDENCE of the flagship chain: the corpus round-trips
     through a gzip JSON-lines landing directory — ``write_jsonl`` out,
@@ -144,7 +140,7 @@ def q_tfidf_full_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
             codec="gzip",
         )
 
-    land = _cached_tmpdir(_JSONL_LAND_CACHE, sf_dir, "jsonl_land_", build)
+    land = _cached_tmpdir("jsonl_land_", sf_dir, build)
     corpus = read_jsonl_corpus(spark, f"{land}/docs")
     return _full_columns(tfidf_pipeline(corpus))
 

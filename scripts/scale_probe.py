@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from tf_idf_mapreduce_spark.operators.prefix import two_phase_running_sum
 from tf_idf_mapreduce_spark.operators.tfidf import doc_freq, doc_freq_salted
 from tf_idf_mapreduce_spark.session import get_spark
+from tf_idf_mapreduce_spark.sources.io import forget
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -719,7 +720,7 @@ def _probe_bpe_batching(spark: SparkSession, quick: bool) -> None:
     emit("|---|---|---|---|---|")
     baseline = None
     for m in (1, 4, 8, 16):
-        ts._BPE_MERGE_CACHE.clear()
+        forget("bpe_merges")
         ts._BPE_TRAIN_STATS.update({"rounds": 0, "chain_lengths": []})
         t0 = time.time()
         merges = ts._bpe_learn_merges(spark, d, n_merges, batch_m=m)
@@ -925,13 +926,13 @@ def probe_screen_reuse(spark: SparkSession, quick: bool) -> None:
             # disposition are now session-cached AND durably stored —
             # clear both between modes, or the second mode measures
             # cache hits instead of its own execution strategy
-            from tf_idf_mapreduce_spark.operators import dedup as _dd
             from tf_idf_mapreduce_spark.sources.model_store import (
                 drop_models,
             )
 
-            _dd._INCREMENTAL_SCREEN_CACHE.clear()
-            _dd._SEMKEEP_RESULT_CACHE.clear()
+            forget(
+                "incremental_dedup", "incremental_semantic_dedup", "semantic_keep"
+            )
             for m in (
                 "incremental_dedup",
                 "incremental_semantic_dedup",

@@ -1617,20 +1617,3 @@ def test_epoch_plan_all_sources_empty(spark, tmp_path):
             r.epochs,
         ) == (0, 0, 0, 0, 0.0)
         assert not r.saturated
-
-
-def test_session_cache_insert_evicting_unit():
-    """Stale entries sharing the (application, relation) prefix but a
-    different fingerprint/conf must be dropped on insert — otherwise a
-    long-lived session pins dead localCheckpoint blocks forever."""
-    from tf_idf_mapreduce_spark.operators.caches import insert_evicting
-
-    c = {}
-    insert_evicting(c, ("app", "tag", "dir", "fp1", "32"), "a", prefix=3)
-    insert_evicting(c, ("app", "tag", "dir", "fp2", "16"), "b", prefix=3)
-    assert c == {("app", "tag", "dir", "fp2", "16"): "b"}
-    insert_evicting(c, ("app", "other", "dir", "fp1", "32"), "c", prefix=3)
-    assert len(c) == 2
-    # re-insert of the SAME key is a plain overwrite
-    insert_evicting(c, ("app", "other", "dir", "fp1", "32"), "d", prefix=3)
-    assert c[("app", "other", "dir", "fp1", "32")] == "d"

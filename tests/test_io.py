@@ -274,12 +274,12 @@ def test_plan_memo_keys_out_a_rewritten_fixture(spark, tmp_path):
     assert sorted((r.word, r.doc, r["count"]) for r in first.collect()) == [
         ("alpha", "1", 1), ("beta", "1", 1), ("beta", "2", 1)
     ]
-    [old_key] = [k for k in io._RELATION_CACHE if k[1:3] == (d, "tfidf_core")]
+    [old_key] = [k for k in io._MEMO_CACHE if k[1:3] == ("tfidf_core", d)]
 
     _write_documents(spark, d, [(1, "gamma gamma")])
     again = corpus_core(spark, d).word_count
     assert [(r.word, r.doc, r["count"]) for r in again.collect()] == [("gamma", "1", 2)]
-    [new_key] = [k for k in io._RELATION_CACHE if k[1:3] == (d, "tfidf_core")]
+    [new_key] = [k for k in io._MEMO_CACHE if k[1:3] == ("tfidf_core", d)]
     assert new_key != old_key
 
 
@@ -299,14 +299,20 @@ def test_corpus_core_returns_fresh_dataframes(spark, tmp_path):
     )
 
 
-def test_plan_memo_sweeps_other_applications(spark, tmp_path):
+def test_plan_memo_sweeps_other_applications(spark, tmp_path, monkeypatch):
     """An insert drops every entry of another application id, so a
     stopped context's plans are never pinned."""
+    from types import SimpleNamespace
+
     from tf_idf_mapreduce_spark.sources import io
 
-    io._RELATION_CACHE[("app-stopped", "/gone", "documents", ())] = object()
+    # a private copy: the fake application's insert sweeps the session's
+    # own entries, which later tests reuse
+    monkeypatch.setattr(io, "_MEMO_CACHE", dict(io._MEMO_CACHE))
+    stopped = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-stopped"))
+    io.memo(stopped, "/gone", "documents", (), object)
     d = str(tmp_path)
     _write_documents(spark, d, [(1, "alpha")])
     io.load_table(spark, d, "documents")
     app = spark.sparkContext.applicationId
-    assert all(k[0] == app for k in io._RELATION_CACHE)
+    assert all(k[0] == app for k in io._MEMO_CACHE)

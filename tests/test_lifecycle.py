@@ -86,6 +86,7 @@ def test_lifecycle_soak_promote_refit_compact(
         promoted_index,
         score_index,
     )
+    from tf_idf_mapreduce_spark.sources.io import table_fingerprint
     from tf_idf_mapreduce_spark.sources.model_store import (
         live_table_dir,
         model_dir,
@@ -114,7 +115,7 @@ def test_lifecycle_soak_promote_refit_compact(
     def cent_key(gen: int) -> tuple:
         return (
             drift_dir,
-            s._embeddings_fingerprint(drift_dir),
+            table_fingerprint(drift_dir, "embeddings"),
             s.IVF_K,
             s.IVF_ITERS,
             spark.conf.get("spark.sql.shuffle.partitions"),

@@ -4,7 +4,7 @@ and the SemDeDup disposition table.
 
 The contract under test is the round-7 verdict's top item: a model is
 FIT once, WRITTEN once as a fingerprint-keyed parquet artifact, and a
-FRESH PROCESS (simulated here by clearing the L1 dict caches) LOADS the
+FRESH PROCESS (simulated here by forgetting the L1 memo entries) LOADS the
 artifact instead of re-running the distributed fit. "Loads, not refits"
 is proved by monkeypatching the fit entrypoint to raise — any refit
 fails the test loudly."""
@@ -15,6 +15,8 @@ import os
 import time
 
 import pytest
+
+from tf_idf_mapreduce_spark.sources.io import forget
 
 
 @pytest.fixture()
@@ -30,7 +32,7 @@ def test_ivf_centroids_load_not_refit(spark, sf_dir, model_dir_env):
     from tf_idf_mapreduce_spark.sources.io import load_table
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    similarity._IVF_CENT_CACHE.clear()
+    forget("ivf_centroids")
     t0 = time.time()
     fitted = similarity.ivf_centroids(e, cache_key=sf_dir)
     fit_sec = time.time() - t0
@@ -38,7 +40,7 @@ def test_ivf_centroids_load_not_refit(spark, sf_dir, model_dir_env):
     assert len(stored) == 1
 
     # fresh process: L1 gone, store present — the fit must NOT run
-    similarity._IVF_CENT_CACHE.clear()
+    forget("ivf_centroids")
 
     def boom(*a, **k):
         raise AssertionError("kmeans_fit ran despite a stored artifact")
@@ -63,9 +65,9 @@ def test_pq_codebooks_load_not_refit(spark, sf_dir, model_dir_env):
     from tf_idf_mapreduce_spark.sources.io import load_table
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    similarity._PQ_BOOK_CACHE.clear()
+    forget("pq_codebooks")
     fitted = similarity._pq_codebooks(e, cache_key=sf_dir)
-    similarity._PQ_BOOK_CACHE.clear()
+    forget("pq_codebooks")
 
     def boom(*a, **k):
         raise AssertionError("kmeans_fit ran despite a stored artifact")
@@ -82,11 +84,11 @@ def test_pq_codebooks_load_not_refit(spark, sf_dir, model_dir_env):
 def test_pca_components_load_not_refit(spark, sf_dir, model_dir_env):
     from tf_idf_mapreduce_spark.operators import similarity
 
-    similarity._PCA_CACHE.clear()
+    forget("pca_components")
     fitted = similarity._pca_components(
         spark, sf_dir, similarity.PCA_POWER_ITERS, second=True
     )
-    similarity._PCA_CACHE.clear()
+    forget("pca_components")
 
     def boom(*a, **k):
         raise AssertionError("power iteration ran despite a stored artifact")
@@ -105,11 +107,11 @@ def test_pca_components_load_not_refit(spark, sf_dir, model_dir_env):
 def test_bpe_merges_load_not_refit(spark, sf_dir, model_dir_env):
     from tf_idf_mapreduce_spark.operators import textstats
 
-    textstats._BPE_MERGE_CACHE.clear()
+    forget("bpe_merges")
     fitted = textstats._bpe_learn_merges(
         spark, sf_dir, textstats.BPE_TRAIN_MERGES
     )
-    textstats._BPE_MERGE_CACHE.clear()
+    forget("bpe_merges")
 
     def boom(*a, **k):
         raise AssertionError("BPE learner ran despite a stored artifact")
@@ -128,9 +130,9 @@ def test_bpe_merges_load_not_refit(spark, sf_dir, model_dir_env):
 def test_qc_weights_load_not_refit(spark, sf_dir, model_dir_env):
     from tf_idf_mapreduce_spark.operators import curation
 
-    curation._QC_WEIGHTS_CACHE.clear()
+    forget("qc_weights")
     fitted = curation._qc_fit(spark, sf_dir)
-    curation._QC_WEIGHTS_CACHE.clear()
+    forget("qc_weights")
 
     def boom(*a, **k):
         raise AssertionError("GD loop ran despite a stored artifact")
@@ -147,12 +149,12 @@ def test_qc_weights_load_not_refit(spark, sf_dir, model_dir_env):
 def test_semantic_keep_table_load_not_recompute(spark, sf_dir, model_dir_env):
     from tf_idf_mapreduce_spark.operators import dedup
 
-    dedup._SEMKEEP_RESULT_CACHE.clear()
+    forget("semantic_keep")
     fitted = sorted(
         map(tuple, dedup.semantic_keep(spark, sf_dir).collect())
     )
     assert os.path.isdir(os.path.join(model_dir_env, "semantic_keep"))
-    dedup._SEMKEEP_RESULT_CACHE.clear()
+    forget("semantic_keep")
 
     def boom(*a, **k):
         raise AssertionError("CC ran despite a stored disposition table")
@@ -176,7 +178,7 @@ def test_store_disabled_by_conf(spark, sf_dir, model_dir_env):
 
     spark.conf.set(MODEL_STORE_CONF, "")
     try:
-        curation._QC_WEIGHTS_CACHE.clear()
+        forget("qc_weights")
         w = curation._qc_fit(spark, sf_dir)
         assert len(w) == 4
         assert not os.path.exists(os.path.join(model_dir_env, "qc_weights"))
@@ -197,7 +199,7 @@ def test_fingerprint_change_refits(spark, tmp_path, model_dir_env):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    curation._QC_WEIGHTS_CACHE.clear()
+    forget("qc_weights")
     curation._qc_fit(spark, d)
     n1 = len(os.listdir(os.path.join(model_dir_env, "qc_weights")))
 
@@ -206,7 +208,7 @@ def test_fingerprint_change_refits(spark, tmp_path, model_dir_env):
         rows + [(99, "gamma delta 42", "en", "s", 14)],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    curation._QC_WEIGHTS_CACHE.clear()
+    forget("qc_weights")
     curation._qc_fit(spark, d)
     n2 = len(os.listdir(os.path.join(model_dir_env, "qc_weights")))
     assert n2 == n1 + 1
@@ -216,7 +218,7 @@ def test_drop_models_clears_family(spark, sf_dir, model_dir_env):
     from tf_idf_mapreduce_spark.operators import curation
     from tf_idf_mapreduce_spark.sources.model_store import drop_models
 
-    curation._QC_WEIGHTS_CACHE.clear()
+    forget("qc_weights")
     curation._qc_fit(spark, sf_dir)
     assert os.path.isdir(os.path.join(model_dir_env, "qc_weights"))
     drop_models("qc_weights")
@@ -230,7 +232,7 @@ def test_prune_models_reaps_only_stale_artifacts(spark, sf_dir, model_dir_env):
     from tf_idf_mapreduce_spark.operators import curation
     from tf_idf_mapreduce_spark.sources.model_store import prune_models
 
-    curation._QC_WEIGHTS_CACHE.clear()
+    forget("qc_weights")
     fresh = curation._qc_fit(spark, sf_dir)
     fam = os.path.join(model_dir_env, "qc_weights")
     (h,) = os.listdir(fam)
@@ -246,7 +248,7 @@ def test_prune_models_reaps_only_stale_artifacts(spark, sf_dir, model_dir_env):
     assert removed == 1
     assert sorted(os.listdir(fam)) == [h]
     # the surviving artifact still loads
-    curation._QC_WEIGHTS_CACHE.clear()
+    forget("qc_weights")
 
     def boom(*a, **k):
         raise AssertionError("refit after prune of a FRESH artifact")
@@ -267,7 +269,7 @@ def test_unwritable_store_degrades_to_compute(spark, sf_dir, monkeypatch):
 
     # a path under a FILE can never be created -> makedirs raises
     monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", "/dev/null/no_store")
-    dedup._INCREMENTAL_SCREEN_CACHE.clear()
+    forget("incremental_dedup")
     rows = dedup.incremental_dedup(spark, sf_dir).collect()
     assert rows and all(r.status in ("keep", "drop") for r in rows)
 
@@ -562,12 +564,12 @@ def test_hyperparam_change_mints_new_screen_key(spark, sf_dir, model_dir_env, mo
     refits, never silently serving the stale verdict table."""
     from tf_idf_mapreduce_spark.operators import dedup
 
-    dedup._INCREMENTAL_SCREEN_CACHE.clear()
+    forget("incremental_dedup")
     dedup.incremental_dedup(spark, sf_dir).collect()
     fam = os.path.join(model_dir_env, "incremental_dedup")
     n1 = len(os.listdir(fam))
 
-    dedup._INCREMENTAL_SCREEN_CACHE.clear()
+    forget("incremental_dedup")
     monkeypatch.setattr(dedup, "INCREMENTAL_EST_JACCARD", 0.9)
     dedup.incremental_dedup(spark, sf_dir).collect()
     assert len(os.listdir(fam)) == n1 + 1

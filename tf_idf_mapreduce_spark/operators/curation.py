@@ -1232,29 +1232,15 @@ def _qc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Trained-weights cache — same contract as the IVF centroid / PQ
-#: codebook caches: keyed by (sf_dir, documents fingerprint, partition
-#: conf) so a regenerated fixture or invariance config refits while one
-#: session's train/eval/sweep queries fit ONCE.
-_QC_WEIGHTS_CACHE: dict[tuple, list] = {}
-
-
 def _qc_fit(spark: SparkSession, sf_dir: str) -> list:
     """The ``QC_ITERS``-step grid GD described in ``quality_classifier``,
-    behind the two-level model cache (process dict L1, durable parquet
-    model store L2). Returns the 4-double weight vector (the only state
-    that ever reaches the driver)."""
-    from ..sources.io import table_fingerprint
-
-    key = (
-        sf_dir,
-        table_fingerprint(sf_dir, "documents"),
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.adaptive.enabled"),
-    )
-    cached = _QC_WEIGHTS_CACHE.get(key)
-    if cached is not None:
-        return cached
+    behind the two-level model cache (process memo L1, durable parquet
+    model store L2): a regenerated fixture or invariance config refits
+    while one session's train/eval/sweep queries fit ONCE. Returns the
+    4-double weight vector (the only state that ever reaches the
+    driver)."""
+    from ..sources.io import plan_confs, table_fingerprint
+    from ..sources.model_store import memo_fit
 
     def _fit_pdf():
         import pandas as pd
@@ -1266,12 +1252,14 @@ def _qc_fit(spark: SparkSession, sf_dir: str) -> list:
 
     # durable L2 (model_store): 4 @6dp doubles — a fresh process loads
     # the weight table instead of re-running QC_ITERS gradient passes
-    from ..sources.model_store import load_or_fit_pdf
-
-    pdf, _ = load_or_fit_pdf("qc_weights", key, _fit_pdf, spark)
-    w = [float(x) for x in pdf.sort_values("j")["w"]]
-    _QC_WEIGHTS_CACHE[key] = w
-    return w
+    return memo_fit(
+        spark,
+        sf_dir,
+        "qc_weights",
+        (table_fingerprint(sf_dir, "documents"), *plan_confs(spark)),
+        _fit_pdf,
+        lambda pdf: [float(x) for x in pdf.sort_values("j")["w"]],
+    )
 
 
 def _qc_fit_gd(spark: SparkSession, sf_dir: str) -> list:
@@ -1624,7 +1612,7 @@ def _screen_table(
     would silently serve a STALE table after an algorithm change. Every
     call site passes the constants its screen SQL actually reads, so a
     threshold edit mints a new hash and refits."""
-    from ..sources.io import table_fingerprint
+    from ..sources.io import plan_confs, table_fingerprint
     from ..sources.model_store import load_or_compute_table
 
     key = (
@@ -1633,8 +1621,7 @@ def _screen_table(
         sf_dir,
         table_fingerprint(sf_dir, "documents"),
         table_fingerprint(sf_dir, "embeddings"),
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.adaptive.enabled"),
+        *plan_confs(spark),
         params,
     )
     out, origin = load_or_compute_table(

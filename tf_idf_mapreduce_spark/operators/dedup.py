@@ -31,7 +31,6 @@ from ..functions.hashing import (
     word_hash32,
 )
 from ..sources.io import load_table
-from .caches import insert_evicting
 from .guard import EXACT_QUADRATIC_MAX_ROWS, guard_exact_quadratic
 from .similarity import NEARDUP_MIN_COSINE, lsh_bucket_pairs
 
@@ -260,35 +259,30 @@ def _docs_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _docs(spark, sf_dir).select("doc_id", "source")
 
 
-#: Session cache for the checkpointed candidate-overlap relation — the
-#: semantic_keep accounting: the first registry consumer in declaration
-#: order (``dedup_jaccard_pairs``) is pinned WITH the shingle + minhash
-#: + band-join + intersection materialization; the other ten consumers
-#: (containment, leakage, clusters, keeper, precision, agreement,
-#: graph stats, threshold sweep, split leakage, cross-media agreement,
-#: cluster sizes) ride the checkpoint. applicationId keys entries to
-#: the live SparkContext.
-_CANDIDATE_OVERLAP_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _candidate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, n_common, sz_a, sz_b) for every LSH candidate pair —
     the shared verify-stage base of jaccard and containment, checkpointed
-    once per session (candidate-sized by LSH construction). At 100 TB
-    the same reuse is an explicit pair-table write shared by the dedup
-    DAG's branches."""
-    from ..sources.io import table_fingerprint
+    once per session (candidate-sized by LSH construction) in the
+    package memo. The semantic_keep accounting: the first registry
+    consumer in declaration order (``dedup_jaccard_pairs``) is pinned
+    WITH the shingle + minhash + band-join + intersection
+    materialization; the other ten consumers (containment, leakage,
+    clusters, keeper, precision, agreement, graph stats, threshold
+    sweep, split leakage, cross-media agreement, cluster sizes) ride the
+    checkpoint. At 100 TB the same reuse is an explicit pair-table write
+    shared by the dedup DAG's branches."""
+    from ..sources.io import memo, plan_confs, table_fingerprint
 
-    cache_key = (
-        spark.sparkContext.applicationId,
+    return memo(
+        spark,
         sf_dir,
-        table_fingerprint(sf_dir, "documents"),
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.adaptive.enabled"),
+        "candidate_overlap",
+        (table_fingerprint(sf_dir, "documents"), *plan_confs(spark)),
+        lambda: _candidate_overlap_compute(spark, sf_dir),
     )
-    cached = _CANDIDATE_OVERLAP_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
+
+
+def _candidate_overlap_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = doc_shingles(spark, sf_dir).localCheckpoint()
 
     hashed = sh.select("doc_id", word_hash32(F.col("shingle")).alias("h"))
@@ -332,11 +326,7 @@ def _candidate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sz_b = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
     # sizes is corpus-sized (one row per doc): never force-broadcast it.
     # AQE broadcasts whichever side is actually small at runtime.
-    result = (
-        inter.join(sz_a, "doc_a").join(sz_b, "doc_b").localCheckpoint()
-    )
-    insert_evicting(_CANDIDATE_OVERLAP_CACHE, cache_key, result, prefix=2)
-    return result
+    return inter.join(sz_a, "doc_a").join(sz_b, "doc_b").localCheckpoint()
 
 
 def simhash_values(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -982,12 +972,6 @@ def threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMDEDUP_COSINE = NEARDUP_MIN_COSINE
 
 
-#: Session-lifetime cache of the composed SemDeDup disposition — a
-#: checkpointed DataFrame (executor-side blocks, never driver rows),
-#: keyed by data fingerprints + partition conf like the model caches.
-_SEMKEEP_RESULT_CACHE: dict[tuple, DataFrame] = {}
-
-
 def semantic_keep(spark: SparkSession, sf_dir: str, max_iter: int = 20) -> DataFrame:
     """SemDeDup-style semantic prune, end to end: IVF-cell candidate
     blocking → within-cell cosine edges → connected components → one
@@ -1015,22 +999,14 @@ def semantic_keep(spark: SparkSession, sf_dir: str, max_iter: int = 20) -> DataF
     same reason. The cache holds a checkpointed DataFrame (executor-side
     blocks), NOT driver-collected rows — corpus-sized data never moves.
     """
-    from ..sources.io import table_fingerprint
-
-    # applicationId in the key: unlike the plain-list model caches, this
-    # cache holds a checkpointed DataFrame whose blocks die with the
-    # SparkContext — a hit from a previous (stopped) session would hand
-    # every consumer a DataFrame bound to dead executors.
+    from ..sources.io import memo, plan_confs, table_fingerprint
     from .similarity import IVF_ITERS, IVF_K
     from .similarity import quantizer_generation as _quantizer_generation
 
-    cache_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
+    version = (
         table_fingerprint(sf_dir, "documents"),
         table_fingerprint(sf_dir, "embeddings"),
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.adaptive.enabled"),
+        *plan_confs(spark),
         max_iter,
         # governing hyperparameters (round-8 ADVICE): the durable table
         # must refit, not silently reload, when the algorithm changes
@@ -1041,17 +1017,17 @@ def semantic_keep(spark: SparkSession, sf_dir: str, max_iter: int = 20) -> DataF
         # DEPENDENT: a refit-decision generation bump re-keys it too
         _quantizer_generation(spark, sf_dir),
     )
-    cached = _SEMKEEP_RESULT_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-
-    result = _semantic_keep_table(spark, sf_dir, cache_key, max_iter)
-    _SEMKEEP_RESULT_CACHE[cache_key] = result
-    return result
+    return memo(
+        spark,
+        sf_dir,
+        "semantic_keep",
+        version,
+        lambda: _semantic_keep_table(spark, sf_dir, version, max_iter),
+    )
 
 
 def _semantic_keep_table(
-    spark: SparkSession, sf_dir: str, cache_key: tuple, max_iter: int
+    spark: SparkSession, sf_dir: str, version: tuple, max_iter: int
 ) -> DataFrame:
     """The SemDeDup disposition behind the durable model store: computed
     once, WRITTEN once as a parquet table under the store, and read back
@@ -1064,7 +1040,7 @@ def _semantic_keep_table(
 
     result, origin = load_or_compute_table(
         "semantic_keep",
-        ("semantic_keep",) + cache_key[1:],
+        ("semantic_keep", sf_dir) + version,
         spark,
         lambda: _semantic_keep_compute(spark, sf_dir, max_iter),
     )
@@ -1171,15 +1147,6 @@ def _semantic_keep_compute(
 INCREMENTAL_EST_JACCARD = MINHASH_PRECISION_THRESHOLD
 
 
-#: Session cache for the two incremental arrival screens — batch-sized
-#: relations consumed by dedup_incremental (OWNER, first in registry
-#: order), the semantic twin's consumers, the admission manifest, and
-#: the composed index update. Durable parquet under the model store
-#: (load-or-compute), L1-keyed by applicationId like the other
-#: DataFrame caches.
-_INCREMENTAL_SCREEN_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _incremental_screen_table(
     spark: SparkSession, sf_dir: str, name: str, compute,
     params: tuple = (),
@@ -1188,36 +1155,33 @@ def _incremental_screen_table(
     written once under the model store, read by every consumer in every
     session (the production pipeline persists the day's screen verdicts
     for exactly this reason); ``localCheckpoint`` fallback when the
-    store is disabled.
+    store is disabled. The two arrival screens are batch-sized relations
+    consumed by dedup_incremental (OWNER, first in registry order), the
+    semantic twin's consumers, the admission manifest and the composed
+    index update; the memo entry is named after the screen's family.
 
     ``params`` folds the screen's governing hyperparameters (MinHash
     shape, thresholds, LSH geometry, batch-slice rule) into the durable
     key so an algorithm change mints a NEW hash instead of silently
     serving a stale verdict table (round-8 ADVICE)."""
-    from ..sources.io import table_fingerprint
-    from ..sources.model_store import load_or_compute_table
-    from .caches import insert_evicting
+    from ..sources.io import memo, plan_confs, table_fingerprint
 
-    key = (
-        spark.sparkContext.applicationId,
-        name,
-        sf_dir,
+    version = (
         table_fingerprint(sf_dir, "documents"),
         table_fingerprint(sf_dir, "embeddings"),
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.adaptive.enabled"),
+        *plan_confs(spark),
         params,
     )
-    hit = _INCREMENTAL_SCREEN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    result, origin = load_or_compute_table(
-        name, ("incremental",) + key[1:], spark, compute
-    )
-    if origin == "fit":
-        result = result.localCheckpoint()
-    insert_evicting(_INCREMENTAL_SCREEN_CACHE, key, result, prefix=3)
-    return result
+
+    def build() -> DataFrame:
+        from ..sources.model_store import load_or_compute_table
+
+        result, origin = load_or_compute_table(
+            name, ("incremental", name, sf_dir) + version, spark, compute
+        )
+        return result.localCheckpoint() if origin == "fit" else result
+
+    return memo(spark, sf_dir, name, version, build)
 
 
 def corpus_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1232,7 +1196,7 @@ def corpus_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice's signatures only. Keyed on the MinHash shape + batch-slice
     rule like every durable screen (a hyperparameter edit refits)."""
     from ..functions.hashing import MINHASH_B, MINHASH_R
-    from ..sources.io import table_fingerprint
+    from ..sources.io import plan_confs, table_fingerprint
     from ..sources.model_store import load_or_compute_table
     from .curation import SAMPLE_BUCKET_MAX, _sample_bucket
 
@@ -1244,11 +1208,10 @@ def corpus_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         MINHASH_R,
         MINHASH_B,
         SAMPLE_BUCKET_MAX,
-        spark.conf.get("spark.sql.shuffle.partitions"),
         # content is AQE-invariant, but every sibling durable key carries
         # this conf — uniform key discipline beats a per-key exception
         # (round-9 ADVICE)
-        spark.conf.get("spark.sql.adaptive.enabled"),
+        *plan_confs(spark),
     )
 
     def compute() -> DataFrame:

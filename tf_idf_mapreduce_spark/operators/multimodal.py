@@ -32,7 +32,6 @@ from pyspark.sql.types import (
 )
 
 from ..sources.io import load_table
-from .caches import insert_evicting
 
 #: Output contract of the feature extractor.
 MEDIA_FEATURES_SCHEMA = StructType(
@@ -979,16 +978,6 @@ PHASH_BANDS = 9  # 9 bands x 7 bits: hamming <= 8 pigeonholes into >= 1 clean ba
 PHASH_NEAR_MAX_HAMMING = 8
 
 
-#: Session cache for the checkpointed pHash pair relation — the
-#: SemDeDup accounting (dedup._SEMKEEP_RESULT_CACHE): the OWNER query
-#: ``mm_phash_pairs`` is pinned WITH the decode + band-join
-#: materialization; its consumers (``mm_phash_clusters``,
-#: ``mm_text_agreement``) ride the checkpoint instead of re-decoding
-#: every image per query. applicationId keys the entry to the live
-#: SparkContext (checkpoint blocks die with it).
-_PHASH_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequency-domain image near-dup candidates: banded Hamming LSH over
     the 63-bit pHash — ``media_ahash_pairs``' structure (agree on >= 1 of
@@ -998,23 +987,26 @@ def media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     DCT hash, which keys on low-frequency structure rather than
     brightness layout, so the two candidate sets catch different edits.
 
-    The result (candidate-sized) is checkpointed once per session and
-    reused by the cluster and cross-media consumers — the decode + DCT
-    pass over every image is the dominant cost and identical in all
-    three queries. At 100 TB the same reuse is an explicit pair-table
-    write shared by the dedup DAG's branches."""
-    from ..sources.io import table_fingerprint
+    The result (candidate-sized) is checkpointed once per session in the
+    package memo and reused by the cluster and cross-media consumers —
+    the decode + DCT pass over every image is the dominant cost and
+    identical in all three queries. The SemDeDup accounting: the OWNER
+    query ``mm_phash_pairs`` is pinned WITH the decode + band-join
+    materialization; ``mm_phash_clusters`` and ``mm_text_agreement``
+    ride the checkpoint. At 100 TB the same reuse is an explicit
+    pair-table write shared by the dedup DAG's branches."""
+    from ..sources.io import memo, plan_confs, table_fingerprint
 
-    cache_key = (
-        spark.sparkContext.applicationId,
+    return memo(
+        spark,
         sf_dir,
-        table_fingerprint(sf_dir, "documents"),
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.adaptive.enabled"),
+        "phash_pairs",
+        (table_fingerprint(sf_dir, "documents"), *plan_confs(spark)),
+        lambda: _phash_pairs_compute(spark, sf_dir),
     )
-    cached = _PHASH_PAIRS_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
+
+
+def _phash_pairs_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pack the 63-bit '0'/'1' hash into ONE long before the self-join:
     # the candidate shuffle then carries 8-byte keys instead of two
     # 63-char strings per pair (guide §2.3 — narrower types through the
@@ -1070,15 +1062,13 @@ def media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("n_bands_shared"))
     )
     ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    result = cand.select(
+    return cand.select(
         "doc_a",
         "doc_b",
         "n_bands_shared",
         ham.cast("long").alias("hamming"),
         (ham <= F.lit(PHASH_NEAR_MAX_HAMMING)).alias("is_near"),
     ).localCheckpoint()
-    insert_evicting(_PHASH_PAIRS_CACHE, cache_key, result, prefix=2)
-    return result
 
 
 def media_phash_clusters(

@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.io import documents_as_corpus, load_table
-from .caches import insert_evicting
 from .guard import EXACT_QUADRATIC_MAX_ROWS, guard_exact_quadratic
 from .tfidf import corpus_core, query_terms
 
@@ -138,38 +137,29 @@ def bm25_search_promoted(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOCSIM_N_BLOCKS = 16
 
 
-#: Session cache for the docsim family — the semantic_keep accounting:
-#: ``tfidf_docsim`` (first in declaration order) owns the pruned-vector
-#: materialization + exact tile pass; ``tfidf_docsim_lsh`` rides the
-#: vectors; ``tfidf_docsim_lsh_overlap`` rides BOTH finished top-k
-#: relations (it is exactly their semi-join). applicationId keys
-#: entries to the live SparkContext.
-_RETRIEVAL_CACHE: dict[tuple, DataFrame] = {}
+def _retrieval_memo(spark: SparkSession, sf_dir: str, tag: str, build):
+    """The docsim family's session relations in the package memo — the
+    semantic_keep accounting: ``tfidf_docsim`` (first in declaration
+    order) owns the pruned-vector materialization + exact tile pass;
+    ``tfidf_docsim_lsh`` rides the vectors; ``tfidf_docsim_lsh_overlap``
+    rides BOTH finished top-k relations (it is exactly their
+    semi-join)."""
+    from ..sources.io import memo, plan_confs, table_fingerprint
 
-
-def _retrieval_key(spark: SparkSession, sf_dir: str, tag: str) -> tuple:
-    from ..sources.io import table_fingerprint
-
-    return (
-        spark.sparkContext.applicationId,
-        tag,
-        sf_dir,
-        table_fingerprint(sf_dir, "documents"),
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.adaptive.enabled"),
-    )
+    version = (table_fingerprint(sf_dir, "documents"), *plan_confs(spark))
+    return memo(spark, sf_dir, tag, version, build)
 
 
 def _pruned_vectors_ck(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The checkpointed pruned-vector relation, built once per session —
     the tokenize→tf-idf chain is the most expensive stage of every
     docsim variant."""
-    key = _retrieval_key(spark, sf_dir, "pruned_vec")
-    hit = _RETRIEVAL_CACHE.get(key)
-    if hit is None:
-        hit = _pruned_vectors(spark, sf_dir).localCheckpoint()
-        insert_evicting(_RETRIEVAL_CACHE, key, hit, prefix=3)
-    return hit
+    return _retrieval_memo(
+        spark,
+        sf_dir,
+        "pruned_vec",
+        lambda: _pruned_vectors(spark, sf_dir).localCheckpoint(),
+    )
 
 
 def doc_similarity(
@@ -214,11 +204,6 @@ def doc_similarity(
     the odds are ~V²/2⁶⁵ — ~5e-4 even at V=10⁸ — and the exact oracle
     diff would surface one at test scale.
     """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     # quadratic in DOCUMENT count — guard on the relation that actually
     # squares. With no explicit vec, that's the corpus (a parquet
     # count-star, metadata-only), and the check runs BEFORE the
@@ -227,27 +212,39 @@ def doc_similarity(
     # supplied vec, guard its distinct doc count instead — a small
     # pre-pruned vec over a large sf_dir is legitimate and must not be
     # spuriously refused.
-    cache_key = None
-    if vec is None:
-        if max_rows == EXACT_QUADRATIC_MAX_ROWS:
-            cache_key = _retrieval_key(spark, sf_dir, "docsim_exact")
-            hit = _RETRIEVAL_CACHE.get(cache_key)
-            if hit is not None:
-                return hit
+    def guard(rel: DataFrame) -> None:
         guard_exact_quadratic(
-            load_table(spark, sf_dir, "documents"),
+            rel,
             what="retrieval.doc_similarity",
             twin="retrieval.doc_similarity_lsh",
             max_rows=max_rows,
         )
-        vec = _pruned_vectors_ck(spark, sf_dir)
-    else:
-        guard_exact_quadratic(
-            vec.select("doc").distinct(),
-            what="retrieval.doc_similarity",
-            twin="retrieval.doc_similarity_lsh",
-            max_rows=max_rows,
-        )
+
+    if vec is not None:
+        guard(vec.select("doc").distinct())
+        return _docsim_tiles(vec)
+
+    def build() -> DataFrame:
+        guard(load_table(spark, sf_dir, "documents"))
+        return _docsim_tiles(_pruned_vectors_ck(spark, sf_dir))
+
+    if max_rows != EXACT_QUADRATIC_MAX_ROWS:
+        return build()
+    return _retrieval_memo(
+        spark,
+        sf_dir,
+        "docsim_exact",
+        lambda: build().localCheckpoint(eager=False),
+    )
+
+
+def _docsim_tiles(vec: DataFrame) -> DataFrame:
+    """``doc_similarity``'s tiled SpGEMM over a (doc, word, wt) relation."""
+    from collections.abc import Iterator
+
+    import numpy as np
+    import pandas as pd
+
     vecid = vec.withColumn("wid", F.xxhash64("word"))
     norms = vecid.groupBy("doc").agg(
         F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nrm")
@@ -347,15 +344,11 @@ def doc_similarity(
                     {"doc_a": lo[order], "doc_b": hi[order], "cosine": cs[order]}
                 )
 
-    result = (
+    return (
         tiles.mapInPandas(tile_top_pairs, out_schema)
         .orderBy(F.desc("cosine"), F.asc("doc_a"), F.asc("doc_b"))
         .limit(DOCSIM_TOP_PAIRS)
     )
-    if cache_key is not None:
-        result = result.localCheckpoint(eager=False)
-        insert_evicting(_RETRIEVAL_CACHE, cache_key, result, prefix=3)
-    return result
 
 
 def _pruned_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -393,13 +386,15 @@ def doc_similarity_lsh(
     """
     from .dedup import minhash_candidate_pairs
 
-    cache_key = None
     if vec is None:
-        cache_key = _retrieval_key(spark, sf_dir, "docsim_lsh")
-        hit = _RETRIEVAL_CACHE.get(cache_key)
-        if hit is not None:
-            return hit
-        vec = _pruned_vectors_ck(spark, sf_dir)
+        return _retrieval_memo(
+            spark,
+            sf_dir,
+            "docsim_lsh",
+            lambda: doc_similarity_lsh(
+                spark, sf_dir, _pruned_vectors_ck(spark, sf_dir)
+            ).localCheckpoint(eager=False),
+        )
     packed = vec.groupBy("doc").agg(
         F.map_from_entries(
             F.array_sort(F.collect_list(F.struct("word", "wt")))
@@ -429,7 +424,7 @@ def doc_similarity_lsh(
         F.floor(dot / (F.col("nrm_a") * F.col("nrm_b")) * 1_000_000 + F.lit(0.5))
         / 1_000_000
     )
-    result = (
+    return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
         .where(F.size(shared) > 0)
@@ -437,10 +432,6 @@ def doc_similarity_lsh(
         .orderBy(F.desc("cosine"), F.asc("doc_a"), F.asc("doc_b"))
         .limit(DOCSIM_TOP_PAIRS)
     )
-    if cache_key is not None:
-        result = result.localCheckpoint(eager=False)
-        insert_evicting(_RETRIEVAL_CACHE, cache_key, result, prefix=3)
-    return result
 
 
 def doc_similarity_lsh_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:

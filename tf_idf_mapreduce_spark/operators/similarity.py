@@ -539,42 +539,22 @@ def kmeans_fit_fused(
     return [c.tolist() for c in cents]
 
 
-#: IVF centroid cache — same contract as ``_PQ_BOOK_CACHE``: the fit is a
-#: deterministic pure function of the embeddings table, keyed by
-#: (sf_dir, data fingerprint, partition conf) so a regenerated fixture or
-#: a partition-invariance config refits while one bench session's many
-#: IVF-family queries (topk, histogram, sweep, recall, IVF+PQ, SemDeDup)
-#: fit ONCE — which is also the production shape: an index is fit once
-#: and reused, not refit per query.
-_IVF_CENT_CACHE: dict[tuple, list] = {}
-
-
 def ivf_centroids(e: DataFrame, cache_key: str | None = None) -> list:
-    """``kmeans_fit`` behind the two-level model cache: the process dict
-    (L1, this session) in front of the durable fingerprint-keyed parquet
-    store (L2, survives the process — a fresh session LOADS the k×d
-    centroid table instead of re-running the distributed fit)."""
+    """``kmeans_fit`` behind the two-level model cache: the process memo
+    (L1, ``sources.io.memo``) in front of the durable fingerprint-keyed
+    parquet store (L2, survives the process — a fresh session LOADS the
+    k×d centroid table instead of re-running the distributed fit).
+    ``cache_key`` is the fixture dir whose embeddings ``e`` reads; the
+    fit is a deterministic function of that table, so one bench
+    session's IVF-family queries (topk, histogram, sweep, recall,
+    IVF+PQ, SemDeDup) fit ONCE — the production shape: an index is fit
+    once and reused. Without it the fit runs uncached."""
     import pandas as pd
 
-    from ..sources.model_store import load_or_fit_pdf
+    from ..sources.io import plan_confs, table_fingerprint
+    from ..sources.model_store import memo_fit
 
     spark = e.sparkSession
-    key = None
-    if cache_key is not None:
-        key = (
-            cache_key,
-            _embeddings_fingerprint(cache_key),
-            IVF_K,
-            IVF_ITERS,
-            spark.conf.get("spark.sql.shuffle.partitions"),
-            spark.conf.get("spark.sql.adaptive.enabled"),
-            # the refit-decision loop versions the quantizer: a bumped
-            # generation re-keys this fit and every dependent artifact
-            quantizer_generation(spark, cache_key),
-        )
-        cached = _IVF_CENT_CACHE.get(key)
-        if cached is not None:
-            return cached
 
     def _fit_pdf():
         cents = kmeans_fit(e)
@@ -587,20 +567,28 @@ def ivf_centroids(e: DataFrame, cache_key: str | None = None) -> list:
             columns=["cid", "dim", "value"],
         )
 
-    if key is None:
-        pdf = _fit_pdf()
-    else:
-        pdf, _ = load_or_fit_pdf("ivf_centroids", key, _fit_pdf, spark)
-    # decode (cid, dim, value) rows -> k lists of d floats; @6dp float64
-    # values round-trip parquet bit-exactly, so load == fit
-    pdf = pdf.sort_values(["cid", "dim"])
-    k = int(pdf["cid"].max()) + 1
-    cents = [
-        [float(v) for v in pdf[pdf["cid"] == c]["value"]] for c in range(k)
-    ]
-    if key is not None:
-        _IVF_CENT_CACHE[key] = cents
-    return cents
+    def _decode(pdf) -> list:
+        # (cid, dim, value) rows -> k lists of d floats; @6dp float64
+        # values round-trip parquet bit-exactly, so load == fit
+        pdf = pdf.sort_values(["cid", "dim"])
+        k = int(pdf["cid"].max()) + 1
+        return [
+            [float(v) for v in pdf[pdf["cid"] == c]["value"]]
+            for c in range(k)
+        ]
+
+    if cache_key is None:
+        return _decode(_fit_pdf())
+    version = (
+        table_fingerprint(cache_key, "embeddings"),
+        IVF_K,
+        IVF_ITERS,
+        *plan_confs(spark),
+        # the refit-decision loop versions the quantizer: a bumped
+        # generation re-keys this fit and every dependent artifact
+        quantizer_generation(spark, cache_key),
+    )
+    return memo_fit(spark, cache_key, "ivf_centroids", version, _fit_pdf, _decode)
 
 
 def _nearest_centroid_udf(cents):
@@ -1535,68 +1523,21 @@ PQ_K = 8
 PQ_ITERS = 3
 
 
-#: Codebook cache: the fit is a deterministic pure function of the
-#: embeddings table, so (sf_dir, shuffle-partitions, AQE) fully keys it —
-#: the conf keys keep the partition-invariance suite honest (each config
-#: refits; only true re-runs share), while a bench session's four PQ
-#: queries fit once instead of four times.
-_PQ_BOOK_CACHE: dict[tuple, list] = {}
-
-
-def _embeddings_fingerprint(sf_dir: str) -> tuple:
-    """Cheap data fingerprint for the PQ cache key: (mtime_ns, size) of
-    every file under the embeddings parquet path. A regenerated fixture
-    at the same path (e.g. an in-process test rebuild) changes the
-    fingerprint and invalidates the cached codebooks instead of silently
-    reusing stale ones. Pure os.stat — no Spark job."""
-    import os
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    stats = []
-    if os.path.isfile(path):
-        st = os.stat(path)
-        stats.append((path, st.st_mtime_ns, st.st_size))
-    elif os.path.isdir(path):
-        # sort _dirs in-place: os.walk yields subdirectories in
-        # filesystem order, so without this the tuple ordering (hence
-        # cache hits) depends on inode layout; sorting stats at the end
-        # makes equal trees fingerprint equal regardless of walk order
-        for root, _dirs, files in os.walk(path):
-            _dirs.sort()
-            for f in sorted(files):
-                p = os.path.join(root, f)
-                st = os.stat(p)
-                stats.append((p, st.st_mtime_ns, st.st_size))
-    return tuple(sorted(stats))
-
-
 def _pq_codebooks(e: DataFrame, cache_key: str | None = None) -> list:
     """Per-subspace codebooks: the SAME deterministic @6dp k-means as IVF
     (``kmeans_fit``), run on each 16-dim slice — so a SQL oracle replays
-    every codebook exactly (unrolled CTEs, one set per subspace)."""
+    every codebook exactly (unrolled CTEs, one set per subspace). Cached
+    like ``ivf_centroids``: the plan confs in the version keep the
+    partition-invariance suite honest (each config refits; only true
+    re-runs share), while a bench session's four PQ queries fit once."""
     import numpy as np
 
     import pandas as pd
 
-    from ..sources.model_store import load_or_fit_pdf
+    from ..sources.io import plan_confs, table_fingerprint
+    from ..sources.model_store import memo_fit
 
     spark = e.sparkSession
-    key = None
-    if cache_key is not None:
-        key = (
-            cache_key,
-            _embeddings_fingerprint(cache_key),
-            PQ_M,
-            PQ_SUBDIM,
-            PQ_K,
-            PQ_ITERS,
-            spark.conf.get("spark.sql.shuffle.partitions"),
-            spark.conf.get("spark.sql.adaptive.enabled"),
-            quantizer_generation(spark, cache_key),
-        )
-        cached = _PQ_BOOK_CACHE.get(key)
-        if cached is not None:
-            return cached
 
     def _fit_pdf():
         # ONE corpus pass per k-means round covers all M subspaces
@@ -1616,22 +1557,29 @@ def _pq_codebooks(e: DataFrame, cache_key: str | None = None) -> list:
             )
         return pd.DataFrame(rows, columns=["m", "code", "dim", "value"])
 
-    if key is None:
-        pdf = _fit_pdf()
-    else:
-        # durable L2: a fresh process loads the M x K x subdim codeword
-        # table (@6dp doubles — parquet round-trip is bit-exact)
-        pdf, _ = load_or_fit_pdf("pq_codebooks", key, _fit_pdf, spark)
-    pdf = pdf.sort_values(["m", "code", "dim"])
-    books = [
-        np.asarray(
-            pdf[pdf["m"] == m]["value"], dtype="float64"
-        ).reshape(PQ_K, PQ_SUBDIM)
-        for m in range(PQ_M)
-    ]
-    if key is not None:
-        _PQ_BOOK_CACHE[key] = books
-    return books
+    def _decode(pdf) -> list:
+        pdf = pdf.sort_values(["m", "code", "dim"])
+        return [
+            np.asarray(
+                pdf[pdf["m"] == m]["value"], dtype="float64"
+            ).reshape(PQ_K, PQ_SUBDIM)
+            for m in range(PQ_M)
+        ]
+
+    if cache_key is None:
+        return _decode(_fit_pdf())
+    version = (
+        table_fingerprint(cache_key, "embeddings"),
+        PQ_M,
+        PQ_SUBDIM,
+        PQ_K,
+        PQ_ITERS,
+        *plan_confs(spark),
+        quantizer_generation(spark, cache_key),
+    )
+    # durable L2: a fresh process loads the M x K x subdim codeword
+    # table (@6dp doubles — parquet round-trip is bit-exact)
+    return memo_fit(spark, cache_key, "pq_codebooks", version, _fit_pdf, _decode)
 
 
 def pq_code_table(
@@ -1651,7 +1599,7 @@ def pq_code_table(
     import numpy as np
     import pandas as pd
 
-    from ..sources.io import table_fingerprint
+    from ..sources.io import plan_confs, table_fingerprint
     from ..sources.model_store import load_or_compute_table
 
     if e is None:
@@ -1677,11 +1625,10 @@ def pq_code_table(
         PQ_SUBDIM,
         PQ_K,
         PQ_ITERS,
-        spark.conf.get("spark.sql.shuffle.partitions"),
         # content is AQE-invariant, but every sibling durable key carries
         # this conf — uniform key discipline beats a per-key exception
         # (round-9 ADVICE)
-        spark.conf.get("spark.sql.adaptive.enabled"),
+        *plan_confs(spark),
         quantizer_generation(spark, sf_dir),
     )
     out_schema = (
@@ -2457,13 +2404,6 @@ def _rayleigh(mat: list, v: list) -> float:
     return _dsum_exact(v[i] * w[i] for i in range(d))
 
 
-#: Component cache, same contract as _PQ_BOOK_CACHE / _BPE_MERGE_CACHE:
-#: keyed by (sf_dir, iters, data fingerprint, partition conf); holds only
-#: model state (two d-vectors + three scalars), so sim_pca_power and
-#: sim_pca_project share ONE distributed fit per process.
-_PCA_CACHE: dict[tuple, tuple] = {}
-
-
 def _pca_full_matrix(spark: SparkSession, sf_dir: str) -> list:
     """The d x d covariance as a dense driver-side matrix: ONE
     distributed pass (``_cov_upper`` — corpus scan + one shuffle),
@@ -2488,24 +2428,25 @@ def _pca_components(
     cached) via Hotelling deflation C2 = C - lam1 v1 v1^T — every C2
     entry an identical double on both engines, so the second chain is
     as bit-exact as the first. The driver sees only this model state.
+
+    The memo entry is a one-slot cell holding the fullest tuple fitted
+    so far, so sim_pca_power and sim_pca_project share ONE distributed
+    fit per process: a ``second`` call upgrades a 3-tuple in place,
+    reusing its first component.
     """
     import pandas as pd
 
+    from ..sources.io import memo, plan_confs, table_fingerprint
     from ..sources.model_store import load_or_fit_pdf
 
     key = (
         sf_dir,
         int(iters),
-        _embeddings_fingerprint(sf_dir),
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.adaptive.enabled"),
+        table_fingerprint(sf_dir, "embeddings"),
+        *plan_confs(spark),
     )
-    hit = _PCA_CACHE.get(key)
-    if hit is not None and (len(hit) == 5 or not second):
-        return hit
 
-    def _fit() -> tuple:
-        prior = hit
+    def _fit(prior) -> tuple:
         full = _pca_full_matrix(spark, sf_dir)
         d = len(full)
         if prior is None:
@@ -2549,12 +2490,21 @@ def _pca_components(
     # durable L2: the artifact is d doubles per component + 3 scalars;
     # the second-component flag keys a separate artifact (raw float64
     # round-trips parquet bit-exactly, so load == fit)
-    pdf, _ = load_or_fit_pdf(
-        "pca_components", key + (bool(second),), lambda: _encode(_fit()), spark
+    def _load_or_fit(prior) -> tuple:
+        pdf, _ = load_or_fit_pdf(
+            "pca_components",
+            key + (bool(second),),
+            lambda: _encode(_fit(prior)),
+            spark,
+        )
+        return _decode(pdf)
+
+    cell = memo(
+        spark, sf_dir, "pca_components", key[1:], lambda: [_load_or_fit(None)]
     )
-    out = _decode(pdf)
-    _PCA_CACHE[key] = out
-    return out
+    if second and len(cell[0]) == 3:
+        cell[0] = _load_or_fit(cell[0])
+    return cell[0]
 
 
 def pca_project(

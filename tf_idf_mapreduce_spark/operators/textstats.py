@@ -781,25 +781,6 @@ def bpe_merge_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: becoming one side of a later pair, e.g. 'p'+'ar' after 'a'+'r').
 BPE_TRAIN_MERGES = 8
 
-#: Learned-merge cache, same contract as ``similarity._PQ_BOOK_CACHE``:
-#: keyed by (sf_dir, n_merges, documents-file fingerprint) so a
-#: regenerated fixture at the same path invalidates instead of silently
-#: reusing stale merges. Holds only the K merge tuples (driver-tiny).
-_BPE_MERGE_CACHE: dict[tuple, list] = {}
-
-
-def _documents_fingerprint(sf_dir: str) -> tuple:
-    """(mtime_ns, size) of the documents parquet — cheap invalidation key."""
-    import os
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(path)
-        return (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (path, 0, 0)
-
-
 def _bpe_apply_merge(syms: Column, left: str, right: str, merged: str) -> Column:
     """Greedy left-to-right non-overlapping application of ONE merge rule
     to a symbol array, as a pure JVM fold (``F.aggregate``): push each
@@ -1037,20 +1018,8 @@ def _bpe_learn_merges(
     At 100 TB the vocab is the distinct-pretoken table (orders of
     magnitude smaller than the corpus and shrinking per round).
     """
-    # conf in the key (the _PQ_BOOK_CACHE rule): the merges are provably
-    # partition-invariant (exact long sums, deterministic argmax), but a
-    # conf change must RECOMPUTE so the invariance suite tests the real
-    # path, not a cache hit
-    key = (
-        sf_dir,
-        int(n_merges),
-        int(batch_m),
-        _documents_fingerprint(sf_dir),
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.adaptive.enabled"),
-    )
-    if key in _BPE_MERGE_CACHE:
-        return _BPE_MERGE_CACHE[key]
+    from ..sources.io import plan_confs, table_fingerprint
+    from ..sources.model_store import memo_fit
 
     def _fit_pdf():
         import pandas as pd
@@ -1097,16 +1066,27 @@ def _bpe_learn_merges(
 
     # durable L2 (model_store): a fresh process LOADS the learned merge
     # table instead of re-running the round loop — ints/strings, so the
-    # parquet round-trip is trivially exact
-    from ..sources.model_store import load_or_fit_pdf
-
-    pdf, _ = load_or_fit_pdf("bpe_merges", key, _fit_pdf, spark)
-    merges = [
-        (int(r.rank), r.tok_left, r.tok_right, r.merged, int(r.n_pair))
-        for r in pdf.itertuples(index=False)
-    ]
-    _BPE_MERGE_CACHE[key] = merges
-    return merges
+    # parquet round-trip is trivially exact. Confs in the version (the
+    # PQ codebook rule): the merges are provably partition-invariant
+    # (exact long sums, deterministic argmax), but a conf change must
+    # RECOMPUTE so the invariance suite tests the real path, not a hit
+    version = (
+        int(n_merges),
+        int(batch_m),
+        table_fingerprint(sf_dir, "documents"),
+        *plan_confs(spark),
+    )
+    return memo_fit(
+        spark,
+        sf_dir,
+        "bpe_merges",
+        version,
+        _fit_pdf,
+        lambda pdf: [
+            (int(r.rank), r.tok_left, r.tok_right, r.merged, int(r.n_pair))
+            for r in pdf.itertuples(index=False)
+        ],
+    )
 
 
 def bpe_train(

@@ -213,19 +213,19 @@ def tfidf_pipeline(
 
 def corpus_core(spark, sf_dir: str) -> TfidfCore:
     """The TF-IDF core of the fixture ``documents`` table, built once per
-    (application, ``sf_dir``, documents fingerprint) in the plan memo
-    (``sources.io.memo_plan``). Every call returns fresh DataFrames over
+    (application, ``sf_dir``, documents fingerprint) in the package memo
+    (``sources.io.memo``). Every call returns fresh DataFrames over
     the memoized plans, so no two callers share a QueryExecution or its
     shuffle files — no rows are kept, each execution reads parquet and
     runs all of its stages."""
     from ..sources.io import (
         documents_as_corpus,
         load_table,
-        memo_plan,
+        memo,
         table_fingerprint,
     )
 
-    core = memo_plan(
+    core = memo(
         spark,
         sf_dir,
         "tfidf_core",
@@ -466,18 +466,19 @@ def _index_store_key(spark, sf_dir: str) -> tuple:
     key once and hands it down — ``streaming.runner`` flips the same
     conf around drains, and a second read could see another value. A
     session at another width keys (and fits) its own index."""
-    from ..sources.io import table_fingerprint
+    from ..sources.io import plan_confs, table_fingerprint
     from .curation import SAMPLE_BUCKET_MAX
 
+    # uniform durable-key discipline (round-9 ADVICE): every store key
+    # carries the AQE conf even where content is AQE-invariant
+    width, aqe = plan_confs(spark)
     return (
         "tfidf_index",
         sf_dir,
         table_fingerprint(sf_dir, "documents"),
         SAMPLE_BUCKET_MAX,  # the batch-slice rule is part of what "old corpus" means
-        int(spark.conf.get("spark.sql.shuffle.partitions")),  # key[4]
-        # uniform durable-key discipline (round-9 ADVICE): every store
-        # key carries the AQE conf even where content is AQE-invariant
-        spark.conf.get("spark.sql.adaptive.enabled"),
+        int(width),  # key[4]
+        aqe,
     )
 
 

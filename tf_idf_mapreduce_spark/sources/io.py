@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import os
 import threading
+from concurrent.futures import Future
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,56 +84,82 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     _PYFILES_SENT.add(app_id)
 
 
-#: Process-lifetime PLAN memo: (applicationId, sf_dir, name, data
-#: fingerprint) -> unexecuted DataFrame(s). Two kinds of entry share it:
+#: The package's one process-lifetime memo: every value a query derives
+#: once and reuses across queries lives here — table relations and the
+#: TF-IDF core (plans, ``load_table`` / ``corpus_core``), fitted models
+#: (IVF centroids, PQ codebooks, PCA components, BPE merges, QC weights)
+#: and checkpointed session relations (SemDeDup disposition, arrival
+#: screens, candidate overlap, pHash pairs, docsim). One rule holds for
+#: every entry:
 #:
-#: - a table's resolved relation (``load_table``): ``spark.read.parquet``
-#:   re-lists the directory and re-reads a footer for the schema on every
-#:   call (~0.1 s of planning per call, measured warm at sf0.1) — x183
-#:   call sites over a 282-query session that cost dominated many sub-2s
-#:   queries' walls. Reusing the DataFrame reuses only the resolved file
-#:   index + schema (the catalog-table shape a real warehouse read gets
-#:   for free); a bare scan holds no exchange, so sharing it is free;
-#: - a DERIVED plan over a table (``tfidf.corpus_core``): the TF-IDF core
-#:   of the documents corpus costs hundreds of py4j calls to build, and
-#:   every TF-IDF head of a session derives from the same one. Its owner
-#:   hands each caller FRESH DataFrames over it (``select("*")``), so no
-#:   two callers share a QueryExecution, hence no AQE stage or shuffle
-#:   file.
-#:
-#: NOTHING row-level is cached — no persist, no checkpoint: an entry is a
-#: logical plan, and every action still computes from the parquet files.
-#: The fingerprint keys out in-place fixture rebuilds; the applicationId
-#: keys entries to the live context, and an insert sweeps entries of any
-#: other application (a stopped context's plans are dead weight).
-#: Guarded by ``_RELATION_LOCK`` (re-entrant: a derived build loads its
-#: tables through the same memo): query builders run from several threads
-#: of the application (concurrent stream drains, the overlapped quantizer
-#: fits), and an unguarded evict-while-insert would race.
-_RELATION_CACHE: dict[tuple, object] = {}
+#: - WHAT: a plan entry is an unexecuted DataFrame, so every action still
+#:   reads parquet (``spark.read.parquet`` re-lists the directory and
+#:   re-reads a footer on every call, ~0.1 s of planning that the table
+#:   entry absorbs); a model entry is driver-tiny state; a session
+#:   relation is ``localCheckpoint``-ed executor blocks, never rows.
+#: - KEY: (applicationId, ``name``, ``sf_dir``, ``version``). ``name`` is
+#:   the model-store family where one exists (so ``caches.clear(family)``
+#:   empties both layers of it); ``version`` carries everything else —
+#:   data fingerprints, hyperparameters, quantizer generation and, where
+#:   the value depends on them, ``plan_confs``.
+#: - EVICT: an insert drops every entry of another application (a
+#:   stopped context's plans and checkpoint blocks are dead weight) and
+#:   every older version of the same (``name``, ``sf_dir``) — one live
+#:   entry per relation, the newest wins.
+#: - LOCK: ``_MEMO_LOCK`` guards the dict only and is never held across
+#:   ``build()`` (a Spark job): two threads memoing different keys run
+#:   concurrently (``pq_code_table`` overlaps its two quantizer fits).
+#:   A key's entry is a Future from the moment its build starts, so a
+#:   concurrent caller of the same key waits for that one build.
+_MEMO_CACHE: dict[tuple, Future] = {}
 
-_RELATION_LOCK = threading.RLock()
+_MEMO_LOCK = threading.Lock()
 
 
-def memo_plan(spark: SparkSession, sf_dir: str, name, fingerprint, build):
-    """The plan memo's one entry point: ``build()`` runs once per
-    (application, ``sf_dir``, ``name``, ``fingerprint``) and its
-    unexecuted result is returned to every later call. A new fingerprint
-    replaces the stale entry of the same (``sf_dir``, ``name``) rather
-    than pinning it."""
+def memo(spark: SparkSession, sf_dir: str, name, version, build):
+    """``build()``'s result, computed once per (application, ``name``,
+    ``sf_dir``, ``version``) and returned to every later call."""
     app = spark.sparkContext.applicationId
-    key = (app, sf_dir, name, fingerprint)
-    with _RELATION_LOCK:
-        plans = _RELATION_CACHE.get(key)
-        if plans is None:
-            plans = build()
-            for k in [
-                k for k in _RELATION_CACHE
-                if k[0] != app or k[1:3] == key[1:3]
-            ]:
-                del _RELATION_CACHE[k]
-            _RELATION_CACHE[key] = plans
-    return plans
+    key = (app, name, sf_dir, version)
+    with _MEMO_LOCK:
+        entry = _MEMO_CACHE.get(key)
+        owner = entry is None
+        if owner:
+            entry = _MEMO_CACHE[key] = Future()
+    if not owner:
+        return entry.result()
+    try:
+        entry.set_result(build())
+    except BaseException as exc:
+        with _MEMO_LOCK:
+            if _MEMO_CACHE.get(key) is entry:
+                del _MEMO_CACHE[key]
+        entry.set_exception(exc)
+        raise
+    with _MEMO_LOCK:
+        for k in [
+            k for k in _MEMO_CACHE
+            if k != key and (k[0] != app or k[1:3] == key[1:3])
+        ]:
+            del _MEMO_CACHE[k]
+    return entry.result()
+
+
+def forget(*names) -> None:
+    """Drop every memo entry whose ``name`` is one of ``names``."""
+    with _MEMO_LOCK:
+        for k in [k for k in _MEMO_CACHE if k[1] in names]:
+            del _MEMO_CACHE[k]
+
+
+def plan_confs(spark: SparkSession) -> tuple[str, str]:
+    """(shuffle width, AQE flag): the two session confs a memo version or
+    durable store key carries when its value depends on the plan shape.
+    The one place those keys read them."""
+    return (
+        spark.conf.get("spark.sql.shuffle.partitions"),
+        spark.conf.get("spark.sql.adaptive.enabled"),
+    )
 
 
 def load_table(
@@ -162,7 +189,7 @@ def load_table(
             reader = reader.option("ignoreCorruptFiles", "true")
         return reader.parquet(f"{sf_dir}/{name}.parquet")
 
-    return memo_plan(
+    return memo(
         spark,
         sf_dir,
         (name, ignore_corrupt_files),
@@ -186,7 +213,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     (the Q17 threshold test does both) gets the fixture views back, the
     pre-memo semantics. The catalog writes are ~8 ms per view; the
     former ~0.7 s per call was the ten reader resolutions, which the
-    relation memo now absorbs.
+    package memo now absorbs.
     """
     for name in TABLES:
         df = (
@@ -413,9 +440,7 @@ def table_fingerprint(sf_dir: str, table: str) -> tuple:
     (path, mtime_ns, size) of every file under the table's parquet path.
     A regenerated fixture at the same path (e.g. an in-process test
     rebuild) changes the fingerprint and invalidates cached model state
-    instead of silently reusing stale fits. Pure os.stat — no Spark job.
-    (Same contract as the similarity module's embeddings fingerprint,
-    generalized to any table.)"""
+    instead of silently reusing stale fits. Pure os.stat — no Spark job."""
     path = os.path.join(sf_dir, f"{table}.parquet")
     stats = []
     if os.path.isfile(path):

@@ -287,6 +287,23 @@ def load_or_fit_pdf(
     return pdf, "fit"
 
 
+def memo_fit(spark, sf_dir: str, name: str, version: tuple, fit, decode):
+    """A driver-side model behind both cache layers under ONE family
+    ``name``: the process memo (``sources.io.memo``, L1) in front of
+    ``load_or_fit_pdf`` (L2), so ``caches.clear(name)`` empties both.
+    The durable key is ``(sf_dir,) + version``; ``decode`` turns the
+    stored frame into the model."""
+    from .io import memo
+
+    return memo(
+        spark,
+        sf_dir,
+        name,
+        version,
+        lambda: decode(load_or_fit_pdf(name, (sf_dir,) + version, fit, spark)[0]),
+    )
+
+
 def load_or_compute_table(
     name: str,
     key: tuple,

@@ -23,7 +23,10 @@ Semantics notes (scale-relevant):
 
 from __future__ import annotations
 
+import atexit
 import re
+import shutil
+import tempfile
 from collections.abc import Iterator
 from typing import Any
 
@@ -66,43 +69,37 @@ def q_stream_incremental_wordcount(spark: SparkSession, sf_dir: str) -> DataFram
     return run_to_memory(counts, "stream_inc_wordcount", output_mode="complete")
 
 
-#: One 4-file corpus split per (process, sf_dir): repeated bench/oracle
-#: runs re-drain the same landing directory instead of rewriting it.
-#: Everything is removed at interpreter exit (atexit), so runs don't
-#: accumulate orphaned temp dirs.
-_SPLIT_CACHE: dict[str, str] = {}
+#: Temp artifacts built once per (``prefix``, ``key``) in this process:
+#: the corpus and events splits, the drained index roots and the JSONL
+#: landing copy. Repeated bench/oracle runs re-drain the same landing
+#: directory instead of rewriting it. Kept apart from the Spark memo
+#: (``sources.io.memo``): these are files that outlive an application,
+#: and the memo sweeps other applications' entries. One atexit sweep
+#: removes them all, so runs don't accumulate orphaned temp dirs.
+_TMPDIR_CACHE: dict[tuple[str, str], str] = {}
 
 
-def _cached_tmpdir(cache: dict, key: str, prefix: str, build) -> str:
-    """One temp artifact per (process, ``key``), built once by
-    ``build(dir)`` and removed at interpreter exit — the shared idiom
-    behind the corpus splits and the as-of index root (one atexit sweep
-    over the cache's values, registered on the FIRST insert so repeat
-    runs don't stack handlers)."""
-    import atexit
-    import shutil
-    import tempfile
+@atexit.register
+def _sweep_tmpdirs() -> None:
+    for d in _TMPDIR_CACHE.values():
+        shutil.rmtree(d, ignore_errors=True)
 
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
-    d = tempfile.mkdtemp(prefix=prefix)
-    build(d)
-    if not cache:
-        atexit.register(
-            lambda: [
-                shutil.rmtree(p, ignore_errors=True) for p in cache.values()
-            ]
-        )
-    cache[key] = d
+
+def _cached_tmpdir(prefix: str, key: str, build) -> str:
+    """The temp dir for (``prefix``, ``key``), made and filled by
+    ``build(dir)`` on the first call of this process."""
+    d = _TMPDIR_CACHE.get((prefix, key))
+    if d is None:
+        d = tempfile.mkdtemp(prefix=prefix)
+        build(d)
+        _TMPDIR_CACHE[(prefix, key)] = d
     return d
 
 
 def _corpus_split_dir(sf_dir: str, docs: DataFrame) -> str:
     return _cached_tmpdir(
-        _SPLIT_CACHE,
-        sf_dir,
         "stream_split_wc_",
+        sf_dir,
         lambda d: docs.repartitionByRange(4, "doc_id")
         .write.mode("overwrite")
         .parquet(d),
@@ -467,11 +464,6 @@ def q_stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: One 4-file events split per (process, sf_dir) — the changelog landing
-#: directory the upsert drain ingests; cleaned at interpreter exit.
-_EVENTS_SPLIT_CACHE: dict[str, str] = {}
-
-
 def _events_split_dir(spark: SparkSession, sf_dir: str) -> str:
     def build(split_dir: str) -> None:
         raw = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -483,9 +475,7 @@ def _events_split_dir(spark: SparkSession, sf_dir: str) -> str:
             split_dir
         )
 
-    return _cached_tmpdir(
-        _EVENTS_SPLIT_CACHE, sf_dir, "stream_split_ev_", build
-    )
+    return _cached_tmpdir("stream_split_ev_", sf_dir, build)
 
 
 def q_stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -509,10 +499,7 @@ def q_stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture-sized simplification, with the plan shape (window compaction
     per version) unchanged.
     """
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql.window import Window
 
@@ -1457,9 +1444,6 @@ def q_stream_tfidf_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries AND compaction points are invisible in the relation
     because the fold is the same associative state merge the batch
     chain proves."""
-    import atexit
-    import shutil
-    import tempfile
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     split_dir = _corpus_split_dir(sf_dir, docs)
@@ -1478,8 +1462,6 @@ def _write_ordered_split(split_dir: str, slices: list[DataFrame]) -> None:
     oldest-first pickup makes micro-batch k == slice k on every run."""
     import glob
     import os
-    import shutil
-    import tempfile
     import time
 
     t0 = time.time() - 400
@@ -1493,18 +1475,14 @@ def _write_ordered_split(split_dir: str, slices: list[DataFrame]) -> None:
         shutil.rmtree(staging, ignore_errors=True)
 
 
-_MOD4_SPLIT_CACHE: dict[str, str] = {}
-
-
 def _corpus_split_mod4_dir(sf_dir: str, docs: DataFrame) -> str:
     """A DETERMINISTIC 4-file corpus split for as-of oracles: file k
     holds exactly the docs with ``doc_id % 4 == k`` (range splits
     sample, so their membership isn't SQL-expressible), drained in
     file order (``_write_ordered_split``)."""
     return _cached_tmpdir(
-        _MOD4_SPLIT_CACHE,
-        sf_dir,
         "stream_split_mod4_",
+        sf_dir,
         lambda d: _write_ordered_split(
             d,
             [docs.where(F.pmod(F.col("doc_id"), F.lit(4)) == b) for b in range(4)],
@@ -1512,17 +1490,11 @@ def _corpus_split_mod4_dir(sf_dir: str, docs: DataFrame) -> str:
     )
 
 
-#: One fully-drained NON-compacting index root per (process, sf_dir):
-#: the as-of and version-diff queries read different versions of the
-#: SAME immutable history, so they share one drain (the _SPLIT_CACHE
-#: pattern — removed at interpreter exit).
-_ASOF_ROOT_CACHE: dict[str, str] = {}
-
-
 def _asof_index_root(spark: SparkSession, sf_dir: str) -> str:
     """Drain the deterministic mod-4 corpus split into a non-compacting
     index merge once per process — every committed version is then a
-    complete immutable state for as-of reads and version diffs."""
+    complete immutable state for as-of reads and version diffs, so the
+    as-of and version-diff queries share one drain."""
 
     def build(root: str) -> None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1530,9 +1502,7 @@ def _asof_index_root(spark: SparkSession, sf_dir: str) -> str:
         src = stream_parquet(spark, split_dir, docs.schema, "*.parquet", 1)
         run_foreach_batch(src, make_index_merge(root), "stream_tfidf_asof")
 
-    return _cached_tmpdir(
-        _ASOF_ROOT_CACHE, sf_dir, "stream_tfidf_asof_", build
-    )
+    return _cached_tmpdir("stream_tfidf_asof_", sf_dir, build)
 
 
 def q_stream_tfidf_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1689,12 +1659,6 @@ def read_sharded_index(
     return score((all_segs, dfx, sum(shard_ns)))
 
 
-#: One fully-drained PAIR of shard roots per (process, sf_dir) — the
-#: sharded query's drains, shared across repeat calls like the as-of
-#: root (removed at interpreter exit).
-_SHARD_ROOTS_CACHE: dict[str, str] = {}
-
-
 def _sharded_index_roots(spark: SparkSession, sf_dir: str) -> list:
     """Drain the corpus as TWO independent shard streams (shard k =
     docs with ``doc_id % 2 == k``, each arriving in two deterministic
@@ -1724,24 +1688,17 @@ def _sharded_index_roots(spark: SparkSession, sf_dir: str) -> list:
                 f"stream_tfidf_shard{shard}",
             )
 
-    base = _cached_tmpdir(
-        _SHARD_ROOTS_CACHE, sf_dir, "stream_tfidf_shards_", build
-    )
+    base = _cached_tmpdir("stream_tfidf_shards_", sf_dir, build)
     return [os.path.join(base, "shard0"), os.path.join(base, "shard1")]
-
-
-#: One tombstoned COPY of the as-of root per (process, sf_dir): the
-#: takedown query must not write its ledger into the shared as-of root
-#: (the asof/diff queries' oracles read that history un-tombstoned).
-_TAKEDOWN_ROOT_CACHE: dict[str, str] = {}
 
 
 def _takedown_root(spark: SparkSession, sf_dir: str) -> str:
     """Copy the fully-drained as-of root and commit a takedown ledger
     over the copy: every 13th document (by doc_id). The copy is cheap
     (version-sized parquet) and keeps the shared as-of history
-    byte-identical for its own queries."""
-    import shutil
+    byte-identical for its own queries: the takedown query must not
+    write its ledger into the shared root, whose asof/diff oracles read
+    it un-tombstoned."""
 
     def build(dest: str) -> None:
         src = _asof_index_root(spark, sf_dir)
@@ -1755,9 +1712,7 @@ def _takedown_root(spark: SparkSession, sf_dir: str) -> str:
         ]
         add_tombstones(spark, dest, takedown)
 
-    return _cached_tmpdir(
-        _TAKEDOWN_ROOT_CACHE, sf_dir, "stream_tfidf_takedown_", build
-    )
+    return _cached_tmpdir("stream_tfidf_takedown_", sf_dir, build)
 
 
 def q_stream_tfidf_index_takedown(
