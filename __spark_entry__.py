@@ -1374,7 +1374,10 @@ def _embedding_pairs_sql(min_cos: float) -> str:
 
 def _embedding_lsh_pairs_sql(min_cos: float) -> str:
     """Oracle for ``similarity.lsh_bucket_pairs`` — band equi-join
-    candidates, exact cosine verify, same threshold constant."""
+    candidates, exact cosine verify, same threshold constant. Each pair
+    is scored once here; the engine recomputes a pair in every bucket
+    tile it shares, and ``max(cos_sim)`` per ``(vec_a, vec_b)`` is the
+    canonical dedup of those tiled recomputes."""
     return f"""
         WITH {_lsh_bands_sql()},
         cand AS (
@@ -1477,7 +1480,9 @@ def _knn_graph_sql(k: int) -> str:
 
 def _knn_graph_ann_sql(k: int) -> str:
     """Oracle for ``similarity.knn_graph_ann`` — candidates restricted to
-    pairs sharing an LSH band, then the same rank-k window."""
+    pairs sharing an LSH band, then the same rank-k window. Each pair is
+    scored once here; the engine's tiled recomputes of a pair dedup by
+    ``max(cos_sim)`` per ``(vec_a, vec_b)``, the canonical tie-break."""
     return f"""
         WITH {_lsh_bands_sql()},
         cand AS (

@@ -8,14 +8,36 @@ from pyspark.sql import functions as F
 
 from tf_idf_mapreduce_spark.functions.hashing import (
     MINHASH_K,
+    MINHASH_P,
+    MINHASH_PERMS,
     band_keys,
-    minhash_signature,
     norm_words,
     shingle_hashes,
     shingles,
     simhash32,
     word_hash32,
 )
+
+
+def minhash_signature(hash_arr, k: int = MINHASH_K):
+    """Column-form reference for ``hashing.minhash_signature_udf``:
+    k-permutation MinHash over pre-hashed shingles (``shingle_hashes``),
+    sig[i] = min over shingles of (a_i*h + b_i) mod P, as k interpreted
+    ``transform`` + ``array_min`` folds. Empty hash array → sentinel P.
+    """
+
+    def one_perm(i: int):
+        a, b = MINHASH_PERMS[i]
+        # coeffs bound via closure — a 2-param lambda would receive the
+        # array INDEX as its second argument and corrupt the hash
+        return F.coalesce(
+            F.array_min(
+                F.transform(hash_arr, lambda h: (h * F.lit(a) + F.lit(b)) % MINHASH_P)
+            ),
+            F.lit(MINHASH_P).cast("long"),
+        )
+
+    return F.array(*[one_perm(i) for i in range(k)])
 
 
 def _sig(text_df):
@@ -783,15 +805,7 @@ def test_minhash_signature_udf_matches_column_form(spark, sf_dir):
     """The Arrow minhash twin must equal the interpreted column
     formulation element-for-element on the fixture corpus (exact
     integer math both sides), including the empty-array sentinel."""
-    from tf_idf_mapreduce_spark.functions.hashing import (
-        MINHASH_K,
-        MINHASH_P,
-        minhash_signature,
-        minhash_signature_udf,
-        norm_words,
-        shingle_hashes,
-        shingles,
-    )
+    from tf_idf_mapreduce_spark.functions.hashing import minhash_signature_udf
     from tf_idf_mapreduce_spark.sources.io import load_table
 
     d = load_table(spark, sf_dir, "documents")

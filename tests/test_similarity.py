@@ -155,52 +155,100 @@ def test_pq_fused_fit_equals_per_subspace(spark, sf_dir):
         assert fused[m] == ref, f"subspace {m} diverged"
 
 
+def _tile_paths(spark):
+    """The four embedding tile paths, each a function of the sf dir."""
+    from tf_idf_mapreduce_spark.operators.dedup import embedding_near_pairs
+
+    return {
+        "lsh_bucket_pairs": lambda d: sim.lsh_bucket_pairs(spark, d),
+        "embedding_near_pairs": lambda d: embedding_near_pairs(spark, d),
+        "knn_graph": lambda d: sim.knn_graph(spark, d),
+        "knn_graph_ann": lambda d: sim.knn_graph_ann(spark, d),
+    }
+
+
 def test_bucket_tile_cap_shards_hot_buckets(spark, sf_dir, monkeypatch):
-    """Occupancy cap: with the cap forced tiny every bucket shards into
-    multi-tile pairs — the 100 TB hot-bucket path — and the pair set
-    (with scores) must equal the single-tile run's exactly. Also pins
-    exactly-once pair coverage across tiles (a double-emitted pair
-    would surface as a duplicate row before the groupBy and an extra
-    groupBy input is invisible; compare the aggregated relation)."""
-    base = sorted(
-        tuple(r) for r in sim.lsh_bucket_pairs(spark, sf_dir).collect()
-    )
-    assert base  # the fixture must produce pairs for this to mean anything
+    """Occupancy cap and block size: with the bucket cap forced tiny
+    every bucket shards into multi-tile pairs — the 100 TB hot-bucket
+    path — and with the exact paths' block forced tiny nearly every
+    pair is a cross-row pair. Each path's rows (with scores and ranks)
+    must equal its single-tile run exactly, which pins exactly-once
+    pair coverage across tiles (a double-emitted pair would surface as
+    a duplicate row for the exact pairs path, which has no dedup step)
+    and both-direction top-k for the graphs."""
+    paths = _tile_paths(spark)
+
+    def run():
+        return {
+            name: sorted(tuple(r) for r in f(sf_dir).collect())
+            for name, f in paths.items()
+        }
+
+    base = run()
+    # the fixture must produce rows for this to mean anything
+    assert all(base.values()), {n: len(v) for n, v in base.items()}
     monkeypatch.setattr(sim, "BUCKET_TILE_CAP", 3)
-    tiled = sorted(
-        tuple(r) for r in sim.lsh_bucket_pairs(spark, sf_dir).collect()
-    )
-    assert tiled == base
+    monkeypatch.setattr(sim, "TILE_BLOCK", 3)
+    tiled = run()
+    for name in paths:
+        assert tiled[name] == base[name], name
 
 
-def test_bucket_tile_kernel_skips_corrupt_embeddings(spark, sf_dir, tmp_path):
-    """Corrupt-row contract (round-12 ADVICE): NULL and dimension-
-    mismatched embeddings must DROP from the tile kernels (the SQL
-    cosine's NULL propagation), never abort the job — and must not
-    perturb the valid pairs."""
+@pytest.mark.parametrize(
+    "path", ["lsh_bucket_pairs", "embedding_near_pairs", "knn_graph", "knn_graph_ann"]
+)
+def test_bucket_tile_kernel_skips_corrupt_embeddings(spark, sf_dir, tmp_path, path):
+    """Corrupt-row contract, one meaning in every tile kernel: NULL,
+    dimension-mismatched and NaN embeddings must DROP (the SQL cosine's
+    NULL propagation), never abort the job — and must not perturb the
+    valid pairs or edges."""
     from pyspark.sql import functions as F
 
     from tf_idf_mapreduce_spark.sources.io import load_table
 
-    clean = sorted(
-        tuple(r) for r in sim.lsh_bucket_pairs(spark, sf_dir).collect()
-    )
+    op = _tile_paths(spark)[path]
+    clean = sorted(tuple(r) for r in op(sf_dir).collect())
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     max_id = e.agg(F.max("vec_id")).head()[0]
     corrupt = spark.createDataFrame(
         [
             (max_id + 1, None),
             (max_id + 2, [0.25, -0.5]),  # wrong dimension
+            (max_id + 3, [float("nan")] * sim.EMBED_DIM),
         ],
         e.schema,
     )
     d = tmp_path / "corrupt_sf"
     d.mkdir()
     e.unionByName(corrupt).write.parquet(str(d / "embeddings.parquet"))
-    got = sorted(
-        tuple(r) for r in sim.lsh_bucket_pairs(spark, str(d)).collect()
-    )
-    assert got == clean  # corrupt rows dropped, valid pairs untouched
+    got = sorted(tuple(r) for r in op(str(d)).collect())
+    assert got == clean  # corrupt rows dropped, valid rows untouched
+
+
+def test_package_spells_the_cosine_divide_once():
+    """Each concept once: the rounded-cosine tile expression's norm
+    outer-product divide (``np.outer``) appears in ONE place in the
+    package, ``similarity._rounded_cosines``. A new tile kernel selects
+    over ``similarity._tile_cosines`` blocks instead of growing its own
+    matmul."""
+    import ast
+    from pathlib import Path
+
+    import tf_idf_mapreduce_spark
+
+    pkg = Path(tf_idf_mapreduce_spark.__file__).parent
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "outer"
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "np"
+            ):
+                found.append(path.relative_to(pkg).as_posix())
+    assert found == ["operators/similarity.py"]
 
 
 def test_dsum_exact_matches_engine_decimal_sum_on_adversarial_doubles(spark):

@@ -5,6 +5,30 @@ from __future__ import annotations
 import pytest
 
 
+def _bpe_apply_merge(syms, left: str, right: str, merged: str):
+    """Column-form reference for ``textstats._bpe_apply_chain_udf``: ONE
+    merge rule applied greedily left to right, non-overlapping, as a pure
+    JVM fold (``F.aggregate``) — push each symbol; if the top of the
+    accumulator is ``left`` and the incoming symbol is ``right``,
+    replace the top with ``merged``. Within one round the freshly merged
+    symbol can never re-merge as a left side, because ``merged =
+    left||right != left`` (right is non-empty)."""
+    from pyspark.sql import functions as F
+
+    return F.aggregate(
+        syms,
+        F.expr("cast(array() as array<string>)"),
+        lambda acc, s: F.when(
+            (F.size(acc) > 0)
+            & (F.element_at(acc, -1) == F.lit(left))
+            & (s == F.lit(right)),
+            F.concat(
+                F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(F.lit(merged))
+            ),
+        ).otherwise(F.concat(acc, F.array(s))),
+    )
+
+
 @pytest.fixture(scope="module")
 def bpe_dir(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("bpe")
@@ -690,7 +714,6 @@ def test_bpe_apply_chain_udf_matches_fold(spark, sf_dir):
     from tf_idf_mapreduce_spark.operators.textstats import (
         BPE_TRAIN_MERGES,
         _bpe_apply_chain_udf,
-        _bpe_apply_merge,
         _bpe_learn_merges,
         _bpe_word_counts,
     )

@@ -3,12 +3,12 @@
 Everything here is built on ``md5`` — the one hash both Spark (JVM) and any
 SQL oracle compute bit-identically on UTF-8 strings — composed with pure
 Column expressions that stay inside whole-stage codegen. The one Python
-UDF is ``minhash_signature_udf``, an Arrow-batched twin of
-``minhash_signature`` with bit-identical integer math: the streaming
-arrival screen (``streaming.queries.q_stream_incremental_dedup``) signs
-each micro-batch with it, because a per-doc signature there must be
-stateless and the twin replaces k interpreted array folds per row with
-one numpy pass per Arrow batch.
+UDF is ``minhash_signature_udf``, k-permutation MinHash as one numpy pass
+per Arrow batch: the streaming arrival screen
+(``streaming.queries.q_stream_incremental_dedup``) signs each micro-batch
+with it, because a per-doc signature there must be stateless. Its
+column-form reference (k interpreted ``transform`` + ``array_min`` folds)
+lives in ``tests/test_dedup.py`` as the oracle it is pinned against.
 
 Scale notes: signatures are fixed-size arrays per document (k strings /
 one int64), so memory is O(docs), not O(tokens); band keys are re-hashed
@@ -108,38 +108,17 @@ def shingle_hashes(shingle_arr: Column) -> Column:
     )
 
 
-def minhash_signature(hash_arr: Column, k: int = MINHASH_K) -> Column:
-    """k-permutation MinHash over pre-hashed shingles (``shingle_hashes``):
-    sig[i] = min over shingles of (a_i*h + b_i) mod P — the classic
-    universal-hash family. One md5 per shingle total (not per seed), so the
-    signature costs O(S) hashes + O(k·S) integer ops per doc.
-
-    Empty hash array → sentinel P (can't occur via ``shingles``, which
-    always yields ≥1 shingle — defensive only).
-    """
-    def one_perm(i: int) -> Column:
-        a, b = MINHASH_PERMS[i]
-        # coeffs bound via closure — a 2-param lambda would receive the
-        # array INDEX as its second argument and corrupt the hash
-        return F.coalesce(
-            F.array_min(
-                F.transform(hash_arr, lambda h: (h * F.lit(a) + F.lit(b)) % MINHASH_P)
-            ),
-            F.lit(MINHASH_P).cast("long"),
-        )
-
-    return F.array(*[one_perm(i) for i in range(k)])
-
-
 def minhash_signature_udf(k: int = MINHASH_K):
-    """Arrow-batched twin of :func:`minhash_signature` — the SAME
-    ``min over shingles of (a_i*h + b_i) mod P`` in one numpy pass per
-    batch instead of k interpreted ``transform``+``array_min`` folds
-    per row. Pure int64 arithmetic (multipliers < 2^30, hashes < 2^33,
-    so a*h+b < 2^63 — the same no-overflow bound the SQL form rides),
-    so the twin is bit-identical BY CONSTRUCTION, and additionally
-    pinned by ``test_minhash_signature_udf_matches_column_form``.
-    Empty/NULL hash arrays take the column form's sentinel [P]*k."""
+    """k-permutation MinHash over pre-hashed shingles (``shingle_hashes``):
+    sig[i] = ``min over shingles of (a_i*h + b_i) mod P`` — the classic
+    universal-hash family — in one numpy pass per Arrow batch. One md5
+    per shingle total (not per seed), so a signature costs O(S) hashes +
+    O(k·S) integer ops per doc. Pure int64 arithmetic (multipliers <
+    2^30, hashes < 2^33, so a*h+b < 2^63 — the same no-overflow bound
+    the SQL oracle rides), so it is bit-identical to the column form BY
+    CONSTRUCTION, and pinned against it by
+    ``test_minhash_signature_udf_matches_column_form``. Empty/NULL hash
+    arrays take the sentinel [P]*k."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -215,8 +194,8 @@ def simhash32(word_hashes: Column) -> Column:
     32 folds share one array.
     """
     def bit_contrib(b: int) -> Column:
-        # seed bound via closure — see minhash_signature for why not a
-        # lambda default (aggregate's merge lambda must stay 2-parameter)
+        # seed bound via closure, not a lambda default: aggregate's merge
+        # lambda must stay 2-parameter
         return F.aggregate(
             word_hashes,
             F.lit(0).cast("long"),

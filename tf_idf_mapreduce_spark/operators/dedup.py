@@ -12,8 +12,9 @@ Scale design (the whole point at 100 TB):
 - Jaccard verification runs only on LSH candidates, not all pairs.
 - SimHash: one int64 per doc; near-dup candidates via 8-bit band equi-join
   (a hamming-≤3 pair must agree on ≥1 of 4 bands by pigeonhole).
-- Embedding near-dup at sf scale uses the brute-force cross join (exact);
-  the LSH-bucketed variant in similarity.py is the 100 TB path.
+- Embedding near-dup at sf scale scores every block pair (exact); the
+  LSH-bucketed variant in similarity.py is the 100 TB path. Both run the
+  one tile kernel, ``similarity._tile_cosines``.
 """
 
 from __future__ import annotations
@@ -582,9 +583,6 @@ def duplicate_clusters(
     )
 
 
-EMBED_BLOCK = 256
-
-
 def embedding_near_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -595,21 +593,20 @@ def embedding_near_pairs(
     matrix multiply.
 
     Naive all-pairs ships O(n²) duplicated vectors through the shuffle; the
-    blocked form groups vectors into fixed-size blocks, cross-joins the
-    O((n/B)²) ordered block pairs, and computes each B x B cosine tile with
-    one numpy matmul inside ``mapInPandas`` — data transfer drops from
-    O(n²·d) to O((n/B)²·B·d) = O(n²·d/B), and the kernel is BLAS instead of
-    per-pair folds. Exactness is unchanged — this is the verification
-    baseline for the LSH-bucketed scale path (similarity.lsh_bucket_pairs).
-    Rounded @6dp (summation-order differences across engines are ~1e-15).
+    blocked form (``similarity._block_rows``) groups vectors into fixed-size
+    blocks, pairs each block with itself and every later block, and scores
+    each row with one numpy matmul inside ``mapInPandas`` — the same tile
+    kernel as the bucketed twin — so data transfer drops from O(n²·d) to
+    O(n²·d/B), and the kernel is BLAS instead of per-pair folds. Exactness
+    is unchanged — this is the verification baseline for the LSH-bucketed
+    scale path (similarity.lsh_bucket_pairs). Rounded @6dp (summation-order
+    differences across engines are ~1e-15); null, dimension-mismatched and
+    NaN embeddings drop.
 
     Still quadratic by design: ``max_rows`` refuses inputs past the
     exact-path cap with a pointer to the bucketed twin.
     """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
+    from .similarity import _block_rows, _cosine_tile_kernel
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     guard_exact_quadratic(
@@ -618,44 +615,10 @@ def embedding_near_pairs(
         twin="similarity.lsh_bucket_pairs",
         max_rows=max_rows,
     )
-    blocks = (
-        e.groupBy((F.col("vec_id") / EMBED_BLOCK).cast("long").alias("blk"))
-        .agg(
-            F.collect_list(F.struct("vec_id", "embedding")).alias("vecs"),
-        )
+    return _block_rows(e).mapInPandas(
+        _cosine_tile_kernel(float(min_cosine), emit_sim=True),
+        "vec_a long, vec_b long, cos_sim double",
     )
-    a = blocks.select(F.col("blk").alias("blk_a"), F.col("vecs").alias("vecs_a"))
-    b = blocks.select(F.col("blk").alias("blk_b"), F.col("vecs").alias("vecs_b"))
-    tiles = a.crossJoin(b).where(F.col("blk_a") <= F.col("blk_b"))
-
-    out_schema = "vec_a long, vec_b long, cos_sim double"
-
-    def tile_cosines(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def unpack(cell):
-            ids = np.array([v["vec_id"] for v in cell], dtype="int64")
-            mat = np.stack([v["embedding"] for v in cell]).astype("float64")
-            return ids, mat, np.linalg.norm(mat, axis=1)
-
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                ids_a, mat_a, nrm_a = unpack(row["vecs_a"])
-                ids_b, mat_b, nrm_b = unpack(row["vecs_b"])
-                # unnormalized dot / norm outer product, then
-                # floor(x*1e6 + 0.5)/1e6 — the oracle's dot/(|a|·|b|)
-                # IEEE sequence op for op (np.round's scaled half-even can
-                # differ by 1e-6), tile-shape-independent per pair
-                sims = (
-                    np.floor((mat_a @ mat_b.T) / np.outer(nrm_a, nrm_b) * 1e6 + 0.5)
-                    / 1e6
-                )
-                ia, ib = np.nonzero(sims >= min_cosine)
-                va, vb = ids_a[ia], ids_b[ib]
-                keep = va < vb  # dedup within the diagonal tile, order pairs
-                yield pd.DataFrame(
-                    {"vec_a": va[keep], "vec_b": vb[keep], "cos_sim": sims[ia[keep], ib[keep]]}
-                )
-
-    return tiles.mapInPandas(tile_cosines, out_schema)
 
 
 def embedding_lsh_recall(
@@ -1065,24 +1028,15 @@ def _semantic_keep_compute(
         "embedding",
         _nearest_centroid_udf(cents)(F.col("embedding")).alias("cid"),
     ).localCheckpoint()
-    # within-cell edges via the shared bucket-tile machinery
-    # (``similarity._tiled_bucket_rows`` + ``_cosine_tile_kernel``):
-    # each IVF cell gathers its members (one tile per cell until the
-    # occupancy cap, hash-sharded tile pairs above it — a mega-cell can
-    # no longer become one occupancy²-FLOP task or a >2 GB Arrow row,
-    # round-12 ADVICE) and one matmul scores every within-row pair —
-    # the cid self-join + per-pair JVM cosine fold this replaced spent
-    # its time on join machinery, not FLOPs (guide §4.2). Dot
-    # UNNORMALIZED with the norm outer-product divide and the repo-wide
-    # half-up 1e-6 grid — the oracle replays the same sequence op for
-    # op. Tiles partition the cell, so every unordered pair is emitted
-    # exactly once (no dedup step, same as the single-row kernel).
-    # Corrupt-row scope: the tile kernel itself drops null/mismatched
-    # embeddings per the SQL cosine's NULL contract, but THIS pipeline
-    # is still fail-fast overall — the quantizer assignment upstream
-    # (_nearest_centroid_udf, kmeans partial sums) np.stack's the raw
-    # column, the pre-existing posture (corrupt embeddings are an
-    # ingest-screen problem for the fit path).
+    # within-cell edges on the shared bucket tiles: each IVF cell gathers
+    # its members (hash-sharded tile pairs above ``BUCKET_TILE_CAP``, so
+    # a mega-cell stays a bounded task) and one matmul scores every pair.
+    # Tiles partition the cell, so every unordered pair is emitted exactly
+    # once (no dedup step). Corrupt-row scope: the tile kernel drops
+    # null/mismatched embeddings, but THIS pipeline is still fail-fast
+    # overall — the quantizer assignment upstream (_nearest_centroid_udf,
+    # kmeans partial sums) np.stack's the raw column (corrupt embeddings
+    # are an ingest-screen problem for the fit path).
     from .similarity import _cosine_tile_kernel, _tiled_bucket_rows
 
     edges = (
@@ -1330,8 +1284,8 @@ def incremental_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Band join is BATCH x CORPUS on (band_idx, band_val) — the corpus
     signature side is the persisted ANN index at 100 TB — and the
     verify cosine runs only on bucket-collision candidates, scored per
-    bucket with ``lsh_bucket_pairs``' bucket-as-tile numpy kernel (one
-    matmul per bucket over the batch x corpus members). Rounding
+    bucket tile with ``lsh_bucket_pairs``' tile kernel (one matmul per
+    tile, its batch x corpus entries kept). Rounding
     mirrors the lsh-pairs convention: floor(cos*1e6+0.5)/1e6,
     threshold applied to the rounded value.
     """
@@ -1348,13 +1302,15 @@ def incremental_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_semantic_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from .curation import SAMPLE_BUCKET_MAX, _sample_bucket
-    from .similarity import NEARDUP_MIN_COSINE, _band_rows, lsh_signatures
+    from .similarity import (
+        _band_rows,
+        _tile_kernel,
+        _tiled_bucket_rows,
+        lsh_signatures,
+    )
 
     tag = _docs(spark, sf_dir).select(
         "doc_id", (_sample_bucket() <= SAMPLE_BUCKET_MAX).alias("is_batch")
@@ -1365,22 +1321,11 @@ def _incremental_semantic_compute(spark: SparkSession, sf_dir: str) -> DataFrame
         .join(tag, F.col("vec_id") == F.col("doc_id"))
         .join(e, "vec_id")
     )
-    # candidates are scored per BUCKET-TILE with the repo's tile
-    # machinery (``similarity._tiled_bucket_rows``): each (band_idx,
-    # band_val) group gathers its members (one tile per bucket until
-    # the occupancy cap, hash-sharded tile pairs above it — bounded
-    # task size at any skew) and one matmul scores every batch x corpus
-    # pair per row — the per-pair equi-join + per-row JVM fold this
-    # replaced spent ~5s at sf0.1 on join machinery for the same FLOPs
-    # (guide §4.2). A pair colliding in several bands is deduped by
-    # PAIR IDENTITY (groupBy + max), not by float equality of
-    # recomputations; dot is UNNORMALIZED with the norm outer-product
-    # divide, the oracle's dot/(|a|·|b|) sequence op for op, and the
-    # half-up 1e-6 grid is applied inside the kernel exactly as the
-    # SQL replay does. Null/dimension-mismatched embeddings drop per
-    # the SQL cosine's NULL contract (``_valid_length_groups``).
-    from .similarity import _tiled_bucket_rows, _valid_length_groups
-
+    # candidates are scored per BUCKET-TILE (``similarity._tile_cosines``
+    # over ``_tiled_bucket_rows``: bounded task size at any skew); the
+    # screen keeps the batch-row x corpus-column entries of each block.
+    # A pair colliding in several bands is deduped by PAIR IDENTITY
+    # (``max(cos_sim)``), not by float equality of recomputations.
     rows = _tiled_bucket_rows(
         bands,
         key_cols=["band_idx", "band_val"],
@@ -1388,93 +1333,19 @@ def _incremental_semantic_compute(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     thr = float(NEARDUP_MIN_COSINE)
 
-    # NB: keep this kernel in lockstep with similarity._cosine_tile_kernel
-    # (same stacking, rounding grid, corrupt-row grouping, tile-pair
-    # orientation rules) — it differs only in the batch x corpus masking
-    # and the (b_vec, c_vec) output orientation
-    def bucket_pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def stack(cell, idxs):
-            ids = np.array([cell[i]["vec_id"] for i in idxs], dtype="int64")
-            isb = np.array([cell[i]["is_batch"] for i in idxs], dtype=bool)
-            mat = np.stack([cell[i]["embedding"] for i in idxs]).astype(
-                "float64"
-            )
-            return ids, isb, mat, np.linalg.norm(mat, axis=1)
-
-        def emit(ids_a, mat_a, nrm_a, ids_b, mat_b, nrm_b):
-            # batch rows (a) x corpus rows (b) — callers pass the slices
-            sims = (
-                np.floor(
-                    (mat_a @ mat_b.T) / np.outer(nrm_a, nrm_b) * 1e6 + 0.5
-                )
-                / 1e6
-            )
-            ia, ib = np.nonzero(sims >= thr)
-            if len(ia):
-                return pd.DataFrame(
-                    {
-                        "b_vec": ids_a[ia],
-                        "c_vec": ids_b[ib],
-                        "cos_sim": sims[ia, ib],
-                    }
-                )
-            return None
-
-        for pdf in batches:
-            for cell_a, cell_b in zip(pdf["vecs_a"], pdf["vecs_b"]):
-                if cell_b is None:
-                    for idxs in _valid_length_groups(cell_a):
-                        ids, isb, mat, nrm = stack(cell_a, idxs)
-                        if isb.all() or not isb.any():
-                            continue
-                        bi, ci = np.nonzero(isb)[0], np.nonzero(~isb)[0]
-                        out = emit(
-                            ids[bi], mat[bi], nrm[bi], ids[ci], mat[ci], nrm[ci]
-                        )
-                        if out is not None:
-                            yield out
-                    continue
-                ga = {
-                    len(cell_a[i[0]]["embedding"]): i
-                    for i in _valid_length_groups(cell_a)
-                }
-                gb = {
-                    len(cell_b[i[0]]["embedding"]): i
-                    for i in _valid_length_groups(cell_b)
-                }
-                for dim in sorted(set(ga) & set(gb)):
-                    ids_a, isb_a, mat_a, nrm_a = stack(cell_a, ga[dim])
-                    ids_b, isb_b, mat_b, nrm_b = stack(cell_b, gb[dim])
-                    # batch side from A x corpus side from B, then the
-                    # reverse orientation — together they cover every
-                    # cross-tile batch x corpus pair exactly once
-                    bi_a, ci_b = np.nonzero(isb_a)[0], np.nonzero(~isb_b)[0]
-                    if len(bi_a) and len(ci_b):
-                        out = emit(
-                            ids_a[bi_a],
-                            mat_a[bi_a],
-                            nrm_a[bi_a],
-                            ids_b[ci_b],
-                            mat_b[ci_b],
-                            nrm_b[ci_b],
-                        )
-                        if out is not None:
-                            yield out
-                    bi_b, ci_a = np.nonzero(isb_b)[0], np.nonzero(~isb_a)[0]
-                    if len(bi_b) and len(ci_a):
-                        out = emit(
-                            ids_b[bi_b],
-                            mat_b[bi_b],
-                            nrm_b[bi_b],
-                            ids_a[ci_a],
-                            mat_a[ci_a],
-                            nrm_a[ci_a],
-                        )
-                        if out is not None:
-                            yield out
+    def batch_x_corpus(m, r, c, sims):
+        isb = m["is_batch"].astype(bool)
+        ia, ib = np.nonzero(isb[r][:, None] & ~isb[c][None, :] & (sims >= thr))
+        return {
+            "b_vec": m["vec_id"][r][ia],
+            "c_vec": m["vec_id"][c][ib],
+            "cos_sim": sims[ia, ib],
+        }
 
     scored = (
-        rows.mapInPandas(bucket_pairs, "b_vec long, c_vec long, cos_sim double")
+        rows.mapInPandas(
+            _tile_kernel(batch_x_corpus), "b_vec long, c_vec long, cos_sim double"
+        )
         .groupBy("b_vec", "c_vec")
         .agg(F.max("cos_sim").alias("cos_sim"))
     )

@@ -245,6 +245,8 @@ def _docsim_tiles(vec: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    from .similarity import _rounded_cosines
+
     vecid = vec.withColumn("wid", F.xxhash64("word"))
     norms = vecid.groupBy("doc").agg(
         F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nrm")
@@ -313,14 +315,7 @@ def _docsim_tiles(vec: DataFrame) -> DataFrame:
                 mat_b, pres_b = densify(
                     len(ids_b), rows_b, np.searchsorted(u, wids_b), wts_b, len(u)
                 )
-                # floor(x*1e6 + 0.5)/1e6, matching the oracle's formula op
-                # for op (np.round's scaled half-even can differ by 1e-6)
-                cos = (
-                    np.floor(
-                        (mat_a @ mat_b.T) / np.outer(nrm_a, nrm_b) * 1e6 + 0.5
-                    )
-                    / 1e6
-                )
+                cos = _rounded_cosines(mat_a @ mat_b.T, nrm_a, nrm_b)
                 lt = ids_a[:, None] < ids_b[None, :]
                 if blk_a == blk_b:
                     keep = lt  # strict upper triangle by doc order

@@ -133,16 +133,12 @@ def _band_rows(sigs: DataFrame) -> DataFrame:
     ).select("vec_id", "bk.band_idx", "bk.band_val")
 
 
-#: Max members one bucket-tile row may hold. A degenerate band value (or
-#: a mega IVF cell) used to become ONE collect_list row scored by ONE
-#: task — occupancy² FLOPs and a potentially >2 GB Arrow row in a single
-#: task at 100 TB (round-12 verdict #5). Buckets above the cap now shard
-#: into ⌈occ/cap⌉ hash tiles and are scored as bounded tile-PAIR rows:
-#: same pairs, same per-pair math, ≤ cap² dots and ~2·cap·d·8 bytes per
-#: task. 4096 members ≈ 2 MB of float64 payload per tile and ≈ 1 GFLOP
-#: per cross tile — comfortably one task. At fixture scale no bucket
-#: reaches the cap, so every bucket is one tile and the single-row path
-#: is byte-identical to the pre-cap kernel.
+#: Max members one bucket-tile row may hold. A bucket above the cap (a
+#: degenerate band value, a mega IVF cell) shards into ⌈occ/cap⌉ hash
+#: tiles scored as tile-PAIR rows: same pairs, same per-pair math, ≤ cap²
+#: dots and ~2·cap·d·8 bytes per task. 4096 members ≈ 2 MB of float64
+#: payload per tile and ≈ 1 GFLOP per cross tile — comfortably one task.
+#: At fixture scale no bucket reaches the cap, so every bucket is one tile.
 BUCKET_TILE_CAP = 4096
 
 
@@ -177,10 +173,6 @@ def _tiled_bucket_rows(
         F.collect_list(F.struct(*payload_cols)).alias("vecs"),
         F.first("n_tiles").alias("n_tiles"),
     )
-    within = tiles.where(F.size("vecs") >= 2).select(
-        F.col("vecs").alias("vecs_a"),
-        F.lit(None).cast(tiles.schema["vecs"].dataType).alias("vecs_b"),
-    )
     multi = tiles.where(F.col("n_tiles") > 1)
     ta, tb = multi.alias("ta"), multi.alias("tb")
     # eqNullSafe: the window/groupBy above treat a NULL bucket key as
@@ -192,102 +184,182 @@ def _tiled_bucket_rows(
     cross = ta.join(tb, on=cond).select(
         F.col("ta.vecs").alias("vecs_a"), F.col("tb.vecs").alias("vecs_b")
     )
+    return _tile_rows(tiles, cross)
+
+
+def _tile_rows(tiles: DataFrame, cross: DataFrame) -> DataFrame:
+    """The tile-row shape every tile kernel reads: each ``vecs`` tile of
+    2+ members as a within row (vecs_b NULL), plus the ``cross`` rows."""
+    within = tiles.where(F.size("vecs") >= 2).select(
+        F.col("vecs").alias("vecs_a"),
+        F.lit(None).cast(tiles.schema["vecs"].dataType).alias("vecs_b"),
+    )
     return within.unionByName(cross)
 
 
-def _valid_length_groups(cell) -> list[list[int]]:
-    """Member indices of one tile, grouped by embedding length, null
-    embeddings skipped — the numpy twin of the SQL cosine's corrupt-row
-    contract (functions/vectors.py): a NULL or dimension-mismatched
-    pair scores NULL and drops, never aborts the job. When every member
-    is valid and same-length (the fixtures), this is ONE group in
-    collect order, so the stacked matrix — and every score — is
-    bit-identical to the unguarded ``np.stack``."""
+#: Members per block of the exact all-pairs paths (``_block_rows``).
+TILE_BLOCK = 256
+
+
+def _block_rows(e: DataFrame) -> DataFrame:
+    """(vecs_a, vecs_b) tile rows covering EVERY pair of ``e`` — the exact
+    paths' twin of ``_tiled_bucket_rows``: vectors group into blocks by
+    ``vec_id // TILE_BLOCK``; a block is a within row (vecs_b NULL) and
+    each ``blk_a < blk_b`` block pair one cross row, so every unordered
+    pair lands in exactly one row and the data shipped is O(n²·d/B),
+    not O(n²·d). Quadratic by design — callers guard the row count."""
+    blocks = e.groupBy(
+        (F.col("vec_id") / TILE_BLOCK).cast("long").alias("blk")
+    ).agg(F.collect_list(F.struct("vec_id", "embedding")).alias("vecs"))
+    a = blocks.select(F.col("blk").alias("blk_a"), F.col("vecs").alias("vecs_a"))
+    b = blocks.select(F.col("blk").alias("blk_b"), F.col("vecs").alias("vecs_b"))
+    cross = a.join(b, F.col("blk_a") < F.col("blk_b")).select("vecs_a", "vecs_b")
+    return _tile_rows(blocks, cross)
+
+
+def _valid_length_groups(cell) -> dict:
+    """Member indices of one tile keyed by embedding length (ascending),
+    null embeddings skipped — the numpy twin of the SQL cosine's
+    corrupt-row contract (functions/vectors.py): a NULL or dimension-
+    mismatched pair scores NULL and drops, never aborts the job. When
+    every member is valid and same-length (the fixtures), this is ONE
+    group in collect order, so the stacked matrix — and every score —
+    is bit-identical to the unguarded ``np.stack``."""
+    import numpy as np
+
     by_len: dict[int, list[int]] = {}
     for i, v in enumerate(cell):
         emb = v["embedding"]
-        if emb is None:
+        if emb is not None:
+            by_len.setdefault(len(emb), []).append(i)
+    return {n: np.array(idxs) for n, idxs in sorted(by_len.items())}
+
+
+def _rounded_cosines(dots, nrm_a, nrm_b):
+    """dot / (|a|·|b|) on the half-up 1e-6 grid — the oracle's cosine
+    IEEE sequence op for op (dot UNNORMALIZED, then the norm outer-product
+    divide), so a pair's value does not depend on the tile it sits in."""
+    import numpy as np
+
+    return _round6(dots / np.outer(nrm_a, nrm_b))
+
+
+def _tile_cosines(pdf):
+    """The one embedding tile kernel: every tile row's rounded cosines as
+    directed blocks.
+
+    Reads a batch of ``(vecs_a, vecs_b)`` rows (``_tiled_bucket_rows``
+    or ``_block_rows``) and yields ``(m, r, c, sims)``: ``m`` maps each
+    scalar payload field to an array over the row's members (vecs_a,
+    then vecs_b), ``r``/``c`` index the block's row and column members
+    into it, and ``sims[i, j]`` is the rounded cosine of members ``r[i]``
+    and ``c[j]``. A within row (vecs_b NULL) is one block, the tile
+    against itself; a cross row is A→B and B→A (``sims.T`` of one
+    matmul). So every ORDERED pair of distinct members of a row sits in
+    exactly one block, and each caller only selects over the blocks
+    (``_tile_kernel``). Members group by ``_valid_length_groups``
+    (mismatched lengths never meet); a NaN/Inf embedding scores NaN,
+    which fails every threshold and every finite top-k."""
+    import numpy as np
+
+    def stack(members, idx):
+        mat = np.stack([members[i]["embedding"] for i in idx]).astype("float64")
+        return mat, np.linalg.norm(mat, axis=1)
+
+    for cell_a, cell_b in zip(pdf["vecs_a"], pdf["vecs_b"]):
+        members = list(cell_a) if cell_b is None else [*cell_a, *cell_b]
+        m = {
+            f: np.array([v[f] for v in members])
+            for f in members[0].keys()
+            if f != "embedding"
+        }
+        ga = _valid_length_groups(cell_a)
+        if cell_b is None:
+            for idx in ga.values():
+                if len(idx) >= 2:
+                    mat, nrm = stack(members, idx)
+                    yield m, idx, idx, _rounded_cosines(mat @ mat.T, nrm, nrm)
             continue
-        by_len.setdefault(len(emb), []).append(i)
-    return [idxs for _, idxs in sorted(by_len.items())]
+        gb = _valid_length_groups(cell_b)
+        for dim in ga.keys() & gb.keys():
+            ra, rb = ga[dim], gb[dim] + len(cell_a)
+            mat_a, nrm_a = stack(members, ra)
+            mat_b, nrm_b = stack(members, rb)
+            sims = _rounded_cosines(mat_a @ mat_b.T, nrm_a, nrm_b)
+            yield m, ra, rb, sims
+            yield m, rb, ra, sims.T
 
 
-def _cosine_tile_kernel(thr: float, emit_sim: bool):
-    """The shared all-pairs cosine kernel over ``_tiled_bucket_rows``
-    output: every (id_a < id_b) pair with rounded cosine >= ``thr``,
-    scored one matmul per row. Within rows (vecs_b NULL) take the
-    id-ordered upper triangle; cross rows take both orientations of the
-    A x B matrix, so each unordered cross-tile pair is emitted exactly
-    once. Dot UNNORMALIZED with the norm outer-product divide (the
-    oracle's dot/(|a|·|b|) IEEE sequence op for op) and the repo-wide
-    half-up 1e-6 grid applied inside the kernel. Output columns
-    (vec_a, vec_b[, cos_sim])."""
-    from collections.abc import Iterator
-
+def _tile_kernel(select):
+    """``mapInPandas`` kernel over tile rows: ``select(m, r, c, sims)``
+    picks each ``_tile_cosines`` block's output columns (a dict of
+    arrays); one frame per Arrow batch."""
     import numpy as np
     import pandas as pd
 
-    def stack(cell, idxs):
-        ids = np.array([cell[i]["vec_id"] for i in idxs], dtype="int64")
-        mat = np.stack([cell[i]["embedding"] for i in idxs]).astype("float64")
-        return ids, mat, np.linalg.norm(mat, axis=1)
-
-    def frame(a, b, s):
-        cols = {"vec_a": a, "vec_b": b}
-        if emit_sim:
-            cols["cos_sim"] = s
-        return pd.DataFrame(cols)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(batches):
         for pdf in batches:
-            for cell_a, cell_b in zip(pdf["vecs_a"], pdf["vecs_b"]):
-                if cell_b is None:
-                    for idxs in _valid_length_groups(cell_a):
-                        if len(idxs) < 2:
-                            continue
-                        ids, mat, nrm = stack(cell_a, idxs)
-                        # floor(x*1e6+0.5)/1e6 — the oracle's formula
-                        sims = (
-                            np.floor(
-                                (mat @ mat.T) / np.outer(nrm, nrm) * 1e6 + 0.5
-                            )
-                            / 1e6
-                        )
-                        ia, ib = np.nonzero(
-                            (ids[:, None] < ids[None, :]) & (sims >= thr)
-                        )
-                        if len(ia):
-                            yield frame(ids[ia], ids[ib], sims[ia, ib])
-                    continue
-                ga = {
-                    len(cell_a[i[0]]["embedding"]): i
-                    for i in _valid_length_groups(cell_a)
-                }
-                gb = {
-                    len(cell_b[i[0]]["embedding"]): i
-                    for i in _valid_length_groups(cell_b)
-                }
-                for dim in sorted(set(ga) & set(gb)):
-                    ids_a, mat_a, nrm_a = stack(cell_a, ga[dim])
-                    ids_b, mat_b, nrm_b = stack(cell_b, gb[dim])
-                    sims = (
-                        np.floor(
-                            (mat_a @ mat_b.T) / np.outer(nrm_a, nrm_b) * 1e6
-                            + 0.5
-                        )
-                        / 1e6
-                    )
-                    hit = sims >= thr
-                    ia, ib = np.nonzero((ids_a[:, None] < ids_b[None, :]) & hit)
-                    ja, jb = np.nonzero((ids_a[:, None] > ids_b[None, :]) & hit)
-                    if len(ia) or len(ja):
-                        yield frame(
-                            np.concatenate([ids_a[ia], ids_b[jb]]),
-                            np.concatenate([ids_b[ib], ids_a[ja]]),
-                            np.concatenate([sims[ia, ib], sims[ja, jb]]),
-                        )
+            parts = [select(*block) for block in _tile_cosines(pdf)]
+            if parts:
+                yield pd.DataFrame(
+                    {f: np.concatenate([p[f] for p in parts]) for f in parts[0]}
+                )
 
     return kernel
+
+
+def _cosine_tile_kernel(thr: float, emit_sim: bool):
+    """Every (id_a < id_b) pair of a tile row with rounded cosine >=
+    ``thr`` — each unordered pair of the row once. Output columns
+    (vec_a, vec_b[, cos_sim])."""
+    import numpy as np
+
+    def select(m, r, c, sims):
+        ids_r, ids_c = m["vec_id"][r], m["vec_id"][c]
+        ia, ib = np.nonzero((ids_r[:, None] < ids_c[None, :]) & (sims >= thr))
+        cols = {"vec_a": ids_r[ia], "vec_b": ids_c[ib]}
+        if emit_sim:
+            cols["cos_sim"] = sims[ia, ib]
+        return cols
+
+    return _tile_kernel(select)
+
+
+def _topk_tile_kernel(k: int):
+    """Each row member's k best columns per block by (cos desc, vec_b
+    asc), self and non-finite scores excluded. A per-block winner set
+    contains every global winner, so one window over the union
+    (``_rank_top_k``) keeps each node's true top-k. Output columns
+    (vec_a, vec_b, cos_sim)."""
+    import numpy as np
+
+    def select(m, r, c, sims):
+        ids_r, ids_c = m["vec_id"][r], m["vec_id"][c]
+        sims = np.where(ids_r[:, None] == ids_c[None, :], -np.inf, sims)
+        order = np.lexsort((np.broadcast_to(ids_c, sims.shape), -sims), axis=1)
+        take = order[:, :k].ravel()
+        rows = np.arange(len(ids_r)).repeat(min(k, len(ids_c)))
+        cs = sims[rows, take]
+        keep = np.isfinite(cs)
+        return {
+            "vec_a": ids_r[rows][keep],
+            "vec_b": ids_c[take][keep],
+            "cos_sim": cs[keep],
+        }
+
+    return _tile_kernel(select)
+
+
+def _rank_top_k(cand: DataFrame, k: int) -> DataFrame:
+    """Each vec_a's k best candidates by (cos desc, vec_b asc), ranked."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("vec_a").orderBy(F.desc("cos_sim"), F.asc("vec_b"))
+    return (
+        cand.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= k)
+        .select("vec_a", "vec_b", "cos_sim", "rank")
+    )
 
 
 def lsh_bucket_pairs(
@@ -314,16 +386,14 @@ def lsh_bucket_pairs(
     band_val) group gathers its members (one tile per bucket until
     ``BUCKET_TILE_CAP``, hash-sharded tile pairs above it — bounded task
     size however degenerate a band value gets) and one numpy matmul
-    scores every within-row pair — the per-pair equi-join + per-row
-    kernel this replaced cost ~6 s at sf0.1 against ~1 s for the tiles,
-    because join machinery per candidate dwarfs the dot-product FLOPs.
-    A pair sharing several bands (or recomputed from differently-shaped
-    tile matrices) is deduped by PAIR IDENTITY — ``groupBy(vec_a,
-    vec_b).max(cos_sim)`` — not by float equality of recomputations, so
-    a last-ulp BLAS difference straddling a 1e-6 boundary cannot leave
-    duplicate pair rows (round-12 ADVICE). Null or dimension-mismatched
-    embeddings drop per the SQL cosine's NULL contract
-    (``_valid_length_groups``).
+    (``_tile_cosines``) scores every pair of the row; join machinery per
+    candidate would dwarf the dot-product FLOPs. A pair sharing several
+    bands is deduped by PAIR IDENTITY — ``max(cos_sim)`` per ``(vec_a,
+    vec_b)``, the canonical dedup for tiled recomputes — not by float
+    equality, so a last-ulp BLAS difference between tile shapes
+    straddling a 1e-6 boundary cannot leave duplicate pair rows. Null,
+    dimension-mismatched and NaN embeddings drop per the SQL cosine's
+    NULL contract (``_valid_length_groups``).
     """
     bands = _band_rows(lsh_signatures(spark, sf_dir))
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1036,7 +1106,6 @@ def label_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 KNN_K = 3
-KNN_BLOCK = 256
 
 
 def knn_graph(
@@ -1050,24 +1119,19 @@ def knn_graph(
     semantic dedup clustering, label propagation, and diversity sampling.
 
     Two-level top-k so the all-pairs surface never materializes: vectors
-    group into fixed blocks; each (block_a, block_b) TILE computes a
-    B x B cosine matrix with one numpy matmul in ``mapInPandas`` and
-    emits only each row's k best IN THAT TILE (per-node candidates:
-    k * n/B, not n); the global window then keeps the true top-k — a
-    per-tile winner set provably contains every global winner. Shuffle
-    volume drops from O(n²) scored pairs to O(n²k/B). At 100 TB swap the
-    tile cross-join for the LSH candidate join — implemented as
+    group into fixed blocks (``_block_rows``); each block row is scored
+    with one matmul (``_tile_cosines``, both directions of a cross row
+    from the same product) and emits only each member's k best IN THAT
+    BLOCK (per-node candidates: k * n/B, not n); the global window then
+    keeps the true top-k — a per-block winner set provably contains
+    every global winner. Shuffle volume drops from O(n²) scored pairs to
+    O(n²k/B). At 100 TB swap the blocks for LSH buckets — implemented as
     ``knn_graph_ann``, with ``knn_ann_recall`` measuring the trade.
     Still quadratic by design: ``max_rows`` refuses inputs past the
-    exact-path cap with a pointer to the ANN twin.
+    exact-path cap with a pointer to the ANN twin. Null, dimension-
+    mismatched and NaN embeddings have no edges (the SQL cosine's NULL
+    contract).
     """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.window import Window
-
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     guard_exact_quadratic(
         e,
@@ -1075,126 +1139,48 @@ def knn_graph(
         twin="similarity.knn_graph_ann",
         max_rows=max_rows,
     )
-    blocks = e.groupBy(
-        (F.col("vec_id") / KNN_BLOCK).cast("long").alias("blk")
-    ).agg(F.collect_list(F.struct("vec_id", "embedding")).alias("vecs"))
-    a = blocks.select(F.col("blk").alias("blk_a"), F.col("vecs").alias("vecs_a"))
-    b = blocks.select(F.col("blk").alias("blk_b"), F.col("vecs").alias("vecs_b"))
-    tiles = a.crossJoin(b)
-
-    out_schema = "vec_a long, vec_b long, cos_sim double"
-
-    def tile_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def unpack(cell):
-            ids = np.array([v["vec_id"] for v in cell], dtype="int64")
-            mat = np.stack([v["embedding"] for v in cell]).astype("float64")
-            return ids, mat, np.linalg.norm(mat, axis=1)
-
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                ids_a, mat_a, nrm_a = unpack(row["vecs_a"])
-                ids_b, mat_b, nrm_b = unpack(row["vecs_b"])
-                # unnormalized dot / norm outer product, then
-                # floor(x*1e6 + 0.5)/1e6 — the oracle's dot/(|a|·|b|)
-                # sequence op for op, pair value independent of tile shape
-                sims = (
-                    np.floor((mat_a @ mat_b.T) / np.outer(nrm_a, nrm_b) * 1e6 + 0.5)
-                    / 1e6
-                )
-                # exclude self-edges on the diagonal tile
-                self_mask = ids_a[:, None] == ids_b[None, :]
-                sims[self_mask] = -np.inf
-                # per-row k best in this tile by (cos desc, vec_b asc)
-                order = np.lexsort((ids_b[None, :].repeat(len(ids_a), 0), -sims), axis=1)
-                take = order[:, : min(k, order.shape[1])]
-                n_a, n_k = take.shape
-                va = ids_a.repeat(n_k)
-                vb = ids_b[take.ravel()]
-                cs = sims[np.arange(n_a).repeat(n_k), take.ravel()]
-                keep = np.isfinite(cs)
-                yield pd.DataFrame(
-                    {"vec_a": va[keep], "vec_b": vb[keep], "cos_sim": cs[keep]}
-                )
-
-    cand = tiles.mapInPandas(tile_topk, out_schema)
-    w = Window.partitionBy("vec_a").orderBy(F.desc("cos_sim"), F.asc("vec_b"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("vec_a", "vec_b", "cos_sim", "rank")
+    cand = _block_rows(e).mapInPandas(
+        _topk_tile_kernel(k), "vec_a long, vec_b long, cos_sim double"
     )
+    return _rank_top_k(cand, k)
 
 
 def knn_graph_ann(
     spark: SparkSession, sf_dir: str, k: int = KNN_K
 ) -> DataFrame:
     """ANN k-NN graph: the candidate-join swap ``knn_graph``'s docstring
-    promises — LSH band buckets replace the O((n/B)²) tile cross-join,
-    the per-node top-k composition is unchanged.
+    promises — LSH band buckets replace the exact blocks, the per-node
+    top-k composition is unchanged.
 
     Candidates are all ordered pairs sharing at least one signature band
-    (both directions — the graph is asymmetric), scored per BUCKET with
-    one matmul (the same bucket-as-tile kernel as ``lsh_bucket_pairs``
-    — per-pair joins cost ~4x the tiles at sf0.1); each bucket emits
-    every member's k best IN THAT BUCKET (a per-bucket winner set
-    provably contains every global winner), the cross-band ``distinct``
-    dedupes bit-identical recomputes, and one window keeps each node's
-    global k best. Nodes whose buckets are singletons simply have no
-    edges — the recall metric (``knn_ann_recall``) prices that in. The
-    pair surface is the sum of squared bucket occupancies: tune
-    BAND_BITS/N_BANDS, not the plan.
+    (both directions — the graph is asymmetric), scored per BUCKET-TILE
+    with the same bucket-as-tile rows and kernel as ``lsh_bucket_pairs``
+    (``_tiled_bucket_rows`` + ``_tile_cosines``: task size bounded by
+    ``BUCKET_TILE_CAP`` however hot a band value gets); each tile block
+    emits every member's k best IN THAT BLOCK (a per-block winner set
+    provably contains every global winner), a pair scored in several
+    bands is deduped by PAIR IDENTITY — ``max(cos_sim)`` per ``(vec_a,
+    vec_b)``, the canonical dedup for tiled recomputes — and one window
+    keeps each node's global k best. Nodes whose buckets are singletons
+    simply have no edges — the recall metric (``knn_ann_recall``)
+    prices that in. The pair surface is the sum of squared bucket
+    occupancies: tune BAND_BITS/N_BANDS, not the plan.
     """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.window import Window
-
     bands = _band_rows(lsh_signatures(spark, sf_dir))
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    buckets = (
-        bands.join(e, "vec_id")
-        .groupBy("band_idx", "band_val")
-        .agg(F.collect_list(F.struct("vec_id", "embedding")).alias("vecs"))
-        .where(F.size("vecs") >= 2)
+    rows = _tiled_bucket_rows(
+        bands.join(e, "vec_id"),
+        key_cols=["band_idx", "band_val"],
+        payload_cols=["vec_id", "embedding"],
     )
-
-    out_schema = "vec_a long, vec_b long, cos_sim double"
-
-    def bucket_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for cell in pdf["vecs"]:
-                ids = np.array([v["vec_id"] for v in cell], dtype="int64")
-                mat = np.stack([v["embedding"] for v in cell]).astype("float64")
-                # unnormalized dot / norm outer product: same IEEE sequence
-                # as the oracle AND as lsh_bucket_pairs, so a pair's cosine
-                # is identical in every bucket that scores it (the cross-
-                # band distinct depends on that)
-                nrm = np.linalg.norm(mat, axis=1)
-                sims = np.floor((mat @ mat.T) / np.outer(nrm, nrm) * 1e6 + 0.5) / 1e6
-                np.fill_diagonal(sims, -np.inf)
-                # per-row k best in this bucket by (cos desc, vec_b asc)
-                order = np.lexsort(
-                    (ids[None, :].repeat(len(ids), 0), -sims), axis=1
-                )
-                take = order[:, : min(k, order.shape[1])]
-                n_a, n_k = take.shape
-                va = ids.repeat(n_k)
-                vb = ids[take.ravel()]
-                cs = sims[np.arange(n_a).repeat(n_k), take.ravel()]
-                keep = np.isfinite(cs)
-                yield pd.DataFrame(
-                    {"vec_a": va[keep], "vec_b": vb[keep], "cos_sim": cs[keep]}
-                )
-
-    cand = buckets.mapInPandas(bucket_topk, out_schema).distinct()
-    w = Window.partitionBy("vec_a").orderBy(F.desc("cos_sim"), F.asc("vec_b"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("vec_a", "vec_b", "cos_sim", "rank")
+    cand = (
+        rows.mapInPandas(
+            _topk_tile_kernel(k), "vec_a long, vec_b long, cos_sim double"
+        )
+        .groupBy("vec_a", "vec_b")
+        .agg(F.max("cos_sim").alias("cos_sim"))
     )
+    return _rank_top_k(cand, k)
 
 
 def knn_ann_recall(

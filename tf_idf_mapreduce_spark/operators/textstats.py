@@ -781,41 +781,19 @@ def bpe_merge_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: becoming one side of a later pair, e.g. 'p'+'ar' after 'a'+'r').
 BPE_TRAIN_MERGES = 8
 
-def _bpe_apply_merge(syms: Column, left: str, right: str, merged: str) -> Column:
-    """Greedy left-to-right non-overlapping application of ONE merge rule
-    to a symbol array, as a pure JVM fold (``F.aggregate``): push each
-    symbol; if the top of the accumulator is ``left`` and the incoming
-    symbol is ``right``, replace the top with ``merged``. This fold is
-    EXACTLY the greedy scan (merge at i consumes i+1): within one round
-    the freshly merged symbol can never re-merge as a left side, because
-    ``merged = left||right != left`` (right is non-empty) — pinned by the
-    'aaa' property test.
-    """
-    return F.aggregate(
-        syms,
-        F.expr("cast(array() as array<string>)"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(left))
-            & (s == F.lit(right)),
-            F.concat(
-                F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(F.lit(merged))
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
 
 def _bpe_apply_chain_udf(merge_rules: list[tuple[str, str, str]]):
-    """Arrow-batched twin of CHAINED ``_bpe_apply_merge`` folds: apply
-    the rules in order, each with the same greedy left-to-right
-    non-overlapping scan, one Python pass per symbol array instead of K
-    nested interpreted ``aggregate`` folds that rebuild the accumulator
-    array per element (O(K·len) vs O(K·len²) allocations, and Arrow
-    batches instead of per-element expression interpretation — guide
-    §4.2). Pure string equality/concat — exact by construction; pinned
-    against the fold by ``test_bpe_apply_chain_udf_matches_fold``. The
-    per-word symbol SPLIT stays JVM-side (``substr`` semantics are the
-    engine's own), so this twin only replaces the merge scan."""
+    """Apply BPE merge rules in order to symbol arrays, each rule as a
+    greedy left-to-right non-overlapping scan (merge at i consumes i+1;
+    a freshly merged symbol never re-merges as a left side within its
+    round, since ``merged = left||right != left``), one Python pass per
+    symbol array in Arrow batches (O(K·len) allocations, where chained
+    ``aggregate`` folds rebuild the accumulator per element). Pure
+    string equality/concat — exact by construction; pinned against the
+    column-form fold kept in ``tests/test_textstats_extra.py`` by
+    ``test_bpe_apply_chain_udf_matches_fold``. The per-word symbol SPLIT
+    stays JVM-side (``substr`` semantics are the engine's own), so this
+    only replaces the merge scan."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, StringType
