@@ -1586,8 +1586,8 @@ def probe_stream_merge(spark: SparkSession, quick: bool) -> None:
     """
     import tempfile
 
+    from tf_idf_mapreduce_spark.sources.index_root import manifest_versions
     from tf_idf_mapreduce_spark.streaming.queries import (
-        _index_manifest_versions,
         make_index_merge,
         read_merged_index,
     )
@@ -1686,7 +1686,7 @@ def probe_stream_merge(spark: SparkSession, quick: bool) -> None:
         segs = len([x for x in os.listdir(root) if x.startswith("seg_v")])
         mani = len(os.listdir(os.path.join(root, "manifest")))
         t_serve = _timed(read_merged_index(spark, root))
-        committed = _index_manifest_versions(root)
+        committed = manifest_versions(root)
         assert max(committed) == n_batches - 1
         emit(
             f"| {n_docs:,} | {n_batches} | {ce} "
@@ -1859,8 +1859,8 @@ def probe_takedown_overlay(spark: SparkSession, quick: bool) -> None:
       ledger-as-broadcast stops being the right tool and an offline
       segments+df/N rewrite starts (the docstring's documented split).
     """
+    from tf_idf_mapreduce_spark.sources.index_root import add_tombstones
     from tf_idf_mapreduce_spark.streaming.queries import (
-        add_tombstones,
         make_index_merge,
         read_merged_index,
     )

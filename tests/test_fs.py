@@ -10,6 +10,7 @@ takes on a real cluster, minus only the store's network."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 
@@ -58,6 +59,16 @@ def test_put_read_list_delete_roundtrip(spark, tmp_path, branch):
     assert fs.list_names(fs.join(root, "manifest"), spark) == ["v0"]
     assert fs.list_names(fs.join(root, "absent"), spark) == []
     assert fs.read_text(fs.join(root, "absent", "x"), spark) is None
+    # bytes (driver-written frames) and the status listing (store audits)
+    fs.write_bytes(fs.join(root, "frame"), b"\x00frame", spark)
+    assert fs.read_bytes(fs.join(root, "frame"), spark) == b"\x00frame"
+    assert fs.read_bytes(fs.join(root, "absent"), spark) is None
+    status = {n: (d, m) for n, d, m in fs.list_status(root, spark)}
+    assert {n: d for n, (d, _m) in status.items()} == {
+        "manifest": True, "frame": False,
+    }
+    assert abs(status["frame"][1] - time.time()) < 600
+    assert fs.list_status(fs.join(root, "absent"), spark) == []
     # recursive delete of the prefix
     fs.delete_recursive(fs.join(root, "manifest"), spark)
     assert not fs.exists(fs.join(root, "manifest"), spark)
@@ -120,24 +131,100 @@ def test_no_directory_renames_in_protocol(tmp_path, monkeypatch):
     assert not fs.exists(root)
 
 
-def test_verify_and_reap_reject_remote_roots(spark, tmp_path):
-    """A remote store root must RAISE from verify/reap, not audit as an
-    empty store (round-11 review finding): os.listdir on 'hdfs://...'
-    would silently report zero artifacts with exit 0. file:// roots are
-    local mounts and audit fine."""
-    import pytest as _pytest
+def test_verify_store_audits_schemed_roots(spark, tmp_path, monkeypatch):
+    """verify/reap walk a schemed store root through the Hadoop branch
+    and report its real artifacts; a root whose scheme no FileSystem
+    serves RAISES, never audits as an empty store (the round-11 review
+    finding: an unreadable root must not read as "nothing here")."""
+    import pandas as pd
 
     from tf_idf_mapreduce_spark.sources.model_store import (
+        load_or_fit_pdf,
         reap_store,
         verify_store,
     )
 
-    with _pytest.raises(ValueError, match="remote store root"):
-        verify_store(root="hdfs://nn/models")
-    with _pytest.raises(ValueError, match="remote store root"):
-        reap_store(root="s3a://bucket/models")
-    rep = verify_store(root=f"file://{tmp_path}")
-    assert rep["artifacts"] == []  # empty local dir, not an error
+    root = f"file://{tmp_path}/models"
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", root)
+    load_or_fit_pdf("aud_pdf", ("k",), lambda: pd.DataFrame({"x": [1]}), spark)
+    load_or_fit_pdf("aud_pdf", ("k2",), lambda: pd.DataFrame({"x": [2]}), spark)
+    fs.write_bytes(fs.join(root, "aud_orphan", "k3", "data-x.parquet"), b"x", spark)
+    rep = verify_store(spark, root=root)
+    assert rep["root"] == root
+    assert sorted((a["family"], a["state"]) for a in rep["artifacts"]) == [
+        ("aud_orphan", "orphaned"), ("aud_pdf", "live"), ("aud_pdf", "live"),
+    ]
+    assert rep["reap_candidates"] == []
+    assert reap_store(spark, root=root, min_age_sec=0) == []
+    for verb in (verify_store, reap_store):
+        with pytest.raises(Exception, match="nosuch"):
+            verb(spark, root="nosuch://x/models")
+
+
+@pytest.mark.parametrize("branch", ["local", "hadoop"])
+def test_commit_text_creates_keeps_valid_heals_torn(spark, tmp_path, branch):
+    """The one commit step under both versioned layouts: an absent
+    record is created; a valid existing record wins over a later
+    writer; a torn (empty) record is healed by overwrite."""
+    root = dict(_roots(tmp_path, spark))[branch]
+    path = fs.join(root, "_CURRENT")
+
+    def valid(text):
+        return text.startswith("v-")
+
+    assert fs.commit_text(path, "v-a", valid, spark) == "v-a"
+    assert fs.commit_text(path, "v-b", valid, spark) == "v-a"
+    assert fs.read_text(path, spark) == "v-a"
+    fs.put_text_atomic(path, "", spark)  # a crash tore the record
+    assert fs.commit_text(path, "v-c", valid, spark) == "v-c"
+    assert fs.read_text(path, spark) == "v-c"
+
+
+def test_versioned_state_io_goes_through_fs():
+    """Each concept once: the model store and the index-root protocol do
+    no file I/O of their own — every file operation is a ``sources.fs``
+    call — and no module under ``sources/`` imports from ``streaming/``
+    or ``operators/`` (the protocol sits below its callers)."""
+    import ast
+    from pathlib import Path
+
+    import tf_idf_mapreduce_spark
+
+    src = Path(tf_idf_mapreduce_spark.__file__).parent / "sources"
+    not_io = {"os.environ.get", "os.getcwd", "os.path.abspath", "os.path.normpath"}
+    io_calls = []
+    for name in ("model_store.py", "index_root.py"):
+        for node in ast.walk(ast.parse((src / name).read_text())):
+            if isinstance(node, ast.Call):
+                fn = ast.unparse(node.func)
+                if fn == "open" or (
+                    fn.split(".")[0] in ("os", "shutil") and fn not in not_io
+                ):
+                    io_calls.append(f"{name}:{node.lineno} {fn}")
+    assert io_calls == []
+
+    upward = []
+    for path in sorted(src.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom):
+                # resolve a relative import against tf_idf_mapreduce_spark.sources
+                pkg = ["tf_idf_mapreduce_spark", "sources"][: 3 - node.level]
+                base = ".".join(pkg if node.level else [])
+                if node.module:
+                    mods = [f"{base}.{node.module}".lstrip(".")]
+                else:
+                    mods = [f"{base}.{a.name}" for a in node.names]
+            elif isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            else:
+                continue
+            for mod in mods:
+                if mod.startswith(
+                    ("tf_idf_mapreduce_spark.streaming",
+                     "tf_idf_mapreduce_spark.operators")
+                ):
+                    upward.append(f"{path.name}:{node.lineno} {mod}")
+    assert upward == []
 
 
 # ---------------------------------------------------------------------------

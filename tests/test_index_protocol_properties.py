@@ -93,11 +93,13 @@ def test_merge_protocol_survives_crash_schedules(
     spark, tmp_path_factory, corpus_and_expected, compact_every, crashes
 ):
     from tf_idf_mapreduce_spark.sources import fs
+    from tf_idf_mapreduce_spark.sources.index_root import (
+        manifest_versions,
+        verify_index_root,
+    )
     from tf_idf_mapreduce_spark.streaming.queries import (
-        _index_manifest_versions,
         make_index_merge,
         read_merged_index,
-        verify_index_root,
     )
 
     slices, expected = corpus_and_expected
@@ -145,7 +147,7 @@ def test_merge_protocol_survives_crash_schedules(
                 fs.delete_recursive = real_delete
         merge(slices[bid], bid)  # the replay (or the only attempt)
 
-    committed = _index_manifest_versions(root)
+    committed = manifest_versions(root)
     assert max(committed) == 3
     for v, meta in committed.items():
         assert json.dumps(meta)  # every surviving entry is valid JSON
@@ -182,11 +184,13 @@ def test_compact_every_one_never_orphans_dfn(spark, tmp_path):
     consistent, so the audit never sees an orphan at ANY point of the
     drain — only live/retained/partial, all by-design states."""
     from tf_idf_mapreduce_spark.sources import fs
+    from tf_idf_mapreduce_spark.sources.index_root import (
+        manifest_versions,
+        verify_index_root,
+    )
     from tf_idf_mapreduce_spark.streaming.queries import (
-        _index_manifest_versions,
         make_index_merge,
         read_merged_index,
-        verify_index_root,
     )
 
     docs = spark.createDataFrame(
@@ -204,7 +208,7 @@ def test_compact_every_one_never_orphans_dfn(spark, tmp_path):
         assert rep["orphans"] == [], (
             f"batch {b}: df/N dirs outlived their manifest entries"
         )
-    committed = _index_manifest_versions(root)
+    committed = manifest_versions(root)
     # the grace df/N generation (the newest version's parent) keeps its
     # manifest entry for as long as its dirs may exist
     assert {5, 4} <= set(committed)

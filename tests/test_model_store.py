@@ -479,10 +479,7 @@ def test_pdf_store_concurrent_writers_one_artifact_no_torn_reads(tmp_path):
 
     import pandas as pd
 
-    from tf_idf_mapreduce_spark.sources.model_store import (
-        CURRENT_MARKER,
-        _live_pdf_path,
-    )
+    from tf_idf_mapreduce_spark.sources.model_store import CURRENT_MARKER, _live
 
     root = str(tmp_path / "race_models")
     ctx = mp.get_context("spawn")
@@ -494,7 +491,7 @@ def test_pdf_store_concurrent_writers_one_artifact_no_torn_reads(tmp_path):
     files = sorted(f for f in os.listdir(d) if not f.startswith("."))
     data_files = [f for f in files if f.endswith(".parquet")]
     assert CURRENT_MARKER in files and len(data_files) == 1
-    live = _live_pdf_path(d)
+    live = _live(d)
     assert live == os.path.join(d, data_files[0])  # manifest names it
     stored = pd.read_parquet(live)
     assert len(stored) == 5000 and stored["writer"].nunique() == 1
@@ -1122,3 +1119,63 @@ def test_cli_verify_reap_remote_root_exits_2(capsys, monkeypatch):
         captured = capsys.readouterr()
         assert rc == 2
         assert captured.err.strip()
+
+
+def test_store_on_schemed_root(spark, sf_dir, tmp_path, monkeypatch, capsys):
+    """The model store on a ``file://`` root, which forces every store
+    file operation through the Hadoop ``FileSystem`` branch of
+    ``sources.fs`` — the code path an ``hdfs://`` or ``s3a://`` root
+    takes, minus only the network. ``tfidf_incremental_persisted`` runs
+    cold then warm (the warm run writes nothing: its index is served
+    from the store), the promoted chain runs through ``CHAIN_DAYS``, and
+    ``models verify``/``reap``/``prune`` run through the CLI. The
+    served rows equal the same queries on a bare local root."""
+    import __spark_entry__ as entrymod
+
+    from tf_idf_mapreduce_spark.cli import main
+    from tf_idf_mapreduce_spark.operators.tfidf import persisted_index
+    from tf_idf_mapreduce_spark.sources import model_store
+    from tf_idf_mapreduce_spark.sources.model_store import MODEL_STORE_CONF
+
+    qs = entrymod.queries()
+    names = ("tfidf_incremental_persisted", "tfidf_incremental_chain_persisted")
+
+    def serve(root):
+        spark.conf.set(MODEL_STORE_CONF, root)
+        try:
+            return [sorted(map(tuple, qs[q](spark, sf_dir).collect())) for q in names]
+        finally:
+            spark.conf.unset(MODEL_STORE_CONF)
+
+    local = serve(str(tmp_path / "local"))
+    root = f"file://{tmp_path}/store"
+    assert serve(root) == local and all(local)  # cold: fits and writes
+    assert "tfidf_index_postings" in os.listdir(tmp_path / "store")
+
+    def no_write(*a, **k):
+        raise AssertionError("warm run wrote to the store")
+
+    monkeypatch.setattr(model_store, "_stage", no_write)
+    assert serve(root) == local  # warm: every table loads
+    spark.conf.set(MODEL_STORE_CONF, root)
+    try:
+        assert persisted_index(spark, sf_dir)[3] == "store"
+    finally:
+        spark.conf.unset(MODEL_STORE_CONF)
+    monkeypatch.undo()
+
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", root)
+    assert main(["models", "verify", "--root", root]) == 0
+    summary = capsys.readouterr().out.splitlines()[-1]
+    n = int(summary.split()[0])
+    assert n > 0
+    assert summary == (
+        f"{n} artifact(s) under {root}: {n} live, 0 legacy, 0 torn, "
+        "0 orphaned, 0 empty; 0 reap candidate(s)"
+    )
+    assert main(["models", "reap", "--root", root]) == 0
+    assert "reaped 0 unreachable" in capsys.readouterr().out
+    assert main(["models", "prune", "--root", root, "--max-age-days", "0"]) == 0
+    assert f"pruned {n} artifact(s)" in capsys.readouterr().out
+    assert main(["models", "verify", "--root", root]) == 0
+    assert capsys.readouterr().out.splitlines()[-1].startswith("0 artifact(s)")

@@ -506,6 +506,30 @@ def test_chain_fold_reads_index_tables(spark):
     assert "tfidf_index_df" in plan
 
 
+def test_chain_fold_merges_df_once(spark):
+    """The two-day chain merges df twice — one full-outer join per day —
+    and ``score`` joins the merged df under each of its three segment
+    joins. Materialized once, the merge runs its 2 full-outer joins
+    once; re-planned per segment join, it ran 4. Counted over the final
+    plan of every SQL execution the query's build and action ran."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    entrymod.queries()["tfidf_incremental_chain"](spark, SF).count()  # warm
+
+    def last_id():
+        execs = store.executionsList()
+        return execs.apply(execs.size() - 1).executionId()
+
+    first = last_id() + 1
+    entrymod.queries()["tfidf_incremental_chain"](spark, SF).collect()
+    full_outer = 0
+    for eid in range(first, last_id() + 1):
+        nodes = store.planGraph(eid).allNodes()
+        full_outer += sum(
+            "FullOuter" in nodes.apply(i).desc() for i in range(nodes.size())
+        )
+    assert full_outer == 2
+
+
 def test_ivf_incremental_no_cartesian(spark):
     plan = _plan(spark, "sim_ivf_incremental")
     assert "CartesianProduct" not in plan

@@ -7,6 +7,7 @@ from pyspark.sql.window import Window
 
 from tf_idf_mapreduce_spark.functions.hashing import norm_words
 from tf_idf_mapreduce_spark.operators import events as ev
+from tf_idf_mapreduce_spark.sources import index_root as ir
 from tf_idf_mapreduce_spark.sources.io import load_table
 from tf_idf_mapreduce_spark.streaming import queries as st
 
@@ -673,8 +674,8 @@ def test_stream_index_merge_exactly_once_across_kill(spark, sf_dir, tmp_path):
     data writes) makes a replayed batch idempotent — the final served
     index must equal the batch tfidf_full relation exactly: a replayed
     merge would double df/N, a lost one would drop a segment."""
+    from tf_idf_mapreduce_spark.sources.index_root import manifest_versions
     from tf_idf_mapreduce_spark.streaming.queries import (
-        _index_manifest_versions,
         make_index_merge,
         read_merged_index,
     )
@@ -704,7 +705,7 @@ def test_stream_index_merge_exactly_once_across_kill(spark, sf_dir, tmp_path):
     q2 = start()
     assert q2.awaitTermination(300)
 
-    committed = _index_manifest_versions(root)
+    committed = manifest_versions(root)
     assert len(committed) == 8  # every batch committed exactly one version
     cols = ["word", "doc", "count", "doc_total", "df", "tfidf"]
     import __spark_entry__ as entrymod
@@ -723,9 +724,11 @@ def test_stream_index_merge_compaction_bounds_segments(spark, sf_dir, tmp_path):
     folded chain (3..6) survives as the new grace set; manifest entries
     below the newest base are pruned. The served index still equals
     batch tfidf_full."""
+    from tf_idf_mapreduce_spark.sources.index_root import (
+        manifest_versions,
+        segment_chain,
+    )
     from tf_idf_mapreduce_spark.streaming.queries import (
-        _index_manifest_versions,
-        _segment_chain,
         make_index_merge,
         read_merged_index,
     )
@@ -755,10 +758,10 @@ def test_stream_index_merge_compaction_bounds_segments(spark, sf_dir, tmp_path):
     q2 = start()
     assert q2.awaitTermination(300)
 
-    committed = _index_manifest_versions(root)
+    committed = manifest_versions(root)
     # batch 7's sweep pruned manifest entries below the first base (3)
     assert set(committed) == {3, 4, 5, 6, 7}
-    chain = _segment_chain(committed, max(committed))
+    chain = segment_chain(committed, max(committed))
     assert len(chain) <= 4  # bounded by compact_every
     assert committed[7].get("base")  # batch 7 compacted (7 % 4 == 3)
     # segments folded by the FIRST compaction (0..2) were swept at the
@@ -790,8 +793,8 @@ def test_stream_index_merge_against_schemed_root(spark, sf_dir, tmp_path):
     ``hdfs://``/``s3a://`` root takes. The served index must still equal
     batch tfidf_full."""
     from tf_idf_mapreduce_spark.sources import fs
+    from tf_idf_mapreduce_spark.sources.index_root import manifest_versions
     from tf_idf_mapreduce_spark.streaming.queries import (
-        _index_manifest_versions,
         make_index_merge,
         read_merged_index,
     )
@@ -816,7 +819,7 @@ def test_stream_index_merge_against_schemed_root(spark, sf_dir, tmp_path):
     )
     assert q.awaitTermination(300)
 
-    committed = _index_manifest_versions(root, spark)
+    committed = manifest_versions(root, spark)
     assert set(committed) == {0, 1, 2, 3}
     assert committed[2].get("base")  # 2 % 3 == 2 -> compacted
     # the manifest really lives under the schemed root
@@ -892,8 +895,8 @@ def test_stream_index_merge_sweep_heals_orphans(spark, sf_dir, tmp_path):
     is intact, and the served index is unchanged."""
     import os as _os
 
+    from tf_idf_mapreduce_spark.sources.index_root import manifest_versions
     from tf_idf_mapreduce_spark.streaming.queries import (
-        _index_manifest_versions,
         make_index_merge,
         read_merged_index,
     )
@@ -930,7 +933,7 @@ def test_stream_index_merge_sweep_heals_orphans(spark, sf_dir, tmp_path):
     )
     assert q.awaitTermination(300)
 
-    committed = _index_manifest_versions(root)
+    committed = manifest_versions(root)
     assert committed[7].get("base")
     # batch 7's sweep reaped the planted orphans (ids not committed and
     # below the batch id) along with the expired grace generation
@@ -1011,7 +1014,7 @@ def test_verify_index_root_classifies_versions(tmp_path, capsys):
     import os
 
     from tf_idf_mapreduce_spark.cli import main
-    from tf_idf_mapreduce_spark.streaming.queries import verify_index_root
+    from tf_idf_mapreduce_spark.sources.index_root import verify_index_root
 
     root = str(tmp_path / "idx")
     os.makedirs(os.path.join(root, "manifest"))
@@ -1071,8 +1074,8 @@ def test_index_merge_heals_torn_manifest_commit(spark, sf_dir, tmp_path):
     import json
     import os
 
+    from tf_idf_mapreduce_spark.sources.index_root import manifest_versions
     from tf_idf_mapreduce_spark.streaming.queries import (
-        _index_manifest_versions,
         make_index_merge,
         read_merged_index,
     )
@@ -1088,7 +1091,7 @@ def test_index_merge_heals_torn_manifest_commit(spark, sf_dir, tmp_path):
         f.write('{"par')
     open(os.path.join(root, "manifest", "v1"), "w").close()
     # the torn entries read as absent, not as an error
-    assert _index_manifest_versions(root) == {}
+    assert manifest_versions(root) == {}
 
     src = (
         spark.readStream.schema(docs.schema)
@@ -1104,7 +1107,7 @@ def test_index_merge_heals_torn_manifest_commit(spark, sf_dir, tmp_path):
     )
     assert q.awaitTermination(300)
 
-    committed = _index_manifest_versions(root)
+    committed = manifest_versions(root)
     assert set(committed) == {0, 1, 2, 3}  # torn entries healed in place
     for v in (0, 1):
         meta = json.load(open(os.path.join(root, "manifest", f"v{v}")))
@@ -1206,7 +1209,7 @@ def test_stream_index_n_rides_the_manifest(spark, sf_dir, monkeypatch):
     assert entrymod.queries()["stream_tfidf_index_merge"](spark, sf_dir).count()
     (root,) = roots
     assert not [n for n in _os.listdir(root) if n.startswith("n_v")]
-    committed = st._index_manifest_versions(root)
+    committed = ir.manifest_versions(root)
     assert committed
     for v, meta in committed.items():
         assert meta["n"] == sum(c for b, c in batch_docs.items() if b <= v)
@@ -1221,7 +1224,7 @@ def test_gc_index_root_policies(tmp_path, capsys):
     import os
 
     from tf_idf_mapreduce_spark.cli import main
-    from tf_idf_mapreduce_spark.streaming.queries import gc_index_root
+    from tf_idf_mapreduce_spark.sources.index_root import gc_index_root
 
     def commit(root, v, parent, base=False):
         os.makedirs(os.path.join(root, "manifest"), exist_ok=True)
@@ -1389,8 +1392,8 @@ def test_index_takedown_overlay(spark, tmp_path):
     import json
     import os
 
+    from tf_idf_mapreduce_spark.sources.index_root import add_tombstones
     from tf_idf_mapreduce_spark.streaming.queries import (
-        add_tombstones,
         make_index_merge,
         read_merged_index,
     )
@@ -1512,7 +1515,7 @@ def test_index_takedown_overlay(spark, tmp_path):
     # the audit SEES the ledger (doc count) and lists the torn entry
     # and crashed staging files as reap candidates; gc deletes them
     # while committed entries survive
-    from tf_idf_mapreduce_spark.streaming.queries import (
+    from tf_idf_mapreduce_spark.sources.index_root import (
         gc_index_root,
         verify_index_root,
     )

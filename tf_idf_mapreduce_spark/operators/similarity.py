@@ -858,7 +858,7 @@ def _bump_quantizer_generation(spark: SparkSession, sf_dir: str) -> int:
     d = model_dir("ivf_generation", (sf_dir,), spark)
     if d is not None:
         try:
-            _mark_root(store_root(spark))
+            _mark_root(store_root(spark), spark)
             fs.makedirs(d, spark)
             # atomic single-file overwrite (scheme-dispatched: a plain
             # PUT on object stores — sources.fs, round-10 verdict #1)

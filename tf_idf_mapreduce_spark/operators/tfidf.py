@@ -354,10 +354,9 @@ def _version_n(spark, df_key: tuple, build) -> tuple:
     """``(N, origin)`` from the ``_N`` file inside the live version dir
     of the df table under ``df_key``. N lives in that version and goes
     with it, so it can never be paired with another version's df. A
-    missing or torn (unparseable) file is computed and written, first
-    writer wins, a torn one healed by overwrite as ``_promote`` heals a
-    torn marker; a disabled or read-only store serves the computed
-    int."""
+    missing or torn (unparseable) file is computed and committed with
+    ``fs.commit_text`` (first writer wins, a torn one healed by
+    overwrite); a disabled or read-only store serves the computed int."""
     from ..sources import fs
     from ..sources.model_store import live_table_dir
 
@@ -365,13 +364,14 @@ def _version_n(spark, df_key: tuple, build) -> tuple:
     if ver is None:
         return build(), "fit"
     path = fs.join(ver, N)
-    text = fs.read_text(path)
+    text = fs.read_text(path, spark)
     if text and text.strip().isdigit():
         return int(text), "store"
     n = build()
     try:
-        if not fs.put_text_exclusive(path, str(n)):
-            fs.put_text_atomic(path, str(n))
+        n = int(
+            fs.commit_text(path, str(n), lambda t: t.strip().isdigit(), spark)
+        )
     except OSError:
         return n, "fit"
     return n, "store"
@@ -401,8 +401,9 @@ def fold(state, corpus, put=in_plan) -> IndexState:
     ``put(part, build)`` decides how each part (``POSTINGS``, ``DF``,
     ``N``, in that order) is materialized from its ``build`` — lazy
     DataFrames for the first two, an int for N: ``in_plan``,
-    ``arrival``, ``_store_put`` (the model store) or the streamed
-    root's writer (``streaming.queries.make_index_merge``)."""
+    ``arrival``, ``_store_put`` (the model store) or a streamed index
+    root's writer (``streaming.queries.make_index_merge``, committing
+    through ``sources.index_root``)."""
     segments, old_df, old_n = state or ([], None, 0)
     postings = put(POSTINGS, lambda: doc_totals(word_count(tokenize(corpus()))))
 
@@ -615,7 +616,14 @@ def incremental_chain_index(spark, sf_dir: str) -> DataFrame:
             lambda day=day: documents_as_corpus(docs.where(is_batch & day)),
             arrival,
         )
-    return score(state)
+    # score joins the merged df under each of its three segment joins.
+    # Broadcast it once, with the tokenizer's non-empty-word constraint
+    # stated on it: the day segments carry that constraint and the
+    # stored base does not, so without it Catalyst infers a different
+    # filter under each join and re-plans both merges per distinct
+    # filter — two full-outer joins run twice
+    df = F.broadcast(state.df.where(F.col("word") != ""))
+    return score(state._replace(df=df))
 
 
 #: Days in the promoted chain — the batch slice splits into this many
@@ -661,8 +669,10 @@ def promoted_index(
     Each day is one ``fold`` whose ``put`` is the store writer
     (``_store_put``). The streamed index runs the same fold per
     micro-batch with plain parquet under its root as ``put``
-    (``streaming.queries.make_index_merge``), and both serve through
-    ``score``: two layouts and two commit protocols over one fold.
+    (``streaming.queries.make_index_merge``, its manifest protocol in
+    ``sources.index_root``), and both serve through ``score``: two
+    layouts, each with its own commit record, over one fold and one
+    commit step (``sources.fs.commit_text``).
 
     Version layout (all under the same two store families, so version
     keys age out via ``models prune`` like any stale artifact):
@@ -792,8 +802,7 @@ def compact_index(
 
     Returns a summary dict (files/segments before and after). Exposed as
     ``models compact`` in the CLI."""
-    import os as _os
-
+    from ..sources import fs
     from ..sources.io import load_table
     from ..sources.model_store import model_dir
     from .curation import SAMPLE_BUCKET_MAX, _sample_bucket
@@ -828,12 +837,10 @@ def compact_index(
         victims = []
         for k in range(1, upto_day + 1):
             victims += zip(INDEX_FAMILIES, _day_keys(key, n_days, k))
-        import shutil as _shutil
-
         for fam, vkey in victims:
             d = model_dir(fam, vkey, spark)
-            if d and _os.path.isdir(d):
-                _shutil.rmtree(d, ignore_errors=True)
+            if d and fs.exists(d, spark):
+                fs.delete_recursive(d, spark)
                 pruned += 1
     return {
         "compacted_through_day": upto_day,
@@ -847,21 +854,17 @@ def compact_index(
 def _index_file_count(spark, key: tuple) -> int:
     """Data-file count across the index families (bucket files
     only, not markers) — the flat-after-compaction pin's metric."""
-    import os as _os
-
-    from ..sources.model_store import store_root
+    from ..sources import fs
+    from ..sources.model_store import store_files, store_root
 
     root = store_root(spark)
     if root is None:
         return 0
-    total = 0
-    for fam in INDEX_FAMILIES:
-        famdir = _os.path.join(root, fam)
-        if not _os.path.isdir(famdir):
-            continue
-        for dp, _dn, fns in _os.walk(famdir):
-            total += sum(1 for f in fns if f.endswith(".parquet"))
-    return total
+    return sum(
+        name.endswith(".parquet")
+        for fam in INDEX_FAMILIES
+        for name, _mtime in store_files(fs.join(root, fam), spark)
+    )
 
 
 def incremental_chain_persisted(spark, sf_dir: str) -> DataFrame:

@@ -14,8 +14,15 @@ local disk, HDFS, AND object stores:
   see :func:`put_text_exclusive` for the exact per-branch guarantee;
 - **overwrite** of one small file (``os.replace`` via a tmp locally —
   invisible to readers — and a plain PUT remotely);
-- **list** the names under a prefix;
+- **list** the entries under a prefix (names, or names with their
+  directory flag and mtime);
 - **recursive delete** of a prefix.
+
+:func:`commit_text` composes the first two into the one commit step
+both versioned layouts use (the model store's ``_CURRENT`` pointer and
+a streamed index root's ``manifest/v{b}``). Driver-written frames ride
+:func:`read_bytes` / :func:`write_bytes`: pandas cannot open a schemed
+path without ``fsspec``.
 
 Deliberately ABSENT: directory rename. ``rename(dir)`` is the one
 primitive ``s3a://``-style roots cannot provide atomically, which is
@@ -94,6 +101,14 @@ def _is_java_exc(exc, *class_names: str) -> bool:
     return False
 
 
+def _write(fs, jpath, data: bytes, overwrite: bool) -> None:
+    out = fs.create(jpath, overwrite)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+
+
 def _remote_claim_exclusive(path: str, text: str, spark=None) -> bool:
     """The CLAIM half of the remote commit: ``FileSystem.create(path,
     overwrite=false)`` + write. True = this FS *believed* we created the
@@ -104,17 +119,13 @@ def _remote_claim_exclusive(path: str, text: str, spark=None) -> bool:
     prove the arbitration below it still holds."""
     fs, jpath, _ = _hadoop_fs(path, spark)
     try:
-        out = fs.create(jpath, False)
+        _write(fs, jpath, text.encode("utf-8"), False)
     except Exception as exc:  # noqa: BLE001 — py4j surface
         if _is_java_exc(
             exc, "FileAlreadyExistsException", "PathExistsException"
         ):
             return False
         raise
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
     return True
 
 
@@ -237,11 +248,7 @@ def put_text_atomic(path: str, text: str, spark=None) -> None:
     if _is_remote(path):
         fs, jpath, jvm = _hadoop_fs(path, spark)
         jtmp = jvm.org.apache.hadoop.fs.Path(f"{path}.tmp-{uuid.uuid4().hex}")
-        out = fs.create(jtmp, True)
-        try:
-            out.write(bytearray(text.encode("utf-8")))
-        finally:
-            out.close()
+        _write(fs, jtmp, text.encode("utf-8"), True)
         try:
             _remote_rename_overwrite(jvm, jtmp, jpath, spark)
         except Exception as exc:  # noqa: BLE001 — py4j surface
@@ -264,11 +271,7 @@ def put_text_atomic(path: str, text: str, spark=None) -> None:
                 "on a truncating FS)",
                 path,
             )
-            out = fs.create(jpath, True)
-            try:
-                out.write(bytearray(text.encode("utf-8")))
-            finally:
-                out.close()
+            _write(fs, jpath, text.encode("utf-8"), True)
             try:
                 fs.delete(jtmp, False)
             except Exception:  # noqa: BLE001
@@ -281,8 +284,27 @@ def put_text_atomic(path: str, text: str, spark=None) -> None:
     os.replace(tmp, path)
 
 
-def read_text(path: str, spark=None) -> str | None:
-    """The file's text, or None when ABSENT — and only when absent.
+def commit_text(path: str, text: str, valid, spark=None) -> str:
+    """Commit the small record ``path``: create it exclusively with
+    ``text``; if a record is already there and ``valid`` accepts its
+    text, that record wins; a torn or invalid one (a crash inside a
+    commit write, a pointer naming a missing version) is healed by
+    atomic overwrite. Returns the committed text — the caller's own
+    ``text`` unless another writer's record won. Every versioned layout
+    commits through here: a model-store artifact's ``_CURRENT``, a
+    store index version's ``_N`` and a streamed root's manifest
+    entries."""
+    if put_text_exclusive(path, text, spark):
+        return text
+    cur = read_text(path, spark)
+    if cur is not None and valid(cur):
+        return cur
+    put_text_atomic(path, text, spark)
+    return read_text(path, spark) or text
+
+
+def read_bytes(path: str, spark=None) -> bytes | None:
+    """The file's bytes, or None when ABSENT — and only when absent.
     A permission error or transient RPC failure RAISES: mapping it to
     None would make a misconfigured root read as "no committed
     version" (an empty index served instead of an error — round-11
@@ -298,13 +320,11 @@ def read_text(path: str, spark=None) -> str | None:
                 return None
             raise
         try:
-            return jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
+            return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
         finally:
             stream.close()
     try:
-        with open(_local(path)) as f:
+        with open(_local(path), "rb") as f:
             return f.read()
     except (FileNotFoundError, NotADirectoryError):
         # NotADirectoryError = a path COMPONENT is a file — the target
@@ -312,22 +332,63 @@ def read_text(path: str, spark=None) -> str | None:
         return None
 
 
+def read_text(path: str, spark=None) -> str | None:
+    """:func:`read_bytes` decoded as UTF-8."""
+    data = read_bytes(path, spark)
+    return None if data is None else data.decode("utf-8")
+
+
+def write_bytes(path: str, data: bytes, spark=None) -> None:
+    """Create or overwrite ``path`` with ``data`` — not atomic, so only
+    for files no reader resolves before a commit names them (a staged
+    version under a unique name)."""
+    if _is_remote(path):
+        fs, jpath, _ = _hadoop_fs(path, spark)
+        _write(fs, jpath, data, True)
+        return
+    with open(_local(path), "wb") as f:
+        f.write(data)
+
+
+def _list_remote(path: str, spark=None) -> list:
+    """The Hadoop ``FileStatus`` of each child of a schemed ``path``
+    ([] when absent — and only when absent)."""
+    fs, jpath, _ = _hadoop_fs(path, spark)
+    try:
+        return list(fs.listStatus(jpath))
+    except Exception as exc:  # noqa: BLE001 — py4j surface
+        if _is_java_exc(exc, "FileNotFoundException", "PathNotFoundException"):
+            return []
+        raise
+
+
 def list_names(path: str, spark=None) -> list[str]:
     """Child names under ``path`` ([] when absent — and only when
     absent; permission/RPC failures raise, same rationale as
-    :func:`read_text`)."""
+    :func:`read_bytes`)."""
     if _is_remote(path):
-        fs, jpath, _ = _hadoop_fs(path, spark)
-        try:
-            return [st.getPath().getName() for st in fs.listStatus(jpath)]
-        except Exception as exc:  # noqa: BLE001 — py4j surface
-            if _is_java_exc(
-                exc, "FileNotFoundException", "PathNotFoundException"
-            ):
-                return []
-            raise
+        return [st.getPath().getName() for st in _list_remote(path, spark)]
     try:
         return os.listdir(_local(path))
+    except (FileNotFoundError, NotADirectoryError):
+        return []
+
+
+def list_status(path: str, spark=None) -> list[tuple[str, bool, float]]:
+    """``(name, is_dir, mtime)`` of each child of ``path``, mtime in
+    epoch seconds ([] when absent, as :func:`list_names`)."""
+    if _is_remote(path):
+        return [
+            (
+                st.getPath().getName(),
+                bool(st.isDirectory()),
+                st.getModificationTime() / 1000.0,
+            )
+            for st in _list_remote(path, spark)
+        ]
+    try:
+        with os.scandir(_local(path)) as it:
+            return [(e.name, e.is_dir(), e.stat().st_mtime) for e in it]
     except (FileNotFoundError, NotADirectoryError):
         return []
 

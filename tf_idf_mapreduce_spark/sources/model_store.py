@@ -3,21 +3,25 @@
 Production shape: an index/model is FIT once, WRITTEN once, and LOADED by
 every consumer — the reference's own pattern of persisting each stage's
 output directory before the next job reads it (TfidfMapReduce.java:63-66),
-applied to model state instead of relations. The process-lifetime dict
-caches remain the L1 fast path within one session; this store is the L2
-that survives the process, so a "rider" query run in a FRESH session
-loads the owner's fit in milliseconds instead of silently re-paying it
-(the round-7 owner-rider accounting fragility).
+applied to model state instead of relations. ``sources.io.memo`` is the
+in-process L1 in front of it (``memo_fit`` puts a fit behind both under
+one family name); this store is the L2 that survives the process, so a
+"rider" query run in a FRESH session loads the owner's fit in
+milliseconds instead of silently re-paying it.
 
 Layout::
 
-    <store_root>/<model_name>/<key_hash>/data.parquet    (driver-written)
-    <store_root>/<model_name>/<key_hash>/                (spark-written)
+    <store_root>/<model_name>/<key_hash>/_CURRENT              (live pointer)
+    <store_root>/<model_name>/<key_hash>/data-<uuid>.parquet   (driver-written)
+    <store_root>/<model_name>/<key_hash>/v-<uuid>/             (spark-written)
 
 - ``store_root`` resolves, in order: spark conf
   ``spark.tf_idf_mapreduce.modelStore`` (empty string disables the store
   entirely — every call fits), env ``SPARK_GRAFT_MODEL_DIR``, then
   ``<spark.sql.warehouse.dir>/_models`` (Spark's own warehouse default).
+  A schemed root (``file://``, ``hdfs://``, ``s3a://``) is used exactly
+  as given; only Spark's bare ``file:/x`` warehouse form becomes the
+  local path ``/x``.
 - ``key_hash`` is the md5 of the full key tuple's repr — data
   fingerprints (file path + mtime + size), hyperparameters, and the
   partition conf. ANY change produces a new hash, so a regenerated
@@ -29,24 +33,25 @@ merge lists, weights) written driver-side with pandas/pyarrow — no Spark
 job — plus Spark-written relations (the SemDeDup disposition, the index
 tables).
 
-Commit protocol (round-9 verdict #5 — no directory renames anywhere):
-every write STAGES under a unique name inside the artifact directory
-(``data-<uuid>.parquet`` for driver-written frames, ``v-<uuid>/`` for
-Spark-written relations) and then PROMOTES it by creating the artifact's
-``_CURRENT`` manifest — a single small file naming the live version.
-Readers resolve ``_CURRENT`` first and only then touch data, so an
-artifact is visible either fully or not at all. Concurrency is
-first-promoter-wins: the manifest is created with ``O_EXCL`` (losers
-delete their staged version and re-read the winner's); a crash between
-staging and promote leaves an orphan version no reader ever resolves,
-healed by the next writer. The only primitives the protocol needs are
-(a) atomic create-exclusive of one small file and (b) atomic overwrite
-of one small file — both native on local/NFS (``O_EXCL``,
-``os.replace``) and both native on object stores (conditional PUT /
-plain PUT), which is exactly why the directory-rename dependence of the
-previous protocol had to go: ``rename(dir)`` is the one primitive
-``s3a://``-style roots cannot give. Legacy pre-manifest artifacts (bare
-``data.parquet`` / bare parquet dirs) still resolve read-only.
+Commit protocol (no directory renames anywhere): every write STAGES
+under a unique name inside the artifact directory and then PROMOTES it
+by committing the artifact's ``_CURRENT`` pointer with
+``sources.fs.commit_text`` (``_stage``, the one write path of all three
+loaders). Readers resolve ``_CURRENT`` first and only then touch data,
+so an artifact is visible either fully or not at all. Concurrency is
+first-promoter-wins: the pointer is created exclusively, losers delete
+their staged version and read the winner's, and a pointer naming a
+missing version is healed by atomic overwrite; a crash between staging
+and promote leaves an orphan version no reader ever resolves. An
+artifact dir without ``_CURRENT`` serves nothing: the older layout
+(a bare ``data.parquet`` or parquet dir) is refit on its next load.
+
+Every file operation goes through ``sources.fs``. Its primitives —
+create-exclusive and overwrite of one small file, list, delete — exist
+on local disk, HDFS and object stores alike (``rename(dir)``, which
+``s3a://``-style roots cannot give, is never used), so the store lives
+on any root a streamed index root can. A bare local root stays on plain
+``os`` calls inside ``fs``.
 
 The artifacts are ordinary parquet tables any engine can read — the
 load path IS the production serving path, not a test convenience.
@@ -55,11 +60,13 @@ load path IS the production serving path, not a test convenience.
 from __future__ import annotations
 
 import hashlib
+import io
 import os
-import shutil
 import threading
 import uuid
 from typing import Callable
+
+from . import fs
 
 #: Serializes bucketed-table catalog re-registration (DROP+CREATE).
 _REGISTER_LOCK = threading.Lock()
@@ -73,7 +80,7 @@ _REGISTER_LOCK = threading.Lock()
 _REGISTERED_AT: dict[tuple, str] = {}
 
 #: Spark conf key for the store root. Set to "" to disable durability
-#: (every call fits; the L1 dict caches still apply).
+#: (every call fits; the L1 memo still applies).
 MODEL_STORE_CONF = "spark.tf_idf_mapreduce.modelStore"
 #: Environment fallback used when no conf is set (also lets non-Spark
 #: tooling — bench cache-clears — resolve the same root).
@@ -86,21 +93,24 @@ MODEL_STORE_ENV = "SPARK_GRAFT_MODEL_DIR"
 STORE_MARKER = ".tf_idf_mapreduce_model_store"
 
 
-def _mark_root(root: str) -> None:
+def _mark_root(root: str, spark=None) -> None:
     """Drop the store marker at ``root`` (best-effort; read-only roots
     simply stay unmarked and bulk clears then refuse)."""
+    marker = fs.join(root, STORE_MARKER)
     try:
-        os.makedirs(root, exist_ok=True)
-        marker = os.path.join(root, STORE_MARKER)
-        if not os.path.exists(marker):
-            with open(marker, "w") as f:
-                f.write("model store root — safe for bulk clears\n")
-    except OSError:
+        if not fs.exists(marker, spark):
+            fs.makedirs(root, spark)
+            fs.write_bytes(
+                marker, b"model store root - safe for bulk clears\n", spark
+            )
+    except Exception:  # noqa: BLE001 — OSError locally, py4j remotely
         pass
 
 
-def _strip_file_scheme(p: str) -> str:
-    return p[len("file:") :] if p.startswith("file:") else p
+def _as_root(p: str) -> str:
+    """A configured root as the store uses it: a schemed root exactly
+    as given, Spark's bare ``file:/x`` form as the local path ``/x``."""
+    return p if fs._is_remote(p) else fs._local(p)
 
 
 def store_root(spark=None) -> str | None:
@@ -108,33 +118,21 @@ def store_root(spark=None) -> str | None:
     if spark is not None:
         v = spark.conf.get(MODEL_STORE_CONF, None)
         if v is not None:
-            return _strip_file_scheme(v) or None
+            return _as_root(v) or None
     env = os.environ.get(MODEL_STORE_ENV)
     if env is not None:
         return env or None
-    if spark is not None:
-        wh = _strip_file_scheme(
-            spark.conf.get("spark.sql.warehouse.dir", "")
-        )
-        if wh:
-            return os.path.join(wh, "_models")
-    # no session to ask (bench cache-clear path): Spark's warehouse
-    # default is <cwd>/spark-warehouse
-    return os.path.join(os.getcwd(), "spark-warehouse", "_models")
+    return _default_root(spark)
 
 
-def _package_default_root(spark=None) -> str:
-    """The store root this package mints ITSELF when no conf/env is set:
-    ``<spark.sql.warehouse.dir>/_models`` (or the warehouse default
-    ``<cwd>/spark-warehouse/_models`` without a session). Computed
-    ignoring conf/env deliberately — it answers "what directory would WE
-    have created", which is the only markerless root a bulk clear may
-    touch."""
-    if spark is not None:
-        wh = _strip_file_scheme(spark.conf.get("spark.sql.warehouse.dir", ""))
-        if wh:
-            return os.path.join(wh, "_models")
-    return os.path.join(os.getcwd(), "spark-warehouse", "_models")
+def _default_root(spark=None) -> str:
+    """The root this package mints ITSELF when no conf/env names one:
+    ``<spark.sql.warehouse.dir>/_models``, or ``<cwd>/spark-warehouse/
+    _models`` (Spark's warehouse default) without a session — the only
+    markerless root a bulk clear may touch."""
+    wh = "" if spark is None else spark.conf.get("spark.sql.warehouse.dir", "")
+    wh = _as_root(wh) or fs.join(os.getcwd(), "spark-warehouse")
+    return fs.join(wh, "_models")
 
 
 def key_hash(key: tuple) -> str:
@@ -145,98 +143,77 @@ def key_hash(key: tuple) -> str:
 CURRENT_MARKER = "_CURRENT"
 
 
-def _put_text_atomic(path: str, text: str) -> None:
-    """Atomic OVERWRITE of one small file (tmp + replace locally; a
-    plain PUT on an object store). Shared with the streaming index
-    merge via ``sources.fs`` — one scheme-dispatched implementation of
-    the protocol's primitives."""
-    from . import fs
-
-    fs.put_text_atomic(path, text)
+def _read_current(d: str, spark=None) -> str | None:
+    cur = fs.read_text(fs.join(d, CURRENT_MARKER), spark)
+    return (cur or "").strip() or None
 
 
-def _put_text_exclusive(path: str, text: str) -> bool:
-    """Atomic CREATE of one small file; False if it already exists
-    (``O_EXCL`` locally; a conditional If-None-Match PUT on an object
-    store). The store's only concurrency primitive — shared via
-    ``sources.fs``."""
-    from . import fs
-
-    return fs.put_text_exclusive(path, text)
-
-
-def _read_current(d: str) -> str | None:
-    from . import fs
-
-    v = fs.read_text(os.path.join(d, CURRENT_MARKER))
-    if v is None:
-        return None
-    return v.strip() or None
-
-
-def _promote(d: str, version: str) -> str:
+def _promote(d: str, version: str, spark=None) -> str:
     """Make ``version`` the artifact's live version unless a live one
-    already exists (first promoter wins). Returns the live version
-    after the call; a caller whose version lost deletes its stage. A
-    torn marker (crash mid-promote, or one naming a missing version)
-    is healed by overwrite — both candidate versions are complete
-    outputs of the same deterministic compute, so either is correct."""
-    cur_path = os.path.join(d, CURRENT_MARKER)
-    if _put_text_exclusive(cur_path, version):
-        return version
-    cur = _read_current(d)
-    if cur is not None and os.path.exists(os.path.join(d, cur)):
-        return cur
-    _put_text_atomic(cur_path, version)
-    return _read_current(d) or version
+    already exists (first promoter wins) and return the live version; a
+    caller whose version lost deletes its stage. A torn pointer (crash
+    mid-promote, or one naming a missing version) is healed by
+    overwrite — both candidate versions are complete outputs of the
+    same deterministic compute, so either is correct."""
+
+    def names_a_version(cur: str) -> bool:
+        return bool(cur.strip()) and fs.exists(fs.join(d, cur.strip()), spark)
+
+    return fs.commit_text(
+        fs.join(d, CURRENT_MARKER), version, names_a_version, spark
+    ).strip()
 
 
-def _live_pdf_path(d: str) -> str | None:
-    """Resolve a driver-written artifact's live data file (manifest
-    first, then the legacy bare ``data.parquet``)."""
-    cur = _read_current(d)
-    if cur is not None:
-        p = os.path.join(d, cur)
-        return p if os.path.isfile(p) else None
-    legacy = os.path.join(d, "data.parquet")
-    return legacy if os.path.isfile(legacy) else None
-
-
-def _live_table_dir(d: str) -> str | None:
-    """Resolve a Spark-written artifact's live parquet directory. A
-    directory holding only staged ``v-*`` subdirs (a crashed staging)
-    is NOT live; a legacy artifact (the dir itself is the parquet
-    output — it contains files) is."""
-    cur = _read_current(d)
-    if cur is not None:
-        p = os.path.join(d, cur)
-        return p if os.path.isdir(p) else None
-    # legacy detection requires a DATA file (part-*.parquet): dot-files
-    # (a crashed writability probe) and underscore files (_SUCCESS, a
-    # torn _CURRENT.tmp-*) must not make a staged-only dir look legacy —
-    # that would permanently poison the artifact into compute-only
-    if os.path.isdir(d) and any(
-        not e.name.startswith((".", "_")) and not e.is_dir()
-        for e in os.scandir(d)
-    ):
-        return d
-    return None
+def _live(d: str, spark=None) -> str | None:
+    """The path of the version the artifact's ``_CURRENT`` names, or
+    None when there is no such version (absent, unpromoted, or torn)."""
+    cur = _read_current(d, spark)
+    if cur is None:
+        return None
+    p = fs.join(d, cur)
+    return p if fs.exists(p, spark) else None
 
 
 def live_table_dir(name: str, key: tuple, spark=None) -> str | None:
     """Public resolver: the live parquet directory of a Spark-written
     artifact, or ``None`` when absent/unpromoted — what callers should
-    use instead of ``os.path.isdir(model_dir(...))`` (a directory can
-    exist without a promoted version)."""
+    use instead of testing ``model_dir(...)`` (a directory can exist
+    without a promoted version)."""
     d = model_dir(name, key, spark)
-    return None if d is None else _live_table_dir(d)
+    return None if d is None else _live(d, spark)
 
 
 def model_dir(name: str, key: tuple, spark=None) -> str | None:
     root = store_root(spark)
     if root is None:
         return None
-    return os.path.join(root, name, key_hash(key))
+    return fs.join(root, name, key_hash(key))
+
+
+def _stage(d: str, ver: str, write, spark=None) -> str | None:
+    """The store's one write path: stage a new version of the artifact
+    in ``d`` under its unique name ``ver`` and promote it. Probes that
+    ``d`` is writable first and returns None when it is not — a
+    read-only root (e.g. a baked deployment image) degrades to
+    compute-only, never breaking a query that worked before the store
+    existed. Otherwise runs ``write(path)`` (its errors, such as a
+    genuine compute error, propagate), promotes, deletes the staged
+    version again if another writer's won, and returns the live
+    version's path."""
+    try:
+        _mark_root(store_root(spark), spark)
+        fs.makedirs(d, spark)
+        probe = fs.join(d, f".probe-{uuid.uuid4().hex}")
+        fs.write_bytes(probe, b"", spark)
+        fs.delete_recursive(probe, spark)
+    except Exception:  # noqa: BLE001 — OSError locally, py4j remotely
+        return None
+    path = fs.join(d, ver)
+    write(path)
+    winner = _promote(d, ver, spark)
+    if winner != ver:
+        fs.delete_recursive(path, spark)
+    return fs.join(d, winner)
 
 
 def load_or_fit_pdf(
@@ -255,35 +232,26 @@ def load_or_fit_pdf(
     import pandas as pd
 
     d = model_dir(name, key, spark)
-    live = None if d is None else _live_pdf_path(d)
-    heal = False
+    live = None if d is None else _live(d, spark)
     if live is not None:
         try:
-            return pd.read_parquet(live), "store"
+            data = io.BytesIO(fs.read_bytes(live, spark))
+            return pd.read_parquet(data), "store"
         except Exception:
-            # corrupt live data: refit and re-promote over it
-            heal = True
+            # corrupt live data: drop it, and the promote below heals
+            # the pointer that names it
+            fs.delete_recursive(live, spark)
     pdf = fit()
     if d is not None:
         try:
-            _mark_root(store_root(spark))
-            os.makedirs(d, exist_ok=True)
-            ver = f"data-{uuid.uuid4().hex}.parquet"
-            pdf.to_parquet(os.path.join(d, ver), index=False)
-            if heal:
-                _put_text_atomic(os.path.join(d, CURRENT_MARKER), ver)
-                if live is not None:
-                    try:
-                        os.remove(live)
-                    except OSError:
-                        pass
-            else:
-                winner = _promote(d, ver)
-                if winner != ver:  # lost the promote race: winner serves
-                    os.remove(os.path.join(d, ver))
+            _stage(
+                d,
+                f"data-{uuid.uuid4().hex}.parquet",
+                lambda p: fs.write_bytes(p, pdf.to_parquet(index=False), spark),
+                spark,
+            )
         except Exception:
-            # read-only store roots degrade to fit-every-process
-            pass
+            pass  # the fit stands; the next process fits again
     return pdf, "fit"
 
 
@@ -321,41 +289,21 @@ def load_or_compute_table(
     d = model_dir(name, key, spark)
     if d is None:
         return compute(), "fit"
-    live = _live_table_dir(d)
-    if live is not None:
-        try:
-            return spark.read.parquet(live), "store"
-        except Exception:
-            # a LIVE artifact that can't be read (empty relation wrote
-            # only _SUCCESS, transient reader error): degrade to
-            # compute-only — a rewrite would promote another unreadable
-            # copy and burn a full Spark write per load (round-9 ADVICE)
-            return compute(), "fit"
-    # no live version (absent, or a crashed staging this write heals).
-    # Probe writability BEFORE running compute through a parquet sink:
-    # on a read-only store root (e.g. a baked deployment image) the
-    # store must degrade to compute-only, never break a query that
-    # worked before the store existed. Genuine compute errors still
-    # surface naturally from the uncaught write below.
-    try:
-        _mark_root(store_root(spark))
-        os.makedirs(d, exist_ok=True)
-        probe = os.path.join(d, f".probe-{uuid.uuid4().hex}")
-        with open(probe, "w"):
-            pass
-        os.remove(probe)
-    except OSError:
+    live = _live(d, spark) or _stage(
+        d,
+        f"v-{uuid.uuid4().hex}",
+        lambda p: compute().write.mode("overwrite").parquet(p),
+        spark,
+    )
+    if live is None:
         return compute(), "fit"
-    ver = f"v-{uuid.uuid4().hex}"
-    staged = os.path.join(d, ver)
-    compute().write.mode("overwrite").parquet(staged)
-    winner = _promote(d, ver)
-    if winner != ver:
-        # a concurrent session promoted first — read its copy
-        shutil.rmtree(staged, ignore_errors=True)
     try:
-        return spark.read.parquet(os.path.join(d, winner)), "store"
+        return spark.read.parquet(live), "store"
     except Exception:
+        # a LIVE artifact that can't be read (empty relation wrote
+        # only _SUCCESS, transient reader error): degrade to
+        # compute-only — a rewrite would promote another unreadable
+        # copy and burn a full Spark write per load (round-9 ADVICE)
         return compute(), "fit"
 
 
@@ -431,62 +379,44 @@ def load_or_compute_bucketed_table(
             _REGISTERED_AT[ck] = loc
             return out
 
-    live = _live_table_dir(d)
-    if live is not None:
-        try:
-            return register(live), "store"
-        except Exception:
-            # live-but-unregisterable artifact (empty relation wrote
-            # only _SUCCESS; transient catalog error): a rewrite would
-            # promote another unregisterable copy — degrade to the
-            # computed relation instead of burning a full bucketed
-            # Spark write per load (round-9 ADVICE)
-            return compute(), "fit"
-    try:
-        _mark_root(store_root(spark))
-        os.makedirs(d, exist_ok=True)
-        probe = os.path.join(d, f".probe-{uuid.uuid4().hex}")
-        with open(probe, "w"):
-            pass
-        os.remove(probe)
-    except OSError:
+    def write(path: str) -> None:
+        tmp_tbl = f"{tbl}_w{uuid.uuid4().hex[:8]}"
+        (
+            # bucket-aligned repartition before the bucketed write: Spark's
+            # bucketBy emits one file per (input task, bucket), so a P-
+            # partition input writes up to P*N tiny files (measured 1019
+            # files / 2.1s for a 5k-row table at P=N=32); repartitioning on
+            # the bucket column first (same Murmur3 pmod the bucket id uses)
+            # lands each bucket in one task -> exactly one file per
+            # non-empty bucket (measured 32 files / 1.1s write, 2x faster
+            # load). At scale this one exchange over the slice being
+            # written is what keeps listing/open cost flat (guide §6).
+            compute()
+            .repartition(n_buckets, bucket_col)
+            .write.bucketBy(n_buckets, bucket_col)
+            .sortBy(bucket_col)
+            .mode("overwrite")
+            .option("path", path)
+            .saveAsTable(tmp_tbl)
+        )
+        # the write registered an external table at the staged path;
+        # drop the catalog entry (files survive an external drop) —
+        # Spark reads each file's bucket id from its _0000N name
+        # suffix, which the promote never touches
+        spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
+
+    live = _live(d, spark) or _stage(d, f"v-{uuid.uuid4().hex}", write, spark)
+    if live is None:
         return compute(), "fit"
-    tmp_tbl = f"{tbl}_w{uuid.uuid4().hex[:8]}"
-    ver = f"v-{uuid.uuid4().hex}"
-    staged = os.path.join(d, ver)
-    (
-        # bucket-aligned repartition before the bucketed write: Spark's
-        # bucketBy emits one file per (input task, bucket), so a P-
-        # partition input writes up to P*N tiny files (measured 1019
-        # files / 2.1s for a 5k-row table at P=N=32); repartitioning on
-        # the bucket column first (same Murmur3 pmod the bucket id uses)
-        # lands each bucket in one task -> exactly one file per
-        # non-empty bucket (measured 32 files / 1.1s write, 2x faster
-        # load). At scale this one exchange over the slice being
-        # written is what keeps listing/open cost flat (guide §6).
-        compute()
-        .repartition(n_buckets, bucket_col)
-        .write.bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .mode("overwrite")
-        .option("path", staged)
-        .saveAsTable(tmp_tbl)
-    )
-    # the write above registered an external table at the staged path;
-    # drop the catalog entry (files survive an external drop), then
-    # promote — Spark reads each file's bucket id from its _0000N name
-    # suffix, which the manifest protocol never touches
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
-    winner = _promote(d, ver)
-    if winner != ver:
-        # a concurrent session promoted first — read its copy
-        shutil.rmtree(staged, ignore_errors=True)
     try:
-        return register(os.path.join(d, winner)), "store"
+        return register(live), "store"
     except Exception:
-        # unregisterable artifact (e.g. an EMPTY relation writes only
-        # _SUCCESS, and schema inference has nothing to read) — the
-        # store degrades to compute-only, never breaks the query
+        # live-but-unregisterable artifact (an EMPTY relation writes
+        # only _SUCCESS, so schema inference has nothing to read; a
+        # transient catalog error): a rewrite would promote another
+        # unregisterable copy — degrade to the computed relation
+        # instead of burning a full bucketed Spark write per load
+        # (round-9 ADVICE)
         return compute(), "fit"
 
 
@@ -503,14 +433,12 @@ def clear_store(spark=None) -> bool:
     ``drop_models`` — so no bulk clear can destroy files this package
     didn't write (round-8 ADVICE)."""
     root = store_root(spark)
-    if root is None or not os.path.isdir(root):
+    if root is None or not fs.exists(root, spark):
         return True  # nothing durable to clear
-    default = os.path.normpath(os.path.abspath(_package_default_root(spark)))
-    if (
-        os.path.normpath(os.path.abspath(root)) == default
-        or os.path.exists(os.path.join(root, STORE_MARKER))
-    ):
-        shutil.rmtree(root, ignore_errors=True)
+    if os.path.normpath(os.path.abspath(root)) == os.path.normpath(
+        os.path.abspath(_default_root(spark))
+    ) or fs.exists(fs.join(root, STORE_MARKER), spark):
+        fs.delete_recursive(root, spark)
         return True
     return False
 
@@ -521,7 +449,27 @@ def drop_models(name: str, spark=None) -> None:
     root = store_root(spark)
     if root is None:
         return
-    shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+    fs.delete_recursive(fs.join(root, name), spark)
+
+
+def store_files(d: str, spark=None):
+    """``(name, mtime)`` of every file under ``d``, recursively."""
+    for name, is_dir, mtime in fs.list_status(d, spark):
+        if is_dir:
+            yield from store_files(fs.join(d, name), spark)
+        else:
+            yield name, mtime
+
+
+def _artifact_dirs(root: str, spark=None):
+    """``(family, key_hash, dir)`` of every artifact directory under
+    ``root``, sorted; stray files (the ``STORE_MARKER``) are skipped."""
+    for fam, fam_is_dir, _ in sorted(fs.list_status(root, spark)):
+        if fam_is_dir:
+            famdir = fs.join(root, fam)
+            for h, is_dir, _ in sorted(fs.list_status(famdir, spark)):
+                if is_dir:
+                    yield fam, h, fs.join(famdir, h)
 
 
 def prune_models(max_age_days: float = 30.0, spark=None, *, now: float | None = None) -> int:
@@ -535,27 +483,15 @@ def prune_models(max_age_days: float = 30.0, spark=None, *, now: float | None = 
     import time as _time
 
     root = store_root(spark)
-    if root is None or not os.path.isdir(root):
+    if root is None:
         return 0
     cutoff = (now if now is not None else _time.time()) - max_age_days * 86400
     removed = 0
-    for name in sorted(os.listdir(root)):
-        family = os.path.join(root, name)
-        if not os.path.isdir(family):
-            continue
-        for h in sorted(os.listdir(family)):
-            d = os.path.join(family, h)
-            try:
-                newest = max(
-                    os.stat(os.path.join(dp, f)).st_mtime
-                    for dp, _dn, fns in os.walk(d)
-                    for f in fns
-                )
-            except ValueError:  # empty dir — a torn write; reap it
-                newest = 0.0
-            if newest < cutoff:
-                shutil.rmtree(d, ignore_errors=True)
-                removed += 1
+    for _fam, _h, d in _artifact_dirs(root, spark):
+        # an empty dir (a torn write) has no newest file: reap it
+        if max((m for _, m in store_files(d, spark)), default=0.0) < cutoff:
+            fs.delete_recursive(d, spark)
+            removed += 1
     return removed
 
 
@@ -574,9 +510,11 @@ def verify_store(spark=None, root: str | None = None) -> dict:
     - ``orphaned``: staged versions (``v-*`` dirs / ``data-*`` files)
       with no ``_CURRENT`` — a writer crashed between staging and
       promote. No reader ever resolves these; the next writer heals.
-    - ``legacy``: no ``_CURRENT`` but readable pre-manifest data (bare
-      ``data.parquet`` / parquet dir / pointer files like ``gen.json``)
-      — still served read-only.
+    - ``legacy``: no ``_CURRENT`` but other data: a pre-manifest
+      artifact (bare ``data.parquet`` / parquet files), which the
+      loaders no longer serve — its key refits on the next load and the
+      dir ages out through ``models prune`` — or a pointer file its
+      owner reads directly (the quantizer's ``gen.json``).
     - ``empty``: a directory with nothing servable or staged.
 
     Independent of the state, ``reap_candidates`` collects versions and
@@ -590,22 +528,18 @@ def verify_store(spark=None, root: str | None = None) -> dict:
 
     Returns ``{"root", "artifacts": [...], "counts": {...},
     "reap_candidates": [...]}``; the CLI verb ``models verify`` renders
-    it. Never writes, so it is safe against a production root.
+    it. Never writes, so it is safe against a production root. Any root
+    ``sources.fs`` reaches audits the same way — a local path, or a
+    ``file://``/``hdfs://``/``s3a://`` URI through Hadoop's FileSystem;
+    a root it cannot reach (an unknown scheme, a dead namenode) raises
+    rather than reading as an empty store."""
+    return _audit(spark, root)[0]
 
-    Roots: local paths and ``file://`` URIs. A remote scheme
-    (``hdfs://``, ``s3a://``) RAISES rather than silently reporting an
-    empty store — the audit's file/dir classification walks ``os``
-    today; audit remote roots from a machine that mounts them."""
-    from . import fs
 
+def _audit(spark, root: str | None) -> tuple[dict, dict]:
+    """:func:`verify_store`'s report, plus the mtime of each reap
+    candidate (what :func:`reap_store`'s age grace reads)."""
     root = root if root is not None else store_root(spark)
-    if root is not None:
-        root = fs._local(root)
-        if fs._is_remote(root):
-            raise ValueError(
-                f"verify/reap cannot audit remote store root {root!r} yet"
-                " — run from a host that mounts it (or a file:// path)"
-            )
     report: dict = {
         "root": root,
         "artifacts": [],
@@ -614,64 +548,58 @@ def verify_store(spark=None, root: str | None = None) -> dict:
         },
         "reap_candidates": [],
     }
-    if root is None or not os.path.isdir(root):
-        return report
-    for fam in sorted(os.listdir(root)):
-        famdir = os.path.join(root, fam)
-        if not os.path.isdir(famdir):
-            continue  # the STORE_MARKER and any stray file
-        for h in sorted(os.listdir(famdir)):
-            d = os.path.join(famdir, h)
-            if not os.path.isdir(d):
-                continue
-            entries = os.listdir(d)
-            cur = _read_current(d)
-            # commit tmp leftovers carry '.tmp-' ANYWHERE in the name:
-            # put_text_atomic writes '<file>.tmp-<hex>' (e.g.
-            # 'gen.json.tmp-abc' from _bump_quantizer_generation), not
-            # just dot-prefixed names (round-11 ADVICE)
-            leftovers = [
-                e for e in entries
-                if ".tmp-" in e or e.startswith((".tmp-", ".probe-"))
-            ]
-            staged = [
-                e for e in entries
-                if e.startswith(("v-", "data-"))
-                and e != cur
-                and ".tmp-" not in e  # already a leftover, not a staging
-            ]
-            if cur is not None:
-                state = "live" if os.path.exists(os.path.join(d, cur)) else "torn"
-                # beside a live/torn marker, every non-current staging
-                # is unreachable — reap-safe
-                report["reap_candidates"] += [
-                    os.path.join(d, e) for e in staged
-                ]
-            elif staged:
-                state = "orphaned"
-            elif any(
-                not e.startswith((".", "_")) and ".tmp-" not in e
-                for e in entries
-            ):
-                # tmp leftovers are excluded: a dir holding ONLY a
-                # crashed 'gen.json.tmp-*' is empty, not legacy data
-                state = "legacy"
-            else:
-                state = "empty"
-            report["reap_candidates"] += [
-                os.path.join(d, e) for e in leftovers
-            ]
-            report["counts"][state] += 1
-            report["artifacts"].append(
-                {
-                    "family": fam,
-                    "key_hash": h,
-                    "state": state,
-                    "live_version": cur if state == "live" else None,
-                    "n_staged_unreachable": len(staged),
-                }
-            )
-    return report
+    mtimes: dict = {}
+    if root is None:
+        return report, mtimes
+    for fam, h, d in _artifact_dirs(root, spark):
+        entries = {n: m for n, _is_dir, m in fs.list_status(d, spark)}
+        cur = _read_current(d, spark)
+        # commit tmp leftovers carry '.tmp-' ANYWHERE in the name:
+        # put_text_atomic writes '<file>.tmp-<hex>' (e.g.
+        # 'gen.json.tmp-abc' from _bump_quantizer_generation), not
+        # just dot-prefixed names (round-11 ADVICE)
+        leftovers = [
+            e for e in entries
+            if ".tmp-" in e or e.startswith((".tmp-", ".probe-"))
+        ]
+        staged = [
+            e for e in entries
+            if e.startswith(("v-", "data-"))
+            and e != cur
+            and ".tmp-" not in e  # already a leftover, not a staging
+        ]
+        candidates = leftovers
+        if cur is not None:
+            state = "live" if cur in entries else "torn"
+            # beside a live/torn marker, every non-current staging
+            # is unreachable — reap-safe
+            candidates = staged + leftovers
+        elif staged:
+            state = "orphaned"
+        elif any(
+            not e.startswith((".", "_")) and ".tmp-" not in e
+            for e in entries
+        ):
+            # tmp leftovers are excluded: a dir holding ONLY a
+            # crashed 'gen.json.tmp-*' is empty, not legacy data
+            state = "legacy"
+        else:
+            state = "empty"
+        for e in candidates:
+            p = fs.join(d, e)
+            report["reap_candidates"].append(p)
+            mtimes[p] = entries[e]
+        report["counts"][state] += 1
+        report["artifacts"].append(
+            {
+                "family": fam,
+                "key_hash": h,
+                "state": state,
+                "live_version": cur if state == "live" else None,
+                "n_staged_unreachable": len(staged),
+            }
+        )
+    return report, mtimes
 
 
 def reap_store(
@@ -698,18 +626,11 @@ def reap_store(
     abandoned. Returns the deleted paths. Exposed as ``models reap``."""
     import time as _time
 
-    rep = verify_store(spark, root=root)
+    rep, mtimes = _audit(spark, root)
     cutoff = _time.time() - min_age_sec
     deleted = []
     for p in rep["reap_candidates"]:
-        try:
-            if os.stat(p).st_mtime > cutoff:
-                continue  # possibly an in-flight heal — next reap gets it
-            if os.path.isdir(p):
-                shutil.rmtree(p)
-            else:
-                os.remove(p)
+        if mtimes[p] <= cutoff:  # younger: possibly an in-flight heal
+            fs.delete_recursive(p, spark)
             deleted.append(p)
-        except OSError:
-            pass  # a concurrent writer may have healed/claimed it
     return deleted

@@ -1,13 +1,19 @@
 """One ops entry point for every durable versioned artifact root.
 
-The engine maintains two versioned-state layouts, both committed
-through ``sources.fs``'s primitives:
+The engine maintains two versioned-state layouts, each with its own
+commit record and one commit step under both (``sources.fs
+.commit_text``: create the record exclusively, let a valid existing
+record win, heal a torn one by atomic overwrite):
 
 - a **model store** root (``sources.model_store``): families of
-  artifacts, each with a ``_CURRENT`` manifest naming its live version
+  artifacts, each with a ``_CURRENT`` pointer naming its live version
   (``<root>/<family>/<key_hash>/{_CURRENT, v-*, data-*}``);
-- a **streamed index** root (``streaming.queries.make_index_merge``):
-  one chained-version index (``<root>/{manifest/v*, seg_v*, df_v*}``).
+- a **streamed index** root (``sources.index_root``, written by
+  ``streaming.queries.make_index_merge``): one chained-version index
+  (``<root>/{manifest/v*, seg_v*, df_v*}``).
+
+Both do every file operation through ``sources.fs``, so either lives on
+a local path or a ``file://``/``hdfs://``/``s3a://`` root.
 
 For the TF-IDF index both layouts hold the same state, written by the
 same ``operators.tfidf.fold`` and served by the same ``score``; only
@@ -15,43 +21,37 @@ the fold's ``put`` (how each of postings, df and N is materialized)
 differs between them. N is a number in both: the ``_N`` file inside
 its df version's dir in the store, the ``"n"`` field of its manifest
 entry in a streamed root — so it commits and ages with its version and
-is never read from another one. No reader is kept for the older layout
-that kept N in a parquet table of its own: a store's old N family dirs
-age out through ``models prune``, and a streamed root written in that
-layout (manifest entries without ``"n"``) must be drained again.
+is never read from another one. No reader is kept for an older
+layout: a store artifact without ``_CURRENT`` (bare ``data.parquet`` or
+parquet files) is refit on its next load, old N family dirs age out
+through ``models prune``, and a streamed root whose manifest entries
+lack ``"n"`` must be drained again.
 
-Their commit protocols differ by design (single live version vs a
+Their commit records differ by design (single live version vs a
 parent-chained history with retention), but the OPS loop over them is
 the same verb pair — audit read-only, then reap what the audit proved
-unreachable — and before round 12 each layout carried its own CLI
-special case (``models verify --index-root``). This module is the
-convergence point (round-11 verdict #3): ``audit``/``reap`` detect the
-layout from the root itself and dispatch to the layout's classifier,
-so the CLI (and any operator script) has ONE code path and zero
-layout flags.
+unreachable. ``audit``/``reap`` detect the layout from the root itself
+and dispatch to the layout's classifier, so the CLI (and any operator
+script) has ONE code path and zero layout flags.
 
 The reap DECISIONS stay where each protocol's invariants live —
-``model_store.verify_store`` and ``streaming.queries
-._index_reap_candidates`` (the same plan the in-stream sweep runs) —
-this module only routes and executes."""
+``model_store.verify_store`` and ``index_root.verify_index_root`` (the
+same plan the in-stream sweep runs) — this module only routes and
+executes."""
 
 from __future__ import annotations
 
-import re
-
-_INDEX_DIR_RE = re.compile(r"^(seg|df)_v\d+$")
+from . import fs
+from .index_root import gc_index_root, is_index_root, verify_index_root
+from .model_store import reap_store, verify_store
 
 
 def detect_kind(root: str, spark=None) -> str:
-    """``"index"`` when the root holds streamed-index state (a
-    ``manifest/`` dir or any ``seg_v*/df_v*`` child);
+    """``"index"`` when the root holds streamed-index state;
     ``"index-shards"`` when the root is a PARENT of index roots (the
     sharded-federation deployment: one ``make_index_merge`` root per
-    corpus shard under a common dir) — detected by any child dir that
-    is itself an index root; else ``"store"`` — an empty or missing
-    root audits as an empty store."""
-    from . import fs
-
+    corpus shard under a common dir); else ``"store"`` — an empty or
+    missing root audits as an empty store."""
     try:
         names = fs.list_names(root, spark)
     except RuntimeError as exc:
@@ -62,13 +62,9 @@ def detect_kind(root: str, spark=None) -> str:
             f"cannot inspect remote root {root!r} without an active "
             f"SparkSession ({exc})"
         ) from exc
-    if "manifest" in names or any(_INDEX_DIR_RE.match(n) for n in names):
+    if is_index_root(names):
         return "index"
-    for n in names:
-        child = fs.list_names(fs.join(root, n), spark)
-        if "manifest" in child or any(_INDEX_DIR_RE.match(c) for c in child):
-            return "index-shards"
-    return "store"
+    return "index-shards" if _shard_roots(root, spark) else "store"
 
 
 def _shard_roots(root: str, spark=None) -> list:
@@ -76,14 +72,11 @@ def _shard_roots(root: str, spark=None) -> list:
     roots themselves, sorted — the federation's per-shard audit/reap
     targets. Non-index children (a README, a _checkpoints dir) are
     left alone."""
-    from . import fs
-
-    out = []
-    for n in sorted(fs.list_names(root, spark)):
-        child = fs.list_names(fs.join(root, n), spark)
-        if "manifest" in child or any(_INDEX_DIR_RE.match(c) for c in child):
-            out.append(n)
-    return out
+    return [
+        n
+        for n in sorted(fs.list_names(root, spark))
+        if is_index_root(fs.list_names(fs.join(root, n), spark))
+    ]
 
 
 def audit(root: str, spark=None, *, kind: str | None = None) -> dict:
@@ -92,16 +85,10 @@ def audit(root: str, spark=None, *, kind: str | None = None) -> dict:
     both layouts expose ``reap_candidates``: the paths/names a
     :func:`reap` on the same root would delete, so audit-then-reap is
     always what-you-saw-is-what-you-get."""
-    from . import fs
-
     kind = kind or detect_kind(root, spark)
     if kind == "index":
-        from ..streaming.queries import verify_index_root
-
         rep = verify_index_root(root, spark)
     elif kind == "index-shards":
-        from ..streaming.queries import verify_index_root
-
         shards = {
             name: verify_index_root(fs.join(root, name), spark)
             for name in _shard_roots(root, spark)
@@ -116,8 +103,6 @@ def audit(root: str, spark=None, *, kind: str | None = None) -> dict:
             ],
         }
     else:
-        from .model_store import verify_store
-
         rep = verify_store(spark, root=root)
     rep["kind"] = kind
     return rep
@@ -133,16 +118,10 @@ def reap(root: str, spark=None, *, kind: str | None = None) -> dict:
     root needs none (its candidates are manifest-unreachable by the
     commit ordering — no in-flight writer ever references them — and
     offline GC runs on a stopped stream by contract)."""
-    from . import fs
-
     kind = kind or detect_kind(root, spark)
     if kind == "index":
-        from ..streaming.queries import gc_index_root
-
         rep = gc_index_root(root, spark)
     elif kind == "index-shards":
-        from ..streaming.queries import gc_index_root
-
         shards = {
             name: gc_index_root(fs.join(root, name), spark)
             for name in _shard_roots(root, spark)
@@ -157,8 +136,6 @@ def reap(root: str, spark=None, *, kind: str | None = None) -> dict:
             ],
         }
     else:
-        from .model_store import reap_store
-
         rep = {"reaped": reap_store(spark, root=root)}
     rep["kind"] = kind
     rep.setdefault("reaped", [])

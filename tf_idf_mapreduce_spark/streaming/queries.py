@@ -24,7 +24,6 @@ Semantics notes (scale-relevant):
 from __future__ import annotations
 
 import atexit
-import re
 import shutil
 import tempfile
 from collections.abc import Iterator
@@ -39,6 +38,16 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions.hashing import norm_words
 from ..operators.events import SESSION_GAP_SEC
+from ..sources import fs
+from ..sources.index_root import (
+    add_tombstones,
+    commit_version,
+    index_state,
+    manifest_versions,
+    segment_chain,
+    sweep,
+    tombstone_ledger,
+)
 from .runner import run_foreach_batch, run_to_memory
 from .sources import stream_documents, stream_events, stream_parquet
 
@@ -835,127 +844,6 @@ def q_stream_bot_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id")
 
 
-#: A streamed index root's version dirs, ``seg_v{b}`` and ``df_v{b}``.
-_VERSION_DIR = re.compile(r"^(seg|df)_v(\d+)$")
-
-
-def _index_manifest_versions(root: str, spark=None) -> dict:
-    """Committed versions of a streamed index merge: one JSON file per
-    version under ``<root>/manifest``, CREATE-EXCLUSIVE-committed
-    (``fs.put_text_exclusive`` — O_EXCL locally, conditional PUT on an
-    object store) only after that version's data writes completed — so
-    a version is either fully present or absent, never torn. Returns
-    {batch_id: {"parent": int|None, "segment": bool, "base": bool,
-    "n": int}} — ``n`` is the version's document count N, committed by
-    the same exclusive create as the version itself.
-
-    A TORN entry — empty or truncated JSON from a crash inside the
-    commit write itself (O_EXCL create + write is not crash-atomic on a
-    local FS) — reads as NOT COMMITTED: only batch N ever writes
-    ``v{N}`` (Structured Streaming runs one foreachBatch per checkpoint
-    and replays the failed batch before any later one), so the replay
-    recomputes the same deterministic state and ``merge`` HEALS the
-    leftover by atomic overwrite (see the commit site). Tmp files and
-    any non-``v<id>`` name are ignored. All I/O goes through
-    ``sources.fs``, so ``root`` may be a local dir, ``file://``,
-    ``hdfs://``, or ``s3a://``."""
-    import json
-
-    from ..sources import fs
-
-    out = {}
-    for name in fs.list_names(fs.join(root, "manifest"), spark):
-        if name.startswith("v") and name[1:].isdigit():
-            text = fs.read_text(fs.join(root, "manifest", name), spark)
-            if text:
-                try:
-                    out[int(name[1:])] = json.loads(text)
-                except ValueError:
-                    pass  # torn commit write — replay heals it
-    return out
-
-
-def _sweep_index_root(sess, root: str, committed: dict, batch_id: int) -> None:
-    """Reap state the manifest can no longer reach. Runs at the START of
-    every compacting batch — never after a commit, so a crash can only
-    DEFER a sweep to the next compaction, never skip one forever (the
-    round-10 leak: a crash between a compacting commit and its reap left
-    those segments permanently orphaned).
-
-    Three sweeps, all against already-unreachable state:
-
-    - **segments** not on the newest version's chain (the chain stops at
-      the newest base). This is also where the previous compaction's
-      folded segments finally go: they are kept as a GRACE generation
-      until the next compacting batch, so a reader that resolved a
-      version on the live stream can lazily scan its segments without
-      hitting FileNotFound until a full compaction cycle later.
-    - **df generations** other than the newest version's and its
-      parent's (the per-batch post-commit reap keeps the same pair; this
-      heals crash leaks).
-    - **manifest entries** strictly below the newest base: no chain walk
-      visits them (chains stop at the base) and parent resolution takes
-      the max, so the manifest stays O(compact_every) files however long
-      the stream runs instead of one file per micro-batch forever.
-
-    Versions at/above ``batch_id`` are never touched: an id equal to the
-    current batch is this batch's own crashed earlier attempt, about to
-    be overwritten by its replay.
-
-    Split into PLAN (:func:`_sweep_index_plan`, read-only) and ACT so
-    the same decision code path backs the in-stream sweep, the
-    ``models verify`` reap-candidate report, and offline GC (round-11
-    verdict #3: one verify/reap code path)."""
-    from ..sources import fs
-
-    names = fs.list_names(root, sess)
-    dirs, manifest_prunes = _sweep_index_plan(committed, names, batch_id)
-    for name in dirs:
-        fs.delete_recursive(fs.join(root, name), sess)
-    for v in manifest_prunes:
-        fs.delete_recursive(fs.join(root, "manifest", f"v{v}"), sess)
-        del committed[v]
-
-
-def _sweep_index_plan(
-    committed: dict, names: list, batch_id: int
-) -> tuple[list, list]:
-    """The sweep DECISION, with no I/O: given the committed manifest,
-    the root's child names, and the sweep horizon (the current batch
-    id, or ``max+1`` for an offline pass), return ``(dir_names_to_
-    delete, manifest_versions_to_prune)``. See :func:`_sweep_index_root`
-    for the retention rules each list encodes."""
-    if not committed:
-        return [], []
-    cur = max(committed)
-    live_segs = set(_segment_chain(committed, cur))
-    live_dfn = {cur}
-    if committed[cur].get("parent") is not None:
-        live_dfn.add(committed[cur]["parent"])
-    dirs = []
-    for name in names:
-        m = _VERSION_DIR.match(name)
-        if not m:
-            continue
-        kind, v = m.group(1), int(m.group(2))
-        if v >= batch_id:
-            continue
-        if v not in (live_segs if kind == "seg" else live_dfn):
-            dirs.append(name)
-    manifest_prunes = []
-    bases = [v for v, meta in committed.items() if meta.get("base")]
-    if bases:
-        # manifest retention must stay consistent with df retention:
-        # live_dfn keeps the newest version's PARENT df as the grace
-        # generation, so its manifest entry must survive too — at
-        # compact_every=1 every version is a base and a max(bases)
-        # cutoff would prune the parent's entry while its df dirs
-        # linger as verify-reported orphans (round-11 ADVICE)
-        cutoff = min(max(bases), min(live_dfn))
-        manifest_prunes = [v for v in committed if v < cutoff]
-    return sorted(dirs), sorted(manifest_prunes)
-
-
 def make_index_merge(root: str, compact_every: int | None = None):
     """The ``foreachBatch`` MERGE for live TF-IDF index maintenance —
     the streaming side of ``operators.tfidf.promoted_index``'s loop
@@ -991,7 +879,7 @@ def make_index_merge(root: str, compact_every: int | None = None):
     resolved the pre-compaction version keep scanning them) and are
     swept at the START of the NEXT compacting batch, together with any
     dirs a crash orphaned and any manifest entries below the newest
-    base (``_sweep_index_root``). Sweep-then-commit (never
+    base (``sources.index_root.sweep``). Sweep-then-commit (never
     commit-then-reap) means a crash can only defer a sweep, never leak
     state forever. Live state is therefore bounded at <=
     2*compact_every segments + 2 df generations + O(compact_every)
@@ -1000,22 +888,17 @@ def make_index_merge(root: str, compact_every: int | None = None):
     same path.
 
     ``root`` may be local, ``file://``, ``hdfs://``, or ``s3a://``:
-    every non-Spark I/O here (manifest list/read/commit, reaps) goes
-    through ``sources.fs``, whose primitives are create-exclusive /
-    put / list / delete — no directory renames, the same posture the
-    batch model store's commit protocol earned (model_store.py
-    module docstring)."""
-    import json
-
+    the manifest read, commit and sweep are ``sources.index_root``'s,
+    and every non-Spark I/O goes through ``sources.fs`` — no directory
+    renames, the same posture as the model store."""
     from ..operators.tfidf import DF, N, POSTINGS, fold
-    from ..sources import fs
     from ..sources.io import documents_as_corpus
 
     prefix = {POSTINGS: "seg", DF: "df"}
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        committed = _index_manifest_versions(root, sess)
+        committed = manifest_versions(root, sess)
         if batch_id in committed:
             # a replayed, already-committed batch: everything it would
             # write is complete (manifest commits last) — idempotent skip
@@ -1040,7 +923,7 @@ def make_index_merge(root: str, compact_every: int | None = None):
             # segments, crash-orphaned dirs, stale manifest entries.
             # The fold chain below is exactly the newest version's
             # chain, which the sweep preserves by construction.
-            _sweep_index_root(sess, root, committed, batch_id)
+            sweep(root, committed, batch_id, sess)
 
         def put(part: str, build):
             rel = build()
@@ -1050,7 +933,7 @@ def make_index_merge(root: str, compact_every: int | None = None):
                 # fold the parent chain's segments into THIS segment —
                 # docs are disjoint across segments, so the union IS
                 # the merged postings
-                for v in _segment_chain(committed, parent):
+                for v in segment_chain(committed, parent):
                     rel = rel.unionByName(
                         sess.read.parquet(fs.join(root, f"seg_v{v}"))
                     )
@@ -1079,20 +962,8 @@ def make_index_merge(root: str, compact_every: int | None = None):
                 committed[parent]["n"],
             )
         n = fold(state, lambda: corpus, put).n
-
-        fs.makedirs(fs.join(root, "manifest"), sess)
-        entry = json.dumps(
-            {"parent": parent, "segment": True, "base": compacting, "n": n}
-        )
-        entry_path = fs.join(root, "manifest", f"v{batch_id}")
-        if not fs.put_text_exclusive(entry_path, entry, sess):
-            # the path exists but this batch is NOT in `committed` (the
-            # replay-skip at the top would have returned) — a crash tore
-            # the previous attempt's commit write (empty/partial file).
-            # Only batch N ever writes v{N} and the recompute above is
-            # deterministic, so heal by atomic overwrite — the same
-            # torn-marker rule as the store's _promote.
-            fs.put_text_atomic(entry_path, entry, sess)
+        entry = {"parent": parent, "segment": True, "base": compacting, "n": n}
+        commit_version(root, batch_id, entry, sess)
         # reap stale df AFTER the commit: a crash before this point
         # replays as a no-op (entry committed) and the leftovers are
         # unreferenced files, never a wrong read — and any leak here is
@@ -1114,189 +985,17 @@ def make_index_merge(root: str, compact_every: int | None = None):
     return merge
 
 
-def _segment_chain(committed: dict, start) -> list:
-    """Version ids whose segments the chain from ``start`` references,
-    stopping at (and including) the newest ``base`` — the set a reader
-    unions and a compaction folds/reaps."""
-    out, v = [], start
-    while v is not None:
-        m = committed[v]
-        if m.get("segment"):
-            out.append(v)
-        if m.get("base"):
-            break
-        v = m.get("parent")
-    return out
-
-
-def add_tombstones(spark: SparkSession, root: str, docs: list) -> str:
-    """TAKEDOWN for the streamed index: record that ``docs`` (doc keys,
-    the index's ``doc`` column values) must no longer be served — the
-    right-to-be-forgotten verb a training-corpus index needs.
-
-    Design: a READ-TIME OVERLAY LEDGER, not a chain version. Each call
-    commits one immutable entry ``tombstones/t-<uuid>`` (JSON doc list,
-    ``fs.put_text_exclusive`` — uuid names make contention structurally
-    absent) and every ``read_merged_index`` serve anti-joins the chain's
-    postings against the ledger union and re-derives df/N (see there).
-    Because no version id is minted, the verb is SAFE ON A LIVE STREAM:
-    it cannot collide with Structured Streaming's checkpointed batch
-    ids (an offline writer sharing the version namespace could make a
-    resumed batch replay-skip itself), and it composes with compaction
-    with zero protocol changes — a fold that copies tombstoned rows is
-    harmless, the overlay keeps filtering them.
-
-    INVARIANT — the fold must NOT pre-filter tombstoned rows: the
-    overlay derives its df/N adjustments from SEGMENT CONTENT (the
-    semi-join in ``_apply_tombstone_overlay``), while the chain's df/N
-    lineage is additive from the original batches. Physically dropping
-    rows at a fold without rewriting the whole df lineage would leave
-    df overcounting with nothing for the overlay to subtract. Physical
-    erasure of the bytes (strict right-to-be-forgotten) is therefore a
-    separate offline rewrite of segments AND df/N together — not this
-    ledger, and not a fold-time filter.
-
-    Contract: entries assert the docs EXISTED (the takedown request
-    knows); unknown keys are no-ops. A document that tokenized to ZERO
-    words has no postings, so its only trace is the corpus count N —
-    the overlay cannot see it and N stays; takedowns of zero-word docs
-    are metadata-only everywhere (they never served content).
-
-    Scale posture: ledgers are takedown-request-sized (KBs), read once
-    per serve and broadcast; a corpus-scale purge belongs in a
-    compaction rewrite, not a ledger. Returns the committed entry
-    path.
-
-    The entry also stores the docs' RESOLVED POSTINGS — their (word,
-    doc) rows plus the segment version each doc sits in, found by one
-    IN-filtered chain scan at write time. That makes the SERVE
-    scan-free (P18: deriving df/N adjustments from segment content at
-    read time cost ~2.4x the plain serve even for a 10-doc ledger;
-    stored rows make the overlay a driver-side dict + broadcast
-    literals). Version membership at read time is ``stored seg_version
-    <= read version``: on a full-retention root the stored version IS
-    the doc's arrival batch (exact for every as-of read); on a
-    compacting root the stored version is a fold id <= the newest base
-    <= every reachable as-of version, so the test stays correct. Docs
-    NOT found in the chain at write time (a pre-emptive blocklist of
-    content that may arrive later) stay unresolved in the entry; reads
-    fall back to the content scan for exactly those."""
-    import json as _json
-    import uuid as _uuid
-
-    from ..sources import fs
-
-    doc_list = sorted({str(d) for d in docs})
-    postings: list = []
-    committed = _index_manifest_versions(root, spark)
-    if committed and doc_list:
-        cur = max(committed)
-        for v in _segment_chain(committed, cur):
-            seg = spark.read.parquet(fs.join(root, f"seg_v{v}"))
-            for r in (
-                seg.where(F.col("doc").isin(doc_list))
-                .select("word", "doc")
-                .collect()
-            ):
-                postings.append([r["word"], r["doc"], v])
-    fs.makedirs(fs.join(root, "tombstones"), spark)
-    path = fs.join(root, "tombstones", f"t-{_uuid.uuid4().hex}")
-    if not fs.put_text_exclusive(
-        path,
-        _json.dumps({"docs": doc_list, "postings": postings}),
-        spark,
-    ):
-        raise RuntimeError(f"tombstone entry collision at {path!r}")
-    return path
-
-
-def _tombstone_docs(root: str, spark=None) -> list:
-    """The ledger union: every doc key any committed tombstone entry
-    names (sorted, deduplicated). Torn entries (a crash inside the
-    commit write) parse as absent — the writer retries with a fresh
-    uuid, nothing references the torn name."""
-    return _tombstone_ledger(root, spark)[0]
-
-
-def _tombstone_ledger(root: str, spark=None) -> tuple:
-    """``(docs, resolved)``: every committed ledger doc, plus the
-    stored write-time resolution ``{doc: (seg_version, [words])}`` for
-    docs whose postings were found when their entry was written (see
-    :func:`add_tombstones`). A doc named by several entries keeps its
-    FIRST resolution (postings are immutable — later copies would be
-    identical; first-wins prevents double-counting). Docs with no
-    resolution anywhere are the pre-emptive-blocklist case — the read
-    overlay content-scans for exactly those."""
-    import json as _json
-
-    from ..sources import fs
-
-    docs: set = set()
-    resolved: dict = {}
-    for name in sorted(fs.list_names(fs.join(root, "tombstones"), spark)):
-        if not name.startswith("t-") or ".tmp-" in name:
-            # '.tmp-': a crashed local exclusive-create's staging file
-            # (content may be complete JSON, but the commit never
-            # landed — the writer retried under a fresh uuid); treated
-            # as uncommitted, reported by tombstone_leftovers
-            continue
-        text = fs.read_text(fs.join(root, "tombstones", name), spark)
-        if not text:
-            continue
-        try:
-            entry = _json.loads(text)
-            entry_docs = entry["docs"]
-        except (ValueError, KeyError, TypeError):
-            continue  # torn commit write — never referenced
-        docs.update(entry_docs)
-        entry_resolved: dict = {}
-        for word, doc, seg_v in entry.get("postings", []):
-            # a doc lives in exactly one segment, so all its rows
-            # share one seg_version
-            entry_resolved.setdefault(doc, (seg_v, []))[1].append(word)
-        for doc, res in entry_resolved.items():
-            resolved.setdefault(doc, res)  # first entry wins
-    return sorted(docs), resolved
-
-
-def tombstone_leftovers(root: str, spark=None) -> list:
-    """Root-relative names of UNCOMMITTED tombstone-ledger debris —
-    crashed staging files (``.tmp-`` anywhere) and torn entries (empty
-    or unparseable JSON). Nothing reads them (``_tombstone_docs`` skips
-    both), so they are reap-safe; surfaced through
-    ``verify_index_root``/``gc_index_root``."""
-    import json as _json
-
-    from ..sources import fs
-
-    out = []
-    for name in fs.list_names(fs.join(root, "tombstones"), spark):
-        if ".tmp-" in name:
-            out.append(f"tombstones/{name}")
-            continue
-        if not name.startswith("t-"):
-            continue
-        text = fs.read_text(fs.join(root, "tombstones", name), spark)
-        try:
-            _json.loads(text or "")["docs"]
-        except (ValueError, KeyError, TypeError):
-            out.append(f"tombstones/{name}")
-    return sorted(out)
-
-
 def read_merged_index(
     spark: SparkSession,
     root: str,
     version: int | None = None,
     honor_tombstones: bool = True,
 ) -> DataFrame:
-    """Score the streamed index at a committed version: walk the
-    manifest's parent chain for the postings segments (orphan dirs
-    from an uncommitted crash are skipped by construction), read that
-    version's df table and its manifest entry's N, and reuse the batch
-    scorer — the serving relation
-    is a pure function of the maintained tables, exactly like the
-    batch promoted chain.
+    """Score the streamed index at a committed version: resolve its
+    postings segments, df table and N (``sources.index_root
+    .index_state``), apply the takedown overlay, and reuse the batch
+    scorer — the serving relation is a pure function of the maintained
+    tables, exactly like the batch promoted chain.
 
     ``version=None`` serves the newest committed version. An explicit
     ``version`` is an AS-OF (time-travel) read: the index exactly as
@@ -1314,41 +1013,18 @@ def read_merged_index(
     Read contract on a LIVE stream: the returned DataFrame scans its
     version's files lazily. For the NEWEST version's SEGMENTS the merge
     reaps one full compaction generation late (the grace window in
-    ``_sweep_index_root``), but the version's df table is reaped as
-    soon as two newer batches commit — so a resolved reader is only
+    ``sources.index_root.sweep``), but the version's df table is reaped
+    as soon as two newer batches commit — so a resolved reader is only
     guaranteed valid until the SECOND subsequent micro-batch, not until
     the next compaction. Read after the drain has finished (as every
     in-repo caller does), or re-resolve per micro-batch on a live
     stream."""
     from ..operators.tfidf import score
-    from ..sources import fs
 
-    committed = _index_manifest_versions(root, spark)
-    if not committed:
-        raise RuntimeError(
-            f"no micro-batch committed an index version under {root!r}"
-        )
-    if version is None:
-        cur = max(committed)
-    elif version in committed:
-        cur = version
-    else:
-        raise RuntimeError(
-            f"version {version} is not committed under {root!r} (have "
-            f"{sorted(committed)}; older versions may have aged past "
-            f"the compaction retention window)"
-        )
-    segs = [
-        spark.read.parquet(fs.join(root, f"seg_v{v}"))
-        for v in _segment_chain(committed, cur)
-    ]
-    dfx = spark.read.parquet(fs.join(root, f"df_v{cur}"))
-    n = committed[cur]["n"]
+    *state, cur = index_state(spark, root, version)
     if honor_tombstones:
-        segs, dfx, n = _apply_tombstone_overlay(
-            spark, root, segs, dfx, n, cur
-        )
-    return score((segs, dfx, n))
+        state = _apply_tombstone_overlay(spark, root, *state, cur)
+    return score(state)
 
 
 def _apply_tombstone_overlay(spark, root: str, segs, dfx, n, version):
@@ -1374,7 +1050,7 @@ def _apply_tombstone_overlay(spark, root: str, segs, dfx, n, version):
     from collections import Counter
     from functools import reduce
 
-    ts, resolved = _tombstone_ledger(root, spark)
+    ts, resolved = tombstone_ledger(root, spark)
     if not ts:
         return segs, dfx, n
     adj_counts: Counter = Counter()
@@ -1538,10 +1214,8 @@ def q_stream_tfidf_index_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     one word-keyed full-outer join — no corpus scan, no segment read.
     Oracle: the df delta is exactly the per-word DISTINCT-doc count of
     the batch-3 slice (``doc_id % 4 == 3``), a pure SQL aggregate."""
-    from ..sources import fs
-
     root = _asof_index_root(spark, sf_dir)
-    committed = _index_manifest_versions(root, spark)
+    committed = manifest_versions(root, spark)
     if not {2, 3} <= set(committed):
         raise RuntimeError(
             f"diff needs versions 2 and 3 committed; have {sorted(committed)}"
@@ -1603,7 +1277,6 @@ def read_sharded_index(
     from functools import reduce
 
     from ..operators.tfidf import score
-    from ..sources import fs
 
     if not roots:
         raise ValueError("read_sharded_index needs at least one root")
@@ -1613,34 +1286,12 @@ def read_sharded_index(
             f"({len(roots)})"
         )
     all_segs, shard_dfs, shard_ns = [], [], []
-    for i, root in enumerate(roots):
-        committed = _index_manifest_versions(root, spark)
-        if not committed:
-            raise RuntimeError(
-                f"no micro-batch committed an index version under {root!r}"
-            )
-        want = versions[i] if versions is not None else None
-        if want is None:
-            cur = max(committed)
-        elif want in committed:
-            cur = want
-        else:
-            raise RuntimeError(
-                f"version {want} is not committed under {root!r} (have "
-                f"{sorted(committed)})"
-            )
-        segs = [
-            spark.read.parquet(fs.join(root, f"seg_v{v}"))
-            for v in _segment_chain(committed, cur)
-        ]
-        dfx = spark.read.parquet(fs.join(root, f"df_v{cur}"))
-        n = committed[cur]["n"]
+    for root, version in zip(roots, versions or [None] * len(roots)):
+        *state, cur = index_state(spark, root, version)
         # each shard's takedown ledger adjusts ITS OWN state before the
         # cross-shard sums — shards are disjoint, so per-shard overlays
         # compose exactly (a doc's postings/df/N live in one shard)
-        segs, dfx, n = _apply_tombstone_overlay(
-            spark, root, segs, dfx, n, cur
-        )
+        segs, dfx, n = _apply_tombstone_overlay(spark, root, *state, cur)
         all_segs += segs
         shard_dfs.append(dfx)
         shard_ns.append(n)
@@ -1762,169 +1413,3 @@ def q_stream_tfidf_index_sharded_asof(
     return read_sharded_index(
         spark, _sharded_index_roots(spark, sf_dir), versions=[0, None]
     )
-
-
-def verify_index_root(root: str, spark=None) -> dict:
-    """Read-only integrity audit of a streamed-index root — the
-    ``models verify`` twin for ``make_index_merge`` state (the store
-    audit walks artifact families; this walks one index's manifest +
-    version dirs). Classification:
-
-    - ``live``: versions on the newest committed version's chain plus
-      its df — what ``read_merged_index()`` serves.
-    - ``retained``: committed versions off the live chain that are
-      still fully present — as-of readable (the grace generation on a
-      compacting stream; all history on a non-compacting one).
-    - ``partial``: committed versions missing some of their data dirs
-      (df reaped by a later batch, or segments swept) — as-of reads
-      of these versions would fail; expected state on a compacting
-      stream, a damage signal on a non-compacting one.
-    - ``orphaned``: version dirs on disk whose id has NO manifest entry
-      (a crash between data write and commit, or a pruned entry whose
-      sweep was deferred) — reap-safe, healed by the next compaction's
-      sweep.
-
-    Never writes. Returns ``{"root", "versions": {...}, "counts",
-    "newest", "orphans": [...], "reap_candidates": [...]}`` —
-    ``reap_candidates`` are the root-relative names an offline
-    :func:`gc_index_root` pass would delete, decided by the SAME
-    ``_sweep_index_plan`` the in-stream sweep runs (one verify/reap
-    code path, round-11 verdict #3)."""
-    from ..sources import fs
-
-    committed = _index_manifest_versions(root, spark)
-    names = fs.list_names(root, spark)
-    on_disk: dict[int, set] = {}
-    for name in names:
-        m = _VERSION_DIR.match(name)
-        if m:
-            on_disk.setdefault(int(m.group(2)), set()).add(m.group(1))
-    out: dict = {
-        "root": root,
-        "newest": max(committed) if committed else None,
-        "versions": {},
-        "orphans": sorted(v for v in on_disk if v not in committed),
-        "counts": {"live": 0, "retained": 0, "partial": 0},
-        "reap_candidates": _index_reap_candidates(
-            committed, names, fs.list_names(fs.join(root, "manifest"), spark)
-        )
-        + tombstone_leftovers(root, spark),
-        "tombstoned_docs": len(_tombstone_docs(root, spark)),
-    }
-    if not committed:
-        return out
-    cur = max(committed)
-    live = set(_segment_chain(committed, cur))
-    for v in sorted(committed):
-        have = on_disk.get(v, set())
-        if v == cur:
-            # the newest version serves its chain's segs + ITS df
-            state = "live" if {"seg", "df"} <= have else "partial"
-        elif v in live:
-            # an older chain member: serving needs only its segment
-            state = "live" if "seg" in have else "partial"
-        else:
-            # off the live chain: as-of readable iff fully present
-            state = "retained" if {"seg", "df"} <= have else "partial"
-        out["versions"][v] = {
-            "state": state,
-            "present": sorted(have),
-            "base": bool(committed[v].get("base")),
-        }
-        out["counts"][state] += 1
-    return out
-
-
-def _index_reap_candidates(
-    committed: dict, names: list, manifest_names: list | None = None
-) -> list:
-    """Root-relative names an offline GC pass deletes — the read-only
-    decision shared by ``verify_index_root`` (reporting) and
-    ``gc_index_root`` (acting). Policy by retention regime:
-
-    - COMPACTING (any ``base`` entry): exactly the in-stream sweep plan
-      with the horizon pushed past every id on disk — expired-grace
-      segments, unreachable df generations, crash orphans, and
-      manifest entries below the retention cutoff (as
-      ``manifest/v{N}`` names).
-    - FULL-RETENTION (no base): only crash orphans (data dirs whose id
-      has no manifest entry); history is never touched.
-    - EMPTY manifest: nothing — an uncommitted first batch's dirs are
-      in-flight state, not garbage.
-
-    In every regime, crashed atomic-write tmps inside ``manifest/``
-    (``v{N}.tmp-<hex>`` — a torn-commit heal that died mid-overwrite)
-    are leftovers: the manifest reader ignores non-``v{N}`` names, so
-    nothing else ever collects them. Torn TOMBSTONE ledger entries
-    (empty/unparseable — a crash inside ``add_tombstones``'s commit
-    write; the writer retried under a fresh uuid) are collected the
-    same way via ``tombstone_leftovers``, folded in by the callers."""
-    tmps = [
-        f"manifest/{n}" for n in (manifest_names or []) if ".tmp-" in n
-    ]
-    if not committed:
-        return tmps
-    compacting = any(m.get("base") for m in committed.values())
-    ids = [int(m.group(2)) for m in map(_VERSION_DIR.match, names) if m]
-    if compacting:
-        horizon = max([*ids, *committed]) + 1
-        dirs, prunes = _sweep_index_plan(dict(committed), names, horizon)
-        return dirs + [f"manifest/v{v}" for v in prunes] + tmps
-    return sorted(
-        n
-        for n in names
-        if (m := _VERSION_DIR.match(n)) and int(m.group(2)) not in committed
-    ) + tmps
-
-
-def gc_index_root(root: str, spark=None) -> dict:
-    """Offline garbage collection for a streamed-index root — the
-    ``models reap`` twin of :func:`verify_index_root` (the in-stream
-    sweep runs only at compacting batches, so a stopped stream can
-    leave expired grace segments, crash orphans, and prunable manifest
-    entries behind indefinitely; this closes that from the CLI).
-
-    Policy by retention regime, read from the manifest itself:
-
-    - a COMPACTING root (any ``base`` entry exists): apply exactly the
-      in-stream sweep as of a hypothetical next batch — expired-grace
-      segments, unreachable df generations, crash orphans, manifest
-      entries below the newest base. Run it only on a STOPPED stream
-      (it collapses the live-reader grace window by one generation).
-    - a FULL-RETENTION root (no base): every committed version is an
-      as-of-readable snapshot — only crash ORPHANS (data dirs whose id
-      has no manifest entry) are reaped; history is never touched.
-
-    Returns ``{"mode", "before", "after", "reaped"}`` with dir counts
-    and the deleted names. The delete set is EXACTLY
-    ``verify_index_root``'s ``reap_candidates`` — the decision lives
-    once, in ``_sweep_index_plan`` / ``_index_reap_candidates``; for a
-    compacting root the offline horizon covers every id on disk,
-    including a crashed never-committed FINAL batch above
-    max(committed), which the in-stream sweep would protect as its own
-    in-flight write (a later resume's replay rewrites its data with
-    mode=overwrite anyway)."""
-    from ..sources import fs
-
-    committed = _index_manifest_versions(root, spark)
-
-    def _dirs():
-        return sorted(filter(_VERSION_DIR.match, fs.list_names(root, spark)))
-
-    before = _dirs()
-    if not committed:
-        return {"mode": "empty", "before": before, "after": before, "reaped": []}
-    compacting = any(m.get("base") for m in committed.values())
-    for rel in _index_reap_candidates(
-        committed,
-        fs.list_names(root, spark),
-        fs.list_names(fs.join(root, "manifest"), spark),
-    ) + tombstone_leftovers(root, spark):
-        fs.delete_recursive(fs.join(root, rel), spark)
-    after = _dirs()
-    return {
-        "mode": "compacting" if compacting else "full-retention",
-        "before": before,
-        "after": after,
-        "reaped": sorted(set(before) - set(after)),
-    }
