@@ -249,6 +249,38 @@ def test_cli_models_ls_prune_drop(tmp_path, monkeypatch, capsys):
     assert main(["models", "ls"]) == 0  # empty store lists cleanly
 
 
+def test_cli_models_ls_schemed_root_matches_bare_path(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """`models ls` reads the store through ``sources.fs``: a ``file://``
+    root lists the same artifacts, sizes and count as its bare path
+    (walking it with ``os`` read a schemed root as an empty store)."""
+    import pandas as pd
+
+    from tf_idf_mapreduce_spark.sources.model_store import (
+        load_or_compute_table,
+        load_or_fit_pdf,
+    )
+
+    root = str(tmp_path / "models")
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", root)
+    load_or_fit_pdf("fam_a", ("k1",), lambda: pd.DataFrame({"x": [1, 2]}))
+    load_or_compute_table("fam_t", ("k2",), spark, lambda: spark.range(7))
+
+    def listing(*argv):
+        assert main(["models", "ls", *argv]) == 0
+        *rows, tail = capsys.readouterr().out.splitlines()
+        # family, key hash and size; the age column moves with the clock
+        return [r.split("\t")[:3] for r in rows], tail
+
+    bare_rows, bare_tail = listing()
+    uri_rows, uri_tail = listing("--root", f"file://{root}")
+    assert len(bare_rows) == 2 and all(int(r[2]) > 0 for r in bare_rows)
+    assert uri_rows == bare_rows
+    assert bare_tail == f"(2 artifacts under {root})"
+    assert uri_tail == f"(2 artifacts under file://{root})"
+
+
 def test_models_refit_cli(sf_dir, tmp_path, monkeypatch, capsys):
     """`models refit` drives the drift decision end-to-end: KEEP on the
     real fixture (arrivals ~10% everywhere), generation untouched."""

@@ -130,16 +130,29 @@ def test_groupby_formulation_matches_column_formulation(spark, planted):
     assert got == want
 
 
-def test_connected_components_transitive_chain(spark):
+@pytest.mark.parametrize(
+    "edge_rows, want",
+    [
+        # chain 1-2-3-4 (propagation needs multiple rounds), pair 5-6,
+        # singleton 7
+        (
+            [(3, 4), (2, 3), (1, 2), (5, 6)],
+            {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7},
+        ),
+        # no edges: every node labels itself
+        ([], {i: i for i in range(1, 8)}),
+        # isolated nodes on both sides of a chain 3-4-5
+        ([(4, 5), (3, 4)], {1: 1, 2: 2, 3: 3, 4: 3, 5: 3, 6: 6, 7: 7}),
+    ],
+    ids=["chain", "no_edges", "isolated_and_chain"],
+)
+def test_connected_components_transitive_chain(spark, edge_rows, want):
     from tf_idf_mapreduce_spark.operators.dedup import connected_components
 
     nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
-    # chain 1-2-3-4 (propagation needs multiple rounds), pair 5-6, singleton 7
-    edges = spark.createDataFrame(
-        [(3, 4), (2, 3), (1, 2), (5, 6)], "doc_a long, doc_b long"
-    )
+    edges = spark.createDataFrame(edge_rows, "doc_a long, doc_b long")
     got = {r.doc_id: r.label for r in connected_components(nodes, edges).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7}
+    assert got == want
 
 
 def test_shingles_short_doc(spark):
@@ -721,54 +734,6 @@ def test_connected_components_exact_round_budget_converges(spark):
         for r in connected_components(nodes, edges, max_iter=5).collect()
     }
     assert got == {i: 0 for i in range(n)}
-
-
-def test_connected_components_doubling_long_chain(spark):
-    """The unbounded-diameter path: a 200-link chain (diameter 199,
-    far past the plain propagator's budget) must converge in the
-    doubling variant's O(log d) rounds and agree with ground truth;
-    a two-component graph must keep its components separate."""
-    from tf_idf_mapreduce_spark.operators.dedup import (
-        connected_components_doubling,
-    )
-
-    n = 200
-    nodes = spark.createDataFrame(
-        [(i,) for i in range(n + 3)], "doc_id long"
-    )
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)] + [(n + 1, n + 2)],
-        "doc_a long, doc_b long",
-    )
-    got = {
-        r.doc_id: r.label
-        for r in connected_components_doubling(nodes, edges, max_iter=12).collect()
-    }
-    want = {i: 0 for i in range(n)}
-    want.update({n: n, n + 1: n + 1, n + 2: n + 1})
-    assert got == want
-
-
-def test_connected_components_doubling_matches_plain_on_fixture_graph(spark, sf_dir):
-    """Both CC implementations must label the real candidate graph
-    identically — the doubling variant is a drop-in scale path, not a
-    different semantics."""
-    from tf_idf_mapreduce_spark.operators.dedup import (
-        _docs,
-        connected_components,
-        connected_components_doubling,
-        minhash_candidate_pairs,
-    )
-
-    edges = (
-        minhash_candidate_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
-    )
-    nodes = _docs(spark, sf_dir).select("doc_id")
-    a = sorted(map(tuple, connected_components(nodes, edges).collect()))
-    b = sorted(map(tuple, connected_components_doubling(nodes, edges).collect()))
-    assert a == b
 
 
 def test_dedup_tile_cap_preserves_screen_results(spark, sf_dir, monkeypatch):

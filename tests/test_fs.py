@@ -63,11 +63,12 @@ def test_put_read_list_delete_roundtrip(spark, tmp_path, branch):
     fs.write_bytes(fs.join(root, "frame"), b"\x00frame", spark)
     assert fs.read_bytes(fs.join(root, "frame"), spark) == b"\x00frame"
     assert fs.read_bytes(fs.join(root, "absent"), spark) is None
-    status = {n: (d, m) for n, d, m in fs.list_status(root, spark)}
-    assert {n: d for n, (d, _m) in status.items()} == {
+    status = {n: (d, m, z) for n, d, m, z in fs.list_status(root, spark)}
+    assert {n: d for n, (d, _m, _z) in status.items()} == {
         "manifest": True, "frame": False,
     }
     assert abs(status["frame"][1] - time.time()) < 600
+    assert status["frame"][2] == len(b"\x00frame")
     assert fs.list_status(fs.join(root, "absent"), spark) == []
     # recursive delete of the prefix
     fs.delete_recursive(fs.join(root, "manifest"), spark)

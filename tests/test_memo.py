@@ -239,3 +239,50 @@ def test_one_entry_per_family_and_clear_empties_both_layers(
     MODEL_CACHED_QUERIES["sim_pca_power"]()
     assert not [k for k in io._MEMO_CACHE if k[1] == "pca_components"]
     assert not os.path.exists(tmp_path / "pca_components")
+
+
+#: (module, function) of every driver loop with a per-round action or
+#: barrier; nested functions count under their own name
+EXPECTED_LOOP_FUNCTIONS = {
+    ("operators/curation.py", "_qc_fit_gd"),
+    ("operators/curation.py", "pareto_layers"),
+    ("operators/dedup.py", "connected_components"),
+    ("operators/dedup.py", "minhash_k_sweep"),
+    ("operators/events.py", "q_funnel_window_sweep"),
+    ("operators/multimodal.py", "ahash_images"),
+    ("operators/multimodal.py", "phash_images"),
+    ("operators/multimodal.py", "run"),
+    ("operators/similarity.py", "_knn_walk"),
+    ("operators/similarity.py", "ivf_probe_sweep"),
+    ("operators/similarity.py", "kmeans_fit"),
+    ("operators/textstats.py", "_bpe_learn_merges"),
+    ("operators/textstats.py", "_fit_pdf"),
+    ("sources/index_root.py", "add_tombstones"),
+}
+
+
+def test_package_keeps_one_loop_per_iterative_algorithm():
+    """Each concept once: the functions whose ``for``/``while`` body
+    runs a driver action or a checkpoint barrier per round are the
+    package's driver-loop algorithms, one function each. A second copy
+    of k-means, connected components or the k-NN walk fails here."""
+    barriers = {"collect", "count", "localCheckpoint"}
+    pkg = Path(tf_idf_mapreduce_spark.__file__).parent
+    found = set()
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for loop in ast.walk(fn):
+                if not isinstance(loop, (ast.For, ast.While)):
+                    continue
+                if any(
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr in barriers
+                    for stmt in loop.body
+                    for n in ast.walk(stmt)
+                ):
+                    found.add((path.relative_to(pkg).as_posix(), fn.name))
+    assert found == EXPECTED_LOOP_FUNCTIONS

@@ -26,6 +26,8 @@ QUERIES = [
     # fixed-point iteration: integer sums make it BIT-exact, not just
     # value-equal, under any partitioning
     "sim_pagerank",
+    # the same walk with all restart mass on one seed
+    "sim_personalized_pagerank",
     # k-means fit sums members via Spark partial sums — the @6dp grid
     # must absorb the partition-count-dependent association order
     "sim_ivf_topk",

@@ -129,21 +129,19 @@ def test_kmeans_fit_deterministic_and_shaped(spark, sf_dir):
     c1 = sim.kmeans_fit(e, k=4, iters=3)
     c2 = sim.kmeans_fit(e, k=4, iters=3)
     assert c1 == c2
-    assert len(c1) == 4 and len(c1[0]) == sim.EMBED_DIM
+    assert len(c1) == 1 and len(c1[0]) == 4 and len(c1[0][0]) == sim.EMBED_DIM
 
 
 def test_pq_fused_fit_equals_per_subspace(spark, sf_dir):
-    """The fused PQ fit (one corpus pass per round for all M subspaces)
-    must reproduce the per-subspace ``kmeans_fit`` trajectory EXACTLY —
+    """The M-subspace fit (one corpus pass per round for all subspaces)
+    must reproduce ``kmeans_fit`` on each ``F.slice`` EXACTLY —
     codebooks equal element for element, every subspace."""
     from pyspark.sql import functions as F
 
     from tf_idf_mapreduce_spark.sources.io import load_table
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    fused = sim.kmeans_fit_fused(
-        e, n_sub=sim.PQ_M, subdim=sim.PQ_SUBDIM, k=sim.PQ_K, iters=sim.PQ_ITERS
-    )
+    fused = sim.kmeans_fit(e, k=sim.PQ_K, iters=sim.PQ_ITERS, n_sub=sim.PQ_M)
     for m in range(sim.PQ_M):
         sub = e.select(
             "vec_id",
@@ -151,7 +149,7 @@ def test_pq_fused_fit_equals_per_subspace(spark, sf_dir):
                 "embedding", m * sim.PQ_SUBDIM + 1, sim.PQ_SUBDIM
             ).alias("embedding"),
         )
-        ref = sim.kmeans_fit(sub, k=sim.PQ_K, iters=sim.PQ_ITERS)
+        (ref,) = sim.kmeans_fit(sub, k=sim.PQ_K, iters=sim.PQ_ITERS)
         assert fused[m] == ref, f"subspace {m} diverged"
 
 
@@ -624,7 +622,7 @@ def test_ivf_pq_is_pq_ranking_restricted_to_probed_cells(spark, sf_dir):
 
     composed = sim.ivf_pq_topk(spark, sf_dir, k=10).collect()
     e = sim.load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = sim.kmeans_fit(e)
+    (cents,) = sim.kmeans_fit(e)
     probe = {int(c) for c in sim._probe_order(e, cents, sim.DEFAULT_QUERY_VEC)[: sim.IVF_NPROBE]}
     assigned = {
         r.vec_id: r.cid

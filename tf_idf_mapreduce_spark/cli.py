@@ -340,26 +340,25 @@ def _models_main(argv: list[str]) -> int:
     root = store_root()
 
     if args.action == "ls":
-        if root is None or not os.path.isdir(root):
-            print(f"(empty store: {root})")
-            return 0
-        now = time.time()
-        n = 0
-        for fam in sorted(os.listdir(root)):
-            fam_dir = os.path.join(root, fam)
-            if not os.path.isdir(fam_dir):
-                continue
-            for h in sorted(os.listdir(fam_dir)):
-                d = os.path.join(fam_dir, h)
-                size = newest = 0
-                for dp, _dn, fns in os.walk(d):
-                    for fn in fns:
-                        st = os.stat(os.path.join(dp, fn))
-                        size += st.st_size
-                        newest = max(newest, st.st_mtime)
+        from .sources import fs
+        from .sources.model_store import _artifact_dirs, store_files
+
+        try:
+            if root is None or not fs.exists(root):
+                print(f"(empty store: {root})")
+                return 0
+            now = time.time()
+            n = 0
+            for fam, h, d in _artifact_dirs(root):
+                files = list(store_files(d))
+                size = sum(z for _, _, z in files)
+                newest = max((m for _, m, _ in files), default=0)
                 age = (now - newest) / 86400 if newest else float("inf")
                 print(f"{fam}\t{h}\t{size}\t{age:.1f}d")
                 n += 1
+        except Exception as exc:  # noqa: BLE001 — CLI boundary, as verify
+            print(str(exc) or type(exc).__name__, file=sys.stderr)
+            return 2
         print(f"({n} artifacts under {root})")
         return 0
     if args.action == "compact":

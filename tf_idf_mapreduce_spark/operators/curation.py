@@ -1603,8 +1603,9 @@ def _screen_table(
     relation is WRITTEN once as a fingerprint-keyed parquet table under
     the model store and every consumer (including every merge-branch
     re-evaluation in a parent plan) reads the files — exactly the temp-
-    table write the per-operator docstrings describe for 100 TB. Falls
-    back to a session ``localCheckpoint`` when the store is disabled.
+    table write the per-operator docstrings describe for 100 TB. When
+    the store is disabled, the store itself falls back to a session
+    ``localCheckpoint``.
 
     ``params`` carries the screen's governing hyperparameters (contam
     n-gram size, PII patterns, quality thresholds, ...) into the durable
@@ -1624,12 +1625,7 @@ def _screen_table(
         *plan_confs(spark),
         params,
     )
-    out, origin = load_or_compute_table(
-        f"screen_{name}", key, spark, lambda: df
-    )
-    if origin == "fit":
-        out = out.localCheckpoint()
-    return out
+    return load_or_compute_table(f"screen_{name}", key, spark, lambda: df)[0]
 
 
 def incremental_manifest(

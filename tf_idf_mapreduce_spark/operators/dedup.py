@@ -418,30 +418,39 @@ def connected_components(
 ) -> DataFrame:
     """Min-label propagation: each round, every node takes the min label
     among itself and its neighbors; converges in O(component diameter)
-    rounds. ``nodes``: (doc_id); ``edges``: (doc_a, doc_b) undirected.
-    Returns (doc_id, label) where label = component's min doc_id.
+    rounds. ``nodes``: (doc_id), the full node set; ``edges``:
+    (doc_a, doc_b) undirected. Returns (doc_id, label) for every node of
+    ``nodes``, label = its component's min doc_id (a node no edge
+    touches labels itself).
 
     This is the engine's iterative-algorithm surface: a driver loop over
     DISTRIBUTED steps (the driver only sees a 1-row convergence count per
     round, never data), with ``localCheckpoint`` truncating lineage so
-    plans don't grow per round.
+    plans don't grow per round. The edges are materialized once, and the
+    loop runs only over the nodes they touch: candidate edges are a tiny
+    fraction of a corpus by construction (LSH banding, IVF cells), so
+    every round shuffles candidate-sized tables, and the corpus-sized
+    remainder is labeled by one broadcast left join at the end.
 
     Convergence is VERIFIED, never assumed: the loop only returns after
     a round in which no label moved. A component whose diameter exceeds
     ``max_iter`` (a long near-dup CHAIN — template drift, not a clique)
     raises ``IterationLimitExceeded`` instead of silently returning
-    half-propagated labels that would split one true cluster into many.
-    The remedies the error names are honest: raise ``max_iter``
-    (diameter rounds suffice), or — at a scale where the diameter itself
-    is unbounded — switch to the large-star/small-star contraction
-    (Kiveris et al.), which converges in O(log n) rounds.
+    half-propagated labels that would split one true cluster into many;
+    diameter rounds suffice, so the remedy is a larger ``max_iter``.
     """
     from .guard import IterationLimitExceeded
 
+    edges = edges.select("doc_a", "doc_b").localCheckpoint()
     sym = edges.union(
         edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint()
-    labels = nodes.select("doc_id", F.col("doc_id").alias("label")).localCheckpoint()
+    )
+    labels = (
+        sym.select(F.col("doc_a").alias("doc_id"))
+        .distinct()
+        .select("doc_id", F.col("doc_id").alias("label"))
+        .localCheckpoint()
+    )
     for _ in range(max_iter):
         neighbor_min = (
             sym.join(labels, sym.doc_a == labels.doc_id)
@@ -461,85 +470,16 @@ def connected_components(
         changed = new_labels.where(F.col("_chg")).count()
         labels = new_labels.drop("_chg")
         if changed == 0:
-            return labels
+            return nodes.join(
+                F.broadcast(labels.withColumnRenamed("label", "conn_label")),
+                "doc_id",
+                "left",
+            ).select("doc_id", F.coalesce("conn_label", "doc_id").alias("label"))
     raise IterationLimitExceeded(
         f"connected_components did not converge in {max_iter} rounds — a "
         f"component's diameter exceeds max_iter (labels were still moving "
-        f"in the final round). Raise max_iter toward the expected diameter, "
-        f"or use connected_components_doubling (O(log diameter) rounds) "
-        f"for unbounded chains."
-    )
-
-
-def connected_components_doubling(
-    nodes: DataFrame, edges: DataFrame, max_iter: int = 30
-) -> DataFrame:
-    """Connected components in O(log diameter) rounds: min-neighbor
-    propagation PLUS pointer doubling (label(u) ← label(label(u)) each
-    round — the shortcut step of the large-star/small-star family,
-    Kiveris et al. 2014). Same contract and output as
-    ``connected_components``; this is the UNBOUNDED-DIAMETER path the
-    plain propagator's ``IterationLimitExceeded`` points at — a 1000-
-    link near-dup chain (template drift) finishes in ~11 rounds instead
-    of 1000.
-
-    Per round: one neighbor-min aggregate (candidate-edge-sized shuffle)
-    plus one label self-join (node-sized shuffle). Labels only ever
-    decrease toward the component min, doubling compresses any chain of
-    stale pointers geometrically, and convergence is verified by a
-    no-change round exactly like the plain propagator. The default
-    budget of 30 covers diameters past 2^28 — every graph that fits in
-    storage — so the raise survives only as a safety contract.
-    """
-    from .guard import IterationLimitExceeded
-
-    sym = edges.union(
-        edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint()
-    labels = nodes.select(
-        "doc_id", F.col("doc_id").alias("label")
-    ).localCheckpoint()
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym.doc_a == labels.doc_id)
-            .groupBy(F.col("doc_b").alias("doc_id"))
-            .agg(F.min("label").alias("nlabel"))
-        )
-        stepped = labels.join(neighbor_min, "doc_id", "left").select(
-            "doc_id",
-            F.least(
-                F.col("label"), F.coalesce("nlabel", F.col("label"))
-            ).alias("label"),
-        )
-        # pointer doubling: follow the label's own label one hop —
-        # label values are node ids of the same relation, so this is a
-        # self-join of the stepped table on (label = doc_id)
-        parent = stepped.select(
-            F.col("doc_id").alias("label"), F.col("label").alias("plabel")
-        )
-        doubled = (
-            stepped.join(parent, "label", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("label"), F.coalesce("plabel", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            doubled.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = doubled
-        if changed == 0:
-            return labels
-    raise IterationLimitExceeded(
-        f"connected_components_doubling did not converge in {max_iter} "
-        f"rounds — with pointer doubling that means a component diameter "
-        f"past 2^{max_iter - 2}; the input is almost certainly wrong."
+        f"in the final round). Raise max_iter to at least the longest "
+        f"chain's diameter plus one verifying round."
     )
 
 
@@ -552,30 +492,11 @@ def duplicate_clusters(
     the end-to-end shape of a corpus dedup: sketch → candidates → clusters
     → keepers.
     """
-    docs = _docs(spark, sf_dir).select("doc_id")
-    # materialize the candidate edges ONCE: both the symmetrized edge list
-    # and the connected-node set derive from them, and without the barrier
-    # each branch re-runs the whole MinHash pipeline
-    edges = (
-        minhash_candidate_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
+    labels = connected_components(
+        _docs(spark, sf_dir).select("doc_id"),
+        minhash_candidate_pairs(spark, sf_dir),
+        max_iter=max_iter,
     )
-    # iterate only over the connected subgraph: candidate pairs are a tiny
-    # fraction of the corpus by LSH construction, so every propagation
-    # round shuffles candidate-sized tables, not the whole corpus; the
-    # (huge) singleton remainder is labeled by a final broadcast join.
-    conn_nodes = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .union(edges.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    conn_labels = connected_components(conn_nodes, edges, max_iter=max_iter)
-    labels = docs.join(
-        F.broadcast(conn_labels.withColumnRenamed("label", "conn_label")),
-        "doc_id",
-        "left",
-    ).select("doc_id", F.coalesce("conn_label", "doc_id").alias("label"))
     return labels.select(
         "doc_id",
         F.col("label").alias("cluster_id"),
@@ -948,15 +869,15 @@ def semantic_keep(spark: SparkSession, sf_dir: str, max_iter: int = 20) -> DataF
     pairs form ONLY within a k-means cell — the quadratic is per-cell
     (|cell| ~ n/k; at 100 TB k grows with n, pinned by
     ``ivf_cell_histogram``'s occupancy report), never corpus-wide, and
-    the pair relation is an equi-join on cid. Components run on the
-    candidate subgraph only (tiny by construction); the corpus-sized
-    remainder is labeled by a broadcast join, identical to
+    the pair relation is an equi-join on cid. ``connected_components``
+    iterates over the candidate subgraph only (tiny by construction) and
+    labels the corpus-sized remainder by one broadcast join, as for
     ``duplicate_clusters``. The k-means fit is the deterministic @6dp
-    ``kmeans_fit``, so a DuckDB oracle replays cells, edges, components
-    (recursive closure), and keeper choice exactly.
+    IVF fit (``ivf_centroids``), so a DuckDB oracle replays cells, edges,
+    components (recursive closure), and keeper choice exactly.
     The composed relation is cached per (sf_dir, documents+embeddings
-    fingerprints, partition conf) as a session-lifetime ``localCheckpoint``
-    — the SemDeDup disposition is consumed by this query, the attrition
+    fingerprints, partition conf) in the session memo over the durable
+    table (``_semantic_keep_table``) — the SemDeDup disposition is consumed by this query, the attrition
     funnel, the e2e manifest, and the agreement report in one bench
     session, and a production pipeline writes it to disk once for the
     same reason. The cache holds a checkpointed DataFrame (executor-side
@@ -997,19 +918,16 @@ def _semantic_keep_table(
     by every consumer in every session — the production shape (a dedup
     pipeline persists its disposition; downstream joins read the table).
     The durable key drops the applicationId (files outlive the context);
-    when the store is disabled the session ``localCheckpoint`` barrier
-    is kept so consumers still share one materialization."""
+    when the store is disabled, the store's own ``localCheckpoint``
+    fallback keeps consumers on one materialization."""
     from ..sources.model_store import load_or_compute_table
 
-    result, origin = load_or_compute_table(
+    return load_or_compute_table(
         "semantic_keep",
         ("semantic_keep", sf_dir) + version,
         spark,
         lambda: _semantic_keep_compute(spark, sf_dir, max_iter),
-    )
-    if origin == "fit":
-        result = result.localCheckpoint()
-    return result
+    )[0]
 
 
 def _semantic_keep_compute(
@@ -1050,25 +968,10 @@ def _semantic_keep_compute(
             "vec_a long, vec_b long",
         )
         .select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
-        .localCheckpoint()
     )
-    conn_nodes = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .union(edges.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    conn = connected_components(conn_nodes, edges, max_iter=max_iter)
-    labeled = (
-        e.select(F.col("vec_id").alias("doc_id"))
-        .join(
-            F.broadcast(conn.withColumnRenamed("label", "cluster_id")),
-            "doc_id",
-            "left",
-        )
-        .select(
-            "doc_id", F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id")
-        )
-    )
+    labeled = connected_components(
+        e.select(F.col("vec_id").alias("doc_id")), edges, max_iter=max_iter
+    ).withColumnRenamed("label", "cluster_id")
     docs = _docs(spark, sf_dir).select(
         "doc_id",
         "lang",
@@ -1108,11 +1011,12 @@ def _incremental_screen_table(
     """Durable-table wrapper for an arrival screen: computed once,
     written once under the model store, read by every consumer in every
     session (the production pipeline persists the day's screen verdicts
-    for exactly this reason); ``localCheckpoint`` fallback when the
-    store is disabled. The two arrival screens are batch-sized relations
-    consumed by dedup_incremental (OWNER, first in registry order), the
-    semantic twin's consumers, the admission manifest and the composed
-    index update; the memo entry is named after the screen's family.
+    for exactly this reason); the store itself falls back to a
+    ``localCheckpoint`` when it is disabled. The two arrival screens are
+    batch-sized relations consumed by dedup_incremental (OWNER, first in
+    registry order), the semantic twin's consumers, the admission
+    manifest and the composed index update; the memo entry is named
+    after the screen's family.
 
     ``params`` folds the screen's governing hyperparameters (MinHash
     shape, thresholds, LSH geometry, batch-slice rule) into the durable
@@ -1130,10 +1034,9 @@ def _incremental_screen_table(
     def build() -> DataFrame:
         from ..sources.model_store import load_or_compute_table
 
-        result, origin = load_or_compute_table(
+        return load_or_compute_table(
             name, ("incremental", name, sf_dir) + version, spark, compute
-        )
-        return result.localCheckpoint() if origin == "fit" else result
+        )[0]
 
     return memo(spark, sf_dir, name, version, build)
 
@@ -1179,12 +1082,7 @@ def corpus_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "key",
         )
 
-    result, origin = load_or_compute_table(
-        "corpus_band_index", key, spark, compute
-    )
-    if origin == "fit":
-        result = result.localCheckpoint()
-    return result
+    return load_or_compute_table("corpus_band_index", key, spark, compute)[0]
 
 
 def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

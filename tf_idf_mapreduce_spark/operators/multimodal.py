@@ -1079,42 +1079,25 @@ def media_phash_clusters(
     (sketch → banded candidates → clusters → keepers), so an image
     corpus dedups with the same end-to-end shape as the text corpus.
 
-    Reuses the text pipeline's min-label propagation verbatim
-    (``dedup.connected_components``): edges are the ``is_near`` pHash
-    pairs (banded, pigeonhole-complete at Hamming <= 8, never
-    all-pairs), iteration shuffles candidate-sized tables only, and the
-    singleton remainder — at 100 TB, almost everything — is labeled by
-    one broadcast join, never entering the loop. Keeper = the cluster's
+    Calls the engine's one min-label propagation
+    (``dedup.connected_components``) on the ``is_near`` pHash pairs
+    (banded, pigeonhole-complete at Hamming <= 8, never all-pairs):
+    iteration shuffles candidate-sized tables only, and the singleton
+    remainder — at 100 TB, almost everything — is labeled by one
+    broadcast join, never entering the loop. Keeper = the cluster's
     minimum doc_id."""
     from .dedup import connected_components
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    edges = (
-        media_phash_pairs(spark, sf_dir)
-        .where(F.col("is_near"))
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
+    conn = connected_components(
+        load_table(spark, sf_dir, "documents").select("doc_id"),
+        media_phash_pairs(spark, sf_dir).where(F.col("is_near")),
+        max_iter=max_iter,
     )
-    conn_nodes = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .union(edges.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    conn = connected_components(conn_nodes, edges, max_iter=max_iter)
-    lab = F.coalesce("conn_label", "doc_id")
-    return (
-        docs.join(
-            F.broadcast(conn.withColumnRenamed("label", "conn_label")),
-            "doc_id",
-            "left",
-        )
-        .select(
-            "doc_id",
-            lab.alias("cluster_id"),
-            (F.col("doc_id") == lab).alias("is_keeper"),
-        )
-        .orderBy("doc_id")
-    )
+    return conn.select(
+        "doc_id",
+        F.col("label").alias("cluster_id"),
+        (F.col("doc_id") == F.col("label")).alias("is_keeper"),
+    ).orderBy("doc_id")
 
 
 #: VAD framing: 16-sample frames (clip lengths are multiples of 16 by

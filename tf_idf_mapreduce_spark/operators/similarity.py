@@ -453,109 +453,48 @@ def _assign_cids(x, cmat, cnorm2):
 
 
 def kmeans_fit(
-    e: DataFrame, k: int = IVF_K, iters: int = IVF_ITERS
-) -> list[list[float]]:
-    """Euclidean k-means over the embedding column, pure DataFrame steps.
+    e: DataFrame, k: int = IVF_K, iters: int = IVF_ITERS, n_sub: int = 1
+) -> list[list[list[float]]]:
+    """Euclidean k-means over the embedding column, pure DataFrame steps,
+    fit independently on each of ``n_sub`` equal-width slices of the
+    embedding (1 for the IVF coarse quantizer, ``PQ_M`` for the product
+    quantizer's subspaces). Returns the ``n_sub`` codebooks, each a list
+    of k centroids of width ``EMBED_DIM / n_sub``.
 
     Deterministic init (vectors with vec_id < k). Each iteration is ONE
-    distributed pass: ``mapInPandas`` assigns every vector to its nearest
-    centroid (numpy argmin) and emits per-Arrow-batch PARTIAL sums — one
-    (cid, dim, partial_sum, partial_n) row per centroid-dimension per
-    batch — so the shuffle carries O(k·d·batches) rows instead of the
-    n·d posexplode; a tiny groupBy finishes the means. Only the k x d
-    centroid MATRIX (model state, a few KB) ever reaches the driver,
-    once per iteration — the same driver/executor split MLlib's k-means
-    uses; the n x d data never moves.
+    distributed pass for every subspace: ``mapInPandas`` assigns every
+    vector slice to its nearest centroid (numpy argmin) and emits
+    per-Arrow-batch PARTIAL sums — one (m, cid, dim, partial_sum,
+    partial_n) row per subspace-centroid-dimension per batch — so the
+    shuffle carries O(k·d·batches) rows instead of the n·d posexplode;
+    a tiny groupBy finishes the means. Only the centroid matrices (model
+    state, a few KB) ever reach the driver, once per iteration — the
+    same driver/executor split MLlib's k-means uses; the n x d data
+    never moves.
 
     Fully deterministic AND cross-engine reproducible: centroids and
     assignment keys live on the @6dp grid (``_round6``/``_assign_cids``),
-    iteration stops on EXACT centroid equality, so a fixed-iteration SQL
-    replay (DuckDB recursive/unrolled CTEs) reaches the identical model —
-    that is what upgrades ``sim_ivf_topk`` from rows-only to a full
-    value-hash oracle.
+    and each subspace stops on EXACT centroid equality (a converged
+    subspace drops out of the pass; the loop ends when all have), so a
+    fixed-iteration SQL replay (DuckDB recursive/unrolled CTEs) reaches
+    the identical model — that is what upgrades ``sim_ivf_topk`` from
+    rows-only to a full value-hash oracle. Slicing after the float64
+    cast commutes with Spark-side ``F.slice``, so subspace m's codebook
+    equals ``kmeans_fit`` on the m-th slice (pinned by
+    ``test_pq_fused_fit_equals_per_subspace``).
     """
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    cents = _round6(
-        np.stack(
-            [
-                np.array(r.embedding, dtype="float64")
-                for r in e.where(F.col("vec_id") < k).orderBy("vec_id").collect()
-            ]
-        )
-    )
-    partial_schema = "cid long, dim long, s double, n long"
-    for _ in range(iters):
-        cmat = cents.copy()
-        cnorm2 = (cmat**2).sum(axis=1)
-
-        def partial_sums(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                x = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-                cid = _assign_cids(x, cmat, cnorm2)
-                for c in np.unique(cid):
-                    member = x[cid == c]
-                    yield pd.DataFrame(
-                        {
-                            "cid": int(c),
-                            "dim": np.arange(x.shape[1], dtype="int64"),
-                            "s": member.sum(axis=0),
-                            "n": len(member),
-                        }
-                    )
-
-        means = (
-            e.select("embedding")
-            .mapInPandas(partial_sums, partial_schema)
-            .groupBy("cid", "dim")
-            .agg((F.sum("s") / F.sum("n")).alias("mu"))
-            .collect()
-        )
-        new = cents.copy()  # empty clusters keep their previous centroid
-        for r in means:
-            new[r.cid][r.dim] = _round6(r.mu)
-        if np.array_equal(new, cents):
-            break  # exact fixed point — further iterations are no-ops
-        cents = new
-    return cents.tolist()
-
-
-def kmeans_fit_fused(
-    e: DataFrame,
-    n_sub: int,
-    subdim: int,
-    k: int,
-    iters: int,
-) -> list[list[list[float]]]:
-    """``kmeans_fit`` over every length-``subdim`` slice of the embedding
-    AT ONCE: one corpus pass per iteration emits the per-batch partial
-    sums for ALL ``n_sub`` subspaces (rows keyed by subspace id), so a
-    product-quantizer fit costs ``iters`` distributed passes instead of
-    ``n_sub * iters`` (guide §1.2 — remove redundant passes; the driver
-    still only ever sees k x d centroid matrices).
-
-    Trajectory-exact vs the per-subspace fits: identical init rows
-    (same ``vec_id < k`` collect), identical float64 slice values
-    (slicing after the cast commutes with Spark-side ``F.slice``),
-    identical per-batch members and partial sums, the same @6dp rounded
-    means and the same per-subspace exact-equality early stop —
-    pinned by ``test_pq_fused_fit_equals_per_subspace``. A converged
-    subspace drops out of the kernel's emit; the pass loop ends when
-    every subspace has hit its fixed point."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    init_rows = (
-        e.where(F.col("vec_id") < k).orderBy("vec_id").collect()
-    )
     full = np.stack(
-        [np.array(r.embedding, dtype="float64") for r in init_rows]
+        [
+            np.array(r.embedding, dtype="float64")
+            for r in e.where(F.col("vec_id") < k).orderBy("vec_id").collect()
+        ]
     )
+    subdim = full.shape[1] // n_sub
     cents = [
         _round6(full[:, m * subdim : (m + 1) * subdim].copy())
         for m in range(n_sub)
@@ -599,12 +538,12 @@ def kmeans_fit_fused(
             .collect()
         )
         for m in active:
-            new = cents[m].copy()
+            new = cents[m].copy()  # empty clusters keep their centroid
             for r in means:
                 if r.m == m:
                     new[r.cid][r.dim] = _round6(r.mu)
             if np.array_equal(new, cents[m]):
-                done[m] = True
+                done[m] = True  # exact fixed point — further rounds are no-ops
             cents[m] = new
     return [c.tolist() for c in cents]
 
@@ -627,7 +566,7 @@ def ivf_centroids(e: DataFrame, cache_key: str | None = None) -> list:
     spark = e.sparkSession
 
     def _fit_pdf():
-        cents = kmeans_fit(e)
+        cents = kmeans_fit(e)[0]
         return pd.DataFrame(
             [
                 (c, d, v)
@@ -1365,6 +1304,68 @@ PAGERANK_ITERS = 10
 PAGERANK_CHECKPOINT_EVERY = 4
 
 
+def _knn_walk(
+    spark: SparkSession, sf_dir: str, iters: int, damp_pct: int, teleport
+) -> DataFrame:
+    """The random walk over the k-NN similarity graph behind both
+    PageRank queries; only the teleport distribution differs between
+    them. ``teleport(nodes)`` returns ``(base, start, restart)``: the
+    node relation every round's ranks are built over (``nodes`` plus
+    any column the two expressions read), the round-0 rank and the
+    per-round restart mass, both BIGINT nano-units.
+
+    Pure DataFrame iteration: per round ONE join of the rank vector onto
+    the edge list, one groupBy to sum inbound contributions, one left
+    join back onto the node set for rank-sinkless nodes. Every node of a
+    k-NN graph has out-degree exactly k, so the contribution is rank/k
+    with no out-degree join; the new rank is restart + the damped
+    inbound sum, ``(d·inbound + 50) div 100``.
+
+    Arithmetic is FIXED-POINT: ranks live as BIGINT nano-units and every
+    step is integer division — sums of integers are order-independent, so
+    the iteration is bit-exact across partitionings AND engines (the @6dp
+    float grid used elsewhere still leaks ~1e-9 boundary flips after 10
+    compounding rounds; integers cannot). Truncation bias is ≤1 nano per
+    step — invisible at rank scale. The per-round lineage grows linearly,
+    so the rank relation is ``localCheckpoint``ed every
+    ``PAGERANK_CHECKPOINT_EVERY`` rounds (lazy — materializes with the
+    next round's join), bounding plan depth at any iteration count.
+
+    Returns (node, rank_nano BIGINT, rank double = rank_nano/1e9).
+    """
+    # the edge list feeds every iteration's join — materialize it once or
+    # the tile kernel re-runs per round (10x the graph build)
+    edges = (
+        knn_graph(spark, sf_dir)
+        .select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
+        .localCheckpoint()
+    )
+    base, start, restart = teleport(
+        edges.select(F.col("src").alias("node")).distinct()
+    )
+    k = KNN_K
+    damped = F.expr(
+        f"({damp_pct} * coalesce(inbound, CAST(0 AS BIGINT)) + 50) div 100"
+    )
+    ranks = base.select("node", start.alias("rank_nano"))
+    for i in range(iters):
+        contrib = (
+            edges.join(ranks.withColumnRenamed("node", "src"), "src")
+            .groupBy("dst")
+            .agg(F.sum(F.expr(f"rank_nano div {k}")).alias("inbound"))
+        )
+        ranks = base.join(
+            contrib.withColumnRenamed("dst", "node"), "node", "left"
+        ).select("node", (restart + damped).alias("rank_nano"))
+        if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and i + 1 < iters:
+            ranks = ranks.localCheckpoint(eager=False)
+    return ranks.select(
+        "node",
+        "rank_nano",
+        (F.col("rank_nano") / 1_000_000_000).alias("rank"),
+    )
+
+
 def pagerank(
     spark: SparkSession,
     sf_dir: str,
@@ -1375,66 +1376,22 @@ def pagerank(
     finds hub documents in a semantic neighborhood graph (retrieval-free
     importance ranking, diversity sampling seeds, dedup keeper choice).
 
-    Pure DataFrame iteration: per round ONE join of the rank vector onto
-    the edge list, one groupBy to sum inbound contributions, one left
-    join back onto the node set for rank-sinkless nodes. Every node of a
-    k-NN graph has out-degree exactly k, so the contribution is rank/k
-    with no out-degree join.
-
-    Arithmetic is FIXED-POINT: ranks live as BIGINT nano-units and every
-    step is integer division — sums of integers are order-independent, so
-    the iteration is bit-exact across partitionings AND engines (the @6dp
-    float grid used elsewhere still leaks ~1e-9 boundary flips after 10
-    compounding rounds; integers cannot). Truncation bias is ≤1 nano per
-    step — invisible at rank scale. The per-round lineage grows linearly,
-    so the rank relation is ``localCheckpoint``ed every
-    ``PAGERANK_CHECKPOINT_EVERY`` rounds (lazy — materializes with the
-    next round's join), bounding plan depth at any iteration count; the
-    same cadence ``connected_components`` uses per round.
-
+    ``_knn_walk`` with a uniform start (1/n) and a uniform restart
+    ((1-d)/n), n the node count, carried as a broadcast 1-row column.
     Returns (node, rank_nano BIGINT, rank double = rank_nano/1e9);
     Σ rank ≈ 1 (damped, minus truncation dust).
     """
-    # the edge list feeds every iteration's join — materialize it once or
-    # the tile kernel re-runs per round (10x the graph build)
-    edges = (
-        knn_graph(spark, sf_dir)
-        .select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
-        .localCheckpoint()
-    )
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    n_nodes = nodes.agg(F.count("*").alias("n"))
-
-    k = KNN_K
     base_nano = (100 - damp_pct) * 10_000_000  # (1-d) * 1e9
-    ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
-        "node", F.expr("CAST(1000000000 AS BIGINT) div n").alias("rank_nano")
-    )
-    for i in range(iters):
-        contrib = (
-            edges.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.expr(f"rank_nano div {k}")).alias("inbound"))
+
+    def uniform(nodes):
+        n_nodes = nodes.agg(F.count("*").alias("n"))
+        return (
+            nodes.crossJoin(F.broadcast(n_nodes)),
+            F.expr("CAST(1000000000 AS BIGINT) div n"),
+            F.expr(f"CAST({base_nano} AS BIGINT) div n"),
         )
-        ranks = (
-            nodes.join(contrib.withColumnRenamed("dst", "node"), "node", "left")
-            .crossJoin(F.broadcast(n_nodes))
-            .select(
-                "node",
-                F.expr(
-                    f"CAST({base_nano} AS BIGINT) div n"
-                    f" + ({damp_pct} * coalesce(inbound, CAST(0 AS BIGINT))"
-                    f" + 50) div 100"
-                ).alias("rank_nano"),
-            )
-        )
-        if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and i + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.select(
-        "node",
-        "rank_nano",
-        (F.col("rank_nano") / 1_000_000_000).alias("rank"),
-    )
+
+    return _knn_walk(spark, sf_dir, iters, damp_pct, uniform)
 
 
 def personalized_pagerank(
@@ -1449,53 +1406,22 @@ def personalized_pagerank(
     rewards multi-hop connectivity, surfacing items similar to the
     seed's whole NEIGHBORHOOD rather than to its raw vector.
 
-    Same fixed-point BIGINT-nano iteration as ``pagerank`` (bit-exact
-    across engines and partitionings); only the teleport differs — all
-    restart mass returns to the seed instead of spreading uniformly.
+    ``_knn_walk`` (bit-exact across engines and partitionings) with all
+    start and restart mass on the seed instead of spread uniformly.
     Returns (node, rank_nano, rank); the seed holds the lion's share and
     mass decays with hop distance.
     """
-    edges = (
-        knn_graph(spark, sf_dir)
-        .select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
-        .localCheckpoint()
-    )
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-
-    k = KNN_K
     base_nano = (100 - damp_pct) * 10_000_000  # (1-d) * 1e9, all to the seed
-    seed = F.when(F.col("node") == seed_vec_id, F.lit(1_000_000_000)).otherwise(
-        F.lit(0)
-    )
-    ranks = nodes.select("node", seed.cast("long").alias("rank_nano"))
-    for i in range(iters):
-        contrib = (
-            edges.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.expr(f"rank_nano div {k}")).alias("inbound"))
+    is_seed = F.col("node") == seed_vec_id
+
+    def on_seed(nodes):
+        return (
+            nodes,
+            F.when(is_seed, F.lit(1_000_000_000)).otherwise(F.lit(0)).cast("long"),
+            F.when(is_seed, F.lit(base_nano)).otherwise(F.lit(0)).cast("long"),
         )
-        teleport = F.when(
-            F.col("node") == seed_vec_id, F.lit(base_nano)
-        ).otherwise(F.lit(0))
-        ranks = nodes.join(
-            contrib.withColumnRenamed("dst", "node"), "node", "left"
-        ).select(
-            "node",
-            (
-                teleport.cast("long")
-                + F.expr(
-                    f"({damp_pct} * coalesce(inbound, CAST(0 AS BIGINT))"
-                    f" + 50) div 100"
-                )
-            ).alias("rank_nano"),
-        )
-        if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and i + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.select(
-        "node",
-        "rank_nano",
-        (F.col("rank_nano") / 1_000_000_000).alias("rank"),
-    )
+
+    return _knn_walk(spark, sf_dir, iters, damp_pct, on_seed)
 
 
 #: Product quantization: M subspaces of SUBDIM dims each (M*SUBDIM = the
@@ -1511,7 +1437,8 @@ PQ_ITERS = 3
 
 def _pq_codebooks(e: DataFrame, cache_key: str | None = None) -> list:
     """Per-subspace codebooks: the SAME deterministic @6dp k-means as IVF
-    (``kmeans_fit``), run on each 16-dim slice — so a SQL oracle replays
+    (``kmeans_fit`` with ``n_sub=PQ_M``, one codebook per 16-dim slice,
+    all fit in one corpus pass per round) — so a SQL oracle replays
     every codebook exactly (unrolled CTEs, one set per subspace). Cached
     like ``ivf_centroids``: the plan confs in the version keep the
     partition-invariance suite honest (each config refits; only true
@@ -1526,14 +1453,7 @@ def _pq_codebooks(e: DataFrame, cache_key: str | None = None) -> list:
     spark = e.sparkSession
 
     def _fit_pdf():
-        # ONE corpus pass per k-means round covers all M subspaces
-        # (``kmeans_fit_fused``): 3 passes instead of 12, the structural
-        # replacement for round 12's thread-overlap workaround. The
-        # fused trajectory is exactly the per-subspace one (pinned by
-        # test_pq_fused_fit_equals_per_subspace).
-        books = kmeans_fit_fused(
-            e, n_sub=PQ_M, subdim=PQ_SUBDIM, k=PQ_K, iters=PQ_ITERS
-        )
+        books = kmeans_fit(e, k=PQ_K, iters=PQ_ITERS, n_sub=PQ_M)
         rows = []
         for m, book in enumerate(books):
             rows.extend(
@@ -1580,8 +1500,8 @@ def pq_code_table(
     storage layout made literal: at 100 TB the serving scan reads
     M bytes of codes + one norm per vector, and the raw embeddings are
     touched only by a rerank stage. Keyed on both quantizers' shapes
-    (a hyperparameter edit re-encodes). Store disabled → the encode
-    runs in-plan, same relation."""
+    (a hyperparameter edit re-encodes). Store disabled → the store's
+    ``localCheckpoint`` fallback holds the encode, same relation."""
     import numpy as np
     import pandas as pd
 
@@ -1644,10 +1564,7 @@ def pq_code_table(
 
         return e.mapInPandas(kernel, out_schema)
 
-    result, origin = load_or_compute_table("pq_code_table", key, spark, compute)
-    if origin == "fit":
-        result = result.localCheckpoint()
-    return result
+    return load_or_compute_table("pq_code_table", key, spark, compute)[0]
 
 
 def _adc_score(dtabs, qn: float):

@@ -863,7 +863,7 @@ def _index_file_count(spark, key: tuple) -> int:
     return sum(
         name.endswith(".parquet")
         for fam in INDEX_FAMILIES
-        for name, _mtime in store_files(fs.join(root, fam), spark)
+        for name, _mtime, _size in store_files(fs.join(root, fam), spark)
     )
 
 

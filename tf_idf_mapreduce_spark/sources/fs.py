@@ -374,21 +374,29 @@ def list_names(path: str, spark=None) -> list[str]:
         return []
 
 
-def list_status(path: str, spark=None) -> list[tuple[str, bool, float]]:
-    """``(name, is_dir, mtime)`` of each child of ``path``, mtime in
-    epoch seconds ([] when absent, as :func:`list_names`)."""
+def list_status(path: str, spark=None) -> list[tuple[str, bool, float, int]]:
+    """``(name, is_dir, mtime, size)`` of each child of ``path``, mtime
+    in epoch seconds, size in bytes ([] when absent, as
+    :func:`list_names`). Locally, Hadoop's checksum sidecars
+    (``.<name>.crc``) are skipped as Hadoop's own listing skips them,
+    so a bare path and its ``file://`` URI list the same children."""
     if _is_remote(path):
         return [
             (
                 st.getPath().getName(),
                 bool(st.isDirectory()),
                 st.getModificationTime() / 1000.0,
+                int(st.getLen()),
             )
             for st in _list_remote(path, spark)
         ]
     try:
         with os.scandir(_local(path)) as it:
-            return [(e.name, e.is_dir(), e.stat().st_mtime) for e in it]
+            return [
+                (e.name, e.is_dir(), (st := e.stat()).st_mtime, st.st_size)
+                for e in it
+                if not (e.name.startswith(".") and e.name.endswith(".crc"))
+            ]
     except (FileNotFoundError, NotADirectoryError):
         return []
 

@@ -283,12 +283,15 @@ def load_or_compute_table(
 
     The computed relation is written once under the store and every
     load — including the first — reads the parquet back, so all
-    consumers in all sessions see literally the same files. Returns
-    ``(df, origin)``.
+    consumers in all sessions see literally the same files. Where the
+    store cannot serve (disabled, read-only, unreadable live artifact)
+    the computed relation comes back behind a session
+    ``localCheckpoint``, so its consumers still share one
+    materialization. Returns ``(df, origin)``.
     """
     d = model_dir(name, key, spark)
     if d is None:
-        return compute(), "fit"
+        return compute().localCheckpoint(), "fit"
     live = _live(d, spark) or _stage(
         d,
         f"v-{uuid.uuid4().hex}",
@@ -296,7 +299,7 @@ def load_or_compute_table(
         spark,
     )
     if live is None:
-        return compute(), "fit"
+        return compute().localCheckpoint(), "fit"
     try:
         return spark.read.parquet(live), "store"
     except Exception:
@@ -304,7 +307,7 @@ def load_or_compute_table(
         # only _SUCCESS, transient reader error): degrade to
         # compute-only — a rewrite would promote another unreadable
         # copy and burn a full Spark write per load (round-9 ADVICE)
-        return compute(), "fit"
+        return compute().localCheckpoint(), "fit"
 
 
 def load_or_compute_bucketed_table(
@@ -453,21 +456,21 @@ def drop_models(name: str, spark=None) -> None:
 
 
 def store_files(d: str, spark=None):
-    """``(name, mtime)`` of every file under ``d``, recursively."""
-    for name, is_dir, mtime in fs.list_status(d, spark):
+    """``(name, mtime, size)`` of every file under ``d``, recursively."""
+    for name, is_dir, mtime, size in fs.list_status(d, spark):
         if is_dir:
             yield from store_files(fs.join(d, name), spark)
         else:
-            yield name, mtime
+            yield name, mtime, size
 
 
 def _artifact_dirs(root: str, spark=None):
     """``(family, key_hash, dir)`` of every artifact directory under
     ``root``, sorted; stray files (the ``STORE_MARKER``) are skipped."""
-    for fam, fam_is_dir, _ in sorted(fs.list_status(root, spark)):
+    for fam, fam_is_dir, _, _ in sorted(fs.list_status(root, spark)):
         if fam_is_dir:
             famdir = fs.join(root, fam)
-            for h, is_dir, _ in sorted(fs.list_status(famdir, spark)):
+            for h, is_dir, _, _ in sorted(fs.list_status(famdir, spark)):
                 if is_dir:
                     yield fam, h, fs.join(famdir, h)
 
@@ -489,7 +492,7 @@ def prune_models(max_age_days: float = 30.0, spark=None, *, now: float | None = 
     removed = 0
     for _fam, _h, d in _artifact_dirs(root, spark):
         # an empty dir (a torn write) has no newest file: reap it
-        if max((m for _, m in store_files(d, spark)), default=0.0) < cutoff:
+        if max((m for _, m, _ in store_files(d, spark)), default=0.0) < cutoff:
             fs.delete_recursive(d, spark)
             removed += 1
     return removed
@@ -552,7 +555,7 @@ def _audit(spark, root: str | None) -> tuple[dict, dict]:
     if root is None:
         return report, mtimes
     for fam, h, d in _artifact_dirs(root, spark):
-        entries = {n: m for n, _is_dir, m in fs.list_status(d, spark)}
+        entries = {n: m for n, _is_dir, m, _size in fs.list_status(d, spark)}
         cur = _read_current(d, spark)
         # commit tmp leftovers carry '.tmp-' ANYWHERE in the name:
         # put_text_atomic writes '<file>.tmp-<hex>' (e.g.
