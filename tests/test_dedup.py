@@ -787,3 +787,83 @@ def test_minhash_signature_udf_matches_column_form(spark, sf_dir):
         minhash_signature_udf()(F.col("h")).alias("got")
     ).head()
     assert list(empty.got) == [MINHASH_P] * MINHASH_K
+
+
+@pytest.mark.parametrize("n_bits,n_bands", [(32, 4), (64, 4), (63, 9)])
+def test_hamming_band_pairs_equals_brute_force(spark, n_bits, n_bands):
+    """The one banded Hamming join at each caller's shape (SimHash 32/4,
+    aHash 64/4, pHash 63/9) over seeded random hashes planted in near
+    clusters: every emitted pair shares >= 1 band, ``n_bands_shared`` and
+    ``hamming`` equal a Python recount, no sharing pair is missed, and
+    within the pigeonhole bound (hamming <= n_bands - 1) the candidates
+    plus the threshold equal the brute-force all-pairs popcount. The
+    64-bit set includes hashes with the top bit set, which pack to
+    negative longs; a NULL hash never pairs."""
+    import random
+
+    from tf_idf_mapreduce_spark.operators.dedup import hamming_band_pairs
+
+    rng = random.Random(1000 * n_bits + n_bands)
+    hashes = []
+    for i in range(12):
+        base = rng.getrandbits(n_bits)
+        if n_bits == 64 and i % 2 == 0:
+            base |= 1 << 63
+        for _ in range(4):
+            h = base
+            for b in rng.sample(range(n_bits), rng.randint(0, n_bands + 2)):
+                h ^= 1 << b
+            hashes.append(h)
+    signed = [h - (1 << 64) if h >> 63 else h for h in hashes]
+    assert n_bits < 64 or any(s < 0 for s in signed)
+    rows = list(enumerate(signed)) + [(len(signed), None)]
+    df = spark.createDataFrame(rows, "doc_id long, h long")
+    got = {
+        (r.doc_a, r.doc_b): (r.n_bands_shared, r.hamming)
+        for r in hamming_band_pairs(df, n_bits, n_bands).collect()
+    }
+    width = n_bits // n_bands
+    mask = (1 << width) - 1
+
+    def bands(h):
+        return [(h >> (i * width)) & mask for i in range(n_bands)]
+
+    want, near = {}, set()
+    for a in range(len(hashes)):
+        for b in range(a + 1, len(hashes)):
+            ham = bin(hashes[a] ^ hashes[b]).count("1")
+            shared = sum(x == y for x, y in zip(bands(hashes[a]), bands(hashes[b])))
+            if shared:
+                want[(a, b)] = (shared, ham)
+            if ham <= n_bands - 1:
+                near.add((a, b))
+    assert got == want
+    assert {p for p, (_, ham) in got.items() if ham <= n_bands - 1} == near
+    assert near  # the planted clusters put pairs inside the bound
+
+
+def test_package_counts_bits_in_one_function():
+    """Each concept once: ``F.bit_count`` (the Hamming distance of a
+    banded near-pair join) is called in ONE function of the package,
+    ``dedup.hamming_band_pairs``; SimHash, aHash and pHash pairs all
+    select over it."""
+    import ast
+    from pathlib import Path
+
+    import tf_idf_mapreduce_spark
+
+    pkg = Path(tf_idf_mapreduce_spark.__file__).parent
+    found = set()
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for n in ast.walk(fn):
+                if (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "bit_count"
+                ):
+                    found.add((path.relative_to(pkg).as_posix(), fn.name))
+    assert found == {("operators/dedup.py", "hamming_band_pairs")}

@@ -584,3 +584,27 @@ def test_markov_stationary_degenerate_no_transitions(spark, tmp_path):
     nanos = {r.pi_nano for r in out}
     assert len(nanos) == 1  # exactly uniform, bit-for-bit
     assert abs(sum(r.pi_nano for r in out) - 1_000_000_000) < 1000
+
+
+def test_package_defines_the_6dp_grid_once():
+    """Each concept once: the half-up 6dp Column grid is
+    ``functions.grid.r6``; no module defines its own ``r6`` or ``grid``
+    (a nested def, or a lambda bound to either name)."""
+    import ast
+    from pathlib import Path
+
+    import tf_idf_mapreduce_spark
+
+    pkg = Path(tf_idf_mapreduce_spark.__file__).parent
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        for n in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            names = []
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                names = [n.name]
+            elif isinstance(n, ast.Assign):
+                names = [t.id for t in n.targets if isinstance(t, ast.Name)]
+            for name in names:
+                if name in ("r6", "grid"):
+                    found.append((path.relative_to(pkg).as_posix(), name))
+    assert found == [("functions/grid.py", "r6")]

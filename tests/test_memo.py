@@ -249,9 +249,6 @@ EXPECTED_LOOP_FUNCTIONS = {
     ("operators/dedup.py", "connected_components"),
     ("operators/dedup.py", "minhash_k_sweep"),
     ("operators/events.py", "q_funnel_window_sweep"),
-    ("operators/multimodal.py", "ahash_images"),
-    ("operators/multimodal.py", "phash_images"),
-    ("operators/multimodal.py", "run"),
     ("operators/similarity.py", "_knn_walk"),
     ("operators/similarity.py", "ivf_probe_sweep"),
     ("operators/similarity.py", "kmeans_fit"),

@@ -493,32 +493,89 @@ def test_phash_pairs_pigeonhole_completeness(spark, sf_dir):
         assert near == (ham <= PHASH_NEAR_MAX_HAMMING)
 
 
-def test_hash_kernels_null_row_corrupt_media(spark):
-    """Reader contract on the media path: an undecodable payload yields a
-    NULL-bits row (damage visible) — the batch's valid rows are hashed
-    normally and the job never aborts."""
-    from tf_idf_mapreduce_spark.operators.multimodal import (
-        ahash_images,
-        phash_images,
-    )
+def _wav(samples: list[int]) -> bytes:
+    import numpy as np
 
-    side = 8
-    pix = bytes([100, 0, 0]) * (side * side)
+    data = np.array(samples, dtype="<i2").tobytes()
+    body = (
+        b"fmt "
+        + (16).to_bytes(4, "little")
+        + (1).to_bytes(2, "little")
+        + (1).to_bytes(2, "little")
+        + (8000).to_bytes(4, "little")
+        + (16000).to_bytes(4, "little")
+        + (2).to_bytes(2, "little")
+        + (16).to_bytes(2, "little")
+        + b"data"
+        + len(data).to_bytes(4, "little")
+        + data
+    )
+    return b"RIFF" + (4 + len(body)).to_bytes(4, "little") + b"WAVE" + body
+
+
+def _y4m(frames: list[bytes]) -> bytes:
+    return b"YUV4MPEG2 W4 H4 F25:1 C444\n" + b"".join(b"FRAME\n" + f for f in frames)
+
+
+_P6_OK = _p6(8, bytes([100, 0, 0]) * 64)
+_WAV_OK = _wav([5000, -5000, 0, 12] * 8)
+_Y4M_OK = _y4m([bytes(48), bytes([200]) * 48])
+
+#: kernel -> (valid, garbage, truncated) payloads of its format
+_MEDIA_KERNEL_CASES = {
+    # resize's stub decodes any non-P6 bytes, so its garbage keeps the magic
+    "resize_thumbnails": (_P6_OK, b"P6 garbage dims!", b"P6\n8 8\n255\n\x01\x02"),
+    "ahash_images": (_P6_OK, b"NOTAPPM!!!", b"P6\n8 8\n255\n\x01\x02"),
+    "phash_images": (_P6_OK, b"NOTAPPM!!!", b"P6\n8 8\n255\n\x01\x02"),
+    "audio_features": (_WAV_OK, b"NOTAWAV!" * 4, _WAV_OK[:30]),
+    "audio_vad": (_WAV_OK, b"NOTAWAV!" * 4, _WAV_OK[:30]),
+    "scene_cuts": (_Y4M_OK, b"garbage bytes", _Y4M_OK[:40]),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(_MEDIA_KERNEL_CASES))
+def test_hash_kernels_null_row_corrupt_media(spark, kernel):
+    """Reader contract on every decoding media kernel: an undecodable
+    payload (garbage bytes, or a truncated payload of the kernel's own
+    format) yields ONE row of its doc_id and NULLs — damage visible —
+    while the batch's valid rows decode normally and the job never
+    aborts. Resize's corrupt row still carries ``thumb_side``."""
+    from tf_idf_mapreduce_spark.operators import multimodal
+
+    valid, garbage, truncated = _MEDIA_KERNEL_CASES[kernel]
     media = spark.createDataFrame(
-        [
-            (1, bytearray(_p6(side, pix))),
-            (2, bytearray(b"NOTAPPM!!!")),
-            (3, bytearray(b"P6\n8 8\n255\n\x01\x02")),  # truncated raster
-        ],
+        [(1, bytearray(valid)), (2, bytearray(garbage)), (3, bytearray(truncated))],
         "doc_id long, media binary",
     )
-    a = {r.doc_id: r for r in ahash_images(media).collect()}
-    p = {r.doc_id: r for r in phash_images(media).collect()}
-    assert set(a) == set(p) == {1, 2, 3}
-    assert a[1].ahash_bits is not None and p[1].phash_bits is not None
+    rows = getattr(multimodal, kernel)(media).collect()
+    by_doc = {}
+    for r in rows:
+        by_doc.setdefault(r.doc_id, []).append(r.asDict())
+    assert set(by_doc) == {1, 2, 3}
+    # scene cuts: one row per consecutive frame pair of the 2-frame clip
+    assert len(by_doc[1]) == 1
+    assert all(v is not None for v in by_doc[1][0].values())
+    kept = {"doc_id", "thumb_side"} if kernel == "resize_thumbnails" else {"doc_id"}
     for bad in (2, 3):
-        assert a[bad].ahash_bits is None and a[bad].n_set is None
-        assert p[bad].phash_bits is None and p[bad].n_set is None
+        assert len(by_doc[bad]) == 1, (bad, by_doc[bad])
+        row = by_doc[bad][0]
+        assert all(v is None for k, v in row.items() if k not in kept), row
+        if kernel == "resize_thumbnails":
+            assert row["thumb_side"] == THUMB_SIDE
+
+
+def test_scene_cuts_single_frame_clip_emits_no_rows(spark):
+    """A decoded clip may yield zero rows: a single-frame clip has no
+    consecutive pair, so it emits nothing (unlike a corrupt clip's one
+    NULL row)."""
+    from tf_idf_mapreduce_spark.operators.multimodal import scene_cuts
+
+    media = spark.createDataFrame(
+        [(1, bytearray(_y4m([bytes(48)]))), (2, bytearray(_Y4M_OK))],
+        "doc_id long, media binary",
+    )
+    got = [(r.doc_id, r.frame_idx, r.sad, r.is_cut) for r in scene_cuts(media).collect()]
+    assert got == [(2, 1, 200 * 48, True)]
 
 
 def test_phash_clusters_laws(spark, sf_dir):
@@ -629,3 +686,26 @@ def test_media_text_agreement_recounts_from_sources(spark, sf_dir):
     )
     if r.n_union:
         assert r.pair_set_jaccard == round(r.n_both / r.n_union, 6)
+
+
+def test_media_kernels_share_one_batch_loop():
+    """Each concept once: in ``multimodal.py`` only the shared media
+    kernel ``_media_map`` (which owns the corrupt-row loop) and the
+    contract-free stub extractor call ``mapInPandas``; every decoding
+    operator hands it a ``decode`` and a ``rows`` step instead."""
+    import ast
+    from pathlib import Path
+
+    from tf_idf_mapreduce_spark.operators import multimodal
+
+    tree = ast.parse(Path(multimodal.__file__).read_text())
+    callers = {
+        fn.name
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "mapInPandas"
+    }
+    assert callers == {"_media_map", "extract_media_features"}

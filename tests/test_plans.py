@@ -188,7 +188,8 @@ def test_doc_freq_salted_joins_on_composite_key(spark):
 @pytest.mark.parametrize(
     "name",
     ["tfidf_docsim_lsh", "dedup_embedding_lsh_pairs", "sim_knn_graph_ann",
-     "mm_ahash_pairs", "dedup_semantic_lexical_agreement"],
+     "mm_ahash_pairs", "dedup_semantic_lexical_agreement", "mm_phash_pairs",
+     "dedup_simhash_pairs"],
 )
 def test_lsh_candidate_paths_have_no_allpairs_join(spark, name):
     # the whole point of the banded-LSH paths: candidates come from an

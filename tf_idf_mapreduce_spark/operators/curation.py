@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.grid import r6
 from ..functions.hashing import norm_words, shingle_rows
 from ..sources.io import load_table
 from .prefix import two_phase_running_sum
@@ -394,13 +395,7 @@ def mixture_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     # floor(x*1e6 + 0.5)/1e6: k/n ratios hit exact .5 ties at 6dp where
     # the engines' round() conventions diverge (see rel_window_ranks)
-    frac = (
-        F.floor(
-            F.col("n_tokens") / F.sum("n_tokens").over(total) * 1_000_000
-            + F.lit(0.5)
-        )
-        / 1_000_000
-    )
+    frac = r6(F.col("n_tokens") / F.sum("n_tokens").over(total))
     return (
         strata.withColumn("token_frac", frac)
         .withColumn(
@@ -498,7 +493,7 @@ def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = d.select("doc_id", w, u.alias("u")).where(F.col("w") > 0)
     key = F.pow(F.col("u"), F.lit(1.0) / F.col("w"))
-    key6 = F.floor(key * 1_000_000 + F.lit(0.5)) / 1_000_000
+    key6 = r6(key)
     return (
         base.select(
             "doc_id",
@@ -623,10 +618,7 @@ def split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "n_docs",
         "n_tokens",
-        (
-            F.floor(F.col("n_docs") / F.col("n_total") * 1_000_000 + F.lit(0.5))
-            / 1_000_000
-        ).alias("doc_frac"),
+        r6(F.col("n_docs") / F.col("n_total")).alias("doc_frac"),
     )
 
 
@@ -681,9 +673,7 @@ def source_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "n_tokens",
             "n_distinct_words",
-            (F.floor(F.col("_kl") * 1_000_000 + F.lit(0.5)) / 1_000_000).alias(
-                "kl_nats"
-            ),
+            r6(F.col("_kl")).alias("kl_nats"),
         )
     )
 
@@ -801,10 +791,7 @@ def attrition_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stage",
         "n_removed",
         (F.col("n_total") - F.col("_cum")).cast("long").alias("n_remaining"),
-        (
-            F.floor(F.col("n_removed") / n_reached * 1_000_000 + F.lit(0.5))
-            / 1_000_000
-        ).alias("drop_rate"),
+        r6(F.col("n_removed") / n_reached).alias("drop_rate"),
     ).orderBy("stage_idx")
 
 
@@ -881,9 +868,7 @@ def importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "n_tokens",
-            (F.floor(F.col("_lw") * 1_000_000 + F.lit(0.5)) / 1_000_000).alias(
-                "log_weight"
-            ),
+            r6(F.col("_lw")).alias("log_weight"),
         )
     )
 
@@ -915,10 +900,7 @@ def importance_resample(
         "doc_id", "n_tokens", "log_weight", u.alias("u")
     )
     gumbel = -F.log(-F.log(F.col("u")))
-    key6 = (
-        F.floor((F.col("log_weight") + gumbel) * 1_000_000 + F.lit(0.5))
-        / 1_000_000
-    )
+    key6 = r6(F.col("log_weight") + gumbel)
     return (
         keyed.select("doc_id", "n_tokens", "log_weight", key6.alias("sample_key"))
         .orderBy(F.desc("sample_key"), F.asc("doc_id"))
@@ -1031,10 +1013,7 @@ def e2e_manifest(
         + F.lit(0.5)
     ) / F.lit(float(1 << 32))
     gumbel = -F.log(-F.log(F.col("u")))
-    key6 = (
-        F.floor((F.col("log_weight") + gumbel) * 1_000_000 + F.lit(0.5))
-        / 1_000_000
-    )
+    key6 = r6(F.col("log_weight") + gumbel)
     surv = (
         base.where(F.col("status") == "kept")
         .join(iw, "doc_id")
@@ -1220,14 +1199,11 @@ def _qc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     lenf = F.least(n_words, F.lit(QC_LEN_CAP)) / F.lit(QC_LEN_CAP)
     punct = F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0))
 
-    def grid(c: Column) -> Column:
-        return F.floor(c * F.lit(1_000_000) + F.lit(0.5)) / F.lit(1_000_000)
-
     return d.select(
         "doc_id",
-        grid(en_r * F.lit(20)).alias("x1"),
-        grid(lenf * F.lit(2)).alias("x2"),
-        grid(punct * F.lit(4)).alias("x3"),
+        r6(en_r * F.lit(20)).alias("x1"),
+        r6(lenf * F.lit(2)).alias("x2"),
+        r6(punct * F.lit(4)).alias("x3"),
         (hits >= QC_HITS_MIN).cast("long").alias("y"),
     )
 
@@ -1374,16 +1350,13 @@ def classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((~p & ~l).cast("long")).alias("tn"),
     )
 
-    def grid(c: Column) -> Column:
-        return F.floor(c * F.lit(1_000_000) + F.lit(0.5)) / F.lit(1_000_000)
-
     tp, fp, fn, tn = (F.col(c) for c in ("tp", "fp", "fn", "tn"))
     n = tp + fp + fn + tn
-    precision = F.when(tp + fp > 0, grid(tp / (tp + fp))).otherwise(F.lit(0.0))
-    recall = F.when(tp + fn > 0, grid(tp / (tp + fn))).otherwise(F.lit(0.0))
-    accuracy = grid((tp + tn) / n)
+    precision = F.when(tp + fp > 0, r6(tp / (tp + fp))).otherwise(F.lit(0.0))
+    recall = F.when(tp + fn > 0, r6(tp / (tp + fn))).otherwise(F.lit(0.0))
+    accuracy = r6((tp + tn) / n)
     f1 = F.when(
-        2 * tp + fp + fn > 0, grid(2 * tp / (2 * tp + fp + fn))
+        2 * tp + fp + fn > 0, r6(2 * tp / (2 * tp + fp + fn))
     ).otherwise(F.lit(0.0))
     return agg.select(
         "tp",
@@ -1422,9 +1395,6 @@ def classifier_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = scored.select("prob", "label", t)
     pred = F.col("prob") >= F.col("threshold")
 
-    def grid(c: Column) -> Column:
-        return F.floor(c * F.lit(1_000_000) + F.lit(0.5)) / F.lit(1_000_000)
-
     agg = e.groupBy("threshold").agg(
         F.sum((pred & F.col("label")).cast("long")).alias("tp"),
         F.sum((pred & ~F.col("label")).cast("long")).alias("fp"),
@@ -1432,8 +1402,8 @@ def classifier_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((~pred & ~F.col("label")).cast("long")).alias("tn"),
     )
     tp, fp, fn = F.col("tp"), F.col("fp"), F.col("fn")
-    precision = F.when(tp + fp > 0, grid(tp / (tp + fp))).otherwise(F.lit(0.0))
-    recall = F.when(tp + fn > 0, grid(tp / (tp + fn))).otherwise(F.lit(0.0))
+    precision = F.when(tp + fp > 0, r6(tp / (tp + fp))).otherwise(F.lit(0.0))
+    recall = F.when(tp + fn > 0, r6(tp / (tp + fn))).otherwise(F.lit(0.0))
     return agg.select(
         "threshold", "tp", "fp", "fn", "tn",
         precision.alias("precision"),
@@ -1906,13 +1876,7 @@ def mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.size(norm_words(F.col("text"))).cast("long")).alias("n_tokens"),
     )
     total_w = Window.partitionBy()
-    p = (
-        F.floor(
-            F.col("n_tokens") / F.sum("n_tokens").over(total_w) * 1_000_000
-            + F.lit(0.5)
-        )
-        / 1_000_000
-    )
+    p = r6(F.col("n_tokens") / F.sum("n_tokens").over(total_w))
     fan = strata.withColumn("p", p).select(
         "lang",
         "source",
@@ -1940,7 +1904,6 @@ def mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double"),
     )
     tot_tokens = F.sum("n_tokens").over(byalpha)
-    r6 = lambda c: F.floor(c * 1_000_000 + F.lit(0.5)) / 1_000_000  # noqa: E731
     return scored.select(
         F.col("alpha"),
         "lang",
@@ -2063,10 +2026,7 @@ def dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = u - F.lit(0.5)
     b = 1.0 / DP_EPSILON
     noise = -F.lit(b) * F.signum(t) * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(t))
-    released = (
-        F.floor((F.col("n_true") + noise) * 1_000_000 + F.lit(0.5))
-        / 1_000_000
-    )
+    released = r6(F.col("n_true") + noise)
     return g.select(
         "lang",
         "source",
@@ -2129,7 +2089,6 @@ def data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact longs. Statistics only — a release needing formal privacy
     pairs this with ``dp_counts``/``k_anonymity``."""
     d = load_table(spark, sf_dir, "documents")
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
     shape = d.agg(
         F.count("*").alias("n_docs"),
         F.countDistinct("lang").alias("n_langs"),
@@ -2168,16 +2127,16 @@ def data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_langs",
             "n_sources",
             "n_tokens",
-            grid(F.col("n_tokens") / F.col("n_docs")).alias(
+            r6(F.col("n_tokens") / F.col("n_docs")).alias(
                 "mean_doc_tokens"
             ),
-            grid(F.col("n_pii_docs") / F.col("n_docs")).alias("pii_frac"),
-            grid(F.col("n_dup_docs") / F.col("n_docs")).alias(
+            r6(F.col("n_pii_docs") / F.col("n_docs")).alias("pii_frac"),
+            r6(F.col("n_dup_docs") / F.col("n_docs")).alias(
                 "exact_dup_frac"
             ),
             # H = ln(N) - (1/N)·Σ n·ln(n): one global ln plus the
             # rounded per-lang n·ln(n) terms summed exactly
-            grid(
+            r6(
                 F.log(F.col("tot").cast("double"))
                 + F.col("wlog").cast("double") / F.col("tot").cast("double")
             ).alias("lang_entropy"),
@@ -2247,7 +2206,6 @@ def shard_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix sum); the rollup is one shard-keyed aggregate over the
     manifest, all integers except the budget-utilization grid ratio."""
     packed = shard_pack(spark, sf_dir)
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
     return (
         packed.groupBy("shard_id")
         .agg(
@@ -2262,7 +2220,7 @@ def shard_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tokens",
             "first_doc_id",
             "last_doc_id",
-            grid(
+            r6(
                 F.col("n_tokens") / F.lit(float(SHARD_TOKEN_BUDGET))
             ).alias("budget_utilization"),
         )
@@ -2283,8 +2241,6 @@ def audit_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import embedding_audit
     from .textstats import encoding_audit
 
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
-
     def arm(name, unit, total_col, flagged_col, df):
         return df.agg(
             total_col.alias("n_total"), flagged_col.alias("n_flagged")
@@ -2293,7 +2249,7 @@ def audit_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(unit).alias("unit"),
             "n_total",
             "n_flagged",
-            grid(F.col("n_flagged") / F.col("n_total")).alias("flag_rate"),
+            r6(F.col("n_flagged") / F.col("n_total")).alias("flag_rate"),
         )
 
     cnt = F.count("*").cast("long")
@@ -2637,7 +2593,6 @@ def epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CAST({EPOCH_BUDGET_TOKENS} AS BIGINT) * weight div sum_w "
         f"ELSE CAST(0 AS BIGINT) END"
     )
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
     planned = (
         w.crossJoin(F.broadcast(tot))
         .withColumn("target_tokens", target)
@@ -2660,7 +2615,7 @@ def epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "epochs",
             F.when(
                 F.col("tokens_available") > 0,
-                grid(F.col("realized_tokens") / F.col("tokens_available")),
+                r6(F.col("realized_tokens") / F.col("tokens_available")),
             ).otherwise(F.lit(0.0)),
         )
     )
@@ -2710,14 +2665,13 @@ def classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("micro").cast("long").alias("sum_micro"),
         )
     )
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
     mean_prob = (F.col("sum_micro") / F.col("n_docs")) / F.lit(1_000_000.0)
     frac_pos = F.col("n_pos") / F.col("n_docs")
     return agg.select(
         "bucket",
         "n_docs",
         "n_pos",
-        grid(frac_pos).alias("frac_pos"),
-        grid(mean_prob).alias("mean_prob"),
-        grid(F.abs(mean_prob - frac_pos)).alias("calibration_gap"),
+        r6(frac_pos).alias("frac_pos"),
+        r6(mean_prob).alias("mean_prob"),
+        r6(F.abs(mean_prob - frac_pos)).alias("calibration_gap"),
     ).orderBy("bucket")

@@ -19,9 +19,10 @@ Scale design (the whole point at 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.grid import r6
 from ..functions.hashing import (
     MINHASH_K,
     MINHASH_P,
@@ -363,52 +364,79 @@ def simhash_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def hamming_band_pairs(h: DataFrame, n_bits: int, n_bands: int) -> DataFrame:
+    """The one banded Hamming near-pair join over ``(doc_id, h long)``.
+
+    Band i is the ``n_bits // n_bands``-bit chunk
+    ``shiftrightunsigned(h, i * width) & mask``. Two docs are candidates
+    iff they agree on >= 1 band: one equi-join on ``(band, band_val)``
+    with ``doc_a < doc_b``, never a cross join. By pigeonhole a pair
+    within Hamming ``n_bands - 1`` always shares a clean band. Returns
+    ``(doc_a, doc_b, n_bands_shared, hamming)`` per candidate, with the
+    exact distance ``bit_count(h_a ^ h_b)`` over the whole word (a hash
+    packed into a signed long counts its sign bit too). A NULL hash
+    nulls its band values and drops out of the equi-join. The band
+    numbering is immaterial: the bands are the same set of disjoint
+    chunks whichever way they are numbered."""
+    width = n_bits // n_bands
+    bands = h.select(
+        "doc_id",
+        "h",
+        F.posexplode(
+            F.array(
+                *[
+                    F.shiftrightunsigned("h", i * width).bitwiseAND(
+                        F.lit((1 << width) - 1)
+                    )
+                    for i in range(n_bands)
+                ]
+            )
+        ).alias("band", "band_val"),
+    )
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            on=[
+                F.col("a.band") == F.col("b.band"),
+                F.col("a.band_val") == F.col("b.band_val"),
+                F.col("a.doc_id") < F.col("b.doc_id"),
+            ],
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.h").alias("h_a"),
+            F.col("b.h").alias("h_b"),
+        )
+        .agg(F.count("*").cast("long").alias("n_bands_shared"))
+        .select(
+            "doc_a",
+            "doc_b",
+            "n_bands_shared",
+            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
+            .cast("long")
+            .alias("hamming"),
+        )
+    )
+
+
 def simhash_near_pairs(
     spark: SparkSession, sf_dir: str, max_hamming: int = 3
 ) -> DataFrame:
-    """SimHash near-dup pairs via banded equi-join.
+    """SimHash near-dup pairs via the banded equi-join.
 
-    Pigeonhole: a pair with hamming ≤ 3 over 32 bits agrees exactly on at
-    least one of the 4 disjoint 8-bit bands, so the candidate join is an
-    equi-join on (band_idx, band_byte) — never a cross join. Exact hamming
-    (bit_count of xor) filters candidates.
+    Pigeonhole: a pair with hamming <= 3 over 32 bits agrees exactly on
+    at least one of the 4 disjoint 8-bit bands, so the candidates come
+    from ``hamming_band_pairs`` — never a cross join — and the exact
+    hamming filters them.
     """
-    sv = simhash_values(spark, sf_dir).select("doc_id", "simhash")
-    bands = sv.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.shiftright(F.col("simhash"), i * 8)
-                        .bitwiseAND(F.lit(255))
-                        .alias("band_byte"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band_idx", "bk.band_byte")
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("simhash").alias("sim_a"),
-        "band_idx",
-        "band_byte",
+    sv = simhash_values(spark, sf_dir).select(
+        "doc_id", F.col("simhash").alias("h")
     )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("simhash").alias("sim_b"),
-        "band_idx",
-        "band_byte",
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("long")
     return (
-        a.join(b, ["band_idx", "band_byte"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .distinct()
+        hamming_band_pairs(sv, 32, 4)
+        .select("doc_a", "doc_b", "hamming")
         .where(F.col("hamming") <= max_hamming)
     )
 
@@ -568,10 +596,7 @@ def embedding_lsh_recall(
     return hits.crossJoin(F.broadcast(n_exact)).select(
         "n_hits",
         F.col("n_exact").cast("long").alias("n_exact"),
-        (
-            F.floor(F.col("n_hits") / F.col("n_exact") * 1_000_000 + F.lit(0.5))
-            / 1_000_000
-        ).alias("recall"),
+        r6(F.col("n_hits") / F.col("n_exact")).alias("recall"),
     )
 
 
@@ -693,9 +718,6 @@ def banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("jaccard") >= MINHASH_PRECISION_THRESHOLD
     ).agg(F.count("*").cast("long").alias("n_true_total"))
 
-    def r6(col: Column) -> Column:
-        return F.floor(col * 1_000_000 + F.lit(0.5)) / 1_000_000
-
     n_true = F.sum(
         F.when(
             F.coalesce(F.col("jaccard"), F.lit(0.0))
@@ -750,9 +772,7 @@ def minhash_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jp.agg(
         F.count("*").alias("n_candidates"),
         hit.alias("n_true_pairs"),
-        (
-            F.floor(hit / F.count("*") * 1_000_000 + F.lit(0.5)) / 1_000_000
-        ).alias("precision"),
+        r6(hit / F.count("*")).alias("precision"),
     )
 
 
@@ -791,7 +811,7 @@ def semantic_lexical_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_sem.alias("n_semantic_pairs"),
         n_both.alias("n_both"),
         n_union.alias("n_union"),
-        F.when(n_union > 0, F.floor(n_both / n_union * 1_000_000 + F.lit(0.5)) / 1_000_000)
+        F.when(n_union > 0, r6(n_both / n_union))
         .otherwise(F.lit(0.0))
         .alias("pair_set_jaccard"),
     )
@@ -1335,7 +1355,6 @@ def minhash_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b", "jaccard"
     )
     j = pairs.join(truth, ["doc_a", "doc_b"])
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
     parts = []
     for k in MINHASH_K_SWEEP:
         agree_k = F.size(
@@ -1352,7 +1371,7 @@ def minhash_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts.append(
             j.select(err.alias("e")).agg(
                 F.count("*").alias("n_pairs"),
-                grid(
+                r6(
                     F.sum(F.col("e").cast("decimal(38,6)")).cast("double")
                     / F.count("*")
                 ).alias("mean_abs_err"),
@@ -1379,7 +1398,6 @@ def cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates over its labels; share on the @6dp grid."""
     labels = duplicate_clusters(spark, sf_dir)
     sizes = labels.groupBy("cluster_id").agg(F.count("*").alias("sz"))
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
     hist = sizes.groupBy("sz").agg(F.count("*").alias("n_clusters"))
     # total as a broadcast 1-row aggregate (A4 pattern) — no driver
     # scalar collect for something the plan can attach itself
@@ -1392,7 +1410,7 @@ def cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sz").alias("cluster_size"),
             "n_clusters",
             (F.col("sz") * F.col("n_clusters")).alias("n_docs"),
-            grid(
+            r6(
                 F.col("sz") * F.col("n_clusters") / F.col("n_total")
             ).alias("doc_share"),
         )
@@ -1447,7 +1465,6 @@ def graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("n_triangles"))
     )
     edges_n = e.agg(F.count("*").cast("long").alias("n_edges"))
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
     return (
         wedges.crossJoin(F.broadcast(edges_n))
         .crossJoin(F.broadcast(tri))
@@ -1459,7 +1476,7 @@ def graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_triangles",
             F.when(
                 F.col("n_wedges") > 0,
-                grid(3.0 * F.col("n_triangles") / F.col("n_wedges")),
+                r6(3.0 * F.col("n_triangles") / F.col("n_wedges")),
             )
             .otherwise(F.lit(0.0))
             .alias("transitivity"),

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.grid import r6
 from ..sources.io import load_events
 from .prefix import two_phase_running_sum
 
@@ -309,18 +310,19 @@ def q_anomaly_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts_sec") - F.col("ts_sec") % 3600).alias("hour_start_sec"),
         "event_type",
     ).agg(F.count("*").alias("n_events"))
+    return anomaly_scores(hourly)
+
+
+def anomaly_scores(hourly: DataFrame) -> DataFrame:
+    """The z-score step over ``(hour_start_sec, event_type, n_events)``
+    hourly counts, shared by the batch query and its streaming twin:
+    per-type mean/stddev broadcast back onto the counts, both on the r6
+    grid (z_score gates the filter, so a round() tie flip would change
+    the row set), kept at ``|z| >= ANOMALY_Z_THRESHOLD``."""
     stats = hourly.groupBy("event_type").agg(
         F.avg("n_events").alias("mean_n"),
         F.stddev_samp("n_events").alias("sd_n"),
     )
-
-    # floor(x*1e6 + 0.5)/1e6, not round(x, 6): mean_n = k/n is rational
-    # and can land on EXACT .5 at 6dp where Spark and DuckDB round()
-    # diverge — and z_score also gates the output filter, so a tie flip
-    # would change the ROW SET (same class as the rel_window_ranks fix)
-    def r6(col: Column) -> Column:
-        return F.floor(col * 1_000_000 + F.lit(0.5)) / 1_000_000
-
     z = r6((F.col("n_events") - F.col("mean_n")) / F.col("sd_n"))
     return (
         hourly.join(F.broadcast(stats), "event_type")
@@ -604,13 +606,7 @@ def q_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "hour_of_day",
         "n_events",
-        (
-            F.floor(
-                F.col("n_events") / F.col("type_total") * 1_000_000
-                + F.lit(0.5)
-            )
-            / 1_000_000
-        ).alias("share"),
+        r6(F.col("n_events") / F.col("type_total")).alias("share"),
     )
 
 
@@ -656,10 +652,7 @@ def q_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         "dau",
         "mau",
-        (
-            F.floor(F.col("dau") / F.col("mau") * 1_000_000 + F.lit(0.5))
-            / 1_000_000
-        ).alias("stickiness"),
+        r6(F.col("dau") / F.col("mau")).alias("stickiness"),
     )
 
 
@@ -686,9 +679,6 @@ def q_forecast_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates run through DECIMAL(38,18) — order-independent, exact.
     """
     ev = load_events(spark, sf_dir)
-
-    def r6(col: Column) -> Column:
-        return F.floor(col * 1_000_000 + F.lit(0.5)) / 1_000_000
 
     def dsum(col: Column) -> Column:
         return F.sum(col.cast("decimal(38,18)")).cast("double")
@@ -773,7 +763,16 @@ def q_downsample_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     every bucket four ways. Reference parity: the keep-the-extreme-row
     idea is SortByValue's top-1-per-group made symmetric
     (SortByValue.java:101-121)."""
-    ev = load_events(spark, sf_dir)
+    return m4_aggregate(load_events(spark, sf_dir)).orderBy(
+        "event_type", "bucket_sec"
+    )
+
+
+def m4_aggregate(ev: DataFrame) -> DataFrame:
+    """The M4 aggregate per (event_type, hour bucket) over an events
+    relation, batch or streaming: count, first/last ts and the four
+    extremes, with first/last picked by the zero-padded
+    ``(ts_ns, event_id)`` string key."""
     key = F.concat(
         F.lpad(F.col("ts_ns").cast("string"), 20, "0"),
         F.lpad(F.col("event_id").cast("string"), 12, "0"),
@@ -798,7 +797,6 @@ def q_downsample_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("value").alias("v_min"),
             F.max("value").alias("v_max"),
         )
-        .orderBy("event_type", "bucket_sec")
     )
 
 
@@ -856,13 +854,21 @@ def q_bot_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("gap").isNotNull())
     )
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
-    agg = gaps.groupBy("user_id").agg(
-        F.count("*").alias("n_gaps"),
-        F.sum("gap").alias("sum_gap"),
-        F.sum(F.col("gap") * F.col("gap")).alias("sum_gap2"),
-        F.min("gap").alias("min_gap"),
+    return bot_flags(
+        gaps.groupBy("user_id").agg(
+            F.count("*").alias("n_gaps"),
+            F.sum("gap").alias("sum_gap"),
+            F.sum(F.col("gap") * F.col("gap")).alias("sum_gap2"),
+            F.min("gap").alias("min_gap"),
+        )
     )
+
+
+def bot_flags(moments: DataFrame) -> DataFrame:
+    """The bot-flag select over per-user cadence moments ``(user_id,
+    n_gaps, sum_gap, sum_gap2, min_gap)``, shared by the batch query and
+    its streaming twin: mean, population variance and CV on the r6 grid
+    and the ``bot_like`` verdict, ordered by user."""
     mean = F.col("sum_gap") / F.col("n_gaps")
     # clamp at 0: constant gaps can land epsilon-negative in fp, and
     # sqrt(-eps) is NaN — a null-vs-NaN parity trap across engines
@@ -870,13 +876,13 @@ def q_bot_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sum_gap2") / F.col("n_gaps") - mean * mean, F.lit(0.0)
     )
     cv = F.when(mean > 0, F.sqrt(varp) / mean)
-    return agg.select(
+    return moments.select(
         "user_id",
         "n_gaps",
         "min_gap",
-        grid(mean).alias("mean_gap"),
-        grid(varp).alias("var_gap"),
-        grid(cv).alias("gap_cv"),
+        r6(mean).alias("mean_gap"),
+        r6(varp).alias("var_gap"),
+        r6(cv).alias("gap_cv"),
         (
             (F.col("n_gaps") >= BOT_MIN_GAPS)
             & F.coalesce(cv < BOT_MAX_CV, F.lit(False))
@@ -902,7 +908,6 @@ def q_funnel_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, and every count is integer-exact with rates on the @6dp
     grid."""
     ev = load_events(spark, sf_dir).select("user_id", "event_type", "ts_sec")
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
     parts = []
     for wsec in FUNNEL_SWEEP_WINDOWS:
         f = _funnel_steps(ev, wsec)
@@ -916,10 +921,10 @@ def q_funnel_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_viewers",
                 "n_clicked",
                 "n_purchased",
-                grid(F.col("n_clicked") / F.col("n_viewers")).alias(
+                r6(F.col("n_clicked") / F.col("n_viewers")).alias(
                     "click_rate"
                 ),
-                grid(F.col("n_purchased") / F.col("n_viewers")).alias(
+                r6(F.col("n_purchased") / F.col("n_viewers")).alias(
                     "purchase_rate"
                 ),
             )
@@ -952,7 +957,6 @@ def q_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("event_type").over(w).alias("dst"),
     ).where(F.col("dst").isNotNull())
     counts = pairs.groupBy("src", "dst").agg(F.count("*").alias("n"))
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
     rn = F.row_number().over(
         Window.partitionBy("src").orderBy(F.desc("n"), F.asc("dst"))
     )
@@ -976,12 +980,12 @@ def q_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "src",
             F.col("tot").alias("n_transitions"),
             "n_dst_types",
-            grid(
+            r6(
                 F.log(F.col("tot").cast("double"))
                 + F.col("wlog").cast("double") / F.col("tot").cast("double")
             ).alias("entropy_nats"),
             "top_dst",
-            grid(F.col("top_n") / F.col("tot")).alias("top_p"),
+            r6(F.col("top_n") / F.col("tot")).alias("top_p"),
         )
         .orderBy("src")
     )

@@ -1,10 +1,18 @@
 """Multimodal column plumbing: opaque ``binary`` media + typed metadata.
 
-The container has no image/audio codecs, so the decode step is STUBBED
-(deterministic fake features, or ``NotImplementedError`` in strict mode) —
-but everything Spark-side is real and tested: the schema contract, the
-Arrow-batched ``mapInPandas`` shape, partition-sized batching, and the
-JVM-side byte statistics that need no Python at all.
+Three small dependency-free codecs are real (P6 PPM, RIFF/WAVE PCM16,
+YUV4MPEG2 C444); anything else goes through a STUB decode (deterministic
+fake features, or ``NotImplementedError`` in strict mode). Everything
+Spark-side is real and tested: the schema contract, the Arrow-batched
+``mapInPandas`` shape, partition-sized batching, and the JVM-side byte
+statistics that need no Python at all.
+
+Every decoding kernel (resize, aHash, pHash, audio features, VAD, scene
+cuts) runs through one per-batch loop, ``_media_map``, which owns the
+corrupt-row contract: an undecodable payload yields one row of its
+doc_id and NULLs, never an aborted job. The aHash and pHash near-pair
+queries run through the one banded Hamming join,
+``dedup.hamming_band_pairs``, over hashes packed into a long.
 
 At 100 TB: media bytes never reach the driver; ``mapInPandas`` streams
 Arrow record batches through the Python workers partition-by-partition,
@@ -31,6 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.grid import r6
 from ..sources.io import load_table
 
 #: Output contract of the feature extractor.
@@ -261,6 +270,55 @@ def decode_ppm(payload: bytes) -> tuple[int, int, int, bytes]:
     return w, h, maxval, payload[idx : idx + 3 * w * h]
 
 
+def _ppm_stride(w: int, h: int, pix: bytes, side: int) -> list[int]:
+    """Nearest-neighbor stride sample of a decoded P6 raster's red channel
+    down to ``side`` x ``side``, row-major. A truncated raster raises
+    ``IndexError`` here, which the media kernel reads as a corrupt row."""
+    return [
+        pix[3 * ((r * h // side) * w + c * w // side)]
+        for r in range(side)
+        for c in range(side)
+    ]
+
+
+_PD_DTYPES = {LongType: "Int64", DoubleType: "Float64", BooleanType: "boolean"}
+
+
+def _media_map(media_df: DataFrame, schema: StructType, decode, rows) -> DataFrame:
+    """The one Arrow-batched media kernel behind every decoding operator.
+
+    For each ``(doc_id, payload)``, ``decode(payload)`` runs inside the
+    one corrupt-row catch: a ``ValueError``/``IndexError`` (truncated or
+    garbage media) yields ONE row of ``doc_id`` and NULLs, so the damage
+    is visible and the 100 TB job never aborts on one bad blob.
+    ``NotImplementedError`` (the strict-mode codec seam) propagates. A
+    decoded payload yields ``(doc_id, *r)`` for each ``r`` in
+    ``rows(decoded)`` — possibly none. Column dtypes follow ``schema``
+    (nullable pandas dtypes for longs, doubles and booleans)."""
+    dtypes = [_PD_DTYPES.get(type(f.dataType), object) for f in schema.fields]
+    n_null = len(dtypes) - 1
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
+                try:
+                    decoded = decode(bytes(payload))
+                except (ValueError, IndexError):
+                    out.append((doc_id,) + (None,) * n_null)
+                    continue
+                out.extend((doc_id, *r) for r in rows(decoded))
+            cols = list(zip(*out)) or [()] * len(dtypes)
+            yield pd.DataFrame(
+                {
+                    f.name: pd.Series(list(c), dtype=d)
+                    for f, c, d in zip(schema.fields, cols, dtypes)
+                }
+            )
+
+    return media_df.mapInPandas(run, schema)
+
+
 def resize_thumbnails(
     media_df: DataFrame, side: int = THUMB_SIDE, *, fake: bool = True
 ) -> DataFrame:
@@ -275,20 +333,18 @@ def resize_thumbnails(
 
     The digest is md5 of the thumb's UPPERCASE-HEX rendering (not the raw
     bytes) — the same engine-portable convention as ``frame_sample``'s
-    frame_md5, so a SQL oracle can replay it.
+    frame_md5, so a SQL oracle can replay it. A corrupt payload (a P6
+    header with a truncated raster, or garbage dims) yields a NULL
+    ``src_side``/``thumb_md5`` row that still carries ``thumb_side``.
     """
+    import hashlib
 
     def _thumb(payload: bytes) -> tuple[int, bytes]:
         if payload.startswith(b"P6"):
             w, h, _maxval, pix = decode_ppm(payload)
             if w == 0 or h == 0:
                 return 0, b""
-            out = bytearray()
-            for r in range(side):
-                for c in range(side):
-                    sr, sc = r * h // side, c * w // side
-                    out.append(pix[3 * (sr * w + sc)])  # red channel
-            return w, bytes(out)
+            return w, bytes(_ppm_stride(w, h, pix, side))
         if not fake:
             raise NotImplementedError("no codec for this format in this container")
         src = int(len(payload) ** 0.5)
@@ -301,32 +357,16 @@ def resize_thumbnails(
                 out.append(payload[sr * src + sc])
         return src, bytes(out)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def rows(t: tuple[int, bytes]):
+        return [(t[0], hashlib.md5(t[1].hex().upper().encode()).hexdigest())]
 
-        for pdf in batches:
-            sides, digests = [], []
-            for payload in pdf["media"]:
-                # corrupt-row contract — a P6 header with a truncated
-                # raster (or garbage dims) yields a NULL thumb row
-                try:
-                    src, thumb = _thumb(bytes(payload))
-                except (ValueError, IndexError):
-                    sides.append(None)
-                    digests.append(None)
-                    continue
-                sides.append(src)
-                digests.append(hashlib.md5(thumb.hex().upper().encode()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "src_side": pd.array(sides, dtype="Int64"),
-                    "thumb_side": side,
-                    "thumb_md5": digests,
-                }
-            )
-
-    return media_df.mapInPandas(run, RESIZE_SCHEMA)
+    kernel = StructType([f for f in RESIZE_SCHEMA.fields if f.name != "thumb_side"])
+    return _media_map(media_df, kernel, _thumb, rows).select(
+        "doc_id",
+        "src_side",
+        F.lit(side).cast("long").alias("thumb_side"),
+        "thumb_md5",
+    )
 
 
 def media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,11 +421,12 @@ def ahash_images(media_df: DataFrame, side: int = AHASH_SIDE) -> DataFrame:
     """Perceptual average-hash over binary P6 PPM media.
 
     Real decode (``decode_ppm``) → nearest-neighbor stride-sample of the
-    red channel to ``side`` x ``side`` (the same raster addressing as
-    ``resize_thumbnails``) → bit_i = (n·pixel_i >= Σ pixels), an INTEGER
-    compare (no float mean, so no rounding grid and no engine drift).
-    Emits the hash as a 64-char '0'/'1' string — engine-portable, and
-    bandable by ``substr`` for LSH-style candidate generation.
+    red channel to ``side`` x ``side`` (``_ppm_stride``) → bit_i =
+    (n·pixel_i >= Σ pixels), an INTEGER compare (no float mean, so no
+    rounding grid and no engine drift). Emits the hash as a 64-char
+    '0'/'1' string — engine-portable; the pair query packs it into one
+    long for the banded join. An undecodable payload yields a NULL-bits
+    row (``_media_map``'s corrupt-row contract).
 
     Reference parity note: the reference pipeline has no image ops; this
     extends its dedup family (WordCount.java-style exact grouping →
@@ -395,41 +436,17 @@ def ahash_images(media_df: DataFrame, side: int = AHASH_SIDE) -> DataFrame:
     """
     n = side * side
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, sides, bits, nset = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                ids.append(doc_id)
-                # corrupt-row contract (reader-convention): an
-                # undecodable payload yields a NULL-bits row — damage
-                # visible, the 100 TB job never aborts on one bad blob
-                try:
-                    w, h, _maxval, pix = decode_ppm(bytes(payload))
-                    vals = [
-                        pix[3 * ((r * h // side) * w + (c * w // side))]
-                        for r in range(side)
-                        for c in range(side)
-                    ]
-                except (ValueError, IndexError):
-                    sides.append(None)
-                    bits.append(None)
-                    nset.append(None)
-                    continue
-                total = sum(vals)
-                s = "".join("1" if v * n >= total else "0" for v in vals)
-                sides.append(w)
-                bits.append(s)
-                nset.append(s.count("1"))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "src_side": pd.array(sides, dtype="Int64"),
-                    "ahash_bits": bits,
-                    "n_set": pd.array(nset, dtype="Int64"),
-                }
-            )
+    def decode(payload: bytes) -> tuple[int, list[int]]:
+        w, h, _maxval, pix = decode_ppm(payload)
+        return w, _ppm_stride(w, h, pix, side)
 
-    return media_df.mapInPandas(run, AHASH_SCHEMA)
+    def rows(decoded: tuple[int, list[int]]):
+        w, vals = decoded
+        total = sum(vals)
+        s = "".join("1" if v * n >= total else "0" for v in vals)
+        return [(w, s, s.count("1"))]
+
+    return _media_map(media_df, AHASH_SCHEMA, decode, rows)
 
 
 def media_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -449,61 +466,22 @@ def media_ahash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     are candidates iff they agree on >= 1 band (SimHash-style banding —
     never an all-pairs cross join, so the plan scales like the text
     ``dedup_simhash_pairs``). Every candidate is emitted with its exact
-    Hamming distance (4 x conv/xor/bit_count, JVM codegen — no Python)
-    and an ``is_near`` verdict at <= AHASH_NEAR_MAX_HAMMING bits, so the
-    result is non-trivial even when the corpus has no true image dups.
+    Hamming distance (one xor + bit_count over the packed hashes, JVM
+    codegen — no Python) and an ``is_near`` verdict at <=
+    AHASH_NEAR_MAX_HAMMING bits, so the result is non-trivial even when
+    the corpus has no true image dups. ``conv(bits, 2, -10)`` packs all
+    64 bits into a signed long (a set top bit reads negative), and the
+    packing is injective, so the pairs group exactly as the strings did.
     """
-    h = media_ahash(spark, sf_dir).select("doc_id", "ahash_bits").localCheckpoint()
-    bands = h.select(
-        "doc_id",
-        "ahash_bits",
-        F.explode(
-            F.array(*[F.lit(b) for b in range(AHASH_BANDS)])
-        ).alias("band_id"),
-    ).select(
-        "doc_id",
-        "ahash_bits",
-        "band_id",
-        F.expr(f"substring(ahash_bits, band_id * {64 // AHASH_BANDS} + 1, "
-               f"{64 // AHASH_BANDS})").alias("band_val"),
+    from .dedup import hamming_band_pairs
+
+    h = (
+        media_ahash(spark, sf_dir)
+        .select("doc_id", F.conv("ahash_bits", 2, -10).cast("long").alias("h"))
+        .localCheckpoint()
     )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band_id") == F.col("b.band_id"),
-                F.col("a.band_val") == F.col("b.band_val"),
-                F.col("a.doc_id") < F.col("b.doc_id"),
-            ],
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.ahash_bits").alias("bits_a"),
-            F.col("b.ahash_bits").alias("bits_b"),
-        )
-        .agg(F.count("*").cast("long").alias("n_bands_shared"))
-    )
-    chunk = 64 // AHASH_BANDS
-    ham = sum(
-        F.bit_count(
-            F.conv(F.expr(f"substring(bits_a, {i * chunk + 1}, {chunk})"), 2, 10)
-            .cast("long")
-            .bitwiseXOR(
-                F.conv(
-                    F.expr(f"substring(bits_b, {i * chunk + 1}, {chunk})"), 2, 10
-                ).cast("long")
-            )
-        )
-        for i in range(AHASH_BANDS)
-    )
-    return cand.select(
-        "doc_a",
-        "doc_b",
-        "n_bands_shared",
-        ham.cast("long").alias("hamming"),
-        (ham <= F.lit(AHASH_NEAR_MAX_HAMMING)).alias("is_near"),
+    return hamming_band_pairs(h, 64, AHASH_BANDS).withColumn(
+        "is_near", F.col("hamming") <= F.lit(AHASH_NEAR_MAX_HAMMING)
     )
 
 
@@ -637,51 +615,29 @@ def audio_features(media_df: DataFrame) -> DataFrame:
     float, on the repo-wide 6dp half-up grid).
 
     At 100 TB this is one Arrow pass over the media partitions; only the
-    7-column integer rows shuffle (nothing does — it is map-only)."""
+    7-column integer rows shuffle (nothing does — it is map-only). A
+    truncated or garbage RIFF yields a NULL-features row (``_media_map``).
+    """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rows(decoded):
         import numpy as np
 
-        for pdf in batches:
-            out = {k: [] for k in AUDIO_FEATURES_SCHEMA.names}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                # corrupt-row contract (same as ahash_images): a
-                # truncated/garbage RIFF yields a NULL-features row —
-                # damage visible, the 100 TB job never aborts on one
-                # bad blob
-                try:
-                    rate, v = decode_wav(bytes(payload))
-                except (ValueError, IndexError):
-                    out["doc_id"].append(doc_id)
-                    for k in AUDIO_FEATURES_SCHEMA.names:
-                        if k != "doc_id":
-                            out[k].append(None)
-                    continue
-                v64 = v.astype(np.int64)
-                n = len(v64)
-                silent = int(np.count_nonzero(np.abs(v64) < WAV_SILENCE_ABS))
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(n)
-                out["energy"].append(int((v64 * v64).sum()))
-                out["peak"].append(int(np.abs(v64).max()) if n else 0)
-                out["n_zero_cross"].append(
-                    int(np.count_nonzero(v64[:-1] * v64[1:] < 0))
-                )
-                out["silence_ratio"].append(
-                    math.floor(silent * 1e6 / n + 0.5) / 1e6 if n else 0.0
-                )
-            yield pd.DataFrame(
-                {
-                    k: pd.array(
-                        out[k],
-                        dtype="Float64" if k == "silence_ratio" else "Int64",
-                    )
-                    for k in AUDIO_FEATURES_SCHEMA.names
-                }
+        rate, v = decoded
+        v64 = v.astype(np.int64)
+        n = len(v64)
+        silent = int(np.count_nonzero(np.abs(v64) < WAV_SILENCE_ABS))
+        return [
+            (
+                rate,
+                n,
+                int((v64 * v64).sum()),
+                int(np.abs(v64).max()) if n else 0,
+                int(np.count_nonzero(v64[:-1] * v64[1:] < 0)),
+                math.floor(silent * 1e6 / n + 0.5) / 1e6 if n else 0.0,
             )
+        ]
 
-    return media_df.mapInPandas(run, AUDIO_FEATURES_SCHEMA)
+    return _media_map(media_df, AUDIO_FEATURES_SCHEMA, decode_wav, rows)
 
 
 def media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -829,43 +785,20 @@ def scene_cuts(media_df: DataFrame) -> DataFrame:
     Map-only: frames never reach the shuffle or the driver; only the
     (doc, frame, sad) integer rows come out. At 100 TB this is the
     standard first pass of video curation (shot segmentation before
-    per-shot sampling)."""
+    per-shot sampling). A malformed stream emits ONE null-frame row
+    (``_media_map``) so the damage is visible: a silently absent doc
+    would be indistinguishable from a valid single-frame clip, which
+    emits no rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rows(decoded):
         import numpy as np
 
-        for pdf in batches:
-            out = {k: [] for k in SCENE_CUT_SCHEMA.names}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                # corrupt-row contract — a malformed stream emits ONE
-                # null-frame row so the damage is visible (a silently
-                # absent doc would be indistinguishable from a valid
-                # single-frame clip), and the job never aborts
-                try:
-                    _w, _h, frames = decode_y4m(bytes(payload))
-                except (ValueError, IndexError):
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(None)
-                    out["sad"].append(None)
-                    out["is_cut"].append(None)
-                    continue
-                arrs = [np.frombuffer(f, dtype=np.uint8).astype(np.int64) for f in frames]
-                for i in range(1, len(arrs)):
-                    sad = int(np.abs(arrs[i] - arrs[i - 1]).sum())
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["sad"].append(sad)
-                    out["is_cut"].append(sad >= CUT_MIN_SAD)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "frame_idx": pd.array(out["frame_idx"], dtype="Int64"),
-                    "sad": pd.array(out["sad"], dtype="Int64"),
-                    "is_cut": pd.array(out["is_cut"], dtype="boolean"),
-                }
-            )
+        arrs = [np.frombuffer(f, dtype=np.uint8).astype(np.int64) for f in decoded[2]]
+        for i in range(1, len(arrs)):
+            sad = int(np.abs(arrs[i] - arrs[i - 1]).sum())
+            yield i, sad, sad >= CUT_MIN_SAD
 
-    return media_df.mapInPandas(run, SCENE_CUT_SCHEMA)
+    return _media_map(media_df, SCENE_CUT_SCHEMA, decode_y4m, rows)
 
 
 def media_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -923,45 +856,26 @@ def phash_images(media_df: DataFrame) -> DataFrame:
     bit_i = (coef_i > median). The median of an odd count is the middle
     ELEMENT — no interpolation — and coefficients are exact integers, so
     the bit decision is engine-portable with no rounding grid anywhere.
-    Emits a 63-char '0'/'1' string, bandable exactly like the aHash.
+    Emits a 63-char '0'/'1' string, bandable exactly like the aHash; an
+    undecodable payload yields a NULL-bits row (``_media_map``).
     """
     import numpy as np
 
     cm = np.array(phash_cmat(), dtype="int64")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, bits, nset = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                ids.append(doc_id)
-                # same corrupt-row contract as ahash_images
-                try:
-                    w, h, _maxval, pix = decode_ppm(bytes(payload))
-                    vals = [
-                        pix[3 * ((r * h // 8) * w + (c * w // 8))]
-                        for r in range(8)
-                        for c in range(8)
-                    ]
-                except (ValueError, IndexError):
-                    bits.append(None)
-                    nset.append(None)
-                    continue
-                V = np.array(vals, dtype="int64").reshape(8, 8)
-                D = (cm @ V @ cm.T).ravel()
-                ac = D[1:]  # row-major (u, v); drop the DC term
-                med = float(np.median(ac))
-                s = "".join("1" if int(x) > med else "0" for x in ac)
-                bits.append(s)
-                nset.append(s.count("1"))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "phash_bits": bits,
-                    "n_set": pd.array(nset, dtype="Int64"),
-                }
-            )
+    def decode(payload: bytes) -> list[int]:
+        w, h, _maxval, pix = decode_ppm(payload)
+        return _ppm_stride(w, h, pix, 8)
 
-    return media_df.mapInPandas(run, PHASH_SCHEMA)
+    def rows(vals: list[int]):
+        V = np.array(vals, dtype="int64").reshape(8, 8)
+        D = (cm @ V @ cm.T).ravel()
+        ac = D[1:]  # row-major (u, v); drop the DC term
+        med = float(np.median(ac))
+        s = "".join("1" if int(x) > med else "0" for x in ac)
+        return [(s, s.count("1"))]
+
+    return _media_map(media_df, PHASH_SCHEMA, decode, rows)
 
 
 def media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,68 +921,22 @@ def media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _phash_pairs_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pack the 63-bit '0'/'1' hash into ONE long before the self-join:
-    # the candidate shuffle then carries 8-byte keys instead of two
+    # the 63-bit '0'/'1' hash packs into ONE long before the banded
+    # join, so the candidate shuffle carries 8-byte keys instead of two
     # 63-char strings per pair (guide §2.3 — narrower types through the
-    # exchange), band values extract with shift/mask instead of
-    # substring, and the Hamming verify is one xor + bit_count over the
-    # packed longs instead of nine substring+conv+xor+bit_count chains —
-    # bit-for-bit the same value (per-band popcounts of disjoint 7-bit
-    # chunks sum to the full-word popcount). The packing is injective,
-    # so grouping by the packed hashes groups exactly as the strings
-    # did; a NULL hash (corrupt image) nulls its band values and drops
-    # from the equi-join, exactly as the NULL substring did.
-    chunk = 63 // PHASH_BANDS
+    # exchange); a NULL hash (corrupt image) drops from the equi-join
+    from .dedup import hamming_band_pairs
+
     h = (
         media_phash(spark, sf_dir)
-        .select(
-            "doc_id", F.conv("phash_bits", 2, 10).cast("long").alias("h63")
-        )
+        .select("doc_id", F.conv("phash_bits", 2, 10).cast("long").alias("h"))
         .localCheckpoint()
     )
-    bands = h.select(
-        "doc_id",
-        "h63",
-        F.explode(F.array(*[F.lit(b) for b in range(PHASH_BANDS)])).alias(
-            "band_id"
-        ),
-    ).select(
-        "doc_id",
-        "h63",
-        "band_id",
-        # band 0 is the LEFTMOST (most significant) 7-bit chunk, matching
-        # substring(phash_bits, band_id*7+1, 7)
-        F.expr(
-            f"shiftright(h63, cast(({PHASH_BANDS - 1} - band_id) * {chunk}"
-            f" as int)) & {(1 << chunk) - 1}"
-        ).alias("band_val"),
+    return (
+        hamming_band_pairs(h, 63, PHASH_BANDS)
+        .withColumn("is_near", F.col("hamming") <= F.lit(PHASH_NEAR_MAX_HAMMING))
+        .localCheckpoint()
     )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band_id") == F.col("b.band_id"),
-                F.col("a.band_val") == F.col("b.band_val"),
-                F.col("a.doc_id") < F.col("b.doc_id"),
-            ],
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.h63").alias("h_a"),
-            F.col("b.h63").alias("h_b"),
-        )
-        .agg(F.count("*").cast("long").alias("n_bands_shared"))
-    )
-    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    return cand.select(
-        "doc_a",
-        "doc_b",
-        "n_bands_shared",
-        ham.cast("long").alias("hamming"),
-        (ham <= F.lit(PHASH_NEAR_MAX_HAMMING)).alias("is_near"),
-    ).localCheckpoint()
 
 
 def media_phash_clusters(
@@ -1131,62 +999,36 @@ def audio_vad(media_df: DataFrame) -> DataFrame:
     behind.
 
     Map-only ``mapInPandas``; media bytes never leave the executor, six
-    integer/ratio columns per clip come back."""
+    integer/ratio columns per clip come back (a NULL row for a corrupt
+    clip, ``_media_map``)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rows(decoded):
         import numpy as np
 
-        for pdf in batches:
-            out = {k: [] for k in AUDIO_VAD_SCHEMA.names}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                # corrupt-row contract — NULL VAD row, never an abort
-                try:
-                    _rate, v = decode_wav(bytes(payload))
-                except (ValueError, IndexError):
-                    out["doc_id"].append(doc_id)
-                    for k in AUDIO_VAD_SCHEMA.names:
-                        if k != "doc_id":
-                            out[k].append(None)
-                    continue
-                v64 = v.astype(np.int64)
-                n_frames = len(v64) // VAD_FRAME_SAMPLES
-                e = (
-                    (v64[: n_frames * VAD_FRAME_SAMPLES] ** 2)
-                    .reshape(n_frames, VAD_FRAME_SAMPLES)
-                    .sum(axis=1)
-                )
-                active = e >= VAD_ENERGY_PER_SAMPLE * VAD_FRAME_SAMPLES
-                n_active = int(active.sum())
-                segs, longest, run_len = 0, 0, 0
-                for a in active:
-                    if a:
-                        run_len += 1
-                        if run_len == 1:
-                            segs += 1
-                        longest = max(longest, run_len)
-                    else:
-                        run_len = 0
-                out["doc_id"].append(doc_id)
-                out["n_frames"].append(n_frames)
-                out["n_active"].append(n_active)
-                out["n_segments"].append(segs)
-                out["longest_segment"].append(longest)
-                out["active_ratio"].append(
-                    math.floor(n_active * 1e6 / n_frames + 0.5) / 1e6
-                    if n_frames
-                    else 0.0
-                )
-            yield pd.DataFrame(
-                {
-                    k: pd.array(
-                        out[k],
-                        dtype="Float64" if k == "active_ratio" else "Int64",
-                    )
-                    for k in AUDIO_VAD_SCHEMA.names
-                }
-            )
+        v64 = decoded[1].astype(np.int64)
+        n_frames = len(v64) // VAD_FRAME_SAMPLES
+        e = (
+            (v64[: n_frames * VAD_FRAME_SAMPLES] ** 2)
+            .reshape(n_frames, VAD_FRAME_SAMPLES)
+            .sum(axis=1)
+        )
+        active = e >= VAD_ENERGY_PER_SAMPLE * VAD_FRAME_SAMPLES
+        n_active = int(active.sum())
+        segs, longest, run_len = 0, 0, 0
+        for a in active:
+            if a:
+                run_len += 1
+                if run_len == 1:
+                    segs += 1
+                longest = max(longest, run_len)
+            else:
+                run_len = 0
+        ratio = (
+            math.floor(n_active * 1e6 / n_frames + 0.5) / 1e6 if n_frames else 0.0
+        )
+        return [(n_frames, n_active, segs, longest, ratio)]
 
-    return media_df.mapInPandas(run, AUDIO_VAD_SCHEMA)
+    return _media_map(media_df, AUDIO_VAD_SCHEMA, decode_wav, rows)
 
 
 def media_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1237,7 +1079,7 @@ def media_text_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_union.alias("n_union"),
         F.when(
             n_union > 0,
-            F.floor(n_both / n_union * 1_000_000 + F.lit(0.5)) / 1_000_000,
+            r6(n_both / n_union),
         )
         .otherwise(F.lit(0.0))
         .alias("pair_set_jaccard"),

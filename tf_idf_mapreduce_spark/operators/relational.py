@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.grid import r6
 from ..sources.io import load_table
 
 
@@ -427,10 +428,6 @@ def customer_balance_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("c_nationkey").orderBy(
         F.desc("c_acctbal"), F.asc("c_custkey")
     )
-
-    def r6(col: Column) -> Column:
-        return F.floor(col * 1_000_000 + F.lit(0.5)) / 1_000_000
-
     return c.select(
         "c_nationkey",
         "c_custkey",

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.grid import r6
 from ..sources.io import documents_as_corpus, load_table
 from .guard import EXACT_QUADRATIC_MAX_ROWS, guard_exact_quadratic
 from .tfidf import corpus_core, query_terms
@@ -415,10 +416,7 @@ def doc_similarity_lsh(
     )
     shared = F.filter(prods, lambda v: v.isNotNull())
     dot = F.aggregate(shared, F.lit(0.0), lambda acc, v: acc + v)
-    cos = (
-        F.floor(dot / (F.col("nrm_a") * F.col("nrm_b")) * 1_000_000 + F.lit(0.5))
-        / 1_000_000
-    )
+    cos = r6(dot / (F.col("nrm_a") * F.col("nrm_b")))
     return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
@@ -458,10 +456,7 @@ def doc_similarity_lsh_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hits.crossJoin(F.broadcast(n_exact)).select(
         "n_hits",
         F.col("n_exact").cast("long").alias("n_exact"),
-        (
-            F.floor(F.col("n_hits") / F.col("n_exact") * 1_000_000 + F.lit(0.5))
-            / 1_000_000
-        ).alias("overlap"),
+        r6(F.col("n_hits") / F.col("n_exact")).alias("overlap"),
     )
 
 

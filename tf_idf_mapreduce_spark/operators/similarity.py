@@ -23,6 +23,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.grid import r6
 from ..functions.vectors import cosine, dot, fold_dot_matrix_udf, norm
 from ..sources.io import load_table
 from .guard import EXACT_QUADRATIC_MAX_ROWS, guard_exact_quadratic
@@ -730,14 +731,9 @@ def ivf_incremental_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_batch"),
     )
-    share = (
-        F.floor(
-            F.col("n_batch").cast("double")
-            / (F.col("n_corpus") + F.col("n_batch")).cast("double")
-            * 1_000_000
-            + F.lit(0.5)
-        )
-        / 1_000_000
+    share = r6(
+        F.col("n_batch").cast("double")
+        / (F.col("n_corpus") + F.col("n_batch")).cast("double")
     )
     return agg.select(
         "cid",
@@ -1139,10 +1135,7 @@ def knn_ann_recall(
     return hits.crossJoin(F.broadcast(n_exact)).select(
         "n_hits",
         F.col("n_exact").cast("long").alias("n_exact"),
-        (
-            F.floor(F.col("n_hits") / F.col("n_exact") * 1_000_000 + F.lit(0.5))
-            / 1_000_000
-        ).alias("recall"),
+        r6(F.col("n_hits") / F.col("n_exact")).alias("recall"),
     )
 
 
@@ -1160,10 +1153,7 @@ def _recall_report(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
         "n_hits",
         F.lit(k).cast("long").alias("k"),
         F.col("n_exact").cast("long").alias("n_exact"),
-        (
-            F.floor(F.col("n_hits") / F.col("n_exact") * 1_000_000 + F.lit(0.5))
-            / 1_000_000
-        ).alias("recall"),
+        r6(F.col("n_hits") / F.col("n_exact")).alias("recall"),
     )
 
 
@@ -1283,12 +1273,7 @@ def ivf_probe_sweep(
             "n_hits",
             F.lit(k).cast("long").alias("k"),
             F.col("n_exact").cast("long").alias("n_exact"),
-            (
-                F.floor(
-                    F.col("n_hits") / F.col("n_exact") * 1_000_000 + F.lit(0.5)
-                )
-                / 1_000_000
-            ).alias("recall"),
+            r6(F.col("n_hits") / F.col("n_exact")).alias("recall"),
         )
         out = row if out is None else out.unionByName(row)
     return out.orderBy("nprobe")
@@ -1579,12 +1564,7 @@ def _adc_score(dtabs, qn: float):
         dt = F.array(*[F.lit(float(v)) for v in tab])
         term = F.element_at(dt, (F.col(f"code_{m}") + 1).cast("int"))
         adc = term if adc is None else adc + term
-    return (
-        F.floor(
-            adc / (F.col("norm") * F.lit(float(qn))) * 1_000_000 + F.lit(0.5)
-        )
-        / 1_000_000
-    )
+    return r6(adc / (F.col("norm") * F.lit(float(qn))))
 
 
 def pq_topk(
@@ -1728,9 +1708,6 @@ def pq_rerank_report(
         F.count("*").alias("n_hits_rerank")
     )
 
-    def r6(c: Column) -> Column:
-        return F.floor(c * 1_000_000 + F.lit(0.5)) / 1_000_000
-
     return (
         hits_adc.crossJoin(F.broadcast(hits_rer))
         .crossJoin(F.broadcast(n_exact))
@@ -1815,13 +1792,7 @@ def triangle_report(
             "n_edges",
             "n_triangles",
             "n_wedges",
-            (
-                F.floor(
-                    F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges") * 1_000_000
-                    + F.lit(0.5)
-                )
-                / 1_000_000
-            ).alias("clustering_coeff"),
+            r6(F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges")).alias("clustering_coeff"),
         )
     )
 
@@ -2851,13 +2822,7 @@ def centroid_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             "n_vecs",
             "n_correct",
-            (
-                F.floor(
-                    F.col("n_correct") / F.col("n_vecs") * 1_000_000
-                    + F.lit(0.5)
-                )
-                / 1_000_000
-            ).alias("accuracy"),
+            r6(F.col("n_correct") / F.col("n_vecs")).alias("accuracy"),
             (-F.col("wm.nl")).cast("long").alias("top_wrong_label"),
             F.col("wm.n").alias("n_top_wrong"),
         )

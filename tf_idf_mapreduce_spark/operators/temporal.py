@@ -18,10 +18,11 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.grid import r6
 from ..sources.io import load_events
 
 
@@ -402,12 +403,8 @@ def gap_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = (
         F.col("ts_sec") - F.col("ts_sec") % GAP_FILL_BUCKET_SEC
     ).alias("bucket_start_sec")
-    # floor(x*1e6+0.5)/1e6, not round(x, 6): the interpolated line can
-    # land on an exact .5 at 6dp where Spark's BigDecimal round and
-    # DuckDB's double round diverge (the events_anomaly r6 precedent)
-    def r6(col: Column) -> Column:
-        return F.floor(col * 1_000_000 + F.lit(0.5)) / 1_000_000
-
+    # r6, not round(x, 6): the interpolated line can land on an exact .5
+    # at 6dp
     observed = ev.groupBy("event_type", bucket).agg(
         F.count("*").cast("long").alias("n_events"),
         r6(

@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.grid import r6
 from ..functions.hashing import norm_words
 from ..sources.io import load_table
 
@@ -345,14 +346,9 @@ def lm_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark (HALF_UP on shortest repr) and DuckDB (binary value) disagree
     # — the floor formula is the same IEEE op sequence in both engines
     # (one sf0.1 row diverged under round())
-    mean6 = (
-        F.floor(
-            F.sum(F.col("neg_logp").cast("decimal(38,6)")).cast("double")
-            / F.count("*")
-            * 1_000_000
-            + F.lit(0.5)
-        )
-        / 1_000_000
+    mean6 = r6(
+        F.sum(F.col("neg_logp").cast("decimal(38,6)")).cast("double")
+        / F.count("*")
     )
     return (
         bg.join(lm, "bigram")
@@ -382,7 +378,7 @@ def flesch_expr(text: Column) -> Column:
         - F.lit(84.6) * (syllables / words)
     )
     return F.when(
-        words > 0, F.floor(score * 1_000_000 + F.lit(0.5)) / 1_000_000
+        words > 0, r6(score)
     )
 
 
@@ -450,14 +446,8 @@ def novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "n_grams",
             "n_shared",
-            (
-                F.floor(
-                    (F.col("n_grams") - F.col("n_shared"))
-                    / F.col("n_grams")
-                    * 1_000_000
-                    + F.lit(0.5)
-                )
-                / 1_000_000
+            r6(
+                (F.col("n_grams") - F.col("n_shared")) / F.col("n_grams")
             ).alias("novelty"),
         )
     )
@@ -1408,14 +1398,13 @@ def lm_heldout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     scored = bigrams(held).join(lm, "bigram", "left")
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
     summary = scored.agg(
         F.count("*").alias("n_heldout_bigrams"),
         (F.count("*") - F.count("neg_logp")).alias("n_oov"),
-        grid(
+        r6(
             (F.count("*") - F.count("neg_logp")) / F.count("*")
         ).alias("oov_rate"),
-        grid(
+        r6(
             F.sum(F.col("neg_logp").cast("decimal(38,6)")).cast("double")
             / F.count("neg_logp")
         ).alias("mean_surprisal"),
@@ -1469,7 +1458,7 @@ def encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_chars = F.length("text").cast("long")
     frac = F.when(
         n_chars > 0,
-        F.floor(n_nonascii / n_chars * 1_000_000 + F.lit(0.5)) / 1_000_000,
+        r6(n_nonascii / n_chars),
     )
     return d.select(
         "doc_id",
@@ -1498,12 +1487,11 @@ def type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_tokens"),
         F.countDistinct("w").alias("n_types"),
     )
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
     return per.select(
         "doc_id",
         "n_tokens",
         "n_types",
-        grid(F.col("n_types") / F.col("n_tokens")).alias("ttr"),
+        r6(F.col("n_types") / F.col("n_tokens")).alias("ttr"),
     ).orderBy("doc_id")
 
 
@@ -1520,7 +1508,6 @@ def hapax_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "w")
         .agg(F.count("*").alias("n"))
     )
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
     return (
         wc.groupBy("source")
         .agg(
@@ -1535,7 +1522,7 @@ def hapax_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_vocab",
             "n_hapax",
             "n_tokens",
-            grid(F.col("n_hapax") / F.col("n_vocab")).alias("hapax_rate"),
+            r6(F.col("n_hapax") / F.col("n_vocab")).alias("hapax_rate"),
         )
         .orderBy("source")
     )
@@ -1554,7 +1541,6 @@ def frequency_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count("*").alias("n"))
     )
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
     spec = wc.groupBy("n").agg(F.count("*").alias("n_words"))
     total = spec.agg(F.sum("n_words").alias("n_vocab"))
     return (
@@ -1562,7 +1548,7 @@ def frequency_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("n").alias("frequency"),
             "n_words",
-            grid(F.col("n_words") / F.col("n_vocab")).alias("vocab_share"),
+            r6(F.col("n_words") / F.col("n_vocab")).alias("vocab_share"),
         )
         .orderBy("frequency")
     )
@@ -1662,7 +1648,6 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
     g2 = (
         grams(2)
         .groupBy("doc_id", "g")
@@ -1685,13 +1670,13 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dup3 = F.when(
         F.col("total3") > 0,
-        grid(
+        r6(
             (F.col("total3") - F.col("distinct3"))
             / F.col("total3")
         ),
     ).otherwise(F.lit(0.0))
     top2 = F.when(
-        F.col("total2") > 0, grid(F.col("top2") / F.col("total2"))
+        F.col("total2") > 0, r6(F.col("top2") / F.col("total2"))
     ).otherwise(F.lit(0.0))
     return (
         base.select("doc_id")

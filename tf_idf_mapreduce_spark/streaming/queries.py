@@ -214,10 +214,10 @@ def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     alerting pipeline wouldn't want it to: the scoring pass re-reads the
     tiny materialized aggregate each trigger (here: once, after the
     availableNow drain) and broadcasts |types| rows of stats back onto
-    it. Same two-phase shape, rounding grid, and threshold as the batch
-    operator, so the streaming answer hash-matches the batch oracle.
+    it. The scoring is the batch operator's own ``anomaly_scores``, so the
+    streaming answer hash-matches the batch oracle.
     """
-    from ..operators.events import ANOMALY_Z_THRESHOLD
+    from ..operators.events import anomaly_scores
 
     ev = stream_events(spark, sf_dir).withWatermark("ts", "1 hour")
     hourly = (
@@ -229,26 +229,8 @@ def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    counts = run_to_memory(hourly, "stream_anomaly", output_mode="complete")
-    stats = counts.groupBy("event_type").agg(
-        F.avg("n_events").alias("mean_n"),
-        F.stddev_samp("n_events").alias("sd_n"),
-    )
-
-    def r6(col):
-        return F.floor(col * 1_000_000 + F.lit(0.5)) / 1_000_000
-
-    z = r6((F.col("n_events") - F.col("mean_n")) / F.col("sd_n"))
-    return (
-        counts.join(F.broadcast(stats), "event_type")
-        .select(
-            "event_type",
-            "hour_start_sec",
-            "n_events",
-            r6(F.col("mean_n")).alias("mean_n"),
-            z.alias("z_score"),
-        )
-        .where(F.abs(F.col("z_score")) >= ANOMALY_Z_THRESHOLD)
+    return anomaly_scores(
+        run_to_memory(hourly, "stream_anomaly", output_mode="complete")
     )
 
 
@@ -682,34 +664,9 @@ def q_stream_downsample_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     live dashboard reads the current extremes every trigger without
     ever re-scanning history; complete mode here (finite drain), update
     mode + upsert sink at production feed rates."""
-    from ..operators.events import M4_BUCKET_SEC
+    from ..operators.events import m4_aggregate
 
-    ev = stream_events(spark, sf_dir)
-    key = F.concat(
-        F.lpad(F.col("ts_ns").cast("string"), 20, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
-    agg = (
-        ev.select(
-            "event_type",
-            (F.col("ts_sec") - F.col("ts_sec") % M4_BUCKET_SEC).alias(
-                "bucket_sec"
-            ),
-            "ts_sec",
-            "value",
-            key.alias("ord_key"),
-        )
-        .groupBy("event_type", "bucket_sec")
-        .agg(
-            F.count("*").alias("n_points"),
-            F.min("ts_sec").alias("ts_first_sec"),
-            F.max("ts_sec").alias("ts_last_sec"),
-            F.min_by("value", F.col("ord_key")).alias("v_first"),
-            F.max_by("value", F.col("ord_key")).alias("v_last"),
-            F.min("value").alias("v_min"),
-            F.max("value").alias("v_max"),
-        )
-    )
+    agg = m4_aggregate(stream_events(spark, sf_dir))
     return run_to_memory(agg, "stream_m4", output_mode="complete").orderBy(
         "event_type", "bucket_sec"
     )
@@ -790,10 +747,10 @@ def q_stream_bot_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained live in five longs of state per user
     (``applyInPandasWithState``), each micro-batch emitting the user's
     RUNNING totals; the drain keeps each user's latest emission (max
-    n_gaps — counts only grow) and derives the identical
-    mean/variance/CV/flag expressions, so the finite run lands on the
-    batch relation row-for-row via the shared oracle."""
-    from ..operators.events import BOT_MAX_CV, BOT_MIN_GAPS
+    n_gaps — counts only grow) and runs the batch screen's own
+    ``bot_flags`` select, so the finite run lands on the batch relation
+    row-for-row via the shared oracle."""
+    from ..operators.events import bot_flags
 
     ev = stream_events(spark, sf_dir)
     running = (
@@ -824,24 +781,7 @@ def q_stream_bot_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("n_gaps") > 0)
     )
-    grid = lambda x: F.floor(x * 1_000_000 + F.lit(0.5)) / 1_000_000
-    mean = F.col("sum_gap") / F.col("n_gaps")
-    varp = F.greatest(
-        F.col("sum_gap2") / F.col("n_gaps") - mean * mean, F.lit(0.0)
-    )
-    cv = F.when(mean > 0, F.sqrt(varp) / mean)
-    return latest.select(
-        "user_id",
-        "n_gaps",
-        "min_gap",
-        grid(mean).alias("mean_gap"),
-        grid(varp).alias("var_gap"),
-        grid(cv).alias("gap_cv"),
-        (
-            (F.col("n_gaps") >= BOT_MIN_GAPS)
-            & F.coalesce(cv < BOT_MAX_CV, F.lit(False))
-        ).alias("bot_like"),
-    ).orderBy("user_id")
+    return bot_flags(latest)
 
 
 def make_index_merge(root: str, compact_every: int | None = None):
